@@ -2238,8 +2238,8 @@ object PipelineEntries {
     * edge list contracts via least/greatest community endpoints so
     * internal edges fold into self-loops (strength counts them twice).
     * Round and contraction CTEs are MATERIALIZED: each round references
-    * its predecessor three times, the same 3^rounds inlining blow-up the
-    * Spark side's rebaseRows exists to avoid. */
+    * its predecessor three times, the same 3^rounds blow-up an iterative
+    * DataFrame plan would hit (the Spark side runs RDD rounds). */
   private def louvainOracleSql(rounds: Int = 4, levels: Int = 2): String = {
     def levelCtes(l: Int): String = {
       val prep =
@@ -2363,8 +2363,8 @@ object PipelineEntries {
     * Spark side's early-exit loop exactly. Rounds are MATERIALIZED:
     * each references its predecessor three times, and DuckDB's default
     * CTE inlining would otherwise expand the base scan 3^rounds times
-    * (observed as fd exhaustion, the same doubling the Spark side's
-    * rebaseRows kills). */
+    * (observed as fd exhaustion, the same doubling an iterative DataFrame
+    * plan hits; the Spark side runs RDD rounds). */
   private def kCoreOracleSql(k: Int = 2, rounds: Int = 8): String = {
     val steps = (1 to rounds).map { i =>
       s"""c$i AS MATERIALIZED (

@@ -1,5 +1,6 @@
 package graft.graph
 
+import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
@@ -8,18 +9,72 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.GraftSession
 
-/** Whole-graph analytics over catalog relationships via GraphX — the
-  * complement to the per-query traversal engine (SURVEY.md §1.3: edge-list
-  * DataFrames double as GraphX `Edge` RDD input when global algorithms are
-  * wanted; the reference has no equivalent — ClickHouse can't iterate).
+/** Whole-graph analytics over catalog relationships — the complement to
+  * the per-query traversal engine (SURVEY.md §1.3: edge-list DataFrames
+  * double as RDD input when global algorithms are wanted; the reference
+  * has no equivalent — ClickHouse can't iterate).
   *
-  * Scale notes: GraphX partitions edges (EdgePartition2D keeps the
-  * replication factor at O(sqrt(numParts))) and iterates with joins over
-  * partitioned RDDs — the same shuffle discipline the DataFrame engine
-  * uses. Vertices come from the node tables so isolated nodes keep their
-  * identity in component/rank outputs.
+  * Iterative algorithms run on one of two substrates:
+  *  - GraphX Pregel / `aggregateMessages` (components, PageRank variants,
+  *    shortest paths, HITS, eigenvector centrality, label propagation).
+  *    EdgePartition2D keeps the replication factor at O(sqrt(numParts)).
+  *  - RDD rounds (SCC, k-core, core numbers, Brandes betweenness,
+  *    Louvain): each round is one join of vertex state with messages plus
+  *    one group-by over co-partitioned RDDs (the Pregelix superstep). Every
+  *    such loop persists through [[persist]] and sizes its partitions with
+  *    [[partitioner]].
+  *
+  * Single-pass algorithms (clustering coefficient, link features,
+  * modularity, assortativity, walks) stay plain DataFrame plans. Vertices
+  * come from the node tables where a vertex universe matters, so isolated
+  * nodes keep their identity in component/rank outputs.
   */
 object GraphAlgorithms {
+
+  /** The simple undirected graph of `relLabel`: `edgePred` applied first,
+    * endpoints cast to long, self-loops dropped, each edge once as
+    * (a, b) with a < b. */
+  private def simpleEdges(gs: GraftSession, relLabel: String,
+      edgePred: Option[Column]): DataFrame = {
+    val r = gs.catalog.rel(relLabel)
+    edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
+      .select(col(r.fromColumn).cast("long").as("a"),
+        col(r.toColumn).cast("long").as("b"))
+      .filter(col("a") =!= col("b"))
+      .select(least(col("a"), col("b")).as("a"),
+        greatest(col("a"), col("b")).as("b"))
+      .distinct()
+  }
+
+  /** Persist one RDD of a round loop: MEMORY_AND_DISK, registered for
+    * [[graft.pipeline.PipelineCaches.clear]], and marked for
+    * `localCheckpoint`, so the first job that materializes it also cuts
+    * its lineage. Without the cut a loop's dependency chain grows round
+    * over round even though every hop is cached, and Java task
+    * serialization walks that chain — a few hundred rounds die in
+    * StackOverflowError at stage submission (observed on coreNumbers over
+    * the sf0.01 PLACED probe graph).
+    *
+    * The trade: once materialized, the RDD cannot be recomputed, so a loop
+    * may unpersist it only after everything that reads it is materialized
+    * too. MEMORY_AND_DISK keeps a disk copy per executor, and the loops
+    * re-run from the query on failure. */
+  private def persist[T](x: RDD[T]): RDD[T] = {
+    val p = x.persist(StorageLevel.MEMORY_AND_DISK)
+    p.localCheckpoint()
+    graft.pipeline.PipelineCaches.onClear(p)(_.unpersist(blocking = false))
+    p
+  }
+
+  /** Partitioner of a round loop, sized from the data: one partition per
+    * ~50k edges, at most max(defaultParallelism / 2, 4). Each round
+    * schedules tasks per partition over several stages, so a core-derived
+    * count (16 partitions under a 25-vertex fixture) paid ~10× pure
+    * scheduling overhead per round; the cap is the old core-derived
+    * count. */
+  private def partitioner(sc: SparkContext, edgeCount: Long): HashPartitioner =
+    new HashPartitioner(math.min(math.max(sc.defaultParallelism / 2, 4).toLong,
+      edgeCount / 50000L + 1L).toInt)
 
   /** Edge RDD of a registered relationship (weight 1.0). */
   def edges(gs: GraftSession, relLabel: String): RDD[Edge[Double]] = {
@@ -125,9 +180,8 @@ object GraphAlgorithms {
     // loop and Pregel runs without truncating, and on a high-diameter
     // graph dies in StackOverflowError at task (de)serialization ~140k
     // stages in (observed on the sf0.1 PLACED probe). Here every loop
-    // RDD is persisted, the predecessor released, and lineage truncated
-    // via localCheckpoint every [[SccTruncateEvery]] rounds — depth
-    // costs time, not stack.
+    // RDD goes through [[persist]] (lineage cut once materialized) and
+    // the predecessor is released — depth costs time, not stack.
     //
     // Algorithm (Orzan-style), per outer iteration:
     //   trim:  drop vertices with no in- or no out-edge to fixpoint —
@@ -144,11 +198,6 @@ object GraphAlgorithms {
     val r = gs.catalog.rel(relLabel)
     val spark = gs.spark
     import spark.implicits._
-    def trackRdd[T](x: RDD[T]): RDD[T] = {
-      val p = x.persist(StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.PipelineCaches.onClear(p)(_.unpersist(blocking = false))
-      p
-    }
     var rounds = 0
     def budget(): Unit = {
       rounds += 1
@@ -157,39 +206,20 @@ object GraphAlgorithms {
         "rounds (trim cascade or diameter beyond budget); raise " +
         "maxRounds — refusing to return a partial decomposition")
     }
-    // periodic physical-lineage truncation: persist alone leaves the
-    // dependency chain growing round over round, and Java task
-    // serialization walks it — truncate every N rounds
-    val SccTruncateEvery = 16
     def mat[T](x: RDD[T]): (RDD[T], Long) = {
-      val p = trackRdd(x)
-      if (rounds % SccTruncateEvery == 0) p.localCheckpoint()
+      val p = persist(x)
       (p, p.count())
     }
-    var edges: RDD[(Long, Long)] = null
-    var edgeCount = 0L
-    // scale-adaptive round partitioning (guide §2): derive the loop's
-    // partition count from the EDGE COUNT, not the core count. Every
-    // trim/color/mark round schedules tasks per partition across several
-    // stages, so a tiny condensation on the old defaultParallelism/2
-    // default (16 partitions for a 25-vertex fixture) paid ~10× pure
-    // scheduling overhead per round; past ~50k edges/partition the count
-    // climbs back to the old cap and behavior at scale is unchanged.
-    // The count job reads the persisted raw edges that seed the loop.
-    val e0raw = trackRdd(gs.table(r.tableName)
+    // the partitioning job re-reads the count job's distinct shuffle
+    // output (same RDD, so its map stage is skipped)
+    val e0raw = gs.table(r.tableName)
       .select(col(r.fromColumn).cast("long").as("s"),
         col(r.toColumn).cast("long").as("d"))
       .distinct()
-      .as[(Long, Long)].rdd)
-    val maxParts = math.max(spark.sparkContext.defaultParallelism / 2, 4)
-    val parts = math.max(2,
-      math.min(maxParts, (e0raw.count() / 50000L + 1L).toInt))
-    val part = new org.apache.spark.HashPartitioner(parts)
-    locally {
-      val (p, n) = mat(e0raw.partitionBy(part))
-      edges = p; edgeCount = n
-      e0raw.unpersist(blocking = false)
-    }
+      .as[(Long, Long)].rdd
+    val part = partitioner(spark.sparkContext, e0raw.count())
+    val parts = part.numPartitions
+    var (edges, edgeCount) = mat(e0raw.partitionBy(part))
     def trimToFixpoint(): Unit = {
       var stable = edgeCount == 0
       while (!stable) {
@@ -218,7 +248,7 @@ object GraphAlgorithms {
         s"numIter = $numIter outer iterations (condensation chain deeper " +
         "than the budget); raise numIter")
       // ---- forward-min coloring to fixpoint --------------------------
-      val verts = trackRdd(edges.flatMap { case (s, d) => Iterator(s, d) }
+      val verts = persist(edges.flatMap { case (s, d) => Iterator(s, d) }
         .distinct(parts).map(v => (v, v)).partitionBy(part))
       var color = verts
       // the fold below is the materializing action for verts too — a
@@ -237,8 +267,7 @@ object GraphAlgorithms {
         // latency). The fold both materializes the persisted round and
         // yields the fixpoint detector: colors only ever decrease under
         // the min-fold, so the value sum is stationary iff no color moved.
-        val p = trackRdd(next)
-        if (rounds % SccTruncateEvery == 0) p.localCheckpoint()
+        val p = persist(next)
         val nextTotal = p.values.fold(0L)(_ + _)
         stable = nextTotal == colorTotal
         colorTotal = nextTotal
@@ -247,14 +276,14 @@ object GraphAlgorithms {
       }
       // ---- backward confirm within color ----------------------------
       // reversed same-color edges: the mark wave cannot cross colors
-      val backEdges = trackRdd(edges.join(color, part)
+      val backEdges = persist(edges.join(color, part)
         .map { case (s, (d, cs)) => (d, (s, cs)) }
         .join(color, part)
         .flatMap { case (d, ((s, cs), cd)) =>
           if (cs == cd) Iterator((d, s)) else Iterator.empty }
         .partitionBy(part))
       backEdges.count()
-      var marked = trackRdd(color.filter { case (v, c) => v == c })
+      var marked = persist(color.filter { case (v, c) => v == c })
       var markedCount = marked.count()
       stable = false
       while (!stable) {
@@ -460,14 +489,8 @@ object GraphAlgorithms {
     * counts are a union-all + one map-side-combinable aggregate. */
   def clusteringCoefficient(gs: GraftSession, relLabel: String,
       edgePred: Option[Column] = None): DataFrame = {
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
     // canonical undirected simple edges; read 4x below, so persist
-    val canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
+    val canon = simpleEdges(gs, relLabel, edgePred)
       .persist(StorageLevel.MEMORY_AND_DISK)
       .transform(graft.pipeline.PipelineCaches.track)
     val deg = canon.select(col("a").as("id"))
@@ -506,13 +529,7 @@ object GraphAlgorithms {
     * degree ≥ 2, so 1/ln(deg) never divides by zero. */
   def linkFeatures(gs: GraftSession, relLabel: String,
       edgePred: Option[Column] = None): DataFrame = {
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    val canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
+    val canon = simpleEdges(gs, relLabel, edgePred)
       .persist(StorageLevel.MEMORY_AND_DISK)
       .transform(graft.pipeline.PipelineCaches.track)
     val und = canon.unionAll(canon.select(col("b").as("a"), col("a").as("b")))
@@ -572,13 +589,7 @@ object GraphAlgorithms {
   def labelPropagation(gs: GraftSession, relLabel: String, iters: Int = 5,
       edgePred: Option[Column] = None, untilStable: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    val canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
+    val canon = simpleEdges(gs, relLabel, edgePred)
     // GraphX aggregateMessages rounds (the g_wpagerank/g_ppr move: the
     // DataFrame form re-planned join+mode+persist per round, and on a
     // real cluster re-shuffled the symmetric edge list each time; here
@@ -747,6 +758,11 @@ object GraphAlgorithms {
   private[graft] val lastLabelPropRounds =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** Peel rounds the last [[kCore]] call executed — test probe for the
+    * converged-early exit. */
+  private[graft] val lastKCoreRounds =
+    new java.util.concurrent.atomic.AtomicInteger(0)
+
   /** k-core of the UNDIRECTED simple graph induced by `relLabel`
     * (optionally edge-filtered): repeatedly delete vertices of degree < k
     * until none remain, up to `maxRounds` peel rounds. Returns
@@ -757,62 +773,54 @@ object GraphAlgorithms {
     * the early exit when a round deletes nothing is an optimization, not
     * a semantic change — which keeps the unrolled-CTE DuckDB mirror exact.
     *
-    * Scale shape per round: one map-side-combinable degree aggregate over
-    * the surviving symmetric edge list plus two left-semi joins against
-    * the (≤|V|-row) survivor set — shuffle volume is proportional to the
-    * CURRENT edge count, which only shrinks, and AQE broadcasts the
-    * survivor side once it fits. Because each round references the prior
-    * round's frame TWICE (once per endpoint's semi-join), a plain
-    * DataFrame chain would double Catalyst's logical plan every round —
-    * the classic iterative-plan blow-up — so each round's survivor edge
-    * set is materialized to a persisted RDD and re-based as a fresh scan:
-    * lineage AND plan size stay constant per round, at the cost of one
-    * row-encode pass over the (shrinking) survivors. The materializing
-    * count doubles as the convergence probe; prior rounds' blocks are
-    * freed eagerly. */
+    * Scale shape: RDD rounds over adjacency lists hash-partitioned once by
+    * vertex, so a vertex's degree is its list length — partition-local, no
+    * shuffle. Each round the vertices below k drop out and tell their
+    * neighbours through one shuffle sized by the removed vertices' degrees
+    * (the frontier — the delta shape of [[coreNumbers]]); the receiving
+    * partition filters them out of its lists. One action per round both
+    * materializes the round and detects the fixpoint: the surviving edge
+    * total only shrinks, so it is unchanged iff the round removed nothing. */
   def kCore(gs: GraftSession, relLabel: String, k: Int, maxRounds: Int = 20,
       edgePred: Option[Column] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    val canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
-    val start = rebaseRows(
-      canon.unionAll(canon.select(col("b").as("a"), col("a").as("b"))))
-    val (cur, _, _, rounds) = peelToFixpoint(start, k, maxRounds)
-    lastKCoreRounds.set(rounds)
-    cur.groupBy(col("a").as("id")).agg(count(lit(1)).as("degree"))
-  }
-
-  /** The k-core peel loop over a re-based symmetric edge frame: delete
-    * degree-<k vertices round by round until a round removes nothing (or
-    * `maxRounds`). Consumes (and frees) the input's backing RDD as rounds
-    * advance; returns the surviving frame, its RDD, edge count, and the
-    * round count. Shared by [[kCore]] and [[coreNumbers]]. */
-  private def peelToFixpoint(
-      start: (DataFrame, RDD[org.apache.spark.sql.Row], Long),
-      k: Int, maxRounds: Int)
-      : (DataFrame, RDD[org.apache.spark.sql.Row], Long, Int) = {
-    var (cur, curRdd, curEdges) = start
-    var i = 0
-    var stable = curEdges == 0
-    while (i < maxRounds && !stable) {
-      val keep = cur.groupBy("a").agg(count(lit(1)).as("__deg"))
-        .filter(col("__deg") >= k).select(col("a").as("__keep"))
-      val (next, nextRdd, nextEdges) = rebaseRows(cur
-        .join(keep, cur("a") === col("__keep"), "left_semi")
-        .join(keep.withColumnRenamed("__keep", "__keepb"),
-          cur("b") === col("__keepb"), "left_semi"))
-      stable = nextEdges == curEdges
-      curRdd.unpersist(blocking = false)
-      cur = next; curRdd = nextRdd; curEdges = nextEdges
-      i += 1
+    val spark = gs.spark
+    import spark.implicits._
+    val canon = simpleEdges(gs, relLabel, edgePred).as[(Long, Long)].rdd
+    var total = 2 * canon.count()
+    val part = partitioner(spark.sparkContext, total)
+    // the first round's job materializes the adjacency lists
+    var adj = persist(canon.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
+      .groupByKey(part).mapValues(_.toArray))
+    var rounds = 0
+    var stable = total == 0
+    while (rounds < maxRounds && !stable) {
+      val removed = adj.flatMap { case (v, ns) =>
+          if (ns.length < k) ns.iterator.map(u => (u, v)) else Iterator.empty }
+        .partitionBy(part)
+      // preservesPartitioning = true: the survivors stay on `part`
+      val next = persist(adj.zipPartitions(removed, true) { (aIt, rIt) =>
+        val gone = new java.util.HashMap[Long, java.util.HashSet[Long]]()
+        rIt.foreach { case (u, v) =>
+          gone.computeIfAbsent(u, _ => new java.util.HashSet[Long]()).add(v) }
+        aIt.flatMap { case (v, ns) =>
+          val g = gone.get(v)
+          val kept =
+            if (ns.length < k) Array.emptyLongArray
+            else if (g == null) ns
+            else ns.filterNot(u => g.contains(u))
+          if (kept.isEmpty) Iterator.empty else Iterator((v, kept))
+        }
+      })
+      val nextTotal = next.map(_._2.length.toLong).fold(0L)(_ + _)
+      stable = nextTotal == total
+      adj.unpersist(blocking = false)
+      adj = next; total = nextTotal
+      rounds += 1
     }
-    (cur, curRdd, curEdges, i)
+    lastKCoreRounds.set(rounds)
+    adj.map { case (v, ns) => (v, ns.length.toLong) }.toDF("id", "degree")
   }
 
   /** Rounds the last [[coreNumbers]] call executed — test probe for the
@@ -857,29 +865,16 @@ object GraphAlgorithms {
     * frontier-proportional; edges never re-shuffle (hash-co-partitioned
     * with the frontier once); the state pass is O(|V|/parts) per
     * partition. Values are integers that never increase, so an empty
-    * frontier ⟺ fixpoint. Lineage is truncated via localCheckpoint every
-    * [[SccTruncateEvery]]-style interval, so deep cascades cost time,
-    * not stack. */
+    * frontier ⟺ fixpoint. Each burst's last state is lineage-truncated
+    * ([[persist]]), so deep cascades cost time, not stack. */
   def coreNumbers(gs: GraftSession, relLabel: String, maxK: Int = 64,
       maxRounds: Int = 500, edgePred: Option[Column] = None): DataFrame = {
     require(maxK >= 1, s"maxK must be >= 1, got $maxK")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    val canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
     val spark = gs.spark
     import spark.implicits._
-    val parts = math.max(spark.sparkContext.defaultParallelism / 2, 4)
-    val part = new org.apache.spark.HashPartitioner(parts)
-    def trackRdd[T](x: RDD[T]): RDD[T] = {
-      val p = x.persist(StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.PipelineCaches.onClear(p)(_.unpersist(blocking = false))
-      p
-    }
+    val canon = simpleEdges(gs, relLabel, edgePred).as[(Long, Long)].rdd
+    val part = partitioner(spark.sparkContext, 2 * canon.count())
     val K = maxK
     // largest t in 0..K with (count of neighbor values >= t) >= t: one
     // descending pass accumulating the suffix sum of the capped histogram
@@ -895,22 +890,13 @@ object GraphAlgorithms {
     def cap(c: Long): Int = if (c >= K) K else c.toInt
     // symmetric edge list, hash-partitioned ONCE on the source vertex —
     // every later frontier join and delta shuffle reuses this partitioner
-    val edges = trackRdd(
-      canon.select(col("a"), col("b")).as[(Long, Long)].rdd
-        .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-        .partitionBy(part))
-    if (edges.isEmpty())
-      return gs.spark.createDataFrame(
-        gs.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("coreness",
-            org.apache.spark.sql.types.LongType, nullable = false))))
+    val edges = persist(canon
+      .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
+      .partitionBy(part))
     // c0 = min(degree, maxK); initial neighbor-value histograms in one
     // |E| pass (the only full-edge aggregate of the run), map-side
     // combined so hub in-deltas reduce before the shuffle
-    val c0 = trackRdd(edges.mapValues(_ => 1L).reduceByKey(part, _ + _)
+    val c0 = persist(edges.mapValues(_ => 1L).reduceByKey(part, _ + _)
       .mapValues(d => math.min(d, K.toLong)))
     val hist0 = edges.join(c0)
       .map { case (_, (b, ca)) => (b, cap(ca)) }
@@ -920,9 +906,8 @@ object GraphAlgorithms {
         (x, y) => { var i = 0; while (i <= K) { x(i) += y(i); i += 1 }; x })
     // state: (id, (c, prevRoundC, neighborHistogram)); prev > c marks the
     // vertex as this round's frontier. The init sweep is round 1.
-    var state = trackRdd(c0.join(hist0).mapValues { case (c, h) =>
+    var state = persist(c0.join(hist0).mapValues { case (c, h) =>
       (math.min(c, hIndexOf(h)), c, h) })
-    state.localCheckpoint()
     var frontierCount =
       state.filter { case (_, (c, prev, _)) => prev > c }.count()
     var round = 1
@@ -974,7 +959,7 @@ object GraphAlgorithms {
         // REFERENCE forward (no |V|-sized allocation per round); patched
         // ones copy — mutating in place would corrupt the previous
         // round's cached blocks
-        val next = trackRdd(state.leftOuterJoin(deltas).mapValues {
+        val next = persist(state.leftOuterJoin(deltas).mapValues {
           case ((c, _, h), None) => (c, c, h)
           case ((c, _, h), Some(d)) =>
             val h2 = java.util.Arrays.copyOf(h, K + 1)
@@ -986,8 +971,8 @@ object GraphAlgorithms {
         state = next
         round += 1; b -= 1
       }
-      // one physical-lineage truncation + one convergence job per burst
-      state.localCheckpoint()
+      // one convergence job per burst; it also cuts the burst's lineage
+      // at its last state (every earlier state is released below)
       frontierCount = state.filter { case (_, (c, p, _)) => p > c }.count()
       pending.foreach(_.unpersist(blocking = false))
       pending.clear()
@@ -999,43 +984,6 @@ object GraphAlgorithms {
         s"rounds (cascade depth exceeds the budget); raise maxRounds — " +
         s"refusing to return a partially-refined decomposition")
     state.map { case (id, (c, _, _)) => (id, c) }.toDF("id", "coreness")
-  }
-
-  /** Peel rounds the last [[kCore]] call executed — test probe for the
-    * converged-early exit. */
-  private[graft] val lastKCoreRounds =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Materialize `df` into a persisted RDD[Row] and re-base it as a fresh
-    * LogicalRDD scan — the plan-truncation step every round-based loop
-    * here runs once per round. Persist+count alone is NOT enough for
-    * iterative DataFrames: the logical plan keeps nesting round over
-    * round, and Catalyst's per-job planning over the growing
-    * cached-plan chain turns superlinear (measured ~4× slower per round
-    * on a 25-vertex HITS before this — the classic iterative-lineage
-    * trap). The RDD hop costs one row-encode pass over the frame and
-    * keeps lineage, plan size, and planning time constant per round.
-    * The RDD is registered for [[graft.pipeline.PipelineCaches]] cleanup;
-    * the returned count doubles as the eager materialization barrier.
-    *
-    * `localCheckpoint` is what makes the truncation REAL: createDataFrame
-    * resets the logical plan, but without it the new RDD still references
-    * the previous round's RDD through its dependency chain, and Java task
-    * serialization walks that whole object graph — a loop that rebases
-    * hundreds of times (deep peel cascades, long BFS frontiers) dies in
-    * StackOverflowError at stage submission even though every hop is
-    * persisted (observed: coreNumbers on the sf0.01 PLACED probe graph).
-    * The trade is the standard iterative-graph one: a truncated RDD
-    * cannot be recomputed if an executor holding its only copy dies —
-    * MEMORY_AND_DISK keeps a disk copy per executor, and these loops
-    * re-run from the query anyway on failure. */
-  private def rebaseRows(df: DataFrame)
-      : (DataFrame, RDD[org.apache.spark.sql.Row], Long) = {
-    val rdd = df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.localCheckpoint()
-    graft.pipeline.PipelineCaches.onClear(rdd)(_.unpersist(blocking = false))
-    val n = rdd.count()
-    (df.sparkSession.createDataFrame(rdd, df.schema), rdd, n)
   }
 
   /** HITS hubs/authorities over the DIRECTED simple graph induced by
@@ -1124,13 +1072,13 @@ object GraphAlgorithms {
     * every vertex, so small-graph results equal the exact form. Cost is
     * |sources| BFS+sweep passes, NOT all-pairs.
     *
-    * Scale shape: per forward level one frontier⋈edges join + one
+    * Scale shape: RDD rounds over the symmetric edge list, partitioned
+    * once. Per forward level one frontier⋈edges join + one
     * map-side-combinable σ sum + one anti-join against the settled set
     * (frontier-delta, like the shortestPath composition); per backward
-    * level one succ join + one combinable δ sum. Every level frame is
-    * re-based through [[rebaseRows]] — the forward loop references the
-    * growing settled set each level and the loop is count-gated, the
-    * exact shape the rebase exists for. State ≤ |sources|·|V|. */
+    * level one succ join + one combinable δ sum. Each level runs one
+    * action, and every level RDD goes through [[persist]], so lineage
+    * stays one level deep. State ≤ |sources|·|V|. */
   def betweennessCentrality(gs: GraftSession, relLabel: String,
       sources: Seq[Long] = Nil, maxDepth: Int = 10,
       edgePred: Option[Column] = None, exact: Boolean = false): DataFrame = {
@@ -1140,13 +1088,7 @@ object GraphAlgorithms {
       "with an explicit sources list")
     val spark = gs.spark
     import spark.implicits._
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    val canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
+    val canon = simpleEdges(gs, relLabel, edgePred)
     val sym = canon.unionAll(canon.select(col("b").as("a"), col("a").as("b")))
       .persist(StorageLevel.MEMORY_AND_DISK)
       .transform(graft.pipeline.PipelineCaches.track)
@@ -1160,35 +1102,23 @@ object GraphAlgorithms {
       // the vertex set, never an all-vertices O(V·E) schedule by accident
       else v.orderBy(col("id")).limit(64).select(col("id").as("src"))
 
-    // ---- RDD rounds (r18) -------------------------------------------------
-    // The sweeps used to run as per-level DataFrame plans re-based through
-    // rebaseRows — 2 planned jobs per forward level + 1 per backward level,
-    // each paying Catalyst planning + codegen + 32-partition stages for
-    // level frames of |sources|·|V| rows at most. The HITS/Louvain/SCC
-    // rationale applies unchanged: a round-based algorithm wants RDD
-    // rounds (~tens of ms) — and the arithmetic is the same: σ sums are
-    // integer-valued doubles (exact under any combine order), δ sums are
-    // the same unordered float adds the DataFrame sum() performed, nine
-    // orders below the 6-dp rounding quantum. Partitioning is sized to
-    // the edge count (the SCC rule); every level RDD is persisted,
-    // lineage-truncated, and the predecessor released.
-    def trackRdd[T](x: RDD[T]): RDD[T] = {
-      val p = x.persist(StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.PipelineCaches.onClear(p)(_.unpersist(blocking = false))
-      p
-    }
-    val symRdd = trackRdd(sym.as[(Long, Long)].rdd)
-    val parts = math.max(1, math.min(
-      math.max(spark.sparkContext.defaultParallelism / 2, 4),
-      (symRdd.count() / 50000L + 1L).toInt))
-    val part = new org.apache.spark.HashPartitioner(parts)
-    val symP = trackRdd(symRdd.partitionBy(part))
+    // ---- RDD rounds ------------------------------------------------------
+    // A per-level DataFrame plan pays Catalyst planning + codegen + stage
+    // launch per level (measured r18: 2 planned jobs per forward level + 1
+    // per backward level, about the whole entry cost), while an RDD round
+    // costs tens of ms. The arithmetic is the DataFrame sum()'s: σ sums
+    // are integer-valued doubles (exact under any combine order), δ sums
+    // are unordered float adds nine orders below the 6-dp rounding
+    // quantum. Every level RDD goes through [[persist]] and the
+    // predecessor is released. The count also materializes `sym`'s cache,
+    // the only other copy of the edge list: `symP` reads it once.
+    val part = partitioner(spark.sparkContext, sym.count())
+    val symP = persist(sym.as[(Long, Long)].rdd.partitionBy(part))
 
     // ---- forward: per-level ((src, v) -> sigma) RDDs ----------------------
     def matLevel(x: RDD[((Long, Long), Double)])
         : (RDD[((Long, Long), Double)], Long) = {
-      val p = trackRdd(x.partitionBy(part))
-      p.localCheckpoint()
+      val p = persist(x.partitionBy(part))
       (p, p.count())
     }
     val (lev0, _) = matLevel(
@@ -1207,8 +1137,7 @@ object GraphAlgorithms {
       val (nxt, n) = matLevel(expanded.subtractByKey(settled, part))
       if (n == 0) { nxt.unpersist(blocking = false); done = true }
       else {
-        val st = trackRdd(settled.union(nxt).partitionBy(part))
-        st.localCheckpoint()
+        val st = persist(settled.union(nxt).partitionBy(part))
         st.count()
         // level 0 IS the first settled, which the backward sweep still
         // reads — never unpersist an RDD that lives on in `levels`
@@ -1223,7 +1152,7 @@ object GraphAlgorithms {
 
     // ---- backward: dependency accumulation, deepest level first ----------
     // deeper: (src, v) -> (sigma, delta)
-    var deeper = trackRdd(levels.last.mapValues(s => (s, 0.0)))
+    var deeper = persist(levels.last.mapValues(s => (s, 0.0)))
     val perSourceDeps =
       scala.collection.mutable.ArrayBuffer[RDD[(Long, Double)]]()
     if (levels.size > 1)
@@ -1238,9 +1167,8 @@ object GraphAlgorithms {
         .map { case ((src, _), ((vv, sig), (dsig, ddel))) =>
           ((src, vv), sig / dsig * (1.0 + ddel)) }
         .reduceByKey(part, _ + _)
-      val d = trackRdd(cur.leftOuterJoin(contrib, part)
+      val d = persist(cur.leftOuterJoin(contrib, part)
         .mapValues { case (sig, c) => (sig, c.getOrElse(0.0)) })
-      d.localCheckpoint()
       d.count()
       // deeper is NOT unpersisted here: perSourceDeps holds a map() view
       // of it, and a localCheckpointed RDD is unrecomputable once its
@@ -1338,13 +1266,7 @@ object GraphAlgorithms {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = gs.spark
     import spark.implicits._
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    val canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
+    val canon = simpleEdges(gs, relLabel, edgePred)
     val sym = canon.unionAll(canon.select(col("b").as("a"), col("a").as("b")))
     val edgeRdd = sym.rdd.map(row => Edge(row.getLong(0), row.getLong(1), ()))
     var g = tracked(Graph.fromEdges(edgeRdd, 1.0,
@@ -1616,13 +1538,7 @@ object GraphAlgorithms {
     * shape) — no window, no driver collect. */
   def modularity(gs: GraftSession, relLabel: String, communities: DataFrame,
       edgePred: Option[Column] = None): DataFrame = {
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    val canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
+    val canon = simpleEdges(gs, relLabel, edgePred)
       .persist(StorageLevel.MEMORY_AND_DISK)
       .transform(graft.pipeline.PipelineCaches.track)
     val lab = communities.select(col("id").cast("long").as("__lid"),
@@ -1664,13 +1580,7 @@ object GraphAlgorithms {
     * aggregate, all map-side combinable. */
   def assortativity(gs: GraftSession, relLabel: String,
       edgePred: Option[Column] = None): DataFrame = {
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    val canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
+    val canon = simpleEdges(gs, relLabel, edgePred)
     val sym = canon.unionAll(canon.select(col("b").as("a"), col("a").as("b")))
       .persist(StorageLevel.MEMORY_AND_DISK)
       .transform(graft.pipeline.PipelineCaches.track)
@@ -1734,9 +1644,13 @@ object GraphAlgorithms {
     * run on RDD primitives); volumes/strengths are |V|-row reduces and
     * the global weight is one driver long. Round state is persisted,
     * materialized, and the prior round freed, so lineage stays flat.
-    * Contraction is one groupBy over the current edge list; coarse
-    * levels shrink geometrically, so the total cost is dominated by
-    * level 0, exactly the published behavior.
+    * Between levels, composing the mapping is one join keyed by
+    * community, and contraction re-keys both endpoints and runs one
+    * `reduceByKey` on (least, greatest). Every level shares one
+    * partitioner, sized from the level-0 edge count; coarse levels shrink
+    * geometrically, so the total cost is dominated by level 0, exactly
+    * the published behavior. The result becomes a DataFrame once, at the
+    * end.
     *
     * Reference: brahmand has no graph-algorithm library (ClickHouse
     * cannot iterate); this extends the analytics surface the way
@@ -1745,99 +1659,71 @@ object GraphAlgorithms {
       levels: Int = 1, edgePred: Option[Column] = None): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(levels >= 1, s"levels must be >= 1, got $levels")
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    var canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
-      .withColumn("w", lit(1L))
-    var mapping: DataFrame = null
-    var level = 0
-    while (level < levels) {
-      val labels = louvainLocalMoving(canon, rounds)
+    val spark = gs.spark
+    import spark.implicits._
+    // ((a, b), w) with a <= b. Persisted: each level's self-loop and
+    // cross-edge branches both read it; the count materializes it.
+    var edges = persist(simpleEdges(gs, relLabel, edgePred)
+      .as[(Long, Long)].rdd.map(e => (e, 1L)))
+    val part = partitioner(spark.sparkContext, edges.count())
+    var mapping: RDD[(Long, Long)] = null
+    for (level <- 0 until levels) {
+      val labels = louvainLocalMoving(edges, part, rounds)
+      // compose: each vertex follows its community's new label
       mapping =
-        if (mapping == null) labels.select(col("id"), col("c").as("community"))
-        else rebaseRows(mapping
-          .join(labels.select(col("id").as("__cid"), col("c").as("__cnew")),
-            col("community") === col("__cid"))
-          .select(col("id"), col("__cnew").as("community")))._1
+        if (mapping == null) labels
+        else mapping.map(_.swap).join(labels, part)
+          .map { case (_, (id, c)) => (id, c) }
       if (level < levels - 1) {
-        // contract: endpoints → communities; least/greatest folds internal
-        // edges (and prior self-loops) into community self-loops whose
-        // weight keeps vol(c) invariant across the level change. Re-based
-        // to a fresh scan so level l+1's round plans don't nest level l's.
-        val lab = labels.select(col("id").as("__lid"), col("c").as("__lc"))
-        canon = rebaseRows(canon
-          .join(lab.withColumnRenamed("__lid", "__la"), col("a") === col("__la"))
-          .withColumnRenamed("__lc", "__ca")
-          .join(lab.withColumnRenamed("__lid", "__lb")
-            .withColumnRenamed("__lc", "__cb"), col("b") === col("__lb"))
-          .select(least(col("__ca"), col("__cb")).as("a"),
-            greatest(col("__ca"), col("__cb")).as("b"), col("w"))
-          .groupBy("a", "b").agg(sum("w").as("w")))._1
+        // contract: endpoints → communities; (least, greatest) folds
+        // internal edges (and prior self-loops) into community self-loops
+        // whose weight keeps vol(c) invariant across the level change
+        edges = persist(edges.map { case ((a, b), w) => (a, (b, w)) }
+          .join(labels, part)
+          .map { case (_, ((b, w), ca)) => (b, (ca, w)) }
+          .join(labels, part)
+          .map { case (_, ((ca, w), cb)) =>
+            ((math.min(ca, cb), math.max(ca, cb)), w) }
+          .reduceByKey(part, _ + _))
       }
-      level += 1
     }
-    mapping
+    mapping.toDF("id", "community")
   }
 
   /** One Louvain level: `rounds` synchronous bit-staggered local-move
-    * rounds over a weighted canonical edge list (a ≤ b; a = b rows are
-    * self-loops carrying contracted internal weight). Returns (id, c).
+    * rounds over weighted canonical edges ((a, b), w) with a ≤ b; a = b
+    * keys are self-loops carrying contracted internal weight. Returns the
+    * (id, community) labels, partitioned by `part`.
     *
     * The rounds run on RDD `reduceByKey`/`join` primitives rather than
     * per-round DataFrame plans — the HITS rationale: a Catalyst plan per
     * round pays planning + codegen compilation `rounds` times (measured
-    * 6.6 s for the 25-vertex gate as DataFrame rounds, even with
-    * rebaseRows flattening lineage), while the RDD loop's per-round job
+    * 6.6 s for the 25-vertex gate as DataFrame rounds, even with each
+    * round re-based to a fresh scan), while the RDD loop's per-round job
     * is tens of ms. Nothing scale-relevant is lost: `reduceByKey` is
     * map-side combining like a partial aggregate, the neighbor-count
     * join runs co-partitioned against the pre-partitioned symmetric edge
     * RDD (narrow on the |E| side), and all arithmetic is exact longs.
     * Per-round state is persisted and the predecessor freed, the Pregel
     * discipline. */
-  private def louvainLocalMoving(canon: DataFrame, rounds: Int): DataFrame = {
-    val spark = canon.sparkSession
-    import spark.implicits._
-    def trackRdd[T](r: RDD[T]): RDD[T] = {
-      val p = r.persist(StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.PipelineCaches.onClear(p)(_.unpersist(blocking = false))
-      p
-    }
-    // persisted: self (via strength) and cross (via symByB) each branch
-    // off this RDD, and unpersisted each branch re-executed the whole
-    // upstream canonical-edge DataFrame chain (distinct shuffle included)
-    val canonRdd = trackRdd(
-      canon.select("a", "b", "w").as[(Long, Long, Long)].rdd)
-    // scale-adaptive round partitioning (guide §2): size to the edge
-    // count, not the core count — every local-moving round schedules
-    // tasks per partition over several co-partitioned joins, and the old
-    // min(inputParts, defaultParallelism) put 32 partitions under a
-    // 25-vertex gate fixture. The count doubles as the persist's
-    // materializing action; at ≥50k edges/partition the cap is the old
-    // value and scale behavior is unchanged.
-    val parts = math.max(1, math.min(
-      math.min(math.max(1, canonRdd.getNumPartitions),
-        spark.sparkContext.defaultParallelism),
-      (canonRdd.count() / 50000L + 1L).toInt))
-    val part = new org.apache.spark.HashPartitioner(parts)
-    val self = canonRdd.filter(t => t._1 == t._2).map(t => (t._1, t._3))
-    val cross = canonRdd.filter(t => t._1 != t._2)
+  private def louvainLocalMoving(edges: RDD[((Long, Long), Long)],
+      part: HashPartitioner, rounds: Int): RDD[(Long, Long)] = {
+    val self = edges.filter(e => e._1._1 == e._1._2)
+      .map { case ((a, _), w) => (a, w) }
+    val cross = edges.filter(e => e._1._1 != e._1._2)
     // keyed by the NEIGHBOR endpoint so each round's label join is narrow
-    val symByB = trackRdd(cross
-      .flatMap(t => Seq((t._2, (t._1, t._3)), (t._1, (t._2, t._3))))
+    val symByB = persist(cross
+      .flatMap { case ((a, b), w) => Seq((b, (a, w)), (a, (b, w))) }
       .partitionBy(part))
     // strength s(i) = Σ_{j≠i} w_ij + 2·w_ii  (self-loops count twice, the
     // convention that keeps community volume invariant under contraction)
-    val strength = trackRdd(symByB.map { case (_, (a, w)) => (a, w) }
+    val strength = persist(symByB.map { case (_, (a, w)) => (a, w) }
       .union(self.mapValues(_ * 2L))
       .reduceByKey(part, _ + _))
     val totW2 = strength.map(_._2).fold(0L)(_ + _)
-    var labels = trackRdd(strength
+    // the first round's job materializes the initial labels
+    var labels = persist(strength
       .map { case (id, _) => (id, id) }.partitionBy(part))
-    labels.count()
     var t = 1
     while (t <= rounds) {
       val prev = labels
@@ -1870,7 +1756,7 @@ object GraphAlgorithms {
         if (x._1 > y._1 || (x._1 == y._1 && x._2 < y._2)) x else y)
       // bit staggering: only ids with bit (t-1)%64 clear may move
       val bit = (t - 1) % 64
-      labels = trackRdd(best.join(prev, part).map {
+      labels = persist(best.join(prev, part).map {
         case (id, ((_, bestc), curc)) =>
           (id, if (((id >> bit) & 1L) == 0L) bestc else curc)
       }.partitionBy(part))
@@ -1878,7 +1764,10 @@ object GraphAlgorithms {
       prev.unpersist(blocking = false)
       t += 1
     }
-    labels.toDF("id", "c")
+    // the last round's count cut the labels' lineage
+    symByB.unpersist(blocking = false)
+    strength.unpersist(blocking = false)
+    labels
   }
 
   /** In/out degree per vertex from the edge list (pure DataFrame op). */

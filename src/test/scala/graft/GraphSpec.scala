@@ -248,6 +248,88 @@ class GraphSpec extends AnyFunSuite {
     assert(GraphAlgorithms.kCore(g, "KE", k = 4).count() == 0)
   }
 
+  /** The k-core cascade: triangle 1-2-3 with the tail 3-4-5-6 ("KE"),
+    * plus a directed 3-cycle 1→2→3→1 bridged one way into 4⇄5 ("KD"). */
+  private def cascadeSession(): GraftSession = {
+    import spark.implicits._
+    val g = new GraftSession(spark)
+    g.registerTable("kn", (1L to 6L).map(i => (i, s"v$i")).toDF("id", "name"))
+    g.registerTable("KE", Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L),
+        (4L, 5L), (5L, 6L)).toDF("from_K", "to_K"))
+    g.registerTable("KD", Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L),
+        (4L, 5L), (5L, 4L)).toDF("from_K", "to_K"))
+    g.registerNode("K", "kn", "id")
+    g.registerRel("KE", "KE", "K", "K")
+    g.registerRel("KD", "KD", "K", "K")
+    g
+  }
+
+  test("k-core: stopped before convergence returns the unrolled rounds") {
+    val g = cascadeSession()
+    def core(maxRounds: Int): Map[Long, Long] =
+      GraphAlgorithms.kCore(g, "KE", k = 2, maxRounds = maxRounds)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // round 1 peels only 6; 5 keeps its edge to 4
+    assert(core(1) == Map(1L -> 2L, 2L -> 2L, 3L -> 3L, 4L -> 2L, 5L -> 1L))
+    assert(GraphAlgorithms.lastKCoreRounds.get() == 1)
+    // round 2 peels 5; 4 keeps its edge to 3
+    assert(core(2) == Map(1L -> 2L, 2L -> 2L, 3L -> 3L, 4L -> 1L))
+    assert(GraphAlgorithms.lastKCoreRounds.get() == 2)
+    graft.pipeline.PipelineCaches.clear()
+  }
+
+  test("k-core: one Spark job per peel round") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val g = cascadeSession()
+    val sc = spark.sparkContext
+    val group = "graphspec-kcore-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    org.apache.spark.graftprobe.BusProbe.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "kCore job census")
+      GraphAlgorithms.kCore(g, "KE", k = 2).collect()
+    } finally {
+      sc.clearJobGroup()
+      org.apache.spark.graftprobe.BusProbe.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    val rounds = GraphAlgorithms.lastKCoreRounds.get()
+    assert(rounds == 4)
+    // outside the rounds: the canonical-edge shuffle, the edge count
+    // that sizes the partitioner, and the caller's collect
+    assert(jobs.get() <= rounds + 3,
+      s"${jobs.get()} jobs for $rounds peel rounds")
+    graft.pipeline.PipelineCaches.clear()
+  }
+
+  test("graph RDD loops register every persist with PipelineCaches") {
+    val g = cascadeSession()
+    val sc = spark.sparkContext
+    val calls = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "kCore" -> (() => GraphAlgorithms.kCore(g, "KE", k = 2)),
+      "louvain" -> (() => GraphAlgorithms.louvain(g, "KE", levels = 2)),
+      "coreNumbers" -> (() => GraphAlgorithms.coreNumbers(g, "KE")),
+      "stronglyConnectedComponents" ->
+        (() => GraphAlgorithms.stronglyConnectedComponents(g, "KD")),
+      "betweennessCentrality" ->
+        (() => GraphAlgorithms.betweennessCentrality(g, "KE")))
+    graft.pipeline.PipelineCaches.clear(blocking = true)
+    for ((name, call) <- calls) {
+      val before = sc.getPersistentRDDs.keySet
+      assert(call().collect().nonEmpty, name)
+      graft.pipeline.PipelineCaches.clear(blocking = true)
+      val leaked = sc.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"$name left persisted RDDs $leaked after clear")
+    }
+  }
+
   test("core numbers: hand-checked K4 + tail + pendant") {
     import spark.implicits._
     val g = new GraftSession(spark)
