@@ -86,7 +86,6 @@ object Bench {
       .master(s"local[$cpus]")
       .config(SparkTuning.kryoConf())
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.graphx.pregel.checkpointInterval", "10")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -124,13 +123,13 @@ object Bench {
       // ...and the persisted BPE vocabulary p_bpe_persisted reads
       PipelineEntries.prewarmPersistedBpe(spark, sfDir)
       // Graph-fixture warm-up: TpchGraph.session registers the graph
-      // tables and adjacency indexes, and the FIRST GraphX job pays
+      // tables and adjacency indexes, and the FIRST graph-round job pays
       // class-loading + closure-cleaner + fixture-build tax. That cost
       // otherwise lands entirely on the alphabetically-first g_* query —
       // r9/r10 both recorded 10-20x medians on the front-of-run graph
       // query (g_assort 11.3 s vs 0.61 s isolated) and needed manual
       // adjudication. One action per fixture table plus one trivial
-      // GraphX job moves all of it into this untimed section.
+      // connected-components run moves all of it into this untimed section.
       val gs = graft.fixtures.TpchGraph.session(spark, sfDir)
       Seq("NATION_ADJ", "NATION_NEXT", "NATION_RING", "PLACED")
         .foreach(t => gs.table(t).limit(1).count())

@@ -404,7 +404,7 @@ object PipelineEntries {
     "p_span_persisted" -> ((s, dir) =>
       Dedup.dupSpanCoveragePersisted(docs(s, dir), spanPath(dir))),
 
-    // transitive dup clustering: GraphX connected components over the
+    // transitive dup clustering: min-label connected components over the
     // exact pair graph; canonical id = min doc in cluster — oracle-checked
     // against a recursive-CTE label propagation. Pairs come from the
     // persisted mining artifact (built once per corpus fingerprint), so
@@ -1332,12 +1332,12 @@ object PipelineEntries {
     // argmin of the shared quality score, min-id ties, rounded margin
     "p_pref_pairs" -> ((s, dir) => Sft.preferencePairs(docs(s, dir))),
 
-    // GraphX connected components over the same-label NATION_ADJ edge
-    // list; component id = min member id ⇒ SQL-oracle-checkable
+    // connected components (min-label rounds) over the same-label
+    // NATION_ADJ edge list; component id = min member id ⇒ SQL-oracle-checkable
     "g_concomp" -> ((s, dir) =>
       GraphAlgorithms.connectedComponents(TpchGraph.session(s, dir), "NATION_ADJ")),
 
-    // GraphX static PageRank, fixed 10 iterations — oracle-checked against
+    // static PageRank, fixed 10 iterations — oracle-checked against
     // an unrolled-iteration DuckDB mirror; ranks rounded to 6 dp, putting
     // the ~1e-15 message-sum-order noise nine orders of magnitude below
     // the rounding quantum (a rank sitting exactly on a 5e-7 boundary
@@ -1350,7 +1350,7 @@ object PipelineEntries {
     "g_degrees" -> ((s, dir) =>
       GraphAlgorithms.degrees(TpchGraph.session(s, dir), "NATION_ADJ")),
 
-    // GraphX per-vertex triangle count over NATION_ADJ (each region is a
+    // per-vertex triangle count over NATION_ADJ (each region is a
     // K5 clique ⇒ 6 per vertex) — oracle-checked against a triangle-
     // enumeration CTE
     // synchronous label propagation (5 fixed rounds, min-label ties) on
@@ -1377,7 +1377,7 @@ object PipelineEntries {
     "g_triangles" -> ((s, dir) =>
       GraphAlgorithms.triangleCount(TpchGraph.session(s, dir), "NATION_ADJ")),
 
-    // GraphX Pregel shortest paths (hop counts) to fixed landmarks over
+    // frontier-BFS shortest paths (hop counts) to fixed landmarks over
     // the sparse NATION_NEXT successor chain — oracle-checked against a
     // recursive-CTE BFS. Distances follow edge direction (v → … → lm).
     "g_shortest" -> ((s, dir) =>
@@ -2157,11 +2157,11 @@ object PipelineEntries {
        |  FROM f)
        |WHERE rank <= $k""".stripMargin
 
-  /** DuckDB mirror of GraphX staticPageRank on the NATION_ADJ edge list:
+  /** DuckDB mirror of [[GraphAlgorithms.pageRank]] on the NATION_ADJ edge list:
     * ranks start at 1.0 and iterate rank = 0.15 + 0.85·Σ(in-rank/out-deg)
     * — unrolled to `iters` chained CTEs (no recursion needed for a fixed
     * iteration count), then normalized so ranks sum to the vertex count
-    * (GraphX normalizes the final rank sum since SPARK-18847). All
+    * (the SPARK-18847 sink correction the engine applies). All
     * arithmetic forced to DOUBLE (DuckDB defaults numeric literals to
     * DECIMAL). */
   /** Unrolled synchronous label propagation: each level joins neighbor
@@ -2202,8 +2202,8 @@ object PipelineEntries {
     * over the NATION_RING fixture: re-derives the ring edges (per-region
     * successor chain + wrap + one-way bridges), builds the transitive
     * closure with a recursive CTE, and assigns each vertex the MINIMUM id
-    * among mutually-reachable vertices (self included) — the GraphX
-    * lowest-id-in-SCC convention. A deliberately different derivation
+    * among mutually-reachable vertices (self included) — the
+    * lowest-id-in-SCC convention of [[GraphAlgorithms.connectedComponents]]. A deliberately different derivation
     * from the engine's coloring algorithm (oracles need correctness, not
     * scale). */
   private def sccOracleSql: String =
@@ -5456,7 +5456,7 @@ object PipelineEntries {
     // triangle enumeration over the canonical (f < t) edge set: each
     // triangle a<b<c found once, per-vertex count = appearances in any
     // corner; vertices with edges but no triangles still get a 0 row
-    // (GraphX's vertex set = edge endpoints)
+    // (the vertex set = edge endpoints)
     "g_clustcoef" ->
       """WITH e AS (
         |  SELECT n1.n_nationkey AS a, n2.n_nationkey AS b
@@ -5500,7 +5500,7 @@ object PipelineEntries {
         |FROM verts LEFT JOIN cnt ON cnt.id = verts.id""".stripMargin,
 
     // BFS from each landmark expanding BACKWARD along the successor
-    // chain (GraphX ShortestPaths messages flow dst→src, so a vertex's
+    // chain (shortestPaths messages flow dst→src, so a vertex's
     // distance is the directed hop count v → … → landmark); the chain
     // next() is a function so each (id, landmark) appears exactly once
     "g_wshortest" ->

@@ -5,7 +5,6 @@ object Smoke {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.graphx.pregel.checkpointInterval", "10")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -3,25 +3,18 @@ package graft
 import org.apache.spark.SparkConf
 
 /** Session-level tuning shared by every entry point (bench, verify,
-  * server): Kryo serialization with GraphX's classes registered — the
-  * upstream GraphX recommendation at any scale. DataFrame exchanges move
-  * UnsafeRows and are unaffected; what this changes is the RDD layer the
-  * graph suite rides (Pregel message shuffles, VertexRDD/EdgeRDD
-  * shipping) plus broadcast values, where Java serialization writes the
-  * full class descriptor per object graph. Spark's KryoSerializer
-  * installs chill's AllScalaRegistrar, so the Scala collections our
-  * Pregel messages use (maps, vectors, tuples) serialize without
-  * per-class registration; GraphXUtils registers the Edge/triplet
-  * internals on top. Results are byte-identical — serialization format
-  * never reaches query semantics.
+  * server): Kryo serialization. DataFrame exchanges move UnsafeRows and
+  * are unaffected; what this changes is the RDD layer the graph rounds
+  * ride (tuple and primitive-array shuffles, persisted round state) plus
+  * broadcast values, where Java serialization writes the full class
+  * descriptor per object graph. Spark's KryoSerializer installs chill's
+  * AllScalaRegistrar, so the Scala tuples and collections the rounds
+  * shuffle serialize without per-class registration. Results are
+  * byte-identical — serialization format never reaches query semantics.
   */
 object SparkTuning {
   /** A SparkConf carrying the serializer settings, for
     * `SparkSession.builder().config(...)`. */
-  def kryoConf(): SparkConf = {
-    val c = new SparkConf()
-      .set("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-    org.apache.spark.graphx.GraphXUtils.registerKryoClasses(c)
-    c
-  }
+  def kryoConf(): SparkConf = new SparkConf()
+    .set("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
 }

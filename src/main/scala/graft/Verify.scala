@@ -15,7 +15,6 @@ object Verify {
       .master(s"local[$cpus]")
       .config(SparkTuning.kryoConf())
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.graphx.pregel.checkpointInterval", "10")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

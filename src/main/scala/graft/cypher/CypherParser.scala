@@ -361,8 +361,8 @@ object CypherParser extends RegexParsers {
   /** Hop-composition cap: every var-length level is another distinct-pair
     * self-join, so an absurd upper bound compiles to a join chain that can
     * never finish — reject it loudly at parse time. Whole-graph distances
-    * belong to the GraphX Pregel frontier BFS
-    * (`GraphAlgorithms.shortestPaths`), not hop composition. */
+    * belong to the frontier BFS rounds of `GraphAlgorithms.shortestPaths`,
+    * not hop composition. */
   private val MaxVarLengthHops = 30
 
   private def varLen: Parser[(Int, Int)] =
@@ -377,7 +377,7 @@ object CypherParser extends RegexParsers {
             s"var-length upper bound $h exceeds the $MaxVarLengthHops-hop " +
             "composition cap (each level is a distinct-pair self-join); for " +
             "whole-graph distances use GraphAlgorithms.shortestPaths " +
-            "(GraphX Pregel frontier BFS)")
+            "(frontier BFS rounds)")
         (l, h)
     }
 

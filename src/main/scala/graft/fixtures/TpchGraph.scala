@@ -109,8 +109,8 @@ object TpchGraph {
     // connected components are the 5 rings while rings 0 and 1 merge
     // under undirected reachability, the distinction an SCC oracle must
     // witness. A single bridge (not a chain) keeps the condensation DAG
-    // two layers deep: GraphX's SCC finalizes one condensation layer per
-    // outer iteration, so a 5-ring bridge chain would need 6+ iterations
+    // two layers deep: stronglyConnectedComponents finalizes one
+    // condensation layer per outer iteration, so a 5-ring bridge chain would need 6+ iterations
     // for a fixture whose point is direction, not depth.
     val rext = nation.groupBy(col("n_regionkey").as("__rg"))
       .agg(min("n_nationkey").as("__rmin"), max("n_nationkey").as("__rmax"))

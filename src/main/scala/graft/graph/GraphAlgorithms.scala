@@ -1,7 +1,9 @@
 package graft.graph
 
+import scala.collection.mutable.LongMap
+import scala.reflect.ClassTag
+
 import org.apache.spark.{HashPartitioner, SparkContext}
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -14,20 +16,28 @@ import graft.GraftSession
   * double as RDD input when global algorithms are wanted; the reference
   * has no equivalent — ClickHouse can't iterate).
   *
-  * Iterative algorithms run on one of two substrates:
-  *  - GraphX Pregel / `aggregateMessages` (components, PageRank variants,
-  *    shortest paths, HITS, eigenvector centrality, label propagation).
-  *    EdgePartition2D keeps the replication factor at O(sqrt(numParts)).
-  *  - RDD rounds (SCC, k-core, core numbers, Brandes betweenness,
-  *    Louvain): each round is one join of vertex state with messages plus
-  *    one group-by over co-partitioned RDDs (the Pregelix superstep). Every
-  *    such loop persists through [[persist]] and sizes its partitions with
-  *    [[partitioner]].
+  * Every iterative algorithm runs as RDD rounds: each round is one join
+  * of vertex state with messages plus one group-by over co-partitioned
+  * RDDs (the Pregelix superstep). Every loop persists through [[persist]],
+  * sizes its partitions with [[partitioner]], and runs one action per
+  * round that both materializes the round and, for a fixpoint loop,
+  * detects convergence. Three round shapes are written once:
+  *  - [[minLabelRounds]]: min-label to a fixpoint, sending only from keys
+  *    whose label changed (connected components and dedup clusters via
+  *    [[components]], SCC colouring and marking, hop-count shortest
+  *    paths);
+  *  - [[linearRound]]: x'(v) = f(v, Σ_{(u,v)} x(u)·w(u,v)) over out-edges
+  *    grouped by source (the PageRank family, eigenvector centrality,
+  *    HITS);
+  *  - [[labelPropagation]]'s mode rounds.
+  * k-core, core numbers, Brandes betweenness and Louvain run their own
+  * loops on the same helpers.
   *
-  * Single-pass algorithms (clustering coefficient, link features,
-  * modularity, assortativity, walks) stay plain DataFrame plans. Vertices
-  * come from the node tables where a vertex universe matters, so isolated
-  * nodes keep their identity in component/rank outputs.
+  * Single-pass algorithms (clustering coefficient and triangle counts,
+  * link features, modularity, assortativity, walks) stay plain DataFrame
+  * plans. Where a vertex universe matters, [[vertexIds]] adds the node
+  * tables, so isolated nodes keep their identity in component, rank and
+  * SCC outputs.
   */
 object GraphAlgorithms {
 
@@ -35,16 +45,59 @@ object GraphAlgorithms {
     * endpoints cast to long, self-loops dropped, each edge once as
     * (a, b) with a < b. */
   private def simpleEdges(gs: GraftSession, relLabel: String,
-      edgePred: Option[Column]): DataFrame = {
+      edgePred: Option[Column]): DataFrame =
+    directedEdges(gs, relLabel, edgePred)
+      .filter(col("f") =!= col("t"))
+      .select(least(col("f"), col("t")).as("a"),
+        greatest(col("f"), col("t")).as("b"))
+      .distinct()
+
+  /** The directed edge list of `relLabel` after `edgePred`, endpoints
+    * cast to long as (f, t), then any `extra` columns; duplicates and
+    * self-loops kept. */
+  private def directedEdges(gs: GraftSession, relLabel: String,
+      edgePred: Option[Column] = None, extra: Seq[Column] = Nil): DataFrame = {
     val r = gs.catalog.rel(relLabel)
     edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-      .select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct()
+      .select(Seq(col(r.fromColumn).cast("long").as("f"),
+        col(r.toColumn).cast("long").as("t")) ++ extra: _*)
   }
+
+  /** The ids of both endpoint node tables of `relLabel`, duplicates kept
+    * ([[keyed]] removes them). Algorithms whose vertex set is the node
+    * tables add their edge endpoints too, so a vertex referenced only by
+    * an edge is not lost. */
+  private def vertexIds(gs: GraftSession, relLabel: String): RDD[Long] = {
+    val r = gs.catalog.rel(relLabel)
+    Seq(r.fromLabel, r.toLabel).distinct.map { label =>
+      val n = gs.catalog.node(label)
+      gs.table(n.tableName).select(col(n.idColumn).cast("long"))
+        .rdd.map(_.getLong(0))
+    }.reduce(_ union _)
+  }
+
+  /** The distinct endpoints of each partition of `e` (a partition-local
+    * dedup, so |V|, not 2|E|, ids reach the shuffle). */
+  private def endpoints(e: RDD[(Long, Long)]): RDD[Long] =
+    e.mapPartitions { it =>
+      val seen = new LongMap[Unit]()
+      it.foreach { case (a, b) => seen(a) = (); seen(b) = () }
+      seen.keysIterator
+    }
+
+  /** One partition's messages combined per target with `merge`, so a
+    * round shuffles one record per (partition, target), not per edge. */
+  private def combineLocal[V](msgs: Iterator[(Long, V)])(
+      merge: (V, V) => V): Iterator[(Long, V)] = {
+    val out = new LongMap[V]()
+    msgs.foreach { case (k, v) =>
+      out(k) = if (out.contains(k)) merge(out(k), v) else v }
+    out.iterator
+  }
+
+  /** `ids` deduplicated, keyed by id (value = the id) on `part`. */
+  private def keyed(ids: RDD[Long], part: HashPartitioner): RDD[(Long, Long)] =
+    ids.map(v => (v, v)).reduceByKey(part, (a, _) => a)
 
   /** Persist one RDD of a round loop: MEMORY_AND_DISK, registered for
     * [[graft.pipeline.PipelineCaches.clear]], and marked for
@@ -76,78 +129,161 @@ object GraphAlgorithms {
     new HashPartitioner(math.min(math.max(sc.defaultParallelism / 2, 4).toLong,
       edgeCount / 50000L + 1L).toInt)
 
-  /** Edge RDD of a registered relationship (weight 1.0). */
-  def edges(gs: GraftSession, relLabel: String): RDD[Edge[Double]] = {
-    val r = gs.catalog.rel(relLabel)
-    gs.table(r.tableName)
-      .select(col(r.fromColumn).cast("long"), col(r.toColumn).cast("long"))
-      .rdd.map(row => Edge(row.getLong(0), row.getLong(1), 1.0))
+  /** Undirected adjacency lists of edges (a, b), one row per vertex on
+    * `part`, persisted. */
+  private def adjacency(e: RDD[(Long, Long)],
+      part: HashPartitioner): RDD[(Long, Array[Long])] =
+    persist(e.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
+      .groupByKey(part).mapValues(_.toArray))
+
+  /** Min-label rounds to a fixpoint. `labels` holds each key's label and
+    * whether it has yet to send it; each round those keys send through
+    * `send`, and every key takes the minimum of its label and its
+    * messages — a message to a key not yet in the state adds it, and a
+    * key whose label fell sends next round. Labels only fall, so a round
+    * that changes nothing is the fixpoint, and sending only the changed
+    * keys loses nothing: a neighbour already holds at most every label
+    * sent before. One action per round, the count of changed keys,
+    * materializes the round and detects the fixpoint. `labels` must be
+    * partitioned by `part`; `round` runs before each round (SCC's shared
+    * budget). Returns (key, (label, changed)), persisted. */
+  private def minLabelRounds[K: ClassTag](labels: RDD[(K, (Long, Boolean))],
+      part: HashPartitioner, round: () => Unit = () => ())(
+      send: RDD[(K, Long)] => RDD[(K, Long)]): RDD[(K, (Long, Boolean))] = {
+    var state = persist(labels)
+    var changed = 1L
+    while (changed > 0) {
+      round()
+      val msgs = send(state.filter(_._2._2).mapValues(_._1))
+        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
+      val next = persist(state.zipPartitions(msgs, true) { (sIt, mIt) =>
+        val m = scala.collection.mutable.HashMap.from(mIt)
+        sIt.map { case (k, (l, _)) =>
+          m.remove(k) match {
+            case Some(x) if x < l => (k, (x, true))
+            case _ => (k, (l, false))
+          }
+        } ++ m.iterator.map { case (k, x) => (k, (x, true)) }
+      })
+      changed = next.filter(_._2._2).count()
+      state.unpersist(blocking = false)
+      state = next
+    }
+    state
   }
 
-  /** Vertex RDD = union of both endpoint node tables' id columns. */
-  def vertices(gs: GraftSession, relLabel: String): RDD[(VertexId, Unit)] = {
-    val r = gs.catalog.rel(relLabel)
-    val ids = Seq(r.fromLabel, r.toLabel).distinct.map { label =>
-      val n = gs.catalog.node(label)
-      gs.table(n.tableName).select(col(n.idColumn).cast("long"))
-    }.reduce(_ union _).distinct()
-    ids.rdd.map(row => (row.getLong(0), ()))
+  /** [[minLabelRounds]] messages along out-adjacency lists `adj` (on the
+    * frontier's partitioner): every frontier label goes to each
+    * out-neighbour. A partition hashes its frontier slice and streams its
+    * lists past it; an empty slice skips the partition. */
+  private def along(adj: RDD[(Long, Array[Long])])(
+      frontier: RDD[(Long, Long)]): RDD[(Long, Long)] =
+    adj.zipPartitions(frontier) { (aIt, fIt) =>
+      val f = LongMap.from(fIt)
+      if (f.isEmpty) Iterator.empty
+      else combineLocal(aIt.flatMap { case (u, ns) =>
+        if (f.contains(u)) { val l = f(u); ns.iterator.map((_, l)) }
+        else Iterator.empty
+      })(math.min)
+    }
+
+  /** Connected components of an edge list, read as undirected: component
+    * = the minimum vertex id, over `ids` plus every edge endpoint. Runs
+    * [[minLabelRounds]] over undirected adjacency lists, partitioned by
+    * the edge count. Round one needs no messages: a vertex's first label
+    * is the least id of its closed neighbourhood, read off its own list.
+    * `edges` is persisted first: its count sizes the partitioner and the
+    * lists read it again, and a dedup pair graph is expensive to
+    * recompute. Depth costs rounds, not stack: every round's state is
+    * lineage-truncated. Returns (id, component). */
+  private[graft] def components(edges: RDD[(Long, Long)],
+      ids: RDD[Long]): RDD[(Long, Long)] = {
+    val e = persist(edges)
+    val part = partitioner(e.sparkContext, 2 * e.count())
+    val adj = adjacency(e, part)
+    val first = keyed(ids, part).fullOuterJoin(adj, part).mapPartitions(
+      _.map { case (v, (_, ns)) =>
+        val l = ns.fold(v)(a => math.min(v, a.min))
+        (v, (l, l < v))
+      }, preservesPartitioning = true)
+    val labels = minLabelRounds(first, part)(along(adj))
+    e.unpersist(blocking = false)
+    adj.unpersist(blocking = false)
+    labels.mapValues(_._1)
   }
 
-  /** Advance a fixed-iteration `aggregateMessages` loop one round:
-    * cache and MATERIALIZE the new graph's vertices AND edges before
-    * unpersisting the old one. `outerJoinVertices` derives the new edge
-    * partitions from the old graph's, so dropping the old blocks first
-    * leaves the new round holding bare lineage — every later action then
-    * silently replays all prior rounds (O(iters²) recompute; the same
-    * reason Pregel persists the new graph via its checkpointer before
-    * `prevG.unpersist`). The extra `edges.count()` per round is the
-    * vertex-shipping job the next round's `aggregateMessages` would run
-    * anyway — forced here so it lands in cache while its inputs live. */
-  private def advance[VD: scala.reflect.ClassTag, ED](
-      old: Graph[VD, ED], next: Graph[VD, ED]): Graph[VD, ED] = {
-    next.cache()
-    next.vertices.count()
-    next.edges.count()
-    old.unpersistVertices(blocking = false)
-    old.edges.unpersist(blocking = false)
-    next
+  /** Out-edges (target, weight) grouped by source on `part`, persisted.
+    * With `stochastic`, each weight is divided by its source's weight
+    * sum: the transition rows of the random-walk rounds. Duplicate edges
+    * and self-loops stay separate entries. */
+  private def outRows(e: RDD[(Long, (Long, Double))], part: HashPartitioner,
+      stochastic: Boolean): RDD[(Long, (Array[Long], Array[Double]))] =
+    persist(e.groupByKey(part).mapValues { out =>
+      val tot = if (stochastic) out.foldLeft(0.0)(_ + _._2) else 1.0
+      (out.map(_._1).toArray, out.map(_._2 / tot).toArray)
+    })
+
+  /** One linear round: x'(v) = f(v, Σ_{(u,v)} x(u)·w(u,v)) for every
+    * vertex of `x`, with `out` on `x`'s partitioner. The round hashes
+    * each partition's slice of `x`, streams its out-rows past it, and
+    * sums messages per partition ([[combineLocal]]) and then with
+    * `reduceByKey`. A zero-valued
+    * source sends nothing, so a sparse vector (personalized PageRank's
+    * early rounds) costs shuffle in proportion to its support. One
+    * action — the new vector's size and sum — materializes the round.
+    * Returns (x', |x'|, Σx'); the caller frees `x`. */
+  private def linearRound(x: RDD[(Long, Double)],
+      out: RDD[(Long, (Array[Long], Array[Double]))], part: HashPartitioner)(
+      f: (Long, Double) => Double): (RDD[(Long, Double)], Long, Double) = {
+    val msgs = out.zipPartitions(x) { (oIt, xIt) =>
+      val xs = LongMap.from(xIt)
+      combineLocal(oIt.flatMap { case (u, (vs, ws)) =>
+        val r = xs.getOrElse(u, 0.0)
+        if (r == 0.0) Iterator.empty
+        else vs.indices.iterator.map(i => (vs(i), r * ws(i)))
+      })(_ + _)
+    }.reduceByKey(part, _ + _)
+    val next = persist(x.zipPartitions(msgs, true) { (xIt, mIt) =>
+      val m = LongMap.from(mIt)
+      xIt.map { case (v, _) => (v, f(v, m.getOrElse(v, 0.0))) }
+    })
+    val (n, sum) = next.values.aggregate((0L, 0.0))(
+      (acc, r) => (acc._1 + 1L, acc._2 + r),
+      (a, b) => (a._1 + b._1, a._2 + b._2))
+    (next, n, sum)
   }
 
-  def graph(gs: GraftSession, relLabel: String): Graph[Unit, Double] = {
-    // Pregel truncates its per-superstep lineage only when BOTH
-    // spark.graphx.pregel.checkpointInterval is set (session builders
-    // set 10) AND a checkpoint directory exists — PeriodicCheckpointer
-    // silently skips without one, and a high-diameter graph then grows
-    // an unbounded chain (see stronglyConnectedComponents). Every GraphX
-    // op flows through here, so this is the one place to guarantee it.
-    val sc = gs.spark.sparkContext
-    if (sc.getCheckpointDir.isEmpty &&
-        sc.getConf.getInt("spark.graphx.pregel.checkpointInterval", -1) > 0)
-      sc.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
-    tracked(Graph(vertices(gs, relLabel), edges(gs, relLabel), (),
-      StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK))
-  }
-
-  /** GraphX caches vertex/edge RDDs internally and never frees them on its
-    * own; register every graph with the pipeline cache registry so
-    * repeated jobs in one JVM (Bench iterations, a long-lived server)
-    * don't accumulate dead blocks until live caches get evicted. */
-  private def tracked[A <: Graph[_, _]](g: A): A = {
-    graft.pipeline.PipelineCaches.onClear(g)(_.unpersist(blocking = false))
-    g
+  /** `iters` [[linearRound]]s from `x0`, each freeing its predecessor.
+    * Returns the last (x, |x|, Σx). */
+  private def linearRounds(x0: RDD[(Long, Double)],
+      out: RDD[(Long, (Array[Long], Array[Double]))], part: HashPartitioner,
+      iters: Int)(f: (Long, Double) => Double)
+      : (RDD[(Long, Double)], Long, Double) = {
+    var x = persist(x0)
+    var n = 0L; var sum = 0.0
+    for (_ <- 1 to iters) {
+      val (next, nn, s) = linearRound(x, out, part)(f)
+      x.unpersist(blocking = false)
+      x = next; n = nn; sum = s
+    }
+    (x, n, sum)
   }
 
   /** Connected components (undirected reachability); component id = the
-    * minimum vertex id in the component. Returns (id, component). */
+    * minimum vertex id in the component. Vertices are the node tables
+    * plus every edge endpoint, so isolated nodes are their own component.
+    * Returns (id, component). */
   def connectedComponents(gs: GraftSession, relLabel: String): DataFrame = {
     val spark = gs.spark
     import spark.implicits._
-    tracked(graph(gs, relLabel).connectedComponents())
-      .vertices.map { case (id, comp) => (id, comp) }
-      .toDF("id", "component")
+    components(directedEdges(gs, relLabel).as[(Long, Long)].rdd,
+      vertexIds(gs, relLabel)).toDF("id", "component")
   }
+
+  /** Spark-rounds the last [[stronglyConnectedComponents]] call executed
+    * (trim + color + mark rounds summed) — test probe. */
+  private[graft] val lastSccRounds =
+    new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Strongly connected components of the DIRECTED graph; component id
     * = the minimum vertex id in the SCC, so the output convention
@@ -163,22 +299,16 @@ object GraphAlgorithms {
     * regions are directed rings joined by ONE-WAY bridges, undirected
     * reachability is a single component while SCCs keep one component
     * per ring — mutual reachability only. */
-  /** Spark-rounds the last [[stronglyConnectedComponents]] call executed
-    * (trim + color + mark rounds summed) — test probe. */
-  private[graft] val lastSccRounds =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
   def stronglyConnectedComponents(gs: GraftSession, relLabel: String,
       numIter: Int = 10, maxRounds: Int = 4000): DataFrame = {
     require(numIter >= 1, s"numIter must be >= 1, got $numIter")
-    // DataFrame in, RDD rounds inside, DataFrame out — the same substrate
-    // split the repo settled for HITS/PageRank: an SCC round is CHEAP
-    // (one tiny join or two), and a Catalyst round costs ~100 ms of
-    // planning/stage overhead regardless of data size, while an RDD
-    // round is a plain ~20 ms job. GraphX's own stronglyConnectedComponents
-    // is NOT usable: it chains Graph lineage across its hand-rolled trim
+    // DataFrame in, RDD rounds inside, DataFrame out: an SCC round is
+    // CHEAP (one tiny join or two), and a Catalyst round costs ~100 ms of
+    // planning/stage overhead regardless of data size, while an RDD round
+    // is a plain ~20 ms job. GraphX's own stronglyConnectedComponents was
+    // NOT usable: it chains Graph lineage across its hand-rolled trim
     // loop and Pregel runs without truncating, and on a high-diameter
-    // graph dies in StackOverflowError at task (de)serialization ~140k
+    // graph died in StackOverflowError at task (de)serialization ~140k
     // stages in (observed on the sf0.1 PLACED probe). Here every loop
     // RDD goes through [[persist]] (lineage cut once materialized) and
     // the predecessor is released — depth costs time, not stack.
@@ -195,7 +325,6 @@ object GraphAlgorithms {
     //          covers the condensation source-chain depth; `maxRounds`
     //          bounds total rounds. Either budget exhausting THROWS —
     //          never a silent partial decomposition.
-    val r = gs.catalog.rel(relLabel)
     val spark = gs.spark
     import spark.implicits._
     var rounds = 0
@@ -212,11 +341,7 @@ object GraphAlgorithms {
     }
     // the partitioning job re-reads the count job's distinct shuffle
     // output (same RDD, so its map stage is skipped)
-    val e0raw = gs.table(r.tableName)
-      .select(col(r.fromColumn).cast("long").as("s"),
-        col(r.toColumn).cast("long").as("d"))
-      .distinct()
-      .as[(Long, Long)].rdd
+    val e0raw = directedEdges(gs, relLabel).distinct().as[(Long, Long)].rdd
     val part = partitioner(spark.sparkContext, e0raw.count())
     val parts = part.numPartitions
     var (edges, edgeCount) = mat(e0raw.partitionBy(part))
@@ -248,54 +373,25 @@ object GraphAlgorithms {
         s"numIter = $numIter outer iterations (condensation chain deeper " +
         "than the budget); raise numIter")
       // ---- forward-min coloring to fixpoint --------------------------
-      val verts = persist(edges.flatMap { case (s, d) => Iterator(s, d) }
-        .distinct(parts).map(v => (v, v)).partitionBy(part))
-      var color = verts
-      // the fold below is the materializing action for verts too — a
-      // separate count() was one redundant job per outer iteration
-      var colorTotal = color.values.fold(0L)(_ + _)
-      var stable = false
-      while (!stable) {
-        budget()
-        val msgs = edges.join(color, part)
-          .map { case (_, (d, c)) => (d, c) }
-          .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-        val next = color.leftOuterJoin(msgs, part)
-          .mapValues { case (c, m) => math.min(c, m.getOrElse(c)) }
-        // ONE action per color round (was two: a materializing count +
-        // this fold — at condensation sizes the round cost IS job
-        // latency). The fold both materializes the persisted round and
-        // yields the fixpoint detector: colors only ever decrease under
-        // the min-fold, so the value sum is stationary iff no color moved.
-        val p = persist(next)
-        val nextTotal = p.values.fold(0L)(_ + _)
-        stable = nextTotal == colorTotal
-        colorTotal = nextTotal
-        if (!(color eq verts)) color.unpersist(blocking = false)
-        color = p
-      }
+      val out = persist(edges.groupByKey(part).mapValues(_.toArray))
+      val colorState = minLabelRounds(
+        keyed(endpoints(edges), part).mapValues((_, true)), part,
+        () => budget())(along(out))
+      val color = colorState.mapValues(_._1)
       // ---- backward confirm within color ----------------------------
-      // reversed same-color edges: the mark wave cannot cross colors
+      // reversed same-color edges, keyed by target: the mark wave
+      // cannot cross colors
       val backEdges = persist(edges.join(color, part)
         .map { case (s, (d, cs)) => (d, (s, cs)) }
         .join(color, part)
         .flatMap { case (d, ((s, cs), cd)) =>
           if (cs == cd) Iterator((d, s)) else Iterator.empty }
-        .partitionBy(part))
-      backEdges.count()
-      var marked = persist(color.filter { case (v, c) => v == c })
-      var markedCount = marked.count()
-      stable = false
-      while (!stable) {
-        budget()
-        val wave = backEdges.join(marked, part)
-          .map { case (_, (s, c)) => (s, c) }
-        val next = marked.union(wave).reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-        val (p, n) = mat(next)
-        stable = n == markedCount
-        marked.unpersist(blocking = false)
-        marked = p; markedCount = n
-      }
+        .groupByKey(part).mapValues(_.toArray))
+      // backward reach from the roots; every reached vertex takes its
+      // root's id (the only label its same-color wave can carry)
+      val marked = minLabelRounds(
+        color.filter { case (v, c) => v == c }.mapValues((_, true)), part,
+        () => budget())(along(backEdges)).mapValues(_._1)
       assigned += marked
       // remove finalized vertices' edges, re-trim, next outer iteration
       val remaining = edges
@@ -309,73 +405,53 @@ object GraphAlgorithms {
       val (p, n) = mat(remaining)
       edges.unpersist(blocking = false)
       edges = p; edgeCount = n
+      out.unpersist(blocking = false)
       backEdges.unpersist(blocking = false)
-      if (!(color eq verts)) color.unpersist(blocking = false)
-      verts.unpersist(blocking = false)
+      colorState.unpersist(blocking = false)
       trimToFixpoint()
       outer += 1
     }
     lastSccRounds.set(rounds)
-    // vertex universe = both endpoint node tables (isolated vertices kept,
-    // matching the GraphX construction); everything not in a nontrivial
-    // SCC — isolated, trimmed, or never on an edge — is its own component
-    val allVerts = {
-      val ids = Seq(r.fromLabel, r.toLabel).distinct.map { label =>
-        val n = gs.catalog.node(label)
-        gs.table(n.tableName).select(col(n.idColumn).cast("long").as("id"))
-      }
-      ids.reduce(_ unionAll _).distinct()
-    }
+    // every node-table vertex not in a nontrivial SCC — isolated,
+    // trimmed, or never on an edge — is its own component
     val nontrivial =
-      if (assigned.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("component",
-              org.apache.spark.sql.types.LongType, nullable = false))))
-      else spark.createDataset(
-        assigned.reduce(_ union _))(
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong))
-        .toDF("id", "component")
-    allVerts
-      .join(nontrivial.withColumnRenamed("id", "__aid"),
-        col("id") === col("__aid"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+      if (assigned.isEmpty) spark.sparkContext.emptyRDD[(Long, Long)]
+      else assigned.reduce(_ union _)
+    keyed(vertexIds(gs, relLabel), part).leftOuterJoin(nontrivial, part)
+      .map { case (v, (_, c)) => (v, c.getOrElse(v)) }
+      .toDF("id", "component")
   }
 
-  /** PageRank (fixed iterations for determinism). Returns (id, rank). */
+  /** Static PageRank, fixed `iters` rounds for determinism: r₀ = 1 and
+    * r(v) = resetProb + (1 − resetProb)·Σ_{(u,v)} r(u)/outdeg(u), where
+    * out-degree counts raw edges (duplicates and self-loops included).
+    * Vertices are the node tables plus every edge endpoint. Sinks leak
+    * rank, so the result is rescaled to sum to |V| (the SPARK-18847
+    * correction, mirrored by the oracle). Returns (id, rank). */
   def pageRank(gs: GraftSession, relLabel: String, iters: Int = 10,
       resetProb: Double = 0.15): DataFrame = {
     val spark = gs.spark
     import spark.implicits._
-    tracked(graph(gs, relLabel).staticPageRank(iters, resetProb))
-      .vertices.map { case (id, rank) => (id, rank) }
-      .toDF("id", "rank")
+    val e = directedEdges(gs, relLabel).as[(Long, Long)].rdd
+    val part = partitioner(spark.sparkContext, e.count())
+    val out = outRows(e.mapValues((_, 1.0)), part, stochastic = true)
+    val verts = keyed(vertexIds(gs, relLabel).union(endpoints(e)), part)
+    val (rank, n, sum) = linearRounds(verts.mapValues(_ => 1.0), out, part,
+      iters)((_, m) => resetProb + (1.0 - resetProb) * m)
+    val correction = n.toDouble / sum
+    rank.mapValues(_ * correction).toDF("id", "rank")
   }
 
-  /** Per-vertex triangle count (undirected; edges canonicalized). */
+  /** Per-vertex triangle count over the undirected simple graph: the
+    * counts of [[clusteringCoefficient]], plus a 0 row for a vertex
+    * whose only edges are self-loops (it is still an edge endpoint).
+    * Returns (id, triangles). */
   def triangleCount(gs: GraftSession, relLabel: String): DataFrame = {
-    val spark = gs.spark
-    import spark.implicits._
-    // triangleCount requires canonical orientation (src < dst) + dedup
-    val canon = edges(gs, relLabel)
-      .map(e => if (e.srcId < e.dstId) (e.srcId, e.dstId) else (e.dstId, e.srcId))
-      .distinct()
-      .map { case (s, d) => Edge(s, d, 1.0) }
-    // track every intermediate graph: fromEdges and partitionBy each cache
-    // their own vertex/edge RDDs (round-5 review — tracking only the final
-    // result re-accumulated exactly the dead blocks this is meant to free)
-    val base = tracked(Graph.fromEdges(canon, (),
-      StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK))
-    val part = tracked(base.partitionBy(
-      org.apache.spark.graphx.PartitionStrategy.EdgePartition2D))
-    tracked(part.triangleCount())
-      .vertices.map { case (id, n) => (id, n.toLong) }
-      .toDF("id", "triangles")
+    val tri = clusteringCoefficient(gs, relLabel).select("id", "triangles")
+    val loopOnly = directedEdges(gs, relLabel).filter(col("f") === col("t"))
+      .select(col("f").as("id")).distinct()
+      .join(tri, Seq("id"), "left_anti")
+    tri.unionByName(loopOnly.select(col("id"), lit(0L).as("triangles")))
   }
 
   /** WEIGHTED shortest paths to landmark vertices within a hop bound:
@@ -386,9 +462,10 @@ object GraphAlgorithms {
     * (id, landmark, distance) for every vertex that reaches a landmark in
     * ≤ maxHops hops (landmarks at distance 0.0 from themselves).
     *
-    * DataFrame-first by design (unlike the GraphX hop-count variant
-    * below): each level is a plain equi-join + partial/final aggregate
-    * that Catalyst broadcasts when the frontier is small and AQE
+    * DataFrame-first by design (unlike the hop-count rounds of
+    * [[shortestPaths]]): each level is a plain equi-join +
+    * partial/final aggregate that Catalyst broadcasts when the frontier
+    * is small and AQE
     * re-plans when it isn't — and a bounded level count keeps the
     * semantics oracle-checkable (a recursive SQL mirror terminates).
     * Negative weights are rejected (min-plus with a hop bound would
@@ -425,25 +502,38 @@ object GraphAlgorithms {
       .groupBy("id", "landmark").agg(min("dist").as("dist"))
   }
 
-  /** Single-source-set shortest paths (hop counts) to the given landmark
-    * vertices, via GraphX's Pregel-based ShortestPaths. Returns one row per
-    * (vertex, landmark) pair that is reachable: (id, landmark, distance).
-    * Covers the shortestPath capability the Cypher surface omits. */
+  /** Shortest paths (hop counts) from every vertex to the given landmark
+    * vertices, following edge direction (v → … → landmark). Returns one
+    * row per reachable (vertex, landmark) pair: (id, landmark, distance);
+    * a landmark in the node tables or on an edge is at distance 0 from
+    * itself. Covers the shortestPath capability the Cypher surface omits.
+    *
+    * [[minLabelRounds]] keyed by (vertex, landmark): distances flow
+    * backwards along each edge (dst → src) with a `min` reduce, from the
+    * pairs that changed in the previous round only — a frontier BFS per
+    * landmark, all landmarks in one set of rounds. */
   def shortestPaths(gs: GraftSession, relLabel: String,
       landmarks: Seq[Long]): DataFrame = {
     val spark = gs.spark
     import spark.implicits._
-    tracked(org.apache.spark.graphx.lib.ShortestPaths
-      .run(graph(gs, relLabel), landmarks))
-      .vertices
-      .flatMap { case (id, spmap) =>
-        spmap.map { case (landmark, dist) => (id, landmark: Long, dist.toLong) }
-      }
+    val e = directedEdges(gs, relLabel).as[(Long, Long)].rdd
+    val part = partitioner(spark.sparkContext, e.count())
+    val rev = persist(e.map(_.swap).partitionBy(part))
+    val lm = landmarks.toSet
+    val start = keyed(vertexIds(gs, relLabel).union(endpoints(e))
+        .filter(lm.contains), part)
+      .map { case (v, _) => ((v, v), (0L, true)) }.partitionBy(part)
+    val dist = minLabelRounds(start, part) { frontier =>
+      frontier.map { case ((v, l), d) => (v, (l, d)) }.join(rev, part)
+        .map { case (_, ((l, d), u)) => ((u, l), d + 1) }
+    }
+    rev.unpersist(blocking = false)
+    dist.map { case ((v, l), (d, _)) => (v, l, d) }
       .toDF("id", "landmark", "distance")
   }
 
   /** Closeness and harmonic centrality with respect to a LANDMARK set,
-    * over hop-count distances ([[shortestPaths]] — GraphX Pregel):
+    * over hop-count distances ([[shortestPaths]]):
     * harmonic(v) = Σ_{lm reached, d>0} 1/d(v, lm), closeness(v) =
     * reached_nonzero / Σ d — the landmark-sampled estimator that stands
     * in for the all-pairs definition at scale (exact over the landmark
@@ -480,11 +570,10 @@ object GraphAlgorithms {
     * Returns (id, degree, triangles, cc) with cc rounded to 6 dp for
     * cross-engine determinism.
     *
-    * DataFrame-first, unlike [[triangleCount]] above: triangles enumerate
+    * DataFrame-first: triangles enumerate
     * canonically (a<b<c, each counted once) via two equi-joins over the
     * deduped least/greatest edge set, so the operator works on any
-    * edge-filtered subgraph without building a GraphX graph per filter,
-    * Catalyst broadcasts the joins when the edge set is small, and AQE
+    * edge-filtered subgraph, Catalyst broadcasts the joins when the edge set is small, and AQE
     * handles skewed join keys (a hot vertex) at runtime. Per-vertex
     * counts are a union-all + one map-side-combinable aggregate. */
   def clusteringCoefficient(gs: GraftSession, relLabel: String,
@@ -572,44 +661,28 @@ object GraphAlgorithms {
     * SQL-mirrorable, unlike GraphX's LPA whose tie order is map-internal.
     * Returns (id, label).
     *
-    * Scale shape per round: one equi-join of the edge list against the
-    * |V|-row label frame and ONE map-side-combinable aggregate —
-    * `mode(label, deterministic = true)` is exactly the (count DESC,
-    * label ASC) argmax, so there is no per-vertex window/sort and, since
-    * the symmetric edge list defines the vertex set (every vertex has a
-    * neighbor row), no join-back/coalesce either. The cached edge frame
-    * is hash-partitioned on the join key once, so rounds re-shuffle only
-    * the |V|-row label frame, not |E|. Each round's labels are persisted
-    * AND materialized eagerly (the prior round's cache is dropped right
-    * after) so lineage never stacks k rounds deep in the block manager.
-    *
-    * `untilStable = true` stops early once a round changes no label
-    * (checked with one |V|-row count against the previous frame);
-    * `iters` then bounds the worst case. */
+    * Scale shape: RDD rounds over adjacency lists partitioned once by
+    * vertex. Each round every vertex sends its label to its neighbours as
+    * a primitive message ([[lpMsg]]); `reduceByKey(lpMergeMsgs)` combines
+    * them map-side into per-label neighbour counts, and [[lpMode]] picks
+    * the max-count label with the MIN-LABEL tie — exactly
+    * `mode(label, deterministic = true)` of the neighbour multiset, so the
+    * unrolled-CTE oracle holds. The symmetric edge list defines the
+    * vertex set, so every vertex receives a message. One action per
+    * round, the count of changed labels, materializes the round;
+    * `untilStable = true` stops at the first round that changes no label,
+    * and `iters` bounds the worst case. */
   def labelPropagation(gs: GraftSession, relLabel: String, iters: Int = 5,
       edgePred: Option[Column] = None, untilStable: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val canon = simpleEdges(gs, relLabel, edgePred)
-    // GraphX aggregateMessages rounds (the g_wpagerank/g_ppr move: the
-    // DataFrame form re-planned join+mode+persist per round, and on a
-    // real cluster re-shuffled the symmetric edge list each time; here
-    // the partitioning is built once and each synchronous round is one
-    // message pass). Messages carry per-label neighbor counts; the
-    // vertex update is max-count with MIN-LABEL ties — exactly
-    // `mode(label, deterministic = true)` of the neighbor multiset over
-    // the simple undirected graph, so the unrolled-CTE oracle is
-    // unchanged. Message size is bounded by the vertex's distinct
-    // neighbor labels (≤ degree), the same payload the DataFrame round
-    // shuffled as rows.
     val spark = gs.spark
     import spark.implicits._
-    import org.apache.spark.graphx.{Edge, Graph}
-    val edgeRdd = canon.rdd.map(row => Edge(row.getLong(0), row.getLong(1), ()))
-    var g = tracked(Graph.fromEdges(edgeRdd, (),
-        StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-      .mapVertices((id, _) => id))
-    g.cache()
-    g.vertices.count()
+    val canon = simpleEdges(gs, relLabel, edgePred).as[(Long, Long)].rdd
+    val part = partitioner(spark.sparkContext, 2 * canon.count())
+    val adj = adjacency(canon, part)
+    // state: (id, (label, changed in the last round))
+    var labels = adj.mapPartitions(_.map { case (v, _) => (v, (v, true)) },
+      preservesPartitioning = true)
     var i = 0
     var stable = false
     while (i < iters && !stable) {
@@ -623,26 +696,29 @@ object GraphAlgorithms {
       // combiner fold at a 10⁷-degree power-law hub at 100× data neither
       // materializes a degree-sized multiset (the r13 verdict's one
       // scale flag) nor pays degree² reallocation.
-      val msgs = g.aggregateMessages[Array[Long]](
-        ctx => {
-          ctx.sendToDst(lpMsg(ctx.srcAttr))
-          ctx.sendToSrc(lpMsg(ctx.dstAttr))
-        },
-        lpMergeMsgs)
-      val g2 = tracked(g.outerJoinVertices(msgs)((_, old, m) =>
-        m.map(lpMode).getOrElse(old)))
-      g2.cache()
-      g2.vertices.count()
-      if (untilStable)
-        stable = g.vertices.join(g2.vertices)
-          .filter { case (_, (a, b)) => a != b }.isEmpty()
-      g.unpersistVertices(blocking = false)
-      g.edges.unpersist(blocking = false)
-      g = g2
+      val msgs = adj.zipPartitions(labels) { (aIt, lIt) =>
+        val ls = LongMap.from(lIt.map { case (v, (l, _)) => (v, l) })
+        combineLocal(aIt.flatMap { case (u, ns) =>
+          val l = ls(u)
+          ns.iterator.map(v => (v, lpMsg(l)))
+        })(lpMergeMsgs)
+      }.reduceByKey(part, lpMergeMsgs _)
+      val next = persist(labels.zipPartitions(msgs, true) { (lIt, mIt) =>
+        val ms = LongMap.from(mIt)
+        lIt.map { case (v, (l, _)) =>
+          val nl = ms.get(v).fold(l)(lpMode)
+          (v, (nl, nl != l))
+        }
+      })
+      val changed = next.filter(_._2._2).count()
+      labels.unpersist(blocking = false)
+      labels = next
+      stable = untilStable && changed == 0
       i += 1
     }
     lastLabelPropRounds.set(i)
-    g.vertices.map { case (id, l) => (id, l) }.toDF("id", "label")
+    adj.unpersist(blocking = false)
+    labels.map { case (v, (l, _)) => (v, l) }.toDF("id", "label")
   }
 
   /** Tail-flush floor for label-prop messages: an unsorted raw tail is
@@ -665,7 +741,8 @@ object GraphAlgorithms {
     * A reduced message is therefore O(distinct neighbor labels) + a
     * bounded tail — which converges toward O(#communities) as rounds
     * proceed — NOT O(degree), and tiny merges mutate the big side's tail
-    * in place (safe: GraphX's per-slot aggregation owns the left operand),
+    * in place (safe: a `reduceByKey` combiner owns both operands — every
+    * message is freshly allocated and never cached),
     * so hub vertices neither materialize degree-sized multisets nor churn
     * degree² allocation in the combiner fold. */
   private[graft] def lpMsg(label: Long): Array[Long] = Array(0L, 1L, label)
@@ -791,8 +868,7 @@ object GraphAlgorithms {
     var total = 2 * canon.count()
     val part = partitioner(spark.sparkContext, total)
     // the first round's job materializes the adjacency lists
-    var adj = persist(canon.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-      .groupByKey(part).mapValues(_.toArray))
+    var adj = adjacency(canon, part)
     var rounds = 0
     var stable = total == 0
     while (rounds < maxRounds && !stable) {
@@ -995,60 +1071,51 @@ object GraphAlgorithms {
     * [[labelPropagation]]. Returns (id, hub, authority) rounded to 6 dp —
     * the ~1e-15 float-sum-order noise sits nine orders below the quantum.
     *
-    * Runs on GraphX `aggregateMessages` like [[pageRank]]: a round-based
-    * algorithm wants RDD rounds, not DataFrame rounds — a Catalyst plan
-    * per round pays planning + codegen + shuffle-stage overhead 2·iters
-    * times (measured 4–7 s for this 25-vertex gate either way: per-round
-    * materialization AND one unrolled 40-stage AQE plan), while a Pregel
-    * loop's per-round RDD job is ~20 ms. The iteration runs UNNORMALIZED —
-    * L1 normalization commutes with the linear maps (each round divides
-    * every entry by one scalar), so normalizing once at the end yields
-    * identical values with one message pass per half-step. Overflow
-    * bound: entries grow by at most (max in-degree × max out-degree) per
-    * round, so doubles are safe while iters·log2(growth/round) < 1024 —
-    * e.g. 25+ rounds at degree 10^6, the reachable regime for ranking.
-    * Per round the graph is materialized and its predecessor unpersisted
-    * (the Pregel discipline), keeping lineage depth constant. */
+    * Runs as [[linearRound]]s, two per iteration (authorities along the
+    * edges, then hubs against them): a round-based algorithm wants RDD
+    * rounds, not DataFrame rounds — a Catalyst plan per round pays
+    * planning + codegen + shuffle-stage overhead 2·iters times (measured
+    * 4–7 s for this 25-vertex gate either way: per-round materialization
+    * AND one unrolled 40-stage AQE plan), while an RDD round is ~20 ms.
+    * The iteration runs UNNORMALIZED — L1 normalization commutes with the
+    * linear maps (each round divides every entry by one scalar), so
+    * dividing by the last rounds' sums yields identical values with one
+    * message pass per half-step. Overflow bound: entries grow by at most
+    * (max in-degree × max out-degree) per round, so doubles are safe
+    * while iters·log2(growth/round) < 1024 — e.g. 25+ rounds at degree
+    * 10^6, the reachable regime for ranking. */
   def hits(gs: GraftSession, relLabel: String, iters: Int = 10,
       edgePred: Option[Column] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = gs.spark
     import spark.implicits._
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e = base.select(col(r.fromColumn).cast("long").as("f"),
-      col(r.toColumn).cast("long").as("t"))
+    val e = directedEdges(gs, relLabel, edgePred)
     // loud, like weightedPageRank: a NULL (or non-castable) endpoint has
-    // no vertex identity, and getLong below would NPE inside a task
+    // no vertex identity, and the Long decode below would fail in a task
     if (e.filter(col("f").isNull || col("t").isNull).limit(1).count() > 0)
       throw new graft.cypher.GraftException(
         s"hits: $relLabel edge endpoints must be non-NULL castable ids")
-    val edgeRdd = e.distinct()
-      .rdd.map(row => Edge(row.getLong(0), row.getLong(1), ()))
-    // attr = (hub, authority); vertex set = edge endpoints, as in the
-    // oracle's edge-defined v
-    var g = tracked(Graph.fromEdges(edgeRdd, (1.0, 0.0),
-      StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK))
-    g.vertices.count()
+    val edges = e.distinct().as[(Long, Long)].rdd
+    val part = partitioner(spark.sparkContext, edges.count())
+    val fwd = outRows(edges.mapValues((_, 1.0)), part, stochastic = false)
+    val rev = outRows(edges.map { case (f, t) => (t, (f, 1.0)) }, part,
+      stochastic = false)
+    // vertex set = edge endpoints, as in the oracle's edge-defined v
+    var hub = persist(keyed(endpoints(edges), part).mapValues(_ => 1.0))
+    var auth: RDD[(Long, Double)] = null
+    var hubSum = 0.0; var authSum = 0.0
     for (_ <- 1 to iters) {
-      val authMsgs = g.aggregateMessages[Double](
-        ctx => ctx.sendToDst(ctx.srcAttr._1), _ + _)
-      val g1 = tracked(g.outerJoinVertices(authMsgs)(
-        (_, attr, a) => (attr._1, a.getOrElse(0.0))))
-      val hubMsgs = g1.aggregateMessages[Double](
-        ctx => ctx.sendToSrc(ctx.dstAttr._2), _ + _)
-      val g2 = tracked(g1.outerJoinVertices(hubMsgs)(
-        (_, attr, h) => (h.getOrElse(0.0), attr._2)))
-      g = advance(g, g2)
+      val (a, _, as) = linearRound(hub, fwd, part)((_, m) => m)
+      if (auth != null) auth.unpersist(blocking = false)
+      val (h, _, hs) = linearRound(a, rev, part)((_, m) => m)
+      hub.unpersist(blocking = false)
+      hub = h; auth = a; hubSum = hs; authSum = as
     }
-    val scores = g.vertices
-      .map { case (id, (h, a)) => (id, h, a) }
+    hub.join(auth, part)
+      .map { case (v, (h, a)) => (v, h / hubSum, a / authSum) }
       .toDF("id", "__h", "__a")
-    val tot = scores.agg(sum("__h").as("__htot"), sum("__a").as("__atot"))
-    scores.crossJoin(tot)
-      .select(col("id"),
-        round(col("__h") / col("__htot"), 6).as("hub"),
-        round(col("__a") / col("__atot"), 6).as("authority"))
+      .select(col("id"), round(col("__h"), 6).as("hub"),
+        round(col("__a"), 6).as("authority"))
   }
 
   /** Betweenness centrality over the UNDIRECTED simple graph via
@@ -1202,14 +1269,11 @@ object GraphAlgorithms {
     * Zero/negative weights are rejected (a zero out-weight sum would
     * divide by zero; negative weights make the split meaningless).
     *
-    * Scale shape: the weighted out-share eW = w/W(u) is computed ONCE
-    * (one aggregate + one join); the rounds run on GraphX
-    * `aggregateMessages` with the share as the edge attribute — an RDD
+    * Scale shape: [[linearRound]]s over transition rows built once — the
+    * out-share w/W(u) is one group-by of the edges by source. An RDD
     * round costs ~20 ms where a Catalyst round pays planning + codegen +
-    * stage latency (the same trade [[eigenvectorCentrality]] documents;
-    * the original 10-round dense-join chain cost ~330 ms/round at sf0.1).
-    * The dense reset base falls out of `outerJoinVertices` over the
-    * edge-defined vertex set. */
+    * stage latency (the original 10-round dense-join chain cost
+    * ~330 ms/round at sf0.1). */
   def weightedPageRank(gs: GraftSession, relLabel: String,
       weightCol: String, iters: Int = 10, resetProb: Double = 0.15,
       edgePred: Option[Column] = None): DataFrame = {
@@ -1218,45 +1282,31 @@ object GraphAlgorithms {
       s"resetProb must be in (0, 1), got $resetProb")
     val spark = gs.spark
     import spark.implicits._
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e = base.select(col(r.fromColumn).cast("long").as("f"),
-        col(r.toColumn).cast("long").as("t"),
-        col(weightCol).cast("double").as("w"))
-    // NULL endpoints fail loudly too: the Edge RDD below calls getLong,
-    // which would NPE inside a task instead of explaining the data problem
+    val e = directedEdges(gs, relLabel, edgePred,
+      Seq(col(weightCol).cast("double").as("w")))
+    // NULL endpoints fail loudly too: the Long decode below would fail
+    // inside a task instead of explaining the data problem
     if (e.filter(col("w") <= 0 || col("w").isNull
           || col("f").isNull || col("t").isNull).limit(1).count() > 0)
       throw new graft.cypher.GraftException(
         s"weightedPageRank: $weightCol must be strictly positive and " +
         "edge endpoints non-NULL (NULL weights would silently poison " +
         "the share sums; NULL endpoints have no vertex identity)")
-    val eW = e
-      .join(e.groupBy(col("f").as("__wf")).agg(sum("w").as("__wsum")),
-        col("f") === col("__wf"))
-      .select(col("f"), col("t"), (col("w") / col("__wsum")).as("share"))
-    val edgeRdd = eW.rdd.map(row =>
-      Edge(row.getLong(0), row.getLong(1), row.getDouble(2)))
-    var g = tracked(Graph.fromEdges(edgeRdd, 1.0,
-      StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK))
-    g.vertices.count()
-    for (_ <- 1 to iters) {
-      val msgs = g.aggregateMessages[Double](
-        ctx => ctx.sendToDst(ctx.srcAttr * ctx.attr), _ + _)
-      val g2 = tracked(g.outerJoinVertices(msgs)(
-        (_, _, m) => resetProb + (1.0 - resetProb) * m.getOrElse(0.0)))
-      g = advance(g, g2)
-    }
-    g.vertices.map { case (id, rank) => (id, rank) }
-      .toDF("id", "rank")
-      .select(col("id"), round(col("rank"), 6).as("rank"))
+    val edges = e.as[(Long, Long, Double)].rdd
+    val part = partitioner(spark.sparkContext, edges.count())
+    val out = outRows(edges.map { case (f, t, w) => (f, (t, w)) }, part,
+      stochastic = true)
+    val verts = keyed(edges.flatMap { case (f, t, _) => Iterator(f, t) }, part)
+    val (rank, _, _) = linearRounds(verts.mapValues(_ => 1.0), out, part,
+      iters)((_, m) => resetProb + (1.0 - resetProb) * m)
+    rank.toDF("id", "rank").select(col("id"), round(col("rank"), 6).as("rank"))
   }
 
   /** Eigenvector centrality over the UNDIRECTED simple graph (power
     * iteration on the symmetric adjacency), fixed `iters` rounds —
     * unnormalized like [[hits]] (L1 normalization commutes with the
-    * linear map; one normalize at the end) and on GraphX
-    * `aggregateMessages` for the same reason: an RDD round costs ~20 ms
+    * linear map; one division by the last round's sum at the end) and on
+    * [[linearRound]]s for the same reason: an RDD round costs ~20 ms
     * where a Catalyst round pays planning + codegen + stage latency.
     * The vertex set is edge-defined; returns (id, centrality) 6-dp
     * rounded. Overflow bound: entries grow ≤ max-degree× per round —
@@ -1266,25 +1316,15 @@ object GraphAlgorithms {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = gs.spark
     import spark.implicits._
-    val canon = simpleEdges(gs, relLabel, edgePred)
-    val sym = canon.unionAll(canon.select(col("b").as("a"), col("a").as("b")))
-    val edgeRdd = sym.rdd.map(row => Edge(row.getLong(0), row.getLong(1), ()))
-    var g = tracked(Graph.fromEdges(edgeRdd, 1.0,
-      StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK))
-    g.vertices.count()
-    for (_ <- 1 to iters) {
-      val msgs = g.aggregateMessages[Double](
-        ctx => ctx.sendToDst(ctx.srcAttr), _ + _)
-      val g2 = tracked(g.outerJoinVertices(msgs)(
-        (_, _, m) => m.getOrElse(0.0)))
-      g = advance(g, g2)
-    }
-    val scores = g.vertices.map { case (id, x) => (id, x) }
-      .toDF("id", "__x")
-    val tot = scores.agg(sum("__x").as("__tot"))
-    scores.crossJoin(tot)
-      .select(col("id"),
-        round(col("__x") / col("__tot"), 6).as("centrality"))
+    val canon = simpleEdges(gs, relLabel, edgePred).as[(Long, Long)].rdd
+    val part = partitioner(spark.sparkContext, 2 * canon.count())
+    val out = outRows(canon.flatMap { case (a, b) =>
+      Iterator((a, (b, 1.0)), (b, (a, 1.0))) }, part, stochastic = false)
+    // every vertex has a neighbour, so the out-rows' keys are the vertices
+    val (x, _, sum) = linearRounds(out.mapValues(_ => 1.0), out, part,
+      iters)((_, m) => m)
+    x.mapValues(_ / sum).toDF("id", "__x")
+      .select(col("id"), round(col("__x"), 6).as("centrality"))
   }
 
   /** Multiplier/modulus constants for the [[randomWalks]] step mix — a
@@ -1326,11 +1366,7 @@ object GraphAlgorithms {
       s"walksPerNode must be >= 1, got $walksPerNode")
     require(seed >= 0, s"seed must be >= 0, got $seed (the step mix " +
       "requires non-negative operands so % agrees across engines)")
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e = base.select(col(r.fromColumn).cast("long").as("f"),
-        col(r.toColumn).cast("long").as("t"))
-      .distinct()
+    val e = directedEdges(gs, relLabel, edgePred).distinct()
     val adj = e
       .withColumn("idx", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -1376,18 +1412,17 @@ object GraphAlgorithms {
     * mirror. Returns (id, rank) dense over the edge-defined vertex set,
     * 6-dp rounded.
     *
-    * Scale shape: GraphX `aggregateMessages` rounds with the out-share
-    * 1/outdeg(u) precomputed ONCE as the edge attribute, like
-    * [[weightedPageRank]] (whose port from a 10-round Catalyst join
-    * chain measured 3× — an RDD round costs ~20 ms where each Catalyst
-    * round pays planning + codegen + stage-launch latency, ×10
-    * sequential rounds). The source-teleport term is a per-vertex
+    * Scale shape: [[linearRound]]s over transition rows (1/outdeg(u))
+    * built once, like [[weightedPageRank]] (whose port from a 10-round
+    * Catalyst join chain measured 3× — an RDD round costs ~20 ms where
+    * each Catalyst round pays planning + codegen + stage-launch latency,
+    * ×10 sequential rounds). The source-teleport term is a per-vertex
     * constant (`resetProb/|S|` on sources, 0 elsewhere), folded into the
-    * vertex update. PPR's sparsity is preserved in SHUFFLE volume: the
-    * send closure skips zero-rank sources, so early-round message
-    * traffic is ∝ the frontier's out-edges even though the edge
-    * partitions are scanned — on a 100 TB graph with a small source set
-    * the network cost tracks the reachable set, not |E|. */
+    * vertex update. PPR's sparsity is preserved in SHUFFLE volume: a
+    * zero-rank vertex sends nothing, so early-round message traffic is ∝
+    * the frontier's out-edges even though the edge partitions are
+    * scanned — on a 100 TB graph with a small source set the network
+    * cost tracks the reachable set, not |E|. */
   def personalizedPageRank(gs: GraftSession, relLabel: String,
       sourceIds: Seq[Long], iters: Int = 10, resetProb: Double = 0.15,
       edgePred: Option[Column] = None): DataFrame = {
@@ -1397,36 +1432,18 @@ object GraphAlgorithms {
       s"resetProb must be in (0, 1), got $resetProb")
     val spark = gs.spark
     import spark.implicits._
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e = base.select(col(r.fromColumn).cast("long").as("f"),
-        col(r.toColumn).cast("long").as("t"))
-      .distinct()
-    val eShare = e.join(e.groupBy(col("f").as("__df"))
-        .agg(count(lit(1)).as("deg")), col("f") === col("__df"))
-      .select(col("f"), col("t"), (lit(1.0) / col("deg")).as("share"))
-    val edgeRdd = eShare.rdd.map(row =>
-      Edge(row.getLong(0), row.getLong(1), row.getDouble(2)))
+    val edges = directedEdges(gs, relLabel, edgePred).distinct()
+      .as[(Long, Long)].rdd
+    val part = partitioner(spark.sparkContext, edges.count())
+    val out = outRows(edges.mapValues((_, 1.0)), part, stochastic = true)
     val sProb = 1.0 / sourceIds.size
     // small by contract (a PPR source set); ships in the task closure
     val srcSet = sourceIds.toSet
-    var g = tracked(Graph.fromEdges(edgeRdd, 0.0,
-        StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-      .mapVertices((id, _) => if (srcSet(id)) sProb else 0.0))
-    g.cache()
-    g.vertices.count()
-    for (_ <- 1 to iters) {
-      val msgs = g.aggregateMessages[Double](
-        ctx => if (ctx.srcAttr != 0.0) ctx.sendToDst(ctx.srcAttr * ctx.attr),
-        _ + _)
-      val g2 = tracked(g.outerJoinVertices(msgs)((id, _, m) =>
-        (if (srcSet(id)) resetProb * sProb else 0.0)
-          + (1.0 - resetProb) * m.getOrElse(0.0)))
-      g = advance(g, g2)
-    }
-    g.vertices.map { case (id, rank) => (id, rank) }
-      .toDF("id", "rank")
-      .select(col("id"), round(col("rank"), 6).as("rank"))
+    val x0 = keyed(endpoints(edges), part)
+      .mapValues(v => if (srcSet(v)) sProb else 0.0)
+    val (rank, _, _) = linearRounds(x0, out, part, iters)((v, m) =>
+      (if (srcSet(v)) resetProb * sProb else 0.0) + (1.0 - resetProb) * m)
+    rank.toDF("id", "rank").select(col("id"), round(col("rank"), 6).as("rank"))
   }
 
   /** node2vec-style SECOND-ORDER biased random walks (Grover &
@@ -1455,11 +1472,7 @@ object GraphAlgorithms {
     require(walksPerNode >= 1, s"walksPerNode must be >= 1, got $walksPerNode")
     require(seed >= 0, s"seed must be >= 0, got $seed")
     require(p > 0 && q > 0, s"p and q must be > 0, got p=$p q=$q")
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e = base.select(col(r.fromColumn).cast("long").as("f"),
-        col(r.toColumn).cast("long").as("t"))
-      .distinct()
+    val e = directedEdges(gs, relLabel, edgePred).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
       .transform(graft.pipeline.PipelineCaches.track)
     val adj = e

@@ -779,9 +779,12 @@ object Dedup {
     * map to themselves).
     *
     * Scale: the pair graph is output-proportional (never all-pairs), and
-    * GraphX connected components is the standard whole-graph iteration —
-    * per-iteration shuffles proportional to the frontier, converging in
-    * O(diameter) steps (dup clusters are shallow: near-cliques).
+    * clustering is [[graft.graph.GraphAlgorithms.components]] — min-label
+    * rounds whose shuffles are proportional to the changed frontier,
+    * converging in O(diameter) rounds (dup clusters are shallow:
+    * near-cliques), on partitions sized from the pair count rather than
+    * the corpus shuffle. The mined pairs are persisted once, so the
+    * mining's parallelism is untouched and it never runs twice.
     *
     * `minedPairs`: pass a pre-mined (a, b) pair frame (e.g.
     * [[ngramJaccardPairsPersisted]], or pairs from a different miner) to
@@ -791,38 +794,11 @@ object Dedup {
       minedPairs: Option[DataFrame] = None): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    import org.apache.spark.graphx.{Edge, Graph}
-    import org.apache.spark.storage.StorageLevel
     val pairs = minedPairs.getOrElse(ngramJaccardPairs(docs, threshold))
-    // The pair graph is output-proportional (≈ #dup pairs, orders of
-    // magnitude below corpus size), but the pairs DF inherits the
-    // candidate join's full shuffle partitioning — and every one of CC's
-    // ~O(diameter) Pregel supersteps launches tasks per partition. Size
-    // the graph's partitions to the PAIR data, not the corpus shuffle:
-    // dominant cost on small fixtures, still correct at scale (pair count
-    // per partition grows before partition count does).
-    val ccParts = math.max(2, spark.sparkContext.defaultParallelism / 4)
-    // repartition, NOT coalesce: coalesce would collapse INTO the pair
-    // mining's final stage and cap the expensive Jaccard verification at
-    // ccParts tasks; repartition pays one ids-only shuffle of the
-    // output-proportional pair set and leaves the upstream parallelism
-    // alone (round-5 review)
-    val edges = pairs.select(col("a").cast("long"), col("b").cast("long"))
-      .repartition(ccParts)
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    // no distinct(): doc_id is the table key, and GraphX's vertex RDD
-    // dedups by id during graph construction anyway
-    val verts = docs.select(col("doc_id").cast("long"))
-      .repartition(ccParts)
-      .rdd.map(r => (r.getLong(0), ()))
-    val g = Graph(verts, edges, (),
-      StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-    val cc = g.connectedComponents()
-    // GraphX caches both graphs' RDDs internally; free them with the
-    // pipeline's other intermediates (blocking=false: fire-and-forget)
-    PipelineCaches.onClear(g)(_.unpersist(blocking = false))
-    PipelineCaches.onClear(cc)(_.unpersist(blocking = false))
-    cc.vertices.map { case (id, comp) => (id, comp) }
+    graft.graph.GraphAlgorithms.components(
+        pairs.select(col("a").cast("long"), col("b").cast("long"))
+          .as[(Long, Long)].rdd,
+        docs.select(col("doc_id").cast("long")).as[Long].rdd)
       .toDF("doc_id", "cluster_id")
   }
 

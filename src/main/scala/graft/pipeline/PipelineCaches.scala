@@ -11,7 +11,7 @@ import org.apache.spark.sql.DataFrame
   * the tokenize→shingle→hash lineage per consumer costs more than the
   * cache). Spark offers no "unpersist when the consuming query finishes"
   * hook for a lazily-executed result, so the blocks stay cached until
-  * [[clear]] — exactly like GraphX's persisted graphs. One-shot jobs
+  * [[clear]] — exactly like the graph rounds' persisted RDDs. One-shot jobs
   * (Verify, Bench) call [[clear]] after consuming each result; a
   * long-running session (QueryServer does this after rendering each
   * response) must do the same.
@@ -44,8 +44,8 @@ object PipelineCaches {
     df
   }
 
-  /** Register a cleanup against a target object (e.g. a GraphX `Graph` —
-    * GraphX caches vertex/edge RDDs internally, and repeated graph jobs in
+  /** Register a cleanup against a target object (e.g. a persisted RDD of
+    * a graph round loop — repeated graph jobs in
     * one JVM otherwise accumulate dead blocks until the block manager
     * starts evicting caches that are still live). The target is held
     * STRONGLY until [[clear]] — see the class doc for why weak references

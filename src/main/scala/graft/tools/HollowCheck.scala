@@ -12,7 +12,6 @@ object HollowCheck {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.graphx.pregel.checkpointInterval", "10")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -22,7 +22,6 @@ object ShuffleBytes {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.graphx.pregel.checkpointInterval", "10")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     val spark = (if (useKryo) b.config(graft.SparkTuning.kryoConf()) else b)

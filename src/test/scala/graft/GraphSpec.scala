@@ -213,6 +213,43 @@ class GraphSpec extends AnyFunSuite {
     assert(tc(1L) == 1L && tc(2L) == 1L && tc(3L) == 1L && tc(4L) == 0L)
   }
 
+  test("triangle count: a vertex whose only edges are self-loops keeps a 0 row") {
+    import spark.implicits._
+    val g = new GraftSession(spark)
+    g.registerTable("tln", (1L to 5L).map(i => (i, s"v$i")).toDF("id", "name"))
+    // triangle 1-2-3 (3 also loops), 4 has only a self-loop, 5 is isolated
+    g.registerTable("TLE", Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 3L), (4L, 4L))
+      .toDF("from_T", "to_T"))
+    g.registerNode("T", "tln", "id")
+    g.registerRel("TLE", "TLE", "T", "T")
+    val tc = GraphAlgorithms.triangleCount(g, "TLE")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(tc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 0L))
+    graft.pipeline.PipelineCaches.clear()
+  }
+
+  test("components: a 200-vertex path converges to the min id without StackOverflowError") {
+    import spark.implicits._
+    // the min label crosses one edge per round: ~200 rounds, each
+    // lineage-truncated, for both connected components and dedup clusters
+    val n = 200L
+    val path = (1L until n).map(i => (i, i + 1))
+    val g = new GraftSession(spark)
+    g.registerTable("dpn", (1L to n).map(i => (i, s"v$i")).toDF("id", "name"))
+    g.registerTable("DPE", path.toDF("from_D", "to_D"))
+    g.registerNode("D", "dpn", "id")
+    g.registerRel("DPE", "DPE", "D", "D")
+    val all1 = (1L to n).map(_ -> 1L).toMap
+    val cc = GraphAlgorithms.connectedComponents(g, "DPE")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(cc == all1)
+    val clusters = graft.pipeline.Dedup.dupClusters((1L to n).toDF("doc_id"),
+        minedPairs = Some(path.toDF("a", "b")))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(clusters == all1)
+    graft.pipeline.PipelineCaches.clear()
+  }
+
   test("shortest paths to landmarks (hop counts)") {
     val sp = GraphAlgorithms.shortestPaths(gs, "Follows", Seq(4L))
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
@@ -278,34 +315,58 @@ class GraphSpec extends AnyFunSuite {
     graft.pipeline.PipelineCaches.clear()
   }
 
-  test("k-core: one Spark job per peel round") {
+  test("graph loops: one Spark job per round") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val g = cascadeSession()
     val sc = spark.sparkContext
-    val group = "graphspec-kcore-jobs"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    org.apache.spark.graftprobe.BusProbe.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "kCore job census")
-      GraphAlgorithms.kCore(g, "KE", k = 2).collect()
-    } finally {
-      sc.clearJobGroup()
+    def jobsOf(call: () => org.apache.spark.sql.DataFrame): Int = {
+      val group = "graphspec-round-jobs"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null &&
+              e.properties.getProperty("spark.jobGroup.id") == group)
+            jobs.incrementAndGet()
+      }
       org.apache.spark.graftprobe.BusProbe.drain(sc)
-      sc.removeSparkListener(listener)
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, "graph round census")
+        call().collect()
+      } finally {
+        sc.clearJobGroup()
+        org.apache.spark.graftprobe.BusProbe.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+      jobs.get()
     }
-    val rounds = GraphAlgorithms.lastKCoreRounds.get()
-    assert(rounds == 4)
-    // outside the rounds: the canonical-edge shuffle, the edge count
-    // that sizes the partitioner, and the caller's collect
-    assert(jobs.get() <= rounds + 3,
-      s"${jobs.get()} jobs for $rounds peel rounds")
+    // (call, rounds it runs on the KE cascade, jobs outside the rounds)
+    val census = Seq[(String, () => org.apache.spark.sql.DataFrame, () => Int, Int)](
+      // canonical-edge shuffle, the edge count that sizes the
+      // partitioner, the caller's collect
+      ("kCore", () => GraphAlgorithms.kCore(g, "KE", k = 2),
+        () => GraphAlgorithms.lastKCoreRounds.get(), 3),
+      // edge count, collect
+      ("pageRank", () => GraphAlgorithms.pageRank(g, "KE", iters = 10),
+        () => 10, 2),
+      // NULL-endpoint probe, distinct-edge shuffle, edge count, collect;
+      // two rounds per iteration
+      ("hits", () => GraphAlgorithms.hits(g, "KE", iters = 10), () => 20, 4),
+      // canonical-edge shuffle, edge count, collect
+      ("labelPropagation", () => GraphAlgorithms.labelPropagation(g, "KE",
+        iters = 5), () => GraphAlgorithms.lastLabelPropRounds.get(), 3),
+      // edge count, collect. Label 1 is four hops from vertex 6: the
+      // seed labels cover one, rounds 1–3 the rest, round 4 changes
+      // nothing
+      ("connectedComponents", () => GraphAlgorithms.connectedComponents(g,
+        "KE"), () => 4, 2))
+    // measured: each call runs exactly rounds + outside jobs
+    for ((name, call, rounds, outside) <- census) {
+      val jobs = jobsOf(call)
+      assert(jobs <= rounds() + outside, s"$name: $jobs jobs for ${rounds()} rounds")
+    }
+    assert(GraphAlgorithms.lastKCoreRounds.get() == 4)
+    assert(GraphAlgorithms.lastLabelPropRounds.get() == 5)
     graft.pipeline.PipelineCaches.clear()
   }
 
@@ -319,7 +380,22 @@ class GraphSpec extends AnyFunSuite {
       "stronglyConnectedComponents" ->
         (() => GraphAlgorithms.stronglyConnectedComponents(g, "KD")),
       "betweennessCentrality" ->
-        (() => GraphAlgorithms.betweennessCentrality(g, "KE")))
+        (() => GraphAlgorithms.betweennessCentrality(g, "KE")),
+      "connectedComponents" ->
+        (() => GraphAlgorithms.connectedComponents(g, "KE")),
+      "pageRank" -> (() => GraphAlgorithms.pageRank(g, "KE")),
+      "hits" -> (() => GraphAlgorithms.hits(g, "KD")),
+      "personalizedPageRank" ->
+        (() => GraphAlgorithms.personalizedPageRank(g, "KD", Seq(1L))),
+      "labelPropagation" ->
+        (() => GraphAlgorithms.labelPropagation(g, "KE")),
+      "shortestPaths" ->
+        (() => GraphAlgorithms.shortestPaths(g, "KD", Seq(4L, 1L))),
+      "Dedup.dupClusters" -> { () =>
+        import spark.implicits._
+        graft.pipeline.Dedup.dupClusters((1L to 6L).toDF("doc_id"),
+          minedPairs = Some(Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")))
+      })
     graft.pipeline.PipelineCaches.clear(blocking = true)
     for ((name, call) <- calls) {
       val before = sc.getPersistentRDDs.keySet
@@ -874,5 +950,22 @@ class GraphSpec extends AnyFunSuite {
     assert(l2 == Map(1L -> 1L, 2L -> 1L, 6L -> 1L, 3L -> 3L, 4L -> 3L,
       5L -> 3L))
     graft.pipeline.PipelineCaches.clear()
+  }
+
+  test("one iteration substrate: the program holds no GraphX reference") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"expected the program sources at ${root.toAbsolutePath}")
+    // package imports and `spark.graph?.*` config keys alike
+    val ref = """(org\.apache\.spark|spark)\.graph[x]\b""".r
+    val found = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if ref.findFirstIn(line).isDefined => s"$p:${i + 1}"
+        }
+      }.toList
+    assert(found.isEmpty, s"GraphX references: ${found.mkString(", ")}")
   }
 }
