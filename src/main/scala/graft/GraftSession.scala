@@ -45,8 +45,9 @@ final class GraftSession(val spark: SparkSession) {
     * ([[appendTableRows]] pins one MEMORY_AND_DISK RDD per streamed/
     * mutated in-memory table). A discarded session — e.g. the fresh
     * per-invocation session the `q_create_insert` gate entry builds —
-    * must call this (or be registered with `PipelineCaches.onClear`),
-    * or its cached blocks outlive it for the JVM's lifetime. Reads
+    * must call this (or register it with `PipelineCaches.onClear`, so
+    * the caller's cache scope closes it on release), or its cached
+    * blocks outlive it for the JVM's lifetime. Reads
     * against the session stay correct after close: dropping the persist
     * handle only means recomputing through the original lineage. */
   def close(): Unit = {
@@ -305,9 +306,16 @@ final class GraftSession(val spark: SparkSession) {
   private def appendEdgeRows(relLabel: String, rows: DataFrame): Unit =
     appendTableRows(_catalog.rel(relLabel).tableName, rows)
 
+  /** Serializes the session's read-modify-write appends: a CREATE's
+    * apply half and a [[streamEdges]] micro-batch each read a backing
+    * table (and the adjacency index), add rows and put the result back,
+    * so two unserialized writers on one label would lose one's rows. */
+  private val writeLock = new Object
+
   /** Append ROWS to a registered backing table: in-memory frames union
     * (materialized — see the lineage note below); catalog-managed tables
-    * append-write. Shared by edge appends and CREATE node inserts. */
+    * append-write. Shared by edge appends and CREATE node inserts;
+    * callers hold [[writeLock]]. */
   private def appendTableRows(tableName: String, rows: DataFrame): Unit = {
     if (tables.contains(tableName)) {
       val merged = tables(tableName).unionByName(rows)
@@ -381,15 +389,17 @@ final class GraftSession(val spark: SparkSession) {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val applied = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(marker))
-          .properties.get(StreamBatchProp).map(_.toLong)
-        if (!applied.exists(_ >= batchId) && !batch.isEmpty) {
-          appendEdgeRows(relLabel, batch)
-          appendEdges(relLabel, batch)
-          spark.sql(s"ALTER TABLE `$marker` SET TBLPROPERTIES (" +
-            s"'$StreamBatchProp' = '$batchId')")
-          ()
+        writeLock.synchronized {
+          val applied = spark.sessionState.catalog.getTableMetadata(
+            org.apache.spark.sql.catalyst.TableIdentifier(marker))
+            .properties.get(StreamBatchProp).map(_.toLong)
+          if (!applied.exists(_ >= batchId) && !batch.isEmpty) {
+            appendEdgeRows(relLabel, batch)
+            appendEdges(relLabel, batch)
+            spark.sql(s"ALTER TABLE `$marker` SET TBLPROPERTIES (" +
+              s"'$StreamBatchProp' = '$batchId')")
+            ()
+          }
         }
       }
       .start()
@@ -730,19 +740,21 @@ final class GraftSession(val spark: SparkSession) {
       }
     }
 
-    nodeRows.foreach { case (label, rows) =>
-      appendTableRows(_catalog.node(label).tableName,
-        typedRows(_catalog.node(label).tableName, rows.toSeq))
-    }
-    relRows.foreach { case (relType, rows) =>
-      val df = typedRows(_catalog.rel(relType).tableName, rows.toSeq)
-      appendEdgeRows(relType, df)
-      val persisted = Seq(true, false).forall(o =>
-        spark.catalog.tableExists(adjTableName(relType, o)))
-      if (persisted) appendEdges(relType, df)
-      else for (o <- Seq(true, false))
-        adjCache.remove((relType, o)).foreach(f =>
-          try f.unpersist(blocking = false) catch { case _: Exception => })
+    writeLock.synchronized {
+      nodeRows.foreach { case (label, rows) =>
+        appendTableRows(_catalog.node(label).tableName,
+          typedRows(_catalog.node(label).tableName, rows.toSeq))
+      }
+      relRows.foreach { case (relType, rows) =>
+        val df = typedRows(_catalog.rel(relType).tableName, rows.toSeq)
+        appendEdgeRows(relType, df)
+        val persisted = Seq(true, false).forall(o =>
+          spark.catalog.tableExists(adjTableName(relType, o)))
+        if (persisted) appendEdges(relType, df)
+        else for (o <- Seq(true, false))
+          adjCache.remove((relType, o)).foreach(f =>
+            try f.unpersist(blocking = false) catch { case _: Exception => })
+      }
     }
 
     import spark.implicits._
@@ -801,7 +813,7 @@ final class GraftSession(val spark: SparkSession) {
         // wins the block store — count() settles the cache first.
         val cached = callDfs.map { df =>
           val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          graft.pipeline.PipelineCaches.onClear(c)(_.unpersist(false))
+            .transform(graft.pipeline.PipelineCaches.track)
           c.count()
           c
         }

@@ -328,9 +328,9 @@ object SparkEntry {
     "q_create_insert" -> ((s, dir) => {
       val gs = TpchGraph.build(s, dir)
       // the throwaway session pins one RDD per mutated table
-      // (appendTableRows); release them at the consumer's next
-      // PipelineCaches.clear() — Bench/Verify/QueryServer all call it
-      // after consuming each result — instead of leaking per invocation
+      // (appendTableRows); close it when the consumer's cache scope is
+      // released after the result is consumed, instead of leaking per
+      // invocation
       graft.pipeline.PipelineCaches.onClear(gs)(_.close())
       s.conf.set("spark.graft.writes.enabled", "true")
       try {

@@ -327,7 +327,7 @@ final class DataFrameBuilder(
       // origin constraints reference pre-checkpoint attribute ids and
       // break Union constraint rewriting once the frame appears on both
       // sides of the BFS recursion.) Execution stays lazy; the persist is
-      // dropped by the context cleaner when the frame is unreachable.
+      // released with the caller's cache scope (PipelineCaches).
       def fence(df: DataFrame): DataFrame =
         if (hi <= 6) df
         else {

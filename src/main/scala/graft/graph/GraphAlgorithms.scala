@@ -99,8 +99,9 @@ object GraphAlgorithms {
   private def keyed(ids: RDD[Long], part: HashPartitioner): RDD[(Long, Long)] =
     ids.map(v => (v, v)).reduceByKey(part, (a, _) => a)
 
-  /** Persist one RDD of a round loop: MEMORY_AND_DISK, registered for
-    * [[graft.pipeline.PipelineCaches.clear]], and marked for
+  /** Persist one RDD of a round loop: MEMORY_AND_DISK, registered with
+    * the calling thread's cache scope ([[graft.pipeline.PipelineCaches]]
+    * — no other thread's release can drop it mid-loop), and marked for
     * `localCheckpoint`, so the first job that materializes it also cuts
     * its lineage. Without the cut a loop's dependency chain grows round
     * over round even though every hop is cached, and Java task
@@ -1239,7 +1240,7 @@ object GraphAlgorithms {
       d.count()
       // deeper is NOT unpersisted here: perSourceDeps holds a map() view
       // of it, and a localCheckpointed RDD is unrecomputable once its
-      // blocks are dropped — PipelineCaches.clear frees the whole chain
+      // blocks are dropped — the cache scope's release frees the chain
       if (l > 0)
         perSourceDeps += d.map { case ((_, vv), (_, del)) => (vv, del) }
       deeper = d

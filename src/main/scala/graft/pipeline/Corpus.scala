@@ -426,10 +426,9 @@ object Corpus {
     * collect, parallel (shard, slice)-keyed windows — shard counts stay
     * a dataset-layout choice, not a parallelism ceiling. NOTE: the
     * offset collect runs EAGERLY at call time and persists the ranged
-    * intermediate, tracked in [[PipelineCaches]] — long-lived callers
-    * release it with `PipelineCaches.clear()` after consuming the result
-    * (Verify/Bench/QueryServer already do, per the PipelineCaches
-    * contract). */
+    * intermediate, tracked in [[PipelineCaches]] and released with the
+    * caller's cache scope (Verify/Bench clear theirs after each result,
+    * QueryServer's ends with the response). */
   def packSequences(docs: DataFrame, seqLen: Int = 2048, shards: Int = 8,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame =
     binAssign(PrefixSum.groupedRunningSum(

@@ -28,9 +28,11 @@ import graft.functions.GraftFunctions
   *
   * Cache lifecycle: the pair-mining operators persist intermediate
   * signature tables (they feed multiple consumers in one job), each
-  * registered with [[PipelineCaches]]. The cached blocks live until
-  * `PipelineCaches.clear()` — call it between jobs in a long-running
-  * session (it touches only pipeline-tracked frames, never other caches).
+  * registered with [[PipelineCaches]] in the caller's cache scope. The
+  * cached blocks live until that scope is released — a
+  * `PipelineCaches.scoped` block's end, or a single-threaded loop's
+  * `clear()` between jobs — and a release touches only the frames its
+  * scope registered, never other caches.
   */
 object Dedup {
 
@@ -477,7 +479,7 @@ object Dedup {
     // image) executed twice per run (r17 plan audit: two decode
     // mapPartitions subtrees; the x/y join sides already shared one via
     // exchange reuse). 16 bytes per image, orders of magnitude below
-    // the payload. Tracked in [[PipelineCaches]], callers clear.
+    // the payload. Tracked in [[PipelineCaches]] (caller's scope).
     val prep = hashes.select(col(idCol).as("id"), col(hashCol).as("h"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)

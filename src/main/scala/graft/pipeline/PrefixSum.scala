@@ -53,8 +53,8 @@ object PrefixSum {
     * group in `orderCols` lexicographic order, computed via the
     * distributed prefix-sum above. Requires (groupCol +: orderCols)
     * unique per row and a non-null groupCol; the input is persisted for
-    * the bounded offset collect (tracked in [[PipelineCaches]] — callers
-    * clear). A running count (rank) is the `valueCol = lit(1)` special
+    * the bounded offset collect (tracked in [[PipelineCaches]], released
+    * with the caller's cache scope). A running count (rank) is the `valueCol = lit(1)` special
     * case — see [[Sampling.seededShuffle]]. */
   def groupedRunningSum(df: DataFrame, groupCol: String,
       orderCols: Seq[String], valueCol: String, outCol: String): DataFrame =

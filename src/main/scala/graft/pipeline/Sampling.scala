@@ -419,20 +419,18 @@ object Sampling {
     * partitioned by shard, rows within each shard file in shuffle order.
     * `repartition(shard)` + in-partition sort = one exchange, then each
     * shard writes sequentially — the 1000-executor write path. Terminal
-    * operation: the shuffle's prefix-sum intermediate persists under the
-    * [[PipelineCaches]] contract, and since nothing can consume this
-    * call's plans after the write returns, writeShards clears the
-    * tracked caches itself (like Verify/Bench per query) instead of
-    * leaving a corpus-sized block pinned for the caller to discover. */
+    * operation: nothing can consume this call's plans after the write
+    * returns, so the shuffle's prefix-sum intermediate persists in a
+    * [[PipelineCaches.scoped]] block of its own and is released on
+    * return — the caller's caches are left alone. */
   def writeShards(docs: DataFrame, path: String, shards: Int = 8,
-      seed: Long = 43L, idCol: String = "doc_id"): Unit = {
-    try {
+      seed: Long = 43L, idCol: String = "doc_id"): Unit =
+    PipelineCaches.scoped {
       val shuffled = seededShuffle(docs, shards, seed, idCol)
         .join(docs.withColumnRenamed(idCol, "id"), Seq("id"))
       shuffled
         .repartition(shards, col("shard"))
         .sortWithinPartitions(col("shard"), col("pos"))
         .write.mode("overwrite").partitionBy("shard").parquet(path)
-    } finally PipelineCaches.clear()
-  }
+    }
 }

@@ -238,7 +238,8 @@ object Sft {
     * and parallel (shard, slice) windows, so `shards` is a dataset-
     * layout choice, never a parallelism ceiling. Like the document
     * packer, the offset collect runs eagerly at call time and the ranged
-    * intermediate persists under the [[PipelineCaches]] contract. */
+    * intermediate persists until the caller's cache scope is released
+    * ([[PipelineCaches]]). */
   def packConversations(turns: DataFrame, seqLen: Int = 2048,
       shards: Int = 8, convIdCol: String = "conv_id",
       tokenCol: String = "n_tokens"): DataFrame =
@@ -271,11 +272,17 @@ object Sft {
     * packer [[Corpus.packedSequenceIds]], which inserts the artifact's
     * [[Bpe.Eos]] document separator because raw documents have none.
     *
-    * Scale: one narrow encode already on the input, one
-    * per-conversation cumsum window, the packer's distributed
-    * prefix-sum, a |conversations|-row join (broadcastable), and one
-    * posexplode — the corpus-sized data moves exactly once, at the
-    * final explode. */
+    * Scale: one narrow encode already on the input, then one
+    * per-conversation aggregate that COLLATES every turn's (turn_idx,
+    * mask, id array) into the conversation row, the packer's distributed
+    * prefix-sum over those rows, and one posexplode of the flattened
+    * arrays — no window and no join. The corpus-sized id arrays move
+    * through two wide shuffles (the collate aggregate and the prefix
+    * sum's range partitioning), and the ranged intermediate the prefix
+    * sum persists for its eager offset collect holds them all: the
+    * cache footprint is corpus-sized (ROADMAP: move only the per-turn
+    * metadata through the prefix sum). That persist is released with
+    * the caller's cache scope ([[PipelineCaches]]). */
   def packedExamples(turns: DataFrame, seqLen: Int = 2048,
       shards: Int = 8, convIdCol: String = "conv_id",
       idsCol: String = "token_ids"): DataFrame = {

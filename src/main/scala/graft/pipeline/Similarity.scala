@@ -591,33 +591,29 @@ object Similarity {
     * exclusion assignment — and each built its own identical persisted
     * prep and re-ran the identical deterministic centroid train (the
     * train is a pure function of (corpus, lists, refineIters): seeded by
-    * lowest ids, means 9-dp rounded). Keyed on the CANONICALIZED
-    * analyzed plan (+ train params), so only plan-identical corpora
-    * share. Lifecycle: entries evaporate on [[PipelineCaches.clear]],
-    * exactly like the persisted frames themselves — nothing survives a
-    * bench iteration or server request, every run recomputes from the
-    * parquet inputs. */
-  private val ivfPrepMemo = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame]()
-  private val centroidMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int),
-    Seq[Centroid]]()
-
-  /** Shared IVF/k-means corpus prep: (nid, cv, cnorm), null vectors
-    * dropped, persisted for the multi-pass Lloyd loop; one persisted
-    * frame per distinct corpus plan per [[PipelineCaches]] epoch. */
+    * lowest ids, means 9-dp rounded). Both are [[PipelineCaches.memo]]
+    * entries keyed on the CANONICALIZED analyzed plan (+ train params),
+    * so only plan-identical corpora share, and only within one cache
+    * scope: an entry is released with the scope that built it, exactly
+    * like the persisted frames themselves, so nothing survives a bench
+    * iteration, server request or stream micro-batch.
+    *
+    * Staleness contract: the key is the plan, not the data. A table
+    * overwritten WITHIN one scope still hands a plan-identical corpus
+    * the prep and centroids built before the overwrite — the same
+    * contract as a persisted frame over that table, but easier to miss.
+    * A caller that rewrites its corpus mid-scope reads the rewritten
+    * table inside a new [[PipelineCaches.scoped]] block. */
   private def prepIvfCorpus(corpus: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val shaped = corpus.select(col(idCol).as("nid"), toDouble(col(vecCol)).as("cv"))
       .filter(col("cv").isNotNull)
-    val key = shaped.queryExecution.analyzed.canonicalized
-    ivfPrepMemo.computeIfAbsent(key, _ => {
-      PipelineCaches.onClear(key)(k => ivfPrepMemo.remove(k))
+    PipelineCaches.memo(shaped.queryExecution.analyzed.canonicalized) {
       shaped
         .repartition(col("nid"))
         .withColumn("cnorm", normFixed(col("cv"), DefaultDim))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         .transform(PipelineCaches.track)
-    })
+    }
   }
 
   /** `nlist = 0` auto-scales to ~√N capped at 4096 (see [[ivfTopK]]). */
@@ -650,12 +646,11 @@ object Similarity {
     * coordinates themselves, making everything downstream exactly
     * reproducible rather than merely round-absorbed at the csim stage. */
   private def trainCentroids(c: DataFrame, lists: Int, refineIters: Int): Seq[Centroid] = {
-    // memoized per (corpus plan, lists, refineIters) until the next
-    // PipelineCaches.clear — see ivfPrepMemo's scaladoc; the train is
-    // deterministic, so sharing it is result-invisible
+    // memoized per (corpus plan, lists, refineIters) in the cache scope —
+    // see prepIvfCorpus's scaladoc; the train is deterministic, so
+    // sharing it is result-invisible
     val key = (c.queryExecution.analyzed.canonicalized, lists, refineIters)
-    centroidMemo.computeIfAbsent(key, _ => {
-      PipelineCaches.onClear(key)(k => centroidMemo.remove(k))
+    PipelineCaches.memo(key) {
       // deterministic seeds: the `lists` lowest-id vectors
       var cents = collectCents(
         c.orderBy("nid").limit(lists)
@@ -672,7 +667,7 @@ object Similarity {
               normFixed(col("cent"), DefaultDim).as("centnorm")))
       }
       cents
-    })
+    }
   }
 
   /** L2-normalize an embedding column (cosine-ready storage: after this,
@@ -1206,15 +1201,19 @@ object Similarity {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val applied = Artifacts.readStringIfExists(spark, batchMarker)
-          .map(_.trim.toLong)
-        if (!applied.exists(_ >= batchId) && !batch.isEmpty) {
-          batch.write.mode("append").saveAsTable(corpusTable)
-          spark.catalog.refreshTable(corpusTable)
-          appendToIvfIndex(spark.table(corpusTable), batch, path,
-            nlist, refineIters, idCol, vecCol)
-          Artifacts.writeString(spark, batchMarker, batchId.toString)
+        // one cache scope per micro-batch: the stream thread never
+        // returns to a caller that could release what the batch persisted
+        PipelineCaches.scoped {
+          val spark = batch.sparkSession
+          val applied = Artifacts.readStringIfExists(spark, batchMarker)
+            .map(_.trim.toLong)
+          if (!applied.exists(_ >= batchId) && !batch.isEmpty) {
+            batch.write.mode("append").saveAsTable(corpusTable)
+            spark.catalog.refreshTable(corpusTable)
+            appendToIvfIndex(spark.table(corpusTable), batch, path,
+              nlist, refineIters, idCol, vecCol)
+            Artifacts.writeString(spark, batchMarker, batchId.toString)
+          }
         }
       }
       .start()

@@ -635,13 +635,19 @@ object TextAnalysis {
     * result is bit-stable across partitionings and engines (full DuckDB
     * oracle, `p_hash_embed`).
     *
-    * Scale notes (100 TB): the token explode feeds ONE map-side-combinable
-    * aggregate keyed (doc, bucket); bucket document-frequency is a ≤`dim`
-    * row broadcast; corpus size N a 1-row broadcast; vector assembly
-    * re-aggregates ndocs·≤dim rows — bounded by OUTPUT size, not corpus
-    * size. No window, no self-join, and the shuffle key is the int bucket,
-    * never a raw vocabulary string — an open web-scale vocabulary adds
-    * zero shuffle width. */
+    * EAGER train: the batch form runs its own train/apply split, so the
+    * idf model ([[hashedTfidfIdf]]: one corpus pass, a ≤`dim`-row
+    * aggregate) is computed and collected to the driver when this is
+    * CALLED, not when the returned frame executes — a caller that builds
+    * the frame and never runs it still pays that corpus pass (the same
+    * pattern as the packers' eager offset collects).
+    *
+    * Scale notes (100 TB): the model's token explode feeds ONE
+    * map-side-combinable (doc, bucket) distinct + per-bucket count, keyed
+    * by the int bucket, never a raw vocabulary string — an open web-scale
+    * vocabulary adds zero shuffle width; the driver holds `dim` doubles.
+    * The returned frame is a narrow per-row projection
+    * ([[hashedTfidfApply]]): no window, no join, no exchange. */
   def hashedTfidf(docs: DataFrame, dim: Int = Similarity.DefaultDim,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(dim > 0 && (dim & (dim - 1)) == 0,

@@ -50,7 +50,14 @@ final class QueryServer(gs: GraftSession, port: Int = 0,
     if (pool != null) pool.shutdownNow()
   }
 
-  private def handle(ex: HttpExchange): Unit = {
+  /** One request in one cache scope: whatever the query persists (a
+    * CALL+UNION frame, deep var-length levels, pipeline intermediates)
+    * is released when the response ends, and never a concurrent
+    * request's caches. */
+  private def handle(ex: HttpExchange): Unit =
+    graft.pipeline.PipelineCaches.scoped(serve(ex))
+
+  private def serve(ex: HttpExchange): Unit = {
     try {
       if (ex.getRequestMethod != "POST") { respond(ex, 405, "POST only"); return }
       val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
@@ -100,14 +107,6 @@ final class QueryServer(gs: GraftSession, port: Int = 0,
         respond(ex, 400, s"error: ${e.getMessage}")
       case e: Throwable =>
         respond(ex, 500, s"internal error: ${e.getMessage}")
-    } finally {
-      // The response is fully rendered by now (streams drain inside
-      // respondStream), so any caches a CALL+UNION plan or a pipeline
-      // operator persisted for this query are no longer needed. Without
-      // this, a long-lived server leaks one SQL cache per such query —
-      // CacheManager holds InMemoryRelations by plan, not by our handles.
-      try graft.pipeline.PipelineCaches.clear()
-      catch { case _: Throwable => }
     }
   }
 

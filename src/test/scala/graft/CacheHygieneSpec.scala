@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.graftprobe.CacheProbe
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{Dedup, PipelineCaches, Similarity}
+import graft.pipeline.{Dedup, PipelineCaches, Sampling, Similarity}
 
 /** Round-7 regression guard: `PipelineCaches.clear()` must release every
   * SQL cache the pipeline operators created, even when the tracked
@@ -13,6 +13,11 @@ import graft.pipeline.{Dedup, PipelineCaches, Similarity}
   * alive for the JVM's lifetime, and the 100-query bench accumulated
   * caches until eviction thrashed. These tests pin the strong-ref fix with
   * CacheManager-level assertions, not registry bookkeeping alone.
+  *
+  * The cache-scope tests pin that a release frees only what its own scope
+  * registered: another thread's frames and round RDDs, a frame a
+  * concurrent scope persisted under the same plan, and an enclosing
+  * scope's frames all survive it.
   */
 class CacheHygieneSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -75,5 +80,122 @@ class CacheHygieneSpec extends AnyFunSuite {
     assert(CacheProbe.entryCount(spark) == 1)
     df.unpersist(blocking = true)
     assert(CacheProbe.entryCount(spark) == 0)
+  }
+
+  /** A dedicated thread whose cache scopes persist between calls. */
+  private final class ScopeThread {
+    private val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    def apply[A](body: => A): A = pool.submit(() => body).get()
+    def stop(): Unit = pool.shutdown()
+  }
+
+  test("a release on one thread leaves another thread's frames and round RDDs") {
+    spark.catalog.clearCache()
+    PipelineCaches.clear()
+    val t1 = new ScopeThread
+    try {
+      val (frame, rdd) = t1 {
+        val f = docs.select($"doc_id")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .transform(PipelineCaches.track)
+        f.count()
+        // shaped like a graph round: persisted, localCheckpointed, counted
+        val r = spark.sparkContext.parallelize(1 to 100, 2)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        r.localCheckpoint()
+        PipelineCaches.onClear(r)(_.unpersist(blocking = false))
+        r.count()
+        (f, r)
+      }
+      PipelineCaches.clear(blocking = true) // T2 = this thread
+      assert(CacheProbe.entryCount(spark) == 1,
+        "another thread's clear() unpersisted T1's tracked frame")
+      assert(frame.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      assert(spark.sparkContext.getPersistentRDDs.contains(rdd.id),
+        "another thread's clear() dropped T1's localCheckpointed round RDD")
+      // the loop can still read its (unrecomputable) round
+      assert(rdd.count() == 100)
+      assert(t1(PipelineCaches.trackedCount) == 2)
+      t1(PipelineCaches.clear(blocking = true))
+      assert(CacheProbe.isEmpty(spark))
+      assert(!spark.sparkContext.getPersistentRDDs.contains(rdd.id))
+    } finally {
+      t1(PipelineCaches.clear(blocking = true))
+      t1.stop()
+    }
+  }
+
+  test("plan-identical frames persisted by two threads share one entry until both release") {
+    spark.catalog.clearCache()
+    val t1 = new ScopeThread
+    val t2 = new ScopeThread
+    def persistOn(t: ScopeThread): Unit = t {
+      // built independently on each thread: equal plans, distinct handles
+      val f = spark.range(0, 50).selectExpr("id * 3 AS x")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(PipelineCaches.track)
+      f.count()
+      ()
+    }
+    try {
+      persistOn(t1)
+      persistOn(t2)
+      assert(CacheProbe.entryCount(spark) == 1,
+        "precondition: CacheManager holds one entry per plan")
+      t1(PipelineCaches.clear(blocking = true))
+      assert(CacheProbe.entryCount(spark) == 1,
+        "releasing the first scope dropped the entry the second still tracks")
+      t2(PipelineCaches.clear(blocking = true))
+      assert(CacheProbe.entryCount(spark) == 0,
+        "releasing the last scope left the shared entry behind")
+    } finally {
+      Seq(t1, t2).foreach { t => t(PipelineCaches.clear(blocking = true)); t.stop() }
+    }
+  }
+
+  test("scoped { writeShards } keeps the caller's tracked frame cached") {
+    spark.catalog.clearCache()
+    PipelineCaches.clear()
+    val mine = docs.select($"doc_id", $"text")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(PipelineCaches.track)
+    mine.count()
+    val before = PipelineCaches.trackedCount
+    val dir = java.nio.file.Files.createTempDirectory("graft_scoped_shards").toString
+    try {
+      PipelineCaches.scoped {
+        Sampling.writeShards(docs, dir, shards = 2)
+        Dedup.minhashPairs(docs).count() // the scope's own persists
+      }
+      assert(PipelineCaches.trackedCount == before)
+      assert(CacheProbe.entryCount(spark) == 1,
+        "a nested scope's release (or writeShards) freed the caller's frame")
+      assert(mine.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    } finally {
+      PipelineCaches.clear(blocking = true)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+    assert(CacheProbe.isEmpty(spark))
+  }
+
+  test("library code never clears the calling thread's whole scope") {
+    import scala.jdk.CollectionConverters._
+    // only top-level mains (Bench, Verify, tools) and tests may call
+    // clear(); an operator or a request handler opens a scope instead
+    val base = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(java.nio.file.Files.isDirectory(base),
+      s"expected the program sources at ${base.toAbsolutePath}")
+    val roots = Seq("pipeline", "graph", "exec", "streaming", "server",
+      "planner", "cypher").map(base.resolve) :+ base.resolve("GraftSession.scala")
+    val found = roots.flatMap { r =>
+      java.nio.file.Files.walk(r).iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+            case (line, i) if line.contains("PipelineCaches.clear(") => s"$p:${i + 1}"
+          }
+        }
+    }
+    assert(found.isEmpty, s"library clear() calls: ${found.mkString(", ")}")
   }
 }

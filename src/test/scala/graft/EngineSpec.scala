@@ -1315,6 +1315,27 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  test("CREATE from 8 concurrent threads: every acknowledged write reads back") {
+    val g = writeGs()
+    withWrites {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+      try {
+        // each statement appends to BOTH backing tables (node + edge)
+        val writes = (100 until 108).map(i => pool.submit(() =>
+          g.cypher(s"CREATE (:User {id: $i, name: 'c$i', city: 'x'}), " +
+            s"(:User {id: $i})-[:WFollows {since: 2030}]->(:User {id: 1});")
+            .collect()))
+        writes.foreach(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+      } finally pool.shutdown()
+      assert(longs(g.cypher("MATCH (u:User) WHERE u.id >= 100 RETURN u.id AS id;"))
+        == (100L until 108L).toSet)
+      assert(longs(g.cypher(
+        """MATCH (a:User)-[f:WFollows]->(b:User {id: 1})
+          |WHERE f.since = 2030 RETURN a.id AS id;""".stripMargin))
+        == (100L until 108L).toSet)
+    }
+  }
+
   test("CREATE validation: every malformed shape is loud, nothing half-applies") {
     val g = writeGs()
     withWrites {

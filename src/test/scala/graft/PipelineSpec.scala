@@ -2032,11 +2032,20 @@ class CorpusSpec extends AnyFunSuite {
 
   test("writeShards releases its tracked caches (terminal operation)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_shards2").toString
+    // a frame the CALLER tracked: writeShards must release only its own
+    val mine = docs.select(col("doc_id"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.pipeline.PipelineCaches.track)
+    mine.count()
+    val before = graft.pipeline.PipelineCaches.trackedCount
     try {
       graft.pipeline.Sampling.writeShards(docs, dir, shards = 4)
-      assert(graft.pipeline.PipelineCaches.trackedCount == 0,
+      assert(graft.pipeline.PipelineCaches.trackedCount == before,
         "writeShards left tracked pipeline caches behind")
+      assert(mine.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "writeShards released the caller's tracked frame")
     } finally {
+      graft.pipeline.PipelineCaches.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }

@@ -217,6 +217,47 @@ class ServerSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("concurrent requests: a fast request's end keeps a slow CALL+UNION request's cache") {
+    import spark.implicits._
+    import org.apache.spark.sql.graftprobe.CacheProbe
+    val g = new GraftSession(spark)
+    g.registerTable("cusers", Seq((1L, "u1"), (2L, "u2")).toDF("id", "name"))
+    g.registerNode("CUser", "cusers", "id")
+    // the same stalling table as above: B's union parts run for 8 s
+    // after its CALL block is persisted and counted
+    g.registerTable("slow_t",
+      spark.range(0, 2, 1, 1).mapPartitions { it => Thread.sleep(8000); it }.toDF("id"))
+    g.registerNode("Slow", "slow_t", "id")
+    val srv = new QueryServer(g)
+    val port = srv.start()
+    try {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration.Duration
+      val before = CacheProbe.entryCount(spark)
+      def waitFor(what: String)(cond: => Boolean): Unit = {
+        val deadline = System.nanoTime() + 30e9.toLong
+        while (!cond && System.nanoTime() < deadline) Thread.sleep(20)
+        assert(cond, what)
+      }
+      val slowF = Future(post(port,
+        """{"query": "CALL { MATCH (u:CUser) RETURN max(u.id) AS top } """ +
+          """MATCH (s:Slow) RETURN s.id + top AS id """ +
+          """UNION MATCH (s:Slow) RETURN s.id AS id;"}"""))
+      waitFor("B's CALL block was never cached")(CacheProbe.entryCount(spark) > before)
+      val (cq, bq) = post(port, """{"query": "MATCH (u:CUser) RETURN u.id AS id ORDER BY id;"}""")
+      assert(cq == 200 && bq == "{\"id\":1}\n{\"id\":2}\n")
+      assert(!slowF.isCompleted, "precondition: B still in flight when A ends")
+      assert(CacheProbe.entryCount(spark) > before,
+        "request A's end released request B's CALL cache")
+      val (cs, bs) = Await.result(slowF, Duration(60, "s"))
+      assert(cs == 200 && bs.split("\n").toSeq.sorted ==
+        Seq("{\"id\":0}", "{\"id\":1}", "{\"id\":2}", "{\"id\":3}"))
+      // B's own scope releases its CALL cache once its response ends
+      waitFor("B's CALL cache outlived its request")(CacheProbe.entryCount(spark) == before)
+    } finally srv.stop()
+  }
+
   test("Main.boot: env-configured boot serves queries, wires catalog poll, shuts down") {
     val dir = java.nio.file.Files.createTempDirectory("graft-boot").toString
     val catPath = s"$dir/catalog.json"

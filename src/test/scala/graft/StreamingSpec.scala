@@ -196,6 +196,8 @@ class StreamingSpec extends AnyFunSuite {
       val rows = base.limit(2).collect()
         .map(r => (r.getLong(0) + 5000000L, r.getSeq[Float](1)))
       val mem = MemoryStream[(Long, Seq[Float])]
+      val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+      val entriesBefore = org.apache.spark.sql.graftprobe.CacheProbe.entryCount(spark)
       val q = Similarity.streamToIvfIndex(
         mem.toDF().toDF("vec_id", "embedding"), "ivf_stream_corpus", dir, ckpt)
       try {
@@ -204,6 +206,14 @@ class StreamingSpec extends AnyFunSuite {
         mem.addData(rows(1)) // second micro-batch composes
         q.processAllAvailable()
       } finally q.stop()
+      // each micro-batch released what it persisted (prep + assignment).
+      // No persisted RDD beyond the pre-stream set: the batches' corpus
+      // append re-caches the build's prep lazily, under a fresh RDD id
+      // that no job materializes here
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore).isEmpty,
+        "micro-batches leaked persisted RDDs")
+      assert(org.apache.spark.sql.graftprobe.CacheProbe.entryCount(spark) == entriesBefore,
+        "micro-batches leaked SQL cache entries")
       // each clone is retrieved for its original's query at csim 1.0
       val queries = base.limit(2)
       val got = Similarity.ivfTopKPersisted(queries, dir, k = 3).collect()
