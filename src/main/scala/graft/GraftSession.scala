@@ -963,23 +963,23 @@ final class GraftSession(val spark: SparkSession) {
   }
 
   // ---- output formats (reference server/models.rs:20-27) --------------------
-  // Row formats STREAM: toLocalIterator pulls one partition at a time to
-  // the driver, so a result far larger than driver memory (or
-  // spark.driver.maxResultSize, which only bounds collect()) flows through
-  // — the analogue of the reference's line-by-line response streaming
+  // Row formats STREAM through GraftSession.drain: one job brings back
+  // every partition that fits its share of spark.driver.maxResultSize, and
+  // a partition past its share is fetched afterwards in a job of its own,
+  // so a result far larger than driver memory still flows through — the
+  // analogue of the reference's line-by-line response streaming
   // (server/handlers.rs:145-221). Pretty formats are page-bounded by
   // definition (limit(rows)), so buffering them is fine.
 
   /** Streaming JSONEachRow: one JSON object per row. */
-  def jsonRowIterator(df: DataFrame): Iterator[String] = {
-    import scala.jdk.CollectionConverters._
-    df.toJSON.toLocalIterator().asScala
-  }
+  def jsonRowIterator(df: DataFrame): Iterator[String] =
+    GraftSession.drain(df.toJSON).map(_.getUTF8String(0).toString)
 
   /** Streaming CSV rows (RFC-4180-style quoting for strings). */
   def csvRowIterator(df: DataFrame, header: Boolean = false): Iterator[String] = {
-    import scala.jdk.CollectionConverters._
-    val rows = df.toLocalIterator().asScala.map(_.toSeq.map {
+    val toRow = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(df.schema)
+      .resolveAndBind().createDeserializer()
+    val rows = GraftSession.drain(df).map(r => toRow(r).toSeq.map {
       case null => ""
       case s: String => "\"" + s.replace("\"", "\"\"") + "\""
       case v => v.toString
@@ -1016,5 +1016,54 @@ final class GraftSession(val spark: SparkSession) {
       cells.zip(widths).map { case (c, w) => c.padTo(w, ' ') }.mkString(" | ")
     val sep = widths.map("-" * _).mkString("-+-")
     (line(header) +: sep +: data.map(line)).mkString("\n")
+  }
+}
+
+object GraftSession {
+  import org.apache.spark.sql.Dataset
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+  import org.apache.spark.sql.execution.SQLExecution
+
+  /** The rows of `ds` in partition order, for the streaming formats.
+    *
+    * One job runs over every partition. A task returns its rows while
+    * their size stays within its `share`, by default
+    * `spark.driver.maxResultSize / (2 · partitions)` (Spark's 1g default
+    * when the bound is 0, unlimited), so the first pass holds at most half
+    * that bound on the driver. A partition past its share returns nothing
+    * and is fetched afterwards, when the iterator reaches it, in a job of
+    * its own, as `toLocalIterator` fetches every partition. A small result
+    * so costs one job instead of one per partition run back to back.
+    */
+  private[graft] def drain(ds: Dataset[_], share: Long = -1L): Iterator[UnsafeRow] = {
+    val qe = ds.queryExecution
+    val sc = ds.sparkSession.sparkContext
+    def copied(it: Iterator[InternalRow]) = it.map(_.asInstanceOf[UnsafeRow].copy())
+    val (rdd, first) = SQLExecution.withNewExecutionId(qe, Some("drain")) {
+      val rdd = qe.executedPlan.execute()
+      val cap =
+        if (share >= 0) share
+        else {
+          val bound = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+          (if (bound > 0) bound else 1L << 30) / math.max(1L, 2L * rdd.getNumPartitions)
+        }
+      (rdd, sc.runJob(rdd, (it: Iterator[InternalRow]) => {
+        val rows = Array.newBuilder[UnsafeRow]
+        var size = 0L
+        val in = copied(it)
+        while (size <= cap && in.hasNext) {
+          val r = in.next()
+          size += r.getSizeInBytes
+          rows += r
+        }
+        if (size <= cap) Some(rows.result()) else None
+      }))
+    }
+    first.iterator.zipWithIndex.flatMap {
+      case (Some(rows), _) => rows.iterator
+      case (None, i) =>
+        sc.runJob(rdd, (it: Iterator[InternalRow]) => copied(it).toArray, Seq(i)).head.iterator
+    }
   }
 }

@@ -220,23 +220,30 @@ final class DataFrameBuilder(
     val canUseIndex = s.hasAdjIndex && refCols.isEmpty &&
       e.pushedFilters.isEmpty && e.altSchemas.isEmpty
 
-    // bounded var-length hop: iterated self-join over the single-hop pair
-    // set, distinct-pair reachability semantics. Each composition is an
-    // equi-join Catalyst can broadcast/shuffle. The hop set is at most as
-    // large as the edge table, so the base table's optimizer stats are a
-    // safe upper bound for a broadcast decision — the explode/distinct
-    // lineage hides that bound from Catalyst's own estimator, which is why
-    // the hint is lifted here instead of left to the planner. Per-level
-    // `distinct` bounds path-count growth for the NEXT composition; the
-    // last level needs none (the final union-distinct dedups it, and the
-    // hash aggregate's map-side combine absorbs path multiplicity without
-    // an extra sequential shuffle stage).
+    // Bounded var-length and distance-only shortestPath hops compose in
+    // one of two forms, chosen per hop base:
+    //  - hashed: a broadcast-small base with integral ids is collected
+    //    once, here, into a hash adjacency and walked level-synchronously
+    //    per source row inside one stage (HopAdjacency.expand);
+    //  - join: any other base composes one equi-join superstep per level
+    //    (composeHopsJoin, composeShortestFrontier), the only form that
+    //    runs on a base the driver cannot hold.
+    // "Broadcast-small" is the base table's optimizer size against
+    // autoBroadcastJoinThreshold: the hop set is at most as large as the
+    // edge table, and the explode/distinct lineage hides that bound from
+    // Catalyst's own estimator, which is why it is read here.
     lazy val smallEdges = scala.util.Try {
       base.queryExecution.optimizedPlan.stats.sizeInBytes <=
         session.spark.sessionState.conf.autoBroadcastJoinThreshold
     }.getOrElse(false)
 
-    def composeHops(h1: DataFrame, lo: Int, hi: Int): DataFrame = {
+    // Join form of a var-length hop: iterated self-join over the single-
+    // hop pair set, distinct-pair reachability semantics. Per-level
+    // `distinct` bounds path-count growth for the NEXT composition; the
+    // last level needs none (the final union-distinct dedups it, and the
+    // hash aggregate's map-side combine absorbs path multiplicity without
+    // an extra sequential shuffle stage).
+    def composeHopsJoin(h1: DataFrame, lo: Int, hi: Int): DataFrame = {
       val rhs = if (smallEdges) broadcast(h1) else h1
       val hops = scala.collection.mutable.ArrayBuffer(h1)
       for (level <- 2 to hi) {
@@ -278,44 +285,14 @@ final class DataFrameBuilder(
         else edgeList(srcCol, dstCol)
       }
 
-    // shortestPath composition: cost-based. TPC-H-small (broadcastable)
-    // edge frames take the min-agg form — every level is a broadcast join
-    // of the SAME small hop frame, so "re-joining settled pairs" costs no
-    // extra shuffle and the frontier form's per-level anti-join would only
-    // add scheduler latency (~3 extra stages on a 25-row nation chain).
-    // Shuffle-scale edge frames take the frontier-delta form, whose
-    // per-level volume tracks the frontier, not the full settled set.
-    def composeShortest(h1: DataFrame, lo: Int, hi: Int): DataFrame =
-      if (smallEdges) composeShortestMinAgg(h1, lo, hi)
-      else composeShortestFrontier(h1, lo, hi)
-
-    // Level-synchronous pair expansion, one `__len`-tagged union per level,
-    // min() per pair. min-over-all-levels equals BFS distance (every pair
-    // appears at its shortest level and possibly later ones). A lower
-    // bound > 1 EXCLUDES pairs whose true shortest hop count is below it
-    // (it does not return "the shortest path of at least lo hops").
-    def composeShortestMinAgg(h1: DataFrame, lo: Int, hi: Int): DataFrame = {
-      val rhs = broadcast(h1)
-      var cur = h1.distinct()
-      val levels = scala.collection.mutable.ArrayBuffer(
-        cur.withColumn("__len", lit(1L)))
-      for (level <- 2 to hi) {
-        cur = cur.alias("l").join(rhs.alias("r"), col("l.__dst") === col("r.__src"))
-          .select(col("l.__src").as("__src"), col("r.__dst").as("__dst"))
-          .distinct()
-        levels += cur.withColumn("__len", lit(level.toLong))
-      }
-      levels.reduce(_ union _)
-        .groupBy("__src", "__dst").agg(min("__len").as("__len"))
-        .filter(col("__len") >= lo)
-    }
-
-    // Frontier-delta BFS: each level expands only the pairs FIRST reached
-    // at the previous level, then anti-joins away pairs already settled at
-    // a shorter length — every pair lands in exactly one level (its BFS
-    // distance; no min() re-aggregation) and per-level shuffle volume is
-    // proportional to the frontier, not the full settled set. Same lower-
-    // bound semantics as the min-agg form.
+    // Join form of a distance-only shortestPath: frontier-delta BFS. Each
+    // level expands only the pairs FIRST reached at the previous level,
+    // then anti-joins away pairs already settled at a shorter length —
+    // every pair lands in exactly one level (its BFS distance) and per-
+    // level shuffle volume is proportional to the frontier, not the full
+    // settled set. A lower bound > 1 EXCLUDES pairs whose true shortest
+    // hop count is below it (it does not return "the shortest path of at
+    // least lo hops"); the hashed form keeps the same semantics.
     def composeShortestFrontier(h1: DataFrame, lo: Int, hi: Int): DataFrame = {
       // Lazily-composed frontiers re-embed every earlier level's anti-join
       // in their lineage (settled_k references frontier_1..k), so the
@@ -408,9 +385,9 @@ final class DataFrameBuilder(
     // pair's minimum, and pin ONE representative per pair — the
     // lexicographically smallest node sequence (Neo4j returns an arbitrary
     // one; a pinned choice is SQL-mirrorable). A lower bound > 1 keeps the
-    // distance semantics of composeShortest: pairs whose true distance is
-    // below it are EXCLUDED, not given a longer path. Costlier than the
-    // distance-only composition (it enumerates trails), so the planner
+    // distance semantics of the distance-only forms: pairs whose true
+    // distance is below it are EXCLUDED, not given a longer path. Costlier
+    // than the distance-only composition (it enumerates trails), so the planner
     // only routes here when path values are actually referenced.
     // `keepAll = true` (allShortestPaths) keeps every min-length path per
     // pair — one row each — instead of the single pinned representative.
@@ -442,9 +419,9 @@ final class DataFrameBuilder(
           if (e.pushedFilters.isEmpty) oriented
           else e.pushedFilters.foldLeft(oriented.alias(e.alias))((d, f) =>
             d.filter(compile(rewriteAliasArgs(f, plan), qualified)))
-        val h1 =
-          if (e.undirectedSameLabel) filteredOriented.select("__src", "__dst")
-          else filteredOriented.select("__src", "__dst").distinct()
+        val pairs = filteredOriented.select("__src", "__dst")
+        val h1 = if (e.undirectedSameLabel) pairs else pairs.distinct()
+        val hashed = smallEdges && HopAdjacency.integralIds(pairs)
         val needsPathValues = e.shortest && e.pathAlias.isDefined &&
           pathValueRelAliases(plan).contains(e.alias)
         // allShortestPaths ALWAYS materializes paths: its row count IS the
@@ -454,11 +431,14 @@ final class DataFrameBuilder(
                     if (e.undirectedSameLabel) h1.distinct() else h1,
                     lo, hi, undirected = e.undirectedSameLabel,
                     keepAll = e.allShortest)
-                else if (e.shortest) composeShortest(h1, lo, hi)
+                else if (e.shortest)
+                  if (hashed) HopAdjacency.expand(pairs, lo, hi, shortest = true)
+                  else composeShortestFrontier(h1, lo, hi)
                 else if (e.pathAlias.isDefined)
                   composePaths(if (e.undirectedSameLabel) h1.distinct() else h1,
                     lo, hi, undirected = e.undirectedSameLabel)
-                else composeHops(h1, lo, hi)).alias(e.alias)
+                else if (hashed) HopAdjacency.expand(pairs, lo, hi, shortest = false)
+                else composeHopsJoin(h1, lo, hi)).alias(e.alias)
       case _ =>
     }
 

@@ -1,0 +1,226 @@
+package graft.exec
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, explode, inline, udf}
+import org.apache.spark.sql.types._
+
+/** Hash adjacency of a broadcast-small hop base: what a var-length or
+  * distance-only shortestPath hop walks inside ONE stage, instead of one
+  * join superstep per level.
+  *
+  * Node ids are interned to dense ordinals through a hash map on
+  * unboxed Long keys, so each source row costs one hashed probe;
+  * neighbours sit in a CSR array by ordinal, distinct per node, so a
+  * level costs one array scan per frontier node. (A Spark map column
+  * would not do: `element_at` on a map scans its keys linearly.) Ordinals
+  * `0 until numSources` are the nodes with at least one neighbour.
+  */
+final class HopAdjacency private (
+    ordinals: scala.collection.mutable.LongMap[Int],
+    ids: Array[Long],
+    numSources: Int,
+    offsets: Array[Int], // neighbours of ordinal o: nbrs(offsets(o) until offsets(o + 1))
+    nbrs: Array[Int]) extends Serializable {
+
+  import HopAdjacency.OrdinalSet
+
+  private[exec] def sources: Iterator[Long] = ids.iterator.take(numSources)
+
+  private def ordinal(id: Long): Int = ordinals.getOrElse(id, -1)
+
+  private def expand(level: OrdinalSet, into: OrdinalSet): Unit = {
+    var i = 0
+    while (i < level.size) {
+      val x = level(i)
+      var j = offsets(x)
+      while (j < offsets(x + 1)) { into.add(nbrs(j)); j += 1 }
+      i += 1
+    }
+  }
+
+  /** Distinct union of the walk-level sets L_lo..L_hi from `src`, where
+    * L_k holds every node a walk of exactly k hops ends on — the join
+    * form's per-level distinct pair sets, one source at a time. */
+  private[exec] def reach(src: Long, lo: Int, hi: Int): Array[Long] = {
+    val o = ordinal(src)
+    if (o < 0) return Array.emptyLongArray
+    val out = new OrdinalSet
+    var level = new OrdinalSet
+    level.add(o)
+    var k = 1
+    while (k <= hi && level.size > 0) {
+      val next = new OrdinalSet
+      expand(level, next)
+      if (k >= lo) { var i = 0; while (i < next.size) { out.add(next(i)); i += 1 } }
+      level = next
+      k += 1
+    }
+    Array.tabulate(out.size)(i => ids(out(i)))
+  }
+
+  /** BFS distance from `src` to every node within `hi` hops, kept when it
+    * is at least `lo`: each node is reported at the first level that
+    * reaches it. The source itself is not visited up front, so it appears
+    * at the length of its shortest cycle. */
+  private[exec] def shortest(src: Long, lo: Int, hi: Int): Array[HopAdjacency.Reached] = {
+    val o = ordinal(src)
+    if (o < 0) return Array.empty
+    val out = Array.newBuilder[HopAdjacency.Reached]
+    val visited = new OrdinalSet
+    var frontier = new OrdinalSet
+    frontier.add(o)
+    var k = 1
+    while (k <= hi && frontier.size > 0) {
+      val next = new OrdinalSet
+      var i = 0
+      while (i < frontier.size) {
+        val x = frontier(i)
+        var j = offsets(x)
+        while (j < offsets(x + 1)) {
+          if (visited.add(nbrs(j))) next.add(nbrs(j))
+          j += 1
+        }
+        i += 1
+      }
+      if (k >= lo) {
+        i = 0
+        while (i < next.size) { out += HopAdjacency.Reached(ids(next(i)), k.toLong); i += 1 }
+      }
+      frontier = next
+      k += 1
+    }
+    out.result()
+  }
+}
+
+object HopAdjacency {
+
+  /** One shortestPath target: its id and BFS distance. */
+  final case class Reached(__dst: Long, __len: Long)
+
+  private val integral: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
+
+  /** Whether both endpoint columns of hop base `h` are integral ids. */
+  def integralIds(h: DataFrame): Boolean =
+    integral(h.schema("__src").dataType) && integral(h.schema("__dst").dataType)
+
+  /** Builds the adjacency from (src, dst) pairs; duplicates fold. */
+  private def apply(src: Array[Long], dst: Array[Long]): HopAdjacency = {
+    val index = new scala.collection.mutable.LongMap[Int]()
+    val ids = Array.newBuilder[Long]
+    def intern(id: Long): Int = index.getOrElse(id, {
+      val o = index.size
+      index(id) = o
+      ids += id
+      o
+    })
+    val s = src.map(intern)
+    val numSources = index.size
+    val d = dst.map(intern)
+    val n = index.size
+    // CSR by source ordinal, then sort + dedupe each neighbour run
+    val start = new Array[Int](n + 1)
+    s.foreach(o => start(o + 1) += 1)
+    for (o <- 1 to n) start(o) += start(o - 1)
+    val fill = start.clone()
+    val raw = new Array[Int](s.length)
+    for (i <- s.indices) { raw(fill(s(i))) = d(i); fill(s(i)) += 1 }
+    val offsets = new Array[Int](n + 1)
+    var w = 0
+    for (o <- 0 until n) {
+      offsets(o) = w
+      java.util.Arrays.sort(raw, start(o), start(o + 1))
+      for (j <- start(o) until start(o + 1) if j == start(o) || raw(j) != raw(j - 1)) {
+        raw(w) = raw(j)
+        w += 1
+      }
+    }
+    offsets(n) = w
+    new HopAdjacency(index, ids.result(), numSources, offsets,
+      java.util.Arrays.copyOf(raw, w))
+  }
+
+  /** The hashed expansion of hop base `pairs` (`__src`, `__dst`, integral):
+    * `(__src, __dst)` rows, or `(__src, __dst, __len)` with `shortest`.
+    *
+    * The base is collected NOW, once, broadcast, and the broadcast is
+    * registered with the calling thread's cache scope, so it is released
+    * with the request. Rows with a null endpoint are dropped: no node
+    * join can match them. The sources are a local relation of the
+    * adjacency's keys under a generator, so an anchor filter Catalyst
+    * infers on `__src` (from `a.id = $k` through the join) pushes through
+    * the generator into the source rows, and only the anchored sources
+    * walk.
+    */
+  def expand(pairs: DataFrame, lo: Int, hi: Int, shortest: Boolean): DataFrame = {
+    val spark = pairs.sparkSession
+    val srcType = pairs.schema("__src").dataType
+    val dstType = pairs.schema("__dst").dataType
+    val rows = pairs
+      .select(col("__src").cast(LongType), col("__dst").cast(LongType))
+      .where(col("__src").isNotNull && col("__dst").isNotNull)
+      .collect()
+    val adj = HopAdjacency(rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+    val bc = spark.sparkContext.broadcast(adj)
+    graft.pipeline.PipelineCaches.onClear(bc)(_.destroy())
+
+    val asSrc: Long => Any = srcType match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case _ => identity
+    }
+    val sources = spark.createDataFrame(
+      java.util.Arrays.asList(adj.sources.map(id => Row(asSrc(id))).toSeq: _*),
+      StructType(Seq(StructField("__src", srcType, nullable = false))))
+    val src = col("__src").cast(LongType)
+    if (shortest) {
+      val walk = udf((s: Long) => bc.value.shortest(s, lo, hi))
+      sources.select(col("__src"), inline(walk(src)))
+        .select(col("__src"), col("__dst").cast(dstType).as("__dst"), col("__len"))
+    } else {
+      val walk = udf((s: Long) => bc.value.reach(s, lo, hi))
+      sources.select(col("__src"), explode(walk(src)).as("__dst"))
+        .select(col("__src"), col("__dst").cast(dstType).as("__dst"))
+    }
+  }
+
+  /** Open-addressing set of node ordinals, iterable in insertion order;
+    * per-source walk state sized by the work done, not by the graph. */
+  private final class OrdinalSet {
+    private var slots = new Array[Int](16) // member + 1, 0 = empty
+    private var members = new Array[Int](8)
+    private var n = 0
+
+    def size: Int = n
+
+    def apply(i: Int): Int = members(i)
+
+    def add(x: Int): Boolean = {
+      if (2 * (n + 1) > slots.length) grow()
+      if (!insert(x)) return false
+      if (n == members.length) members = java.util.Arrays.copyOf(members, 2 * n)
+      members(n) = x
+      n += 1
+      true
+    }
+
+    private def insert(x: Int): Boolean = {
+      val mask = slots.length - 1
+      val mixed = x * 0x9E3779B9
+      var h = (mixed ^ (mixed >>> 16)) & mask
+      while (slots(h) != 0) {
+        if (slots(h) == x + 1) return false
+        h = (h + 1) & mask
+      }
+      slots(h) = x + 1
+      true
+    }
+
+    private def grow(): Unit = {
+      slots = new Array[Int](2 * slots.length)
+      var i = 0
+      while (i < n) { insert(members(i)); i += 1 }
+    }
+  }
+}

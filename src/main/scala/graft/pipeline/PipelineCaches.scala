@@ -8,16 +8,18 @@ import org.apache.spark.storage.StorageLevel
   * per thread.
   *
   * [[Dedup.minhashPairs]], [[Similarity.ivfTopK]], the graph round loops,
-  * the deep var-length BFS and CALL+UNION persist intermediates because
-  * several consumers in the same job read them (re-deriving the lineage
-  * per consumer costs more than the cache). Spark offers no "unpersist
-  * when the consuming query finishes" hook for a lazily-executed result,
-  * so each persist is registered here and released when its scope ends.
+  * a large-edge shortestPath past 6 hops and CALL+UNION persist
+  * intermediates because several consumers in the same job read them
+  * (re-deriving the lineage per consumer costs more than the cache); a
+  * var-length hop on a broadcast-small base broadcasts its adjacency.
+  * Spark offers no "unpersist when the consuming query finishes" hook for
+  * a lazily-executed result, so each persist or broadcast is registered
+  * here and released when its scope ends.
   *
   *   - What registers: [[track]] (a persisted `DataFrame`), [[onClear]]
-  *     (a cleanup hook, e.g. a persisted round RDD) and [[memo]] (a
-  *     computed value shared within the scope). Every registration goes
-  *     to the top scope of the CALLING thread.
+  *     (a cleanup hook, e.g. a persisted round RDD or a broadcast to
+  *     destroy) and [[memo]] (a computed value shared within the scope).
+  *     Every registration goes to the top scope of the CALLING thread.
   *   - Who releases: [[scoped]] pushes a fresh scope, runs its body and
   *     releases the scope in a `finally`; [[clear]] releases the calling
   *     thread's top scope and leaves it in place. A thread's bottom scope

@@ -50,10 +50,11 @@ final class QueryServer(gs: GraftSession, port: Int = 0,
     if (pool != null) pool.shutdownNow()
   }
 
-  /** One request in one cache scope: whatever the query persists (a
-    * CALL+UNION frame, deep var-length levels, pipeline intermediates)
-    * is released when the response ends, and never a concurrent
-    * request's caches. */
+  /** One request in one cache scope: whatever the query persists or
+    * broadcasts (a CALL+UNION frame, a var-length hop adjacency, the
+    * level RDDs of a large-edge shortestPath past 6 hops, pipeline
+    * intermediates) is released when the response ends, and never a
+    * concurrent request's caches. */
   private def handle(ex: HttpExchange): Unit =
     graft.pipeline.PipelineCaches.scoped(serve(ex))
 
@@ -80,12 +81,14 @@ final class QueryServer(gs: GraftSession, port: Int = 0,
         case _ => respond(ex, 400, "'parameters' must be a JSON object"); return
       }
       val df = gs.cypher(query, params)
-      // Row formats stream CHUNKED through toLocalIterator — the driver
-      // never holds the full result (reference handlers.rs:145-221 streams
-      // the same way). Planning/analysis errors surface before any byte is
-      // written (the DataFrame is built above), so they still get a 400;
-      // a mid-stream executor failure truncates the chunked body, exactly
-      // as in the reference.
+      // Row formats stream CHUNKED through GraftSession.drain — the
+      // driver never holds more than half the result-size bound plus one
+      // partition (reference handlers.rs:145-221 streams the same way).
+      // Planning/analysis errors surface before any byte is written (the
+      // DataFrame is built above), so they still get a 400. The drain's
+      // first job also runs before the header, so its failure gets a 500;
+      // a failure fetching a partition past its share later truncates the
+      // chunked body, exactly as in the reference.
       format match {
         case "JSONEachRow"  => respondStream(ex, gs.jsonRowIterator(df))
         case "CSV"          => respondStream(ex, gs.csvRowIterator(df))

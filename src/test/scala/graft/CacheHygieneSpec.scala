@@ -178,6 +178,42 @@ class CacheHygieneSpec extends AnyFunSuite {
     assert(CacheProbe.isEmpty(spark))
   }
 
+  test("a scoped var-length query leaves no broadcast block or persisted RDD") {
+    import org.apache.spark.graftprobe.BlockProbe
+    val g = new GraftSession(spark)
+    g.registerTable("hv", (1L to 6L).toDF("id"))
+    g.registerTable("HE", Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 6L))
+      .toDF("from_V", "to_V"))
+    g.registerNode("V", "hv", "id")
+    g.registerRel("E", "HE", "V", "V")
+    val calls = Seq(
+      "var-length" -> "MATCH (a:V)-[:E*1..8]->(b:V) WHERE a.id = 1 RETURN b.id AS b;",
+      "shortestPath" -> """MATCH p = shortestPath((a:V)-[:E*1..8]->(b:V))
+        |RETURN a.id AS a, b.id AS b, length(p) AS len;""".stripMargin)
+    val sc = spark.sparkContext
+    for ((name, q) <- calls) {
+      val rddsBefore = sc.getPersistentRDDs.keySet
+      val before = BlockProbe.broadcastIds
+      // the frame stays referenced past the scope, so only the release,
+      // not a GC of the plan, can drop what the build broadcast
+      val (df, built) = PipelineCaches.scoped {
+        val df = g.cypher(q)
+        val built = BlockProbe.broadcastIds -- before
+        assert(df.collect().nonEmpty, name)
+        (df, built)
+      }
+      assert(built.nonEmpty, s"$name: precondition: the build broadcasts its hop adjacency")
+      val deadline = System.nanoTime() + 10000000000L
+      while ((BlockProbe.broadcastIds & built).nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert((BlockProbe.broadcastIds & built).isEmpty,
+        s"$name: broadcast blocks ${BlockProbe.broadcastIds & built} survived its scope")
+      assert(sc.getPersistentRDDs.keySet -- rddsBefore == Set.empty,
+        s"$name left persisted RDDs after its scope")
+      assert(df.columns.nonEmpty)
+    }
+  }
+
   test("library code never clears the calling thread's whole scope") {
     import scala.jdk.CollectionConverters._
     // only top-level mains (Bench, Verify, tools) and tests may call

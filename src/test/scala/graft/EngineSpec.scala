@@ -746,10 +746,10 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("shortestPath: frontier-delta path (shuffle-scale edges, long bound)") {
-    // disabling broadcast flips composeShortest to the frontier-delta form,
-    // and > 6 levels flips that to lineage-truncated per-level frontiers;
-    // results must be identical to the broadcast min-agg composition (all
-    // u1 distances are <= 2, so levels 3..8 contribute nothing)
+    // disabling broadcast flips shortestPath to the frontier-delta join
+    // form, and > 6 levels flips that to lineage-truncated per-level
+    // frontiers; results must be identical to the hashed form's (all u1
+    // distances are <= 2, so levels 3..8 contribute nothing)
     val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
     try {

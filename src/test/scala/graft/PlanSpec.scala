@@ -165,8 +165,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("shortestPath on shuffle-scale edges expands a frontier delta") {
-    // broadcast-small edges take the min-agg form (cheaper at toy scale);
-    // force the shuffle-scale path to pin its shape
+    // broadcast-small edges take the hashed one-stage form; force the
+    // shuffle-scale path to pin its shape
     val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
     try {
@@ -184,12 +184,28 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
   }
 
-  test("shortestPath on broadcast-small edges keeps the min-agg broadcast form") {
-    val plan = formatted(gs.cypher(
-      """MATCH p = shortestPath((a:Nation)-[:NATION_NEXT*1..4]->(b:Nation))
-        |RETURN a.n_name AS a_name, b.n_name AS b_name, length(p) AS len;""".stripMargin))
-    assert(!plan.contains("LeftAnti"), plan)
-    assert(plan.contains("min(__len"), plan)
+  test("shortestPath on broadcast-small edges adds no exchange per level") {
+    def plan(hi: Int) = formatted(gs.cypher(
+      s"""MATCH p = shortestPath((a:Nation)-[:NATION_NEXT*1..$hi]->(b:Nation))
+         |RETURN a.n_name AS a_name, b.n_name AS b_name, length(p) AS len;""".stripMargin))
+    val (p4, p8) = (plan(4), plan(8))
+    assert(!p4.contains("LeftAnti"), p4)
+    // the hashed BFS walks every level inside one stage: a deeper bound
+    // changes no part of the plan's shape
+    def exchanges(p: String) = "Exchange".r.findAllIn(p).size
+    assert(exchanges(p4) == exchanges(p8), s"$p4\n$p8")
+  }
+
+  test("a deep var-length hop on broadcast-small edges stays a small plan") {
+    // the join form re-embedded the derived NATION_RING view at every
+    // level (923 optimized nodes at *1..8); the hashed form reads it once,
+    // at build time
+    val df = gs.cypher(
+      """MATCH (a:Nation)-[:NATION_RING*1..8]->(b:Nation) WHERE a.n_nationkey = 3
+        |RETURN b.n_nationkey AS b_id;""".stripMargin)
+    val plan = df.queryExecution.optimizedPlan
+    assert(plan.collect { case p => p }.size <= 20, plan.toString)
+    graft.pipeline.PipelineCaches.clear()
   }
 
   test("COUNT { } compiles to a pre-aggregated outer join, never a fan-out") {

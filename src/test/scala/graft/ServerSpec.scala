@@ -183,6 +183,52 @@ class ServerSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  /** Jobs `body` runs on this thread, counted by job group. */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "serverspec-drain-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    org.apache.spark.graftprobe.BusProbe.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "row drain census")
+      val out = body
+      sc.clearJobGroup()
+      org.apache.spark.graftprobe.BusProbe.drain(sc)
+      (out, jobs.get())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("row drain: a 32-partition result comes back in one job") {
+    val df = spark.range(0, 3200, 1, 32).selectExpr("id", "concat('r', id) AS s")
+    val expected = df.toJSON.collect().toSeq
+    val (rows, jobs) = jobsOf(gs.jsonRowIterator(df).toVector)
+    assert(rows == expected)
+    assert(jobs == 1, s"$jobs jobs for a 32-partition drain")
+  }
+
+  test("row drain: partitions past their share come back one by one, in order") {
+    val df = spark.range(0, 3200, 1, 32).selectExpr("id", "concat('r', id) AS s")
+    val js = df.toJSON
+    val expected = js.collect().toSeq
+    val (rows, jobs) = jobsOf(
+      GraftSession.drain(js, share = 1).map(_.getUTF8String(0).toString).toVector)
+    assert(rows == expected)
+    assert(jobs == 1 + 32, s"$jobs jobs: one pass plus one per partition expected")
+    assert(gs.csvRowIterator(df).toVector ==
+      df.collect().toSeq.map(r => s"${r.getLong(0)},\"${r.getString(1)}\""))
+  }
+
   test("concurrent requests interleave: fast query completes while a slow one runs") {
     import spark.implicits._
     val g = new GraftSession(spark)
