@@ -192,6 +192,10 @@ object Bench {
     // per-query (full-IO-stall seconds, steal jiffies) measured across the
     // query's iterations — see stallCounters()
     val stalls = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Long)]
+    // per-entry layer profiles of every timed iteration, and the executed
+    // plan's operator census: written to the full output file only
+    val profiles = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
+    val census = scala.collection.mutable.LinkedHashMap.empty[String, Seq[(String, Int)]]
     val benchT0 = System.nanoTime()
     val tEnd = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val results = selected.map { case (name, fn) =>
@@ -205,6 +209,7 @@ object Bench {
       var i = 0
       while (i < iters && !errors.contains(name)) {
         val (io0, steal0) = stallCounters()
+        val prof = Profile.start(spark)
         val t0 = System.nanoTime()
         try {
           // Force FULL row materialization, not count(): an
@@ -213,18 +218,22 @@ object Bench {
           // (p_fingerprint's hash pipeline, p_span_dedup's span arrays,
           // the text-quality features) timed only their scan — the
           // p_dsir hollow-measurement bug, generalized (round-12 audit:
-          // ~15 entries up to 22x under-measured; tools/HollowCheck,
-          // full table in DESIGN.md §10).
-          // toRdd.foreach computes every output column distributed,
-          // collects nothing, and is what the correctness gate's parquet
-          // write pays anyway.
-          fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
+          // ~15 entries up to 22x under-measured; full table in DESIGN.md
+          // §10). Profile.execute computes every output column
+          // distributed, collects nothing, and is what the correctness
+          // gate's parquet write pays anyway.
+          val df = prof.span("build")(fn(spark, sfDir))
+          prof.execute(df)
+          prof.end()
           times += (System.nanoTime() - t0) / 1e9
+          census(name) = Profile.census(df.queryExecution.executedPlan)
         } catch {
           case scala.util.control.NonFatal(e) =>
             errors(name) = e.toString.take(300)
             System.err.println(s"BENCH FAIL $name: $e")
         } finally {
+          prof.close()
+          profiles(name) = profiles.getOrElse(name, Nil) :+ prof.toJson("iter" -> i.toString)
           val (io1, steal1) = stallCounters()
           ioAcc += io1 - io0
           stealAcc += steal1 - steal0
@@ -401,7 +410,12 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"))
     // never lose a finished run to a bad output path: stdout still gets
     // both lines if the file write fails
-    try java.nio.file.Files.write(outFile, (fullLine + "\n").getBytes("UTF-8"))
+    def obj(kv: Iterable[(String, Any)]) =
+      kv.map { case (k, v) => graft.util.JsonUtil.quote(k) + ":" + v }.mkString("{", ",", "}")
+    val fileLine = fullLine.stripSuffix("}") +
+      s""","profiles":${obj(profiles.map { case (n, ps) => n -> ps.mkString("[", ",", "]") })},""" +
+      s""""census":${obj(census.map { case (n, c) => n -> obj(c) })}}"""
+    try java.nio.file.Files.write(outFile, (fileLine + "\n").getBytes("UTF-8"))
     catch { case e: java.io.IOException =>
       System.err.println(s"BENCH: could not write $outFile: $e")
     }

@@ -469,29 +469,54 @@ final class GraftSession(val spark: SparkSession) {
 
   /** Parse + plan + build. Parameters (`$name`) are bound before planning
     * (the reference passes them through verbatim — to_sql_query.rs:266; we
-    * bind server-side). */
-  def cypher(query: String, params: Map[String, Any] = Map.empty): DataFrame =
-    CypherParser.parse(query) match {
-      case rq: ReadQuery => buildRead(rq, params)
-      case u: UnionQuery => buildUnion(u, params)
-      case c: CallQuery  => buildCall(c, params)
+    * bind server-side). Parse and build run in spans of the calling
+    * thread's [[Profile]], when it has one. */
+  def cypher(query: String, params: Map[String, Any] = Map.empty): DataFrame = {
+    val t0 = Profile.nowUs
+    Profile.span("parse")(CypherParser.parse(query)) match {
       // EXPLAIN: plan without executing — the formatted Spark physical
       // plan comes back as a one-row frame (Neo4j-style EXPLAIN)
-      case ExplainQuery(inner) =>
+      case ExplainQuery(inner, false) =>
         import spark.implicits._
-        val df = inner match {
-          case rq: ReadQuery => buildRead(rq, params)
-          case u: UnionQuery => buildUnion(u, params)
-          case c: CallQuery  => buildCall(c, params)
-          case _ => throw new GraftException("EXPLAIN only applies to read queries")
-        }
-        Seq(df.queryExecution.explainString(
+        Seq(buildQuery(inner, params).queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
           .toDF("plan")
+      case ExplainQuery(inner, true) => profileQuery(inner, params, t0)
       case ddl: CreateNodeTable => executeDdl(ddl)
       case ddl: CreateRelTable  => executeDdl(ddl)
       case cg: CreateGraphQuery => executeCreate(cg, params)
+      case q @ (_: ReadQuery | _: UnionQuery | _: CallQuery) => buildQuery(q, params)
     }
+  }
+
+  private def buildQuery(stmt: CypherStatement, params: Map[String, Any]): DataFrame = {
+    val df = Profile.span("build")(stmt match {
+      case rq: ReadQuery => buildRead(rq, params)
+      case u: UnionQuery => buildUnion(u, params)
+      case c: CallQuery  => buildCall(c, params)
+      case other => throw new GraftException(s"not a read query: $other")
+    })
+    Profile.catalyst(df.queryExecution)
+    df
+  }
+
+  /** PROFILE: build and run the read to completion in a profile of its own
+    * (its clock started before the parse at `t0`), then return one row —
+    * the layers as a map and the executed plan with its SQL metrics. */
+  private def profileQuery(stmt: CypherStatement, params: Map[String, Any],
+      t0: Long): DataFrame = {
+    val parsed = Profile.nowUs
+    val p = Profile.start(spark, sinceUs = t0)
+    val plan = try {
+      p.record("parse", t0, parsed)
+      val df = buildQuery(stmt, params)
+      p.execute(df)
+      Profile.planWithMetrics(df.queryExecution.executedPlan)
+    } finally p.close()
+    import spark.implicits._
+    val layers: Map[String, Double] = scala.collection.immutable.ListMap(p.summary: _*)
+    Seq((layers, plan)).toDF("layers", "plan")
+  }
 
   // ---- CREATE instance inserts (flag-gated extension) ----------------------
 
@@ -994,8 +1019,10 @@ final class GraftSession(val spark: SparkSession) {
 
   private def prettyCells(df: DataFrame, rows: Int): (Seq[String], Seq[Seq[String]], Seq[Int]) = {
     val header = df.columns.toSeq
-    val data = df.limit(rows).collect().toSeq
+    val page = df.limit(rows)
+    val data = page.collect().toSeq
       .map(_.toSeq.map(v => if (v == null) "NULL" else v.toString))
+    Profile.catalyst(page.queryExecution)
     val widths = (header +: data).transpose.map(_.map(_.length).max)
     (header, data, widths)
   }
@@ -1060,6 +1087,7 @@ object GraftSession {
         if (size <= cap) Some(rows.result()) else None
       }))
     }
+    graft.Profile.catalyst(qe)
     first.iterator.zipWithIndex.flatMap {
       case (Some(rows), _) => rows.iterator
       case (None, i) =>

@@ -444,8 +444,12 @@ final case class ReadQuery(
     midCalls: Seq[MidCall] = Seq.empty) extends CypherStatement
 
 /** `EXPLAIN <read query>` — returns the engine's physical plan as a
-  * one-row frame instead of executing (Neo4j-style; extension). */
-final case class ExplainQuery(inner: CypherStatement) extends CypherStatement
+  * one-row frame instead of executing (Neo4j-style; extension).
+  * `PROFILE <read query>` (`profile = true`) runs the query to completion
+  * and returns its [[graft.Profile]] layers plus the executed plan with
+  * its SQL metric values. */
+final case class ExplainQuery(inner: CypherStatement, profile: Boolean = false)
+    extends CypherStatement
 
 /** `q1 UNION [ALL] q2 [UNION ...]` — combined read queries (extension
   * beyond the reference grammar). openCypher requires every part to

@@ -625,12 +625,14 @@ object CypherParser extends RegexParsers {
     kw("create") ~> rep1sep(pathPattern, ",") ^^ CreateGraphQuery.apply
 
   private def statement: Parser[CypherStatement] =
-    opt(kw("explain")) ~
+    opt(kw("explain") | kw("profile")) ~
       ((createNodeTable | createRelTable | createInstance | callBlocks |
         readOrUnion) <~ opt(";")) ^^ {
-      case Some(_) ~ inner => inner match {
-        case _: ReadQuery | _: UnionQuery | _: CallQuery => ExplainQuery(inner)
-        case _ => throw new GraftException("EXPLAIN only applies to read queries")
+      case Some(mode) ~ inner => inner match {
+        case _: ReadQuery | _: UnionQuery | _: CallQuery =>
+          ExplainQuery(inner, profile = mode == "profile")
+        case _ => throw new GraftException(
+          s"${mode.toUpperCase} only applies to read queries")
       }
       case None ~ inner => inner
     }

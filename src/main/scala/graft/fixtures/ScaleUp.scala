@@ -1,4 +1,4 @@
-package graft.tools
+package graft.fixtures
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,14 +14,13 @@ import org.apache.spark.sql.functions._
   * near-dup structure grows linearly (each doc gains cross-copy near-dups)
   * rather than collapsing into one giant exact-dup bucket.
   *
-  * Usage: `runMain graft.tools.ScaleUp <srcSfDir> <outDir> <factor>`
+  * Usage: `runMain graft.fixtures.ScaleUp <srcSfDir> <outDir> <factor>`
   */
 object ScaleUp {
 
   val Stride = 100000000L
 
-  /** The documents replication used for scale fixtures, shared with the
-    * ingestion rehearsal probe ([[ProfileIngest]]): copy k offsets
+  /** The documents replication used for scale fixtures: copy k offsets
     * doc_id by k·[[Stride]] and appends one suffix token, so each copy
     * is a NEAR duplicate of copy 0 (one shingle-window of difference) —
     * dedup work grows linearly instead of collapsing into one giant

@@ -1197,6 +1197,10 @@ object Similarity {
       vecCol: String = "embedding"): org.apache.spark.sql.streaming.StreamingQuery = {
     require(embeddings.isStreaming, "streamToIvfIndex expects a streaming DataFrame")
     val batchMarker = s"$path/_stream_batch"
+    // the stream runs in a clone of the caller's session; the caller's
+    // own relation cache would keep the pre-append file listing, so its
+    // next staleness check would read the index as stale
+    val caller = embeddings.sparkSession
     embeddings.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
@@ -1213,6 +1217,7 @@ object Similarity {
             appendToIvfIndex(spark.table(corpusTable), batch, path,
               nlist, refineIters, idCol, vecCol)
             Artifacts.writeString(spark, batchMarker, batchId.toString)
+            caller.catalog.refreshTable(corpusTable)
           }
         }
       }

@@ -2,12 +2,18 @@ package graft.server
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicInteger, LongAdder}
+
+import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.sql.graftprobe.CacheProbe
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.GraftSession
+import graft.{GraftSession, Profile}
+import graft.util.JsonUtil.quote
 
 /** Minimal HTTP query endpoint mirroring the reference's server surface
   * (axum `POST /query` accepting `{"query": "...", "format": "..."}` and
@@ -19,16 +25,32 @@ import graft.GraftSession
   * engine itself stays a library, this is a thin adapter (queries execute
   * on the Spark driver exactly as in the reference, where the planner runs
   * in one process and distribution happens in the execution layer).
+  *
+  * Every request runs in a [[graft.Profile]]; once its response is closed
+  * the server writes the profile as one JSON access-log line through `log`
+  * (fields in README). `GET /metrics` serves the Prometheus text format.
   */
 final class QueryServer(gs: GraftSession, port: Int = 0,
-    host: String = "0.0.0.0", poolSize: Int = 16) {
+    host: String = "0.0.0.0", poolSize: Int = 16,
+    log: String => Unit = line => System.out.println(line)) {
 
   private var server: HttpServer = _
   private var pool: java.util.concurrent.ExecutorService = _
 
+  private val byStatus = new ConcurrentHashMap[Int, LongAdder]()
+  /** Upper bounds, in seconds, of the latency histogram's buckets. */
+  private val LatencyBuckets = Seq(0.01, 0.025, 0.05, 0.1, 0.25, 0.5, 1.0, 2.5, 5.0, 10.0, 30.0, 60.0)
+  /** Latency histogram, non-cumulative; the last slot is +Inf. */
+  private val latency = Array.fill(LatencyBuckets.size + 1)(new LongAdder)
+  private val latencySumUs = new LongAdder
+  private val inFlight = new AtomicInteger
+
   def start(): Int = {
     server = HttpServer.create(new InetSocketAddress(host, port), 0)
     server.createContext("/query", (exchange: HttpExchange) => handle(exchange))
+    server.createContext("/metrics", (exchange: HttpExchange) =>
+      if (exchange.getRequestMethod == "GET") respond(exchange, 200, metrics())
+      else respond(exchange, 405, "GET only"))
     // Fixed daemon pool: requests are handled CONCURRENTLY, like the
     // reference's per-request tokio tasks (handlers.rs:26) — with
     // setExecutor(null) one slow streaming client would serialize every
@@ -54,9 +76,52 @@ final class QueryServer(gs: GraftSession, port: Int = 0,
     * broadcasts (a CALL+UNION frame, a var-length hop adjacency, the
     * level RDDs of a large-edge shortestPath past 6 hops, pipeline
     * intermediates) is released when the response ends, and never a
-    * concurrent request's caches. */
-  private def handle(ex: HttpExchange): Unit =
-    graft.pipeline.PipelineCaches.scoped(serve(ex))
+    * concurrent request's caches. The request's profile is counted and
+    * logged only after the response is closed: the client never waits on
+    * the listener bus. */
+  private def handle(ex: HttpExchange): Unit = {
+    inFlight.incrementAndGet()
+    val p = Profile.start(gs.spark)
+    try graft.pipeline.PipelineCaches.scoped(serve(ex))
+    finally {
+      p.end()
+      ex.close()
+      val status = ex.getResponseCode
+      byStatus.computeIfAbsent(status, _ => new LongAdder).increment()
+      val i = LatencyBuckets.indexWhere(p.wallMs <= _ * 1000)
+      latency(if (i < 0) latency.length - 1 else i).increment()
+      latencySumUs.add((p.wallMs * 1000).toLong)
+      inFlight.decrementAndGet()
+      p.close()
+      log(p.toJson("request" -> quote(p.id), "status" -> status.toString))
+    }
+  }
+
+  /** Prometheus text exposition: requests by status, the latency
+    * histogram, requests in flight, and — read from Spark — SQL cache
+    * entries, persisted RDDs and codegen compiles. */
+  private def metrics(): String = {
+    val sb = new StringBuilder
+    def metric(name: String, kind: String, help: String)(samples: (String, Any)*): Unit = {
+      sb ++= s"# HELP $name $help\n# TYPE $name $kind\n"
+      samples.foreach { case (suffix, v) => sb ++= s"$name$suffix $v\n" }
+    }
+    metric("graft_requests_total", "counter", "Query requests answered, by HTTP status.")(
+      byStatus.asScala.toSeq.sortBy(_._1).map { case (c, n) => s"""{status="$c"}""" -> n.sum }: _*)
+    val cumulative = latency.map(_.sum).scanLeft(0L)(_ + _).tail
+    metric("graft_request_duration_seconds", "histogram", "Query request wall time.")(
+      (LatencyBuckets.map(_.toString) :+ "+Inf").zip(cumulative)
+        .map { case (b, n) => s"""_bucket{le="$b"}""" -> n } ++
+        Seq("_sum" -> latencySumUs.sum / 1e6, "_count" -> cumulative.last): _*)
+    metric("graft_requests_in_flight", "gauge", "Query requests being served.")("" -> inFlight.get)
+    metric("graft_sql_cache_entries", "gauge", "Plans in Spark's SQL cache.")(
+      "" -> CacheProbe.entryCount(gs.spark))
+    metric("graft_persisted_rdds", "gauge", "RDDs Spark holds persisted.")(
+      "" -> gs.spark.sparkContext.getPersistentRDDs.size)
+    metric("graft_codegen_compiles_total", "counter", "Classes compiled by Spark codegen.")(
+      "" -> Profile.codegenCompiles)
+    sb.toString
+  }
 
   private def serve(ex: HttpExchange): Unit = {
     try {
@@ -89,14 +154,14 @@ final class QueryServer(gs: GraftSession, port: Int = 0,
       // first job also runs before the header, so its failure gets a 500;
       // a failure fetching a partition past its share later truncates the
       // chunked body, exactly as in the reference.
-      format match {
+      Profile.span("execute")(format match {
         case "JSONEachRow"  => respondStream(ex, gs.jsonRowIterator(df))
         case "CSV"          => respondStream(ex, gs.csvRowIterator(df))
         case "CSVWithNames" => respondStream(ex, gs.csvRowIterator(df, header = true))
         case "Pretty"        => respond(ex, 200, gs.toPretty(df) + "\n")
         case "PrettyCompact" => respond(ex, 200, gs.toPrettyCompact(df) + "\n")
         case other => respond(ex, 400, s"unknown format: $other")
-      }
+      })
     } catch {
       // 400 vs 500 (reference: handlers.rs maps query errors to client
       // status): anything the USER caused — parse, validation, planning,

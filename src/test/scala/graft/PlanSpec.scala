@@ -391,8 +391,8 @@ class PlanSpec extends AnyFunSuite {
       df, "shard", Seq("id"), "v", "cum")
     // threshold 0 forces the broadcast-hash-join rendezvous (production
     // crosses over at MapLiteralMax slices — the map LITERAL lookup is a
-    // per-row linear scan, measured 20x slower at 4096 partitions in
-    // tools/ProfilePrefixSum)
+    // per-row linear scan, measured 20x slower at 4096 partitions; the
+    // table is in DESIGN.md)
     val viaJoin = graft.pipeline.PrefixSum.groupedRunningSum(
       df, "shard", Seq("id"), "v", "cum", mapLiteralMax = 0)
     assert(rows(viaMap) == rows(viaJoin))

@@ -123,6 +123,97 @@ class ServerSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  private def get(port: Int, path: String): (Int, String) = {
+    val client = HttpClient.newHttpClient()
+    val req = HttpRequest.newBuilder(URI.create(s"http://localhost:$port$path")).GET().build()
+    val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+    (resp.statusCode(), resp.body())
+  }
+
+  /** `name` (with its label set, if any) in a Prometheus text body. */
+  private def sample(metrics: String, name: String): Option[Double] =
+    metrics.linesIterator.collectFirst {
+      case l if l.startsWith(name + " ") => l.substring(name.length + 1).trim.toDouble
+    }
+
+  private def eventually(what: => String)(cond: => Boolean): Unit = {
+    val deadline = System.nanoTime() + 30e9.toLong
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(cond, what)
+  }
+
+  test("every request writes one access-log line; /metrics counts them; PROFILE over HTTP") {
+    import TestSpark.spark.implicits._
+    import org.apache.spark.sql.functions.{col, udf}
+    val g = new GraftSession(spark)
+    g.registerTable("users6", Seq((1L, "u1"), (2L, "u2")).toDF("id", "name"))
+    g.registerNode("User6", "users6", "id")
+    val boom = udf((i: Long) =>
+      if (i > 0) throw new IllegalStateException("storage fault") else i)
+    g.registerTable("faulty6", Seq((1L, "f1")).toDF("id", "name")
+      .withColumn("id", boom(col("id"))))
+    g.registerNode("Faulty6", "faulty6", "id")
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val srv = new QueryServer(g, log = lines.add(_))
+    val port = srv.start()
+    try {
+      assert(post(port, """{"query": "MATCH (u:User6) RETURN u.id AS id;"}""")._1 == 200)
+      assert(post(port, """{"query": "MATCH ("}""")._1 == 400)
+      assert(post(port,
+        """{"query": "MATCH (f:Faulty6) RETURN f.id AS id;", "format": "Pretty"}""")._1 == 500)
+      // lines are written once each response is out, so wait for them
+      eventually("three access-log lines")(lines.size == 3)
+      import org.json4s._
+      import org.json4s.jackson.JsonMethods
+      val logged = lines.toArray(Array.empty[String]).toSeq.map(JsonMethods.parse(_))
+      assert(logged.map(j => (j \ "status").asInstanceOf[JInt].num.toInt).sorted == Seq(200, 400, 500))
+      assert(logged.map(j => (j \ "request").asInstanceOf[JString].s).distinct.size == 3)
+      for (j <- logged) {
+        for (f <- Seq("wall_ms", "jobs", "stages", "tasks"))
+          assert((j \ f) != JNothing, s"missing $f in ${JsonMethods.compact(j)}")
+        for (l <- Profile.Layers)
+          assert((j \ "layers" \ s"${l}_ms") != JNothing, s"missing layer $l")
+      }
+      val ok = logged.find(j => (j \ "status") == JInt(200)).get
+      assert((ok \ "jobs").asInstanceOf[JInt].num > 0, JsonMethods.compact(ok))
+
+      var m = ""
+      eventually(s"/metrics never settled:\n$m") {
+        m = get(port, "/metrics")._2
+        sample(m, "graft_requests_in_flight").contains(0.0)
+      }
+      assert(sample(m, """graft_requests_total{status="200"}""").contains(1.0), m)
+      assert(sample(m, """graft_requests_total{status="400"}""").contains(1.0), m)
+      assert(sample(m, """graft_requests_total{status="500"}""").contains(1.0), m)
+      assert(sample(m, "graft_request_duration_seconds_count").contains(3.0), m)
+      assert(sample(m, """graft_request_duration_seconds_bucket{le="+Inf"}""").contains(3.0), m)
+      for (gauge <- Seq("graft_sql_cache_entries", "graft_persisted_rdds", "graft_codegen_compiles_total"))
+        assert(sample(m, gauge).isDefined, s"$gauge missing:\n$m")
+
+      val (cp, bp) = post(port, """{"query": "PROFILE MATCH (u:User6) RETURN u.id AS id;"}""")
+      assert(cp == 200, bp)
+      val prof = JsonMethods.parse(bp)
+      assert((prof \ "layers" \ "execute_ms") != JNothing, bp)
+      assert((prof \ "plan").asInstanceOf[JString].s.contains("numOutputRows="), bp)
+      val (cc, bc) = post(port, """{"query": "PROFILE CREATE (:User6 {id: 3});"}""")
+      assert(cc == 400 && bc.contains("PROFILE only applies to read queries"), s"$cc $bc")
+    } finally srv.stop()
+  }
+
+  test("a repeated query with the same parameter value compiles no new class") {
+    val srv = new QueryServer(gs, log = _ => ())
+    val port = srv.start()
+    try {
+      def compiles = sample(get(port, "/metrics")._2, "graft_codegen_compiles_total").get
+      val body = """{"query": "MATCH (u:User) WHERE u.id = $uid RETURN u.name AS name;",
+                   | "parameters": {"uid": 2}}""".stripMargin
+      assert(post(port, body) == (200, "{\"name\":\"u2\"}\n"))
+      val warm = compiles
+      assert(post(port, body) == (200, "{\"name\":\"u2\"}\n"))
+      assert(compiles == warm, s"the repeat compiled ${compiles - warm} classes")
+    } finally srv.stop()
+  }
+
   test("CLI client: scripted REPL round trip against a live server") {
     val srv = new QueryServer(gs)
     val port = srv.start()

@@ -231,6 +231,38 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("streamToIvfIndex: the caller's session sees the appended corpus with no cached plan over it") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.pipeline.{PipelineCaches, Similarity}
+    val base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    spark.sql("DROP TABLE IF EXISTS ivf_stream_fresh")
+    base.select("vec_id", "embedding").write.saveAsTable("ivf_stream_fresh")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_fresh").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ivf_fresh_ckpt").toString
+    try {
+      // the build's corpus prep is released with its scope: no cached plan
+      // over the corpus is left to refresh the caller's file listing
+      val entries = org.apache.spark.sql.graftprobe.CacheProbe.entryCount(spark)
+      PipelineCaches.scoped(Similarity.buildIvfIndex(spark.table("ivf_stream_fresh"), dir))
+      assert(org.apache.spark.sql.graftprobe.CacheProbe.entryCount(spark) == entries)
+      val row = base.limit(1).collect().map(r => (r.getLong(0) + 7000000L, r.getSeq[Float](1))).head
+      val mem = MemoryStream[(Long, Seq[Float])]
+      val q = Similarity.streamToIvfIndex(
+        mem.toDF().toDF("vec_id", "embedding"), "ivf_stream_fresh", dir, ckpt)
+      try {
+        mem.addData(row)
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(spark.table("ivf_stream_fresh").count() == base.count() + 1)
+      assert(!Similarity.buildIvfIndexIfStale(spark.table("ivf_stream_fresh"), dir),
+        "the caller's session read the index of the appended corpus as stale")
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS ivf_stream_fresh")
+      PipelineCaches.clear()
+    }
+  }
+
   test("sampling ops are streaming-safe: stratified + mixture on a stream") {
     // Corpus.stratifiedSample and mixtureSample are NARROW (stateless
     // filter / explode — no aggregation, no watermark needed), so the
