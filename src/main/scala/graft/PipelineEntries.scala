@@ -8,10 +8,9 @@ import graft.graph.GraphAlgorithms
 import graft.pipeline.{AsOf, Bpe, Corpus, Dedup, Explodes, Metadata, Multimodal, Profiling, Sampling, Sequences, Sft, Similarity, TextAnalysis}
 import graft.streaming.StreamingOps
 
-/** Training-data pipeline operators surfaced as driver-checkable queries.
-  * Entries without an `oracleSql` mirror (hash-based / heuristic ops) get
-  * the driver's rows-only check and are additionally covered by ScalaTest
-  * specs with self-computed ground truth.
+/** Training-data pipeline operators surfaced as driver-checkable queries,
+  * each with its DuckDB mirror in [[oracleSql]] (BenchLegendSpec holds the
+  * two key sets equal).
   */
 object PipelineEntries {
 
@@ -196,54 +195,67 @@ object PipelineEntries {
               Sft.escapeTurnText(org.apache.spark.sql.functions.replace(
                 seg, lit(" the "), lit("\n")))))).as("text"))
 
-  /** Where the persisted-ANN entries keep the durable IVF index for a
-    * given sf dir (tmpdir-scoped; one artifact per corpus). */
-  private def ivfPath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_ivf_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+  /** Where the persisted artifact `kind` lives for a given sf dir:
+    * tmpdir-scoped, one per corpus, shared by every entry that reads it.
+    * `sampled` keeps an oracle-sampled run's artifact beside, not over, the
+    * full-corpus one. */
+  private def artifactPath(kind: String, dir: String,
+      sampled: Boolean = false): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_${kind}_" +
+      java.lang.Integer.toHexString(dir.hashCode) +
+      (if (sampled) samplePathSuffix else "")
 
-  /** Build (or freshness-check) the persisted IVF artifact the
-    * p_ann_ivf_persisted / p_ann_filtered entries query. Index
-    * construction is corpus SETUP — done once per corpus fingerprint,
-    * like writing a bucketed table — so Bench runs this in its untimed
-    * warm-up; the timed iterations then measure probe cost, not the
-    * one-off build. */
-  def prewarmPersistedIvf(s: SparkSession, dir: String): Unit =
-    Similarity.buildIvfIndexIfStale(emb(s, dir), ivfPath(dir))
+  // One helper per persisted artifact, called by its entries and by
+  // [[prewarmPersisted]] alike, so each build parameter is written once.
 
-  /** Where the persisted-dedup entries keep the MinHash-signature and
-    * mined-pair artifacts for a given sf dir (tmpdir-scoped, shared by
-    * every entry that consumes them). */
-  private def mhSigPath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_mhsig_" +
-      java.lang.Integer.toHexString(dir.hashCode)
-  private def pairsPath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_pairs_" +
-      java.lang.Integer.toHexString(dir.hashCode)
-  private def spanPath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_span_" +
-      java.lang.Integer.toHexString(dir.hashCode)
-
-  /** Build (or freshness-check) the persisted dedup artifacts —
-    * MinHash signatures and mined n-gram-Jaccard pairs — exactly as
-    * [[prewarmPersistedIvf]] does for the IVF index. Artifact builds are
-    * corpus SETUP, paid once per corpus fingerprint; running this in
-    * Bench's untimed section keeps the timed p_dedup_minhash /
-    * p_dedup_clusters / p_dedup_keep_best iterations measuring the
-    * band-join / CC probe, not a one-off mine (the r11 driver container
-    * started with an empty tmpdir and charged 8-12 s builds to timed
-    * iterations). Both builders log a loud ARTIFACT REBUILD line if
-    * they do rebuild, so a stale-fence bug can't hide here. */
-  def prewarmPersistedDedup(s: SparkSession, dir: String): Unit = {
-    val d = docs(s, dir)
-    Dedup.minhashSignaturesPersisted(d, mhSigPath(dir))
-    Dedup.ngramJaccardPairsPersisted(d, pairsPath(dir), threshold = 0.5)
-    Dedup.dupSpanStartsPersisted(d, spanPath(dir))
+  /** The durable IVF index over the sf dir's embeddings; returns its path. */
+  private def ivfIndex(s: SparkSession, dir: String): String = {
+    val path = artifactPath("ivf", dir)
+    Similarity.buildIvfIndexIfStale(emb(s, dir), path)
+    path
   }
 
-  private def bpePath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_bpe_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+  /** MinHash signatures of the corpus — of the [[heavyDocs]] sample when
+    * `sampled`. */
+  private def signatures(s: SparkSession, dir: String,
+      sampled: Boolean): DataFrame =
+    Dedup.minhashSignaturesPersisted(
+      if (sampled) heavyDocs(s, dir) else docs(s, dir),
+      artifactPath("mhsig", dir, sampled))
+
+  /** Exact n-gram-Jaccard pairs of the [[heavyDocs]] corpus at 0.5. */
+  private def minedPairs(s: SparkSession, dir: String): DataFrame =
+    Dedup.ngramJaccardPairsPersisted(heavyDocs(s, dir),
+      artifactPath("pairs", dir, sampled = true), threshold = 0.5)
+
+  /** A persisted span operator over the corpus and its span-starts
+    * artifact (the operators' default n / minDocFreq). */
+  private def overSpans[T](s: SparkSession, dir: String)(
+      op: (DataFrame, String) => T): T =
+    op(docs(s, dir), artifactPath("span", dir))
+
+  /** The persisted BPE artifact pair: (merges, vocabulary). */
+  private def bpeArtifact(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val path = artifactPath("bpe", dir)
+    (Bpe.trainPersistedIfStale(docs(s, dir), path, numMerges = 50),
+      Bpe.persistedVocabulary(s, path))
+  }
+
+  /** Build (or freshness-check) every persisted artifact the gate entries
+    * read. Artifact builds are corpus SETUP, paid once per corpus
+    * fingerprint, so Bench runs this in its untimed warm-up and the timed
+    * iterations measure the probe, band join, CC or apply — not a one-off
+    * build that a fresh container's empty tmpdir would otherwise charge to
+    * the first timed iteration. Every rebuild logs a loud ARTIFACT REBUILD
+    * line, so a stale-fence bug can't hide here. */
+  def prewarmPersisted(s: SparkSession, dir: String): Unit = {
+    ivfIndex(s, dir)
+    signatures(s, dir, sampled = false)
+    signatures(s, dir, sampled = true)
+    minedPairs(s, dir)
+    overSpans(s, dir)(Dedup.dupSpanStartsPersisted(_, _))
+    bpeArtifact(s, dir)
+  }
 
   /** The p_pack_ids tensor frame + its vocabulary — ONE builder for the
     * raw-rows entry and its collated twin (`p_pack_padded`), so the two
@@ -276,13 +288,6 @@ object PipelineEntries {
       seqLen = 256, shards = 4), v)
   }
 
-  /** Build (or freshness-check) the persisted BPE vocabulary the
-    * p_bpe_persisted entry reads — tokenizer training is corpus SETUP
-    * like the IVF/minhash artifacts above, so Bench prewarms it untimed
-    * and the timed iterations measure the distributed APPLY (the thing a
-    * production job pays per run). */
-  def prewarmPersistedBpe(s: SparkSession, dir: String): Unit =
-    Bpe.trainPersistedIfStale(docs(s, dir), bpePath(dir), numMerges = 50)
   /** The events table's `ts` has shipped as both TIMESTAMP(NANOS) (which
     * Spark 4 rejects by default — read nanos as long, floor-convert to µs,
     * matching DuckDB's cast) and plain TIMESTAMP(MICROS) (readable as-is).
@@ -311,8 +316,8 @@ object PipelineEntries {
     // once per corpus fingerprint, and a corpus append pays only the
     // delta's signatures before the band join
     "p_dedup_minhash" -> ((s, dir) =>
-      Dedup.minhashPairsPersisted(heavyDocs(s, dir),
-        mhSigPath(dir) + samplePathSuffix, threshold = 0.8)),
+      Dedup.minhashPairsFromSignatures(signatures(s, dir, sampled = true),
+        threshold = 0.8)),
 
     // SimHash near-dup pairs (chunk-blocked Hamming)
     "p_dedup_simhash" -> ((s, dir) => Dedup.simhashPairs(docs(s, dir), maxHamming = 6)),
@@ -323,17 +328,13 @@ object PipelineEntries {
     // recall) summary row. The oracle derives n_true independently and
     // asserts recall 1.0 / n_extra 0, the same fixture fact
     // p_dedup_minhash's exhaustive oracle pins
-    "p_dedup_recall" -> ((s, dir) => {
-      val d = heavyDocs(s, dir)
+    "p_dedup_recall" -> ((s, dir) =>
       Dedup.pairRecall(
-        Dedup.minhashPairsPersisted(d, mhSigPath(dir) + samplePathSuffix,
+        Dedup.minhashPairsFromSignatures(signatures(s, dir, sampled = true),
           threshold = 0.8),
         // truth at 0.8 is a FREE filter of the persisted exact mine at
         // 0.5 (a superset threshold) — no second PPJoin
-        Dedup.ngramJaccardPairsPersisted(d, pairsPath(dir) + samplePathSuffix,
-            threshold = 0.5)
-          .filter(col("jaccard") >= 0.8))
-    }),
+        minedPairs(s, dir).filter(col("jaccard") >= 0.8))),
 
     // cross-corpus ingestion dedup: which delta docs (doc_id % 10 == 0,
     // the "incoming batch") near-duplicate something already in the
@@ -344,7 +345,7 @@ object PipelineEntries {
     "p_dedup_cross" -> ((s, dir) => {
       val d = docs(s, dir)
       Dedup.crossDedupPairs(d.filter(pmod(col("doc_id"), lit(10)) === 0),
-          Dedup.minhashSignaturesPersisted(d, mhSigPath(dir)),
+          signatures(s, dir, sampled = false),
           threshold = 0.8)
         .filter(col("a") =!= col("b"))
     }),
@@ -355,7 +356,7 @@ object PipelineEntries {
     "p_ingest_filter" -> ((s, dir) => {
       val d = docs(s, dir)
       Dedup.crossDedupFilter(d.filter(pmod(col("doc_id"), lit(10)) === 0),
-          Dedup.minhashSignaturesPersisted(d, mhSigPath(dir)),
+          signatures(s, dir, sampled = false),
           threshold = 0.8)
         .select("doc_id", "lang", "source")
     }),
@@ -386,9 +387,8 @@ object PipelineEntries {
     // p_span_remove above stays on the fresh mine as the honest re-mine
     // reference, the p_dedup_ngram / p_dedup_clusters split.
     "p_span_pipeline" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Dedup.removeDupSpansPersisted(d, spanPath(dir))
-        .join(d.select("doc_id", "source"), "doc_id")
+      overSpans(s, dir)(Dedup.removeDupSpansPersisted(_, _))
+        .join(docs(s, dir).select("doc_id", "source"), "doc_id")
         .groupBy("source")
         .agg(
           count(lit(1)).as("docs"),
@@ -402,7 +402,7 @@ object PipelineEntries {
     // is amortized once per corpus fingerprint like the pairs/IVF
     // artifacts — the timed work is the dup-position window + ntok join
     "p_span_persisted" -> ((s, dir) =>
-      Dedup.dupSpanCoveragePersisted(docs(s, dir), spanPath(dir))),
+      overSpans(s, dir)(Dedup.dupSpanCoveragePersisted(_, _))),
 
     // transitive dup clustering: min-label connected components over the
     // exact pair graph; canonical id = min doc in cluster — oracle-checked
@@ -412,9 +412,7 @@ object PipelineEntries {
     "p_dedup_clusters" -> ((s, dir) => {
       val d = heavyDocs(s, dir)
       Dedup.dupClusters(d, threshold = 0.5,
-        minedPairs = Some(
-          Dedup.ngramJaccardPairsPersisted(d,
-            pairsPath(dir) + samplePathSuffix, threshold = 0.5)))
+        minedPairs = Some(minedPairs(s, dir)))
     }),
 
     // quality-aware keeper selection per dup cluster: dedup that keeps
@@ -424,8 +422,7 @@ object PipelineEntries {
     "p_dedup_keep_best" -> ((s, dir) => {
       val d = heavyDocs(s, dir)
       Dedup.keepBestPerCluster(d, Dedup.dupClusters(d, threshold = 0.5,
-        minedPairs = Some(Dedup.ngramJaccardPairsPersisted(d,
-          pairsPath(dir) + samplePathSuffix, threshold = 0.5))))
+        minedPairs = Some(minedPairs(s, dir))))
     }),
 
     // symmetric int8 embedding quantization (storage path) — oracle-checked.
@@ -549,11 +546,9 @@ object PipelineEntries {
     // probed reads prune to the probed list partitions — PlanSpec-pinned).
     // Same deterministic quantizer as p_ann_ivf ⇒ same oracle.
     "p_ann_ivf_persisted" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val idx = ivfPath(dir)
-      Similarity.buildIvfIndexIfStale(e, idx)
       Similarity.ivfTopKPersisted(
-          e.filter(pmod(col("vec_id"), lit(50)) === 0), idx, k = 5)
+          emb(s, dir).filter(pmod(col("vec_id"), lit(50)) === 0),
+          ivfIndex(s, dir), k = 5)
         .withColumn("rank", col("rank").cast("long"))
     }),
 
@@ -561,11 +556,9 @@ object PipelineEntries {
     // index (only odd-id candidates qualify) — the predicate reaches the
     // lists scan as a pushed filter on top of the partition pruning
     "p_ann_filtered" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val idx = ivfPath(dir)
-      Similarity.buildIvfIndexIfStale(e, idx)
       Similarity.ivfTopKPersisted(
-          e.filter(pmod(col("vec_id"), lit(50)) === 0), idx, k = 5,
+          emb(s, dir).filter(pmod(col("vec_id"), lit(50)) === 0),
+          ivfIndex(s, dir), k = 5,
           candidateFilter = pmod(col("nid"), lit(2)) === 1)
         .withColumn("rank", col("rank").cast("long"))
     }),
@@ -787,8 +780,7 @@ object PipelineEntries {
       val d = heavyDocs(s, dir)
       Sampling.assignSplitsByCluster(d,
           Dedup.dupClusters(d, threshold = 0.5,
-            minedPairs = Some(Dedup.ngramJaccardPairsPersisted(d,
-              pairsPath(dir) + samplePathSuffix, threshold = 0.5))))
+            minedPairs = Some(minedPairs(s, dir))))
         .select("doc_id", "cluster_id", "split")
     }),
 
@@ -934,9 +926,7 @@ object PipelineEntries {
     // same oracle as the fresh-train twin, so artifact == retrain is
     // what the hash check proves
     "p_bpe_persisted" -> ((s, dir) =>
-      Bpe.tokenCounts(docs(s, dir),
-        Bpe.trainPersistedIfStale(docs(s, dir), bpePath(dir),
-          numMerges = 50))),
+      Bpe.tokenCounts(docs(s, dir), bpeArtifact(s, dir)._1)),
 
     // the symbol → id vocabulary TABLE the merge table induces: the
     // four reserved special tokens at ids 0..3 (UNK/BOS/EOS/PAD — rows
@@ -966,10 +956,8 @@ object PipelineEntries {
     // shares p_bpe_ids' oracle, so artifact == fresh derivation is
     // exactly what the hash check proves
     "p_bpe_ids_persisted" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val m = Bpe.trainPersistedIfStale(d, bpePath(dir), numMerges = 50)
-      Bpe.encodeIds(d.filter(pmod(col("doc_id"), lit(10)) === 0), m,
-          Bpe.persistedVocabulary(s, bpePath(dir)))
+      val (m, v) = bpeArtifact(s, dir)
+      Bpe.encodeIds(docs(s, dir).filter(pmod(col("doc_id"), lit(10)) === 0), m, v)
         .select(col("doc_id"),
           posexplode(col("token_ids")).as(Seq("pos", "token_id")))
         .withColumn("pos", col("pos").cast("long"))

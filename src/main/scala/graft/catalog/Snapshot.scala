@@ -3,15 +3,23 @@ package graft.catalog
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
-/** Content fingerprint of a DataFrame's backing data — the staleness fence
-  * for persisted index artifacts (adjacency indexes, IVF lists).
+/** Content fingerprint of a DataFrame's backing data — the input half of
+  * every staleness fence on a persisted artifact:
+  *  - the adjacency indexes, fenced in the catalog's TBLPROPERTIES
+  *    ([[graft.GraftSession]]);
+  *  - the MinHash signatures, mined pairs and span starts ([[graft.pipeline.Dedup]]),
+  *    the IVF index ([[graft.pipeline.Similarity]]) and the BPE vocabulary
+  *    ([[graft.pipeline.Bpe]]), each fenced by [[graft.pipeline.Artifacts]]
+  *    under a key of this fingerprint plus every build parameter.
   *
   * The reference never serves stale index rows because its bitmap indexes
   * are AggregatingMergeTree tables fed by materialized views on every
   * INSERT (brahmand/src/clickhouse_query_generator/ddl_query.rs:290-311).
-  * A batch-built index needs an explicit freshness check instead: the
-  * builder records this fingerprint next to the artifact, and readers
-  * compare it against the source before serving.
+  * A batch-built artifact needs an explicit freshness check instead: the
+  * builder records this fingerprint with the artifact, and a reader
+  * compares it against the source before serving. It is durable — a
+  * content hash, not an in-memory table generation — because artifacts
+  * are reused across JVMs (see [[stripJvmIds]]).
   *
   * File-backed frames hash the sorted (path, length, mtime) status of
   * their input files PLUS the canonicalized logical plan — no data pass,

@@ -663,7 +663,8 @@ object Bpe {
   /** Read the vocabulary table persisted beside the merge artifact by
     * [[trainPersistedIfStale]]. */
   def persistedVocabulary(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/vocab")
+    spark.read.parquet(Artifacts.live(spark, path).map(_.dir).getOrElse(
+      throw new IllegalArgumentException(s"no BPE artifact at $path")) + "/vocab")
 
   /** Distributed tokenization under a trained merge table: per document,
     * the whitespace token count and the BPE token count (the corpus
@@ -675,11 +676,9 @@ object Bpe {
   /** Persisted trained vocabulary — the production shape: a tokenizer is
     * trained ONCE per corpus version and read by every consumer (token
     * counting, SFT budget truncation, packing), never retrained per
-    * query. Same staleness-fence pattern as the IVF index and the
-    * MinHash signature artifact: the meta records the corpus fingerprint
-    * and every train parameter; any mismatch (or missing/interrupted
-    * artifact — the meta writes LAST) triggers a full retrain, logged
-    * via [[Artifacts.logRebuild]]. The artifact is the PAIR (merge
+    * query. The [[Artifacts]] fence keys it on the corpus fingerprint and
+    * every train parameter; any mismatch (or a missing or interrupted
+    * artifact) triggers a full retrain. The artifact is the PAIR (merge
     * table ≤ `numMerges` rows + the [[vocabulary]] symbol → id table,
     * read back via [[persistedVocabulary]]) — reading costs nothing;
     * building costs the corpus histogram pass [[train]] documents.
@@ -689,33 +688,22 @@ object Bpe {
       numMerges: Int = 100, topWords: Int = 30000, minPairCount: Long = 2,
       textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
-    val metaPath = s"$path/_bpe_meta.json"
-    val fp = graft.catalog.Snapshot.fingerprint(docs)
-    // TERMINATED marker (ends with the closing brace), the
-    // minhashSignaturesPersisted convention: every parameter is fenced so
-    // the same corpus trained with different knobs can never serve stale
-    // "vocab":2 = the reserved-special-token id layout (ids 0..3) — the
-    // version bump retires any pre-r17 artifact, whose ids are all 4 low
-    val marker = s""""fingerprint":"$fp","merges":$numMerges""" +
-      s""","topWords":$topWords,"minPair":$minPairCount""" +
-      s""","textCol":"$textCol","vocab":2}"""
-    val meta = Artifacts.readStringIfExists(spark, metaPath)
-    if (!meta.exists(_.endsWith(marker))) {
-      Artifacts.logRebuild(path,
-        if (meta.isEmpty) "no meta"
-        else "corpus fingerprint or train-params mismatch (full retrain)")
+    // "vocab":2 = the reserved-special-token id layout (ids 0..3)
+    val key = Artifacts.key(
+      "fingerprint" -> graft.catalog.Snapshot.fingerprint(docs),
+      "merges" -> numMerges, "topWords" -> topWords, "minPair" -> minPairCount,
+      "textCol" -> textCol, "vocab" -> 2)
+    val dir = Artifacts.fenced(spark, path, key) { (dir, _) =>
       // ONE corpus scan rebuilds the whole artifact pair: the histogram
-      // persists across the trainer's and the alphabet's bounded
-      // collects (r16 ADVICE — this path used to scan+shuffle twice)
+      // persists across the trainer's and the alphabet's bounded collects
       val (m, v) = trainAndVocabulary(docs, numMerges, topWords,
         minPairCount, textCol)
-      m.write.mode("overwrite").parquet(s"$path/merges")
+      m.write.parquet(s"$dir/merges")
       // the symbol → id table persists BESIDE the merges (same fence):
       // every id consumer reads the artifact pair, never re-derives
-      v.write.mode("overwrite").parquet(s"$path/vocab")
-      Artifacts.writeString(spark, metaPath, "{" + marker)
+      v.write.parquet(s"$dir/vocab")
     }
-    spark.read.parquet(s"$path/merges")
+    spark.read.parquet(s"$dir/merges")
   }
 
   /** Collect + broadcast a trained merge table as rank lookups — the

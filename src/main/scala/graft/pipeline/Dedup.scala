@@ -277,90 +277,33 @@ object Dedup {
     * join in [[minhashPairsFromSignatures]] still runs over the merged
     * table; pair maintenance stays downstream).
     *
-    * Artifact layout: `path/sigs_<fp12>/` (parquet) + `path/_sig_meta.json`
-    * naming the live version dir; superseded version dirs are deleted
-    * after a successful merge, so re-obtain the frame through this
-    * function after a refresh rather than holding one across it. A
-    * [[NumHashes]] mismatch (recompiled family) disables the merge and
-    * forces a full rebuild. */
+    * Fenced by [[Artifacts]] on the corpus fingerprint, [[NumHashes]],
+    * `textCol` and `idCol` (the fingerprint hashes the input frame, so the
+    * same docs hashed over a different column must not serve stale
+    * signatures). The merge reads the previous version only when it was
+    * signed with the same hash family; the `(id, txh)` keying self-corrects
+    * a textCol/idCol change, since every row then lands in the delta. */
   def minhashSignaturesPersisted(docs: DataFrame, path: String,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
-    val metaPath = s"$path/_sig_meta.json"
-    val fp = graft.catalog.Snapshot.fingerprint(docs)
-    // TERMINATED marker (ends with the closing brace) — see
-    // ngramJaccardPairsPersisted. textCol/idCol are fenced: the corpus
-    // fingerprint hashes the input frame, so the same docs hashed over a
-    // different column would otherwise serve stale signatures
-    val marker =
-      s""""fingerprint":"$fp","hashes":$NumHashes,"textCol":"$textCol","idCol":"$idCol"}"""
-    val meta = Artifacts.readStringIfExists(spark, metaPath)
-    val liveDir = meta.flatMap(m =>
-      "\"dir\":\"([^\"]+)\"".r.findFirstMatchIn(m).map(_.group(1)))
-    if (meta.exists(_.endsWith(marker)) && liveDir.nonEmpty)
-      return spark.read.parquet(s"$path/${liveDir.get}")
-    // Terminated family probe: "hashes":96, / "hashes":96} cannot
-    // false-match 960 — the comma (current meta format, textCol/idCol
-    // follow) or closing brace (pre-fence metas, which END with the hash
-    // count) is the terminator. Accepting BOTH keeps an existing
-    // artifact's cheap incremental merge across the format upgrade. Merge
-    // eligibility needs only the hash family: the (id, txh) keying below
-    // self-corrects a textCol/idCol change (every row lands in the
-    // delta); it is the fresh early-return above that the textCol/idCol
-    // fence protects.
-    val sameFamily = meta.exists(m =>
-      m.contains(s""""hashes":$NumHashes,""") ||
-        m.endsWith(s""""hashes":$NumHashes}"""))
-    Artifacts.logRebuild(path,
-      if (meta.isEmpty) "no meta"
-      else if (!sameFamily) "hash-family mismatch"
-      else if (liveDir.isEmpty) "meta missing live dir"
-      else if (meta.exists(m =>
-          m.endsWith(s""""textCol":"$textCol","idCol":"$idCol"}""") ||
-            m.endsWith(s""""hashes":$NumHashes}""")))
-        "corpus fingerprint mismatch (incremental merge)"
-      else "textCol/idCol mismatch (full re-key)")
-
-    val keyed = docs.select(col(idCol).as("id"), col(textCol).as("__mh_text"))
-      .withColumn("txh", xxhash64(col("__mh_text")))
-    // merge only against an artifact built with the same hash family
-    val old = liveDir
-      .filter(_ => sameFamily)
-      .map(d => spark.read.parquet(s"$path/$d"))
-    val merged = old match {
-      case Some(o) =>
-        val delta = keyed.join(o.select("id", "txh"), Seq("id", "txh"), "left_anti")
-        val kept = o.join(keyed.select("id", "txh"), Seq("id", "txh"), "left_semi")
-        kept.unionByName(computeSignatures(delta))
-      case None => computeSignatures(keyed)
-    }
-    // FULL fingerprint PLUS a params hash in the dir name: newDir must
-    // differ from the live dir on EVERY path that reaches this write, or
-    // the overwrite deletes the directory the lazy merge above is still
-    // reading, losing signatures mid-write (FAILED_READ_FILE). The fp
-    // alone stopped being sufficient when the marker gained textCol/idCol:
-    // the fingerprint hashes the whole frame, so a textCol-only change
-    // keeps fp — newDir == liveDir now implies fp AND params unchanged,
-    // which returned early above.
-    val paramsHash = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(s"$NumHashes|$textCol|$idCol"))
-    val newDir = s"sigs_${fp}_$paramsHash"
-    merged.write.mode("overwrite").parquet(s"$path/$newDir")
-    Artifacts.writeString(spark, metaPath,
-      s"""{"version":1,"dir":"$newDir",$marker""")
-    // compact: superseded version dirs + strays from interrupted builds.
-    // Sweep keyed off a RE-READ of the meta, not off newDir: if a
-    // concurrent writer won the meta race, its dir is the live one and
-    // must survive our sweep (ours becomes the stray its sweep removes).
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val liveNow = Artifacts.readStringIfExists(spark, metaPath).flatMap(m =>
-      "\"dir\":\"([^\"]+)\"".r.findFirstMatchIn(m).map(_.group(1)))
-      .getOrElse(newDir)
-    for (st <- fs.listStatus(root)
-         if st.isDirectory && st.getPath.getName != liveNow)
-      fs.delete(st.getPath, true)
-    spark.read.parquet(s"$path/$liveNow")
+    val key = Artifacts.key(
+      "fingerprint" -> graft.catalog.Snapshot.fingerprint(docs),
+      "hashes" -> NumHashes, "textCol" -> textCol, "idCol" -> idCol)
+    spark.read.parquet(Artifacts.fenced(spark, path, key) { (dir, previous) =>
+      val keyed = docs.select(col(idCol).as("id"), col(textCol).as("__mh_text"))
+        .withColumn("txh", xxhash64(col("__mh_text")))
+      val old = previous
+        .filter(_.key.get("hashes") == key.get("hashes"))
+        .map(p => spark.read.parquet(p.dir))
+      val merged = old match {
+        case Some(o) =>
+          val delta = keyed.join(o.select("id", "txh"), Seq("id", "txh"), "left_anti")
+          val kept = o.join(keyed.select("id", "txh"), Seq("id", "txh"), "left_semi")
+          kept.unionByName(computeSignatures(delta))
+        case None => computeSignatures(keyed)
+      }
+      merged.write.parquet(dir)
+    })
   }
 
   /** [[minhashPairs]] through the persisted signature artifact — repeat
@@ -713,22 +656,12 @@ object Dedup {
   def ngramJaccardPairsPersisted(docs: DataFrame, path: String,
       threshold: Double = 0.5): DataFrame = {
     val spark = docs.sparkSession
-    val metaPath = s"$path/_pairs_meta.json"
-    // TERMINATED marker (ends with the closing brace): a bare contains()
-    // on '"threshold":0.5' would also match a stored 0.55 (round-6 review)
-    val marker =
-      s""""fingerprint":"${graft.catalog.Snapshot.fingerprint(docs)}","threshold":$threshold}"""
-    val meta = Artifacts.readStringIfExists(spark, metaPath)
-    val fresh = meta.exists(_.endsWith(marker))
-    if (!fresh) {
-      Artifacts.logRebuild(path,
-        if (meta.isEmpty) "no meta"
-        else "corpus fingerprint or threshold mismatch (full re-mine)")
-      ngramJaccardPairs(docs, threshold)
-        .write.mode("overwrite").parquet(s"$path/pairs")
-      Artifacts.writeString(spark, metaPath, s"""{"version":1,$marker""")
-    }
-    spark.read.parquet(s"$path/pairs")
+    val key = Artifacts.key(
+      "fingerprint" -> graft.catalog.Snapshot.fingerprint(docs),
+      "threshold" -> threshold)
+    spark.read.parquet(Artifacts.fenced(spark, path, key) { (dir, _) =>
+      ngramJaccardPairs(docs, threshold).write.parquet(dir)
+    })
   }
 
   // ---- pair-miner recall gauge + transitive dup clustering ------------------
@@ -885,29 +818,21 @@ object Dedup {
       minDocFreq: Int = 2, textCol: String = "text",
       idCol: String = "doc_id"): (DataFrame, DataFrame) = {
     val spark = docs.sparkSession
-    val metaPath = s"$path/_span_meta.json"
-    // TERMINATED marker (ends with the closing brace) — a bare contains()
-    // would false-match a prefix value, the round-6 pairs-meta lesson.
-    // textCol/idCol are fenced too: the corpus fingerprint hashes the
+    // textCol/idCol are key fields: the corpus fingerprint hashes the
     // INPUT frame, so the same docs mined over a different column would
-    // otherwise silently serve stale positions (round-12 review).
-    val marker =
-      s""""fingerprint":"${graft.catalog.Snapshot.fingerprint(docs)}","n":$n,"minDocFreq":$minDocFreq,"textCol":"$textCol","idCol":"$idCol"}"""
-    val meta = Artifacts.readStringIfExists(spark, metaPath)
-    if (!meta.exists(_.endsWith(marker))) {
-      Artifacts.logRebuild(path,
-        if (meta.isEmpty) "no meta"
-        else "corpus fingerprint or span-params mismatch (full re-mine)")
+    // otherwise serve stale positions
+    val key = Artifacts.key(
+      "fingerprint" -> graft.catalog.Snapshot.fingerprint(docs),
+      "n" -> n, "minDocFreq" -> minDocFreq, "textCol" -> textCol, "idCol" -> idCol)
+    val dir = Artifacts.fenced(spark, path, key) { (dir, _) =>
       val (toksDf, dupPos) = dupSpanStarts(docs, n, minDocFreq, textCol, idCol)
-      toksDf.select(col(idCol), col("n_tokens"))
-        .write.mode("overwrite").parquet(s"$path/ntok")
+      toksDf.select(col(idCol), col("n_tokens")).write.parquet(s"$dir/ntok")
       // drop the gram string: no consumer reads it, and it is the widest
-      // column per duplicated position (round-12 review)
+      // column per duplicated position
       dupPos.select(col(idCol), col("n_tokens"), col("pos"))
-        .write.mode("overwrite").parquet(s"$path/pos")
-      Artifacts.writeString(spark, metaPath, s"""{"version":1,$marker""")
+        .write.parquet(s"$dir/pos")
     }
-    (spark.read.parquet(s"$path/ntok"), spark.read.parquet(s"$path/pos"))
+    (spark.read.parquet(s"$dir/ntok"), spark.read.parquet(s"$dir/pos"))
   }
 
   /** [[dupSpanCoverage]] over the persisted artifact: identical rows, but
@@ -951,28 +876,15 @@ object Dedup {
     // (gram, id) pairs — a few extra longs per row — against a full
     // corpus re-tokenization saved.
     //
-    // Skew bound (r18 probe, DESIGN §r18): the shared exchange moves RAW
-    // occurrences on the gram key, so a Zipfian hot gram concentrates on
-    // one partition and AQE skew-split does not apply to repartition-fed
+    // Skew bound (DESIGN §12): the shared exchange moves RAW occurrences
+    // on the gram key, so a Zipfian hot gram concentrates on one
+    // partition, and AQE skew-split does not apply to repartition-fed
     // aggregates. Measured on the sf0.1 fixture: top gram 4 occurrences
-    // of 250 704 positions = 0.0005× a 32-partition mean — no local
-    // skew. The regime where it bites is extreme partition counts
-    // (top-5-gram share of real web text ~1e-5, so P ≳ 10⁵ partitions
-    // before one gram fills a partition); for that regime the salt knob
-    // below splits every gram's rows across k id-derived buckets
-    // (pmod(xxhash64(id), k) is a function of id, so every (gram, id)
-    // pair stays intact within one bucket). The trade is one extra
-    // deduped (gram, id) exchange for the doc-freq aggregate (its
-    // required clustering is no longer syntactically satisfied), which
-    // is why the default stays 0 — the unsalted shape is strictly
-    // better until the hot partition exceeds a few× the mean.
-    val saltBuckets = pos.sparkSession.conf
-      .get("spark.graft.spanGramSaltBuckets", "0").toInt
-    val posR =
-      if (saltBuckets > 1)
-        pos.repartition(col("gram"),
-          pmod(xxhash64(col(idCol)), lit(saltBuckets.toLong)))
-      else pos.repartition(col("gram"))
+    // against a 32-partition mean of 7,834 rows — no skew. It bites only
+    // at extreme partition counts (top-5-gram share of web text ~1e-5, so
+    // P ≳ 10⁵ before one gram fills a partition); salting the exchange by
+    // a function of the id is the fix to measure then, not before.
+    val posR = pos.repartition(col("gram"))
     val dupGrams = posR.groupBy("gram")
       .agg(count_distinct(col(idCol)).as("doc_freq"))
       .filter(col("doc_freq") >= minDocFreq)

@@ -980,86 +980,81 @@ object Similarity {
 
   // ---- durable IVF index -----------------------------------------------
 
-  private def ivfMetaPath(path: String) = s"$path/_ivf_meta.json"
-
   /** Build the IVF index as a DURABLE artifact (the ANN analogue of
     * [[graft.GraftSession.persistAdjIndex]], mirroring the reference's
     * persisted index tables — ddl_query.rs:290-311). [[ivfTopK]] recomputes
     * centroids + list assignments on every call: fine for one-shot jobs,
     * wrong at 100 TB where the index is built once and probed by thousands
-    * of queries. Layout under `path`:
+    * of queries. A fenced [[Artifacts]] version under `path` holds:
     *
     *  - `centroids/` — (list_id, cent, centnorm), nlist ≤ 4096 rows
     *  - `lists/` — (nid, cv, cnorm) PARTITIONED BY list_id, one file per
     *    list (repartitioned on list_id before the write), so a probed read
     *    lists/scans ONLY the probed directories
-    *  - `_ivf_meta.json` — dim, nlist, corpus row count, and a
-    *    [[graft.catalog.Snapshot]] fingerprint of the corpus for staleness
-    *    detection
     *
-    * Same deterministic quantizer as [[ivfTopK]] (seeded by lowest ids,
-    * 9-dp Lloyd means), so [[ivfTopKPersisted]] over this index returns
-    * exactly [[ivfTopK]]'s rows. */
+    * keyed by [[ivfKey]]. Same deterministic quantizer as [[ivfTopK]]
+    * (seeded by lowest ids, 9-dp Lloyd means), so [[ivfTopKPersisted]] over
+    * this index returns exactly [[ivfTopK]]'s rows. Builds unconditionally:
+    * the retrain after appended vectors drift from the training corpus. */
   def buildIvfIndex(corpus: DataFrame, path: String, nlist: Int = 0,
       refineIters: Int = 1, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit = {
+      vecCol: String = "embedding"): Unit =
+    Artifacts.publish(corpus.sparkSession, path,
+        ivfKey(corpus, nlist, refineIters, idCol, vecCol))(
+      writeIvfIndex(corpus, _, nlist, refineIters, idCol, vecCol))
+
+  private def writeIvfIndex(corpus: DataFrame, dir: String, nlist: Int,
+      refineIters: Int, idCol: String, vecCol: String): Unit = {
     val spark = corpus.sparkSession
     GraftFunctions.register(spark)
-    val fp = graft.catalog.Snapshot.fingerprint(corpus)
     val c = prepIvfCorpus(corpus, idCol, vecCol)
     val corpusSize = c.count()
     if (corpusSize == 0L)
       throw new graft.cypher.GraftException(
         s"buildIvfIndex: corpus has no non-null '$vecCol' vectors")
-    val lists = autoNlist(nlist, corpusSize)
-    val cents = trainCentroids(c, lists, refineIters)
+    val cents = trainCentroids(c, autoNlist(nlist, corpusSize), refineIters)
 
     import spark.implicits._
     cents.map(ct => (ct.id, ct.cent.toSeq, ct.norm))
       .toDF("list_id", "cent", "centnorm")
       .repartition(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
+      .write.parquet(s"$dir/centroids")
     // repartition by list_id: each list lands in ONE task → one parquet
     // file per list directory instead of (#tasks × #lists) small files
     assignLists(c, cents)
       .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(s"$path/lists")
-
-    Artifacts.writeString(spark, ivfMetaPath(path),
-      s"""{"version":1,"dim":$DefaultDim,"nlist":${cents.size},""" +
-        s""""rows":$corpusSize,${ivfMarker(fp, nlist, refineIters, idCol, vecCol)}""")
+      .write.partitionBy("list_id").parquet(s"$dir/lists")
   }
 
-  /** Freshness marker: corpus fingerprint AND every build parameter — a
-    * changed nlist/refineIters/idCol/vecCol must rebuild even when the
-    * corpus files are unchanged (round-6 review). The marker is the
-    * TERMINATED tail of the meta JSON, so a suffix check can never match
-    * a numeric prefix of a different value. */
-  private def ivfMarker(fp: String, nlist: Int, refineIters: Int,
-      idCol: String, vecCol: String): String =
-    s""""params":"nlist=$nlist;iters=$refineIters;id=$idCol;vec=$vecCol",""" +
-      s""""fingerprint":"$fp"}"""
+  /** The index's fence key: the corpus fingerprint AND every build
+    * parameter — a changed nlist/refineIters/idCol/vecCol must rebuild
+    * even when the corpus files are unchanged. Taken BEFORE any write (a
+    * corpus changing mid-build reads as stale afterwards, never fresh). */
+  private def ivfKey(corpus: DataFrame, nlist: Int, refineIters: Int,
+      idCol: String, vecCol: String): Artifacts.Key =
+    Artifacts.key("fingerprint" -> graft.catalog.Snapshot.fingerprint(corpus),
+      "dim" -> DefaultDim, "nlist" -> nlist, "refineIters" -> refineIters,
+      "idCol" -> idCol, "vecCol" -> vecCol)
 
-  /** Rebuild the persisted index iff missing or its recorded corpus
-    * fingerprint no longer matches (the staleness fence — a replaced
-    * embeddings parquet must never serve stale neighbors). Returns true
-    * if it rebuilt. */
+  /** The live index version under `path`, or a loud error. */
+  private def liveIvfIndex(spark: org.apache.spark.sql.SparkSession,
+      path: String): Artifacts.Version =
+    Artifacts.live(spark, path).getOrElse(throw new graft.cypher.GraftException(
+      s"no IVF index at $path — build one with buildIvfIndex"))
+
+  /** Rebuild the persisted index iff missing or its key no longer matches
+    * (the staleness fence — a replaced embeddings parquet must never serve
+    * stale neighbors). Returns true if it rebuilt. */
   def buildIvfIndexIfStale(corpus: DataFrame, path: String, nlist: Int = 0,
       refineIters: Int = 1, idCol: String = "vec_id",
       vecCol: String = "embedding"): Boolean = {
-    val spark = corpus.sparkSession
-    val meta = Artifacts.readStringIfExists(spark, ivfMetaPath(path))
-    val fresh = meta.exists { m =>
-      val fp = graft.catalog.Snapshot.fingerprint(corpus)
-      m.endsWith(ivfMarker(fp, nlist, refineIters, idCol, vecCol))
+    var rebuilt = false
+    Artifacts.fenced(corpus.sparkSession, path,
+        ivfKey(corpus, nlist, refineIters, idCol, vecCol)) { (dir, _) =>
+      rebuilt = true
+      writeIvfIndex(corpus, dir, nlist, refineIters, idCol, vecCol)
     }
-    if (!fresh) {
-      Artifacts.logRebuild(path,
-        if (meta.isEmpty) "no meta"
-        else "corpus fingerprint or build-params mismatch (full retrain)")
-      buildIvfIndex(corpus, path, nlist, refineIters, idCol, vecCol)
-    }
-    !fresh
+    rebuilt
   }
 
   /** Incremental IVF maintenance: absorb an embedding `delta` into the
@@ -1070,67 +1065,53 @@ object Similarity {
     * already included — append to the corpus first, then absorb the same
     * delta here); the refreshed fingerprint is taken from it, so a
     * mismatched delta leaves the index stale-detectable, never silently
-    * wrong. Build parameters must match the original build (checked
-    * against the recorded marker — appending nlist=8 rows into an
-    * nlist=0 index is an error, not a quiet recall cliff).
+    * wrong. Build parameters must match the live version's key (appending
+    * nlist=8 rows into an nlist=0 index is an error, not a quiet recall
+    * cliff), and a call whose key already matches is a no-op, so a
+    * repeated append never duplicates the delta's vectors.
     *
     * Semantics: the coarse quantizer (centroids) stays FIXED — standard
     * IVF practice; appended vectors are assigned to the nearest existing
     * centroid, so the index serves exact the same probe math with the
     * delta included. Recall degrades only if the delta's distribution
     * drifts from the training corpus; retrain on schedule with
-    * [[buildIvfIndex]] when it does (the `rows` field in the meta tracks
-    * growth since the last train).
+    * [[buildIvfIndex]] when it does.
     *
     * Cost shape: one delta-sized pass (assignment against broadcast-sized
     * centroid literals) appended into only the list partitions the delta
-    * touches; untouched lists gain no files and are never read. The meta
-    * rewrite happens LAST — an interrupted append leaves a stale
-    * fingerprint, which the next [[buildIvfIndexIfStale]] repairs by
+    * touches; untouched lists gain no files and are never read. The
+    * append writes into the live version in place and the key rewrite
+    * ([[Artifacts.rekey]]) happens LAST — an interrupted append leaves a
+    * stale fingerprint, which the next [[buildIvfIndexIfStale]] repairs by
     * rebuild. */
   def appendToIvfIndex(corpus: DataFrame, delta: DataFrame, path: String,
       nlist: Int = 0, refineIters: Int = 1, idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit = {
     val spark = corpus.sparkSession
     GraftFunctions.register(spark)
-    val meta = Artifacts.readStringIfExists(spark, ivfMetaPath(path)).getOrElse(
+    val live = liveIvfIndex(spark, path)
+    val key = ivfKey(corpus, nlist, refineIters, idCol, vecCol)
+    val differs = Artifacts.differing(live.key, key)
+    if (differs.exists(_ != "fingerprint"))
       throw new graft.cypher.GraftException(
-        s"appendToIvfIndex: no IVF index at $path — build one with buildIvfIndex"))
-    // the params marker is a TERMINATED quoted string (trailing `",`):
-    // a prefix of a different value can never match
-    val params = s""""params":"nlist=$nlist;iters=$refineIters;id=$idCol;vec=$vecCol","""
-    if (!meta.contains(params))
-      throw new graft.cypher.GraftException(
-        s"appendToIvfIndex: build parameters differ from the persisted " +
-          s"index at $path — retrain with buildIvfIndex instead")
-    // fingerprint BEFORE writing (conservative: a corpus changing
-    // mid-append reads as stale afterwards, never as fresh)
-    val fp = graft.catalog.Snapshot.fingerprint(corpus)
-    // idempotence: if the index already covers THIS corpus content, a
-    // repeated call must not append the delta's vectors a second time
-    // (duplicate rows in the lists would surface as duplicate neighbors)
-    if (meta.endsWith(ivfMarker(fp, nlist, refineIters, idCol, vecCol))) return
-    val cents = collectCents(spark.read.parquet(s"$path/centroids")
+        s"appendToIvfIndex: build parameters (${differs.mkString(", ")}) " +
+          s"differ from the persisted index at $path — retrain with buildIvfIndex instead")
+    if (differs.isEmpty) return // the index already covers this corpus
+    val cents = collectCents(spark.read.parquet(s"${live.dir}/centroids")
       .select(col("list_id"), col("cent"), col("centnorm")))
-    val d = prepIvfCorpus(delta, idCol, vecCol)
-    val appended = d.count()
-    val assigned = assignLists(d, cents)
+    val assigned = assignLists(prepIvfCorpus(delta, idCol, vecCol), cents)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)
     assigned
       .repartition(col("list_id"))
-      .write.mode("append").partitionBy("list_id").parquet(s"$path/lists")
+      .write.mode("append").partitionBy("list_id").parquet(s"${live.dir}/lists")
     // every append adds one file to each touched list directory; compact
     // the ones that crossed the threshold so steady-state file count stays
     // ≈ nlist instead of nlist × appends (the 100 TB small-files killer)
     val touched = assigned.select("list_id").distinct()
       .collect().map(_.getLong(0)) // bounded by nlist ≤ 4096
-    compactIvfLists(spark, path, touched)
-    val prevRows = """"rows":(\d+)""".r.findFirstMatchIn(meta)
-      .map(_.group(1).toLong).getOrElse(0L)
-    Artifacts.writeString(spark, ivfMetaPath(path),
-      s"""{"version":1,"dim":$DefaultDim,"nlist":${cents.size},""" +
-        s""""rows":${prevRows + appended},${ivfMarker(fp, nlist, refineIters, idCol, vecCol)}""")
+    compactIvfLists(spark, live.dir, touched)
+    Artifacts.rekey(spark, path, live.copy(key = key))
   }
 
   /** Max part files a list directory may hold before [[appendToIvfIndex]]
@@ -1141,17 +1122,17 @@ object Similarity {
   /** Rewrite each given list partition as a single parquet file when its
     * part-file count exceeds [[MaxFilesPerList]].
     *
-    * Swap protocol per list (single-writer contract, same as the rest of
-    * the index artifact): write the coalesced copy to a `.compact_tmp`
+    * Swap protocol per list (single-writer contract, the [[Artifacts]]
+    * fence's): write the coalesced copy to a `.compact_tmp`
     * sibling, rename live → `.compact_trash`, tmp → live, delete trash.
     * A crash between the renames leaves the list directory MISSING — a
     * probe then fails loudly (never silently duplicates or drops rows)
     * and [[buildIvfIndexIfStale]] repairs by rebuild; the trash copy also
     * still holds the data for manual salvage. */
   private def compactIvfLists(spark: org.apache.spark.sql.SparkSession,
-      path: String, listIds: Seq[Long]): Unit = {
+      dir: String, listIds: Seq[Long]): Unit = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    val base = new org.apache.hadoop.fs.Path(s"$path/lists")
+    val base = new org.apache.hadoop.fs.Path(s"$dir/lists")
     val fs = base.getFileSystem(hconf)
     listIds.foreach { id =>
       val dir = new org.apache.hadoop.fs.Path(base, s"list_id=$id")
@@ -1247,7 +1228,8 @@ object Similarity {
       candidateFilter: Column = lit(true)): DataFrame = {
     val spark = queries.sparkSession
     GraftFunctions.register(spark)
-    val cents = collectCents(spark.read.parquet(s"$path/centroids")
+    val dir = liveIvfIndex(spark, path).dir
+    val cents = collectCents(spark.read.parquet(s"$dir/centroids")
       .select(col("list_id"), col("cent"), col("centnorm")))
     require(cents.nonEmpty, s"empty IVF index at $path")
 
@@ -1269,7 +1251,7 @@ object Similarity {
 
     val probedIds = qAssigned.select("list_id").distinct()
       .collect().map(_.getLong(0)).sorted
-    val lists = spark.read.parquet(s"$path/lists")
+    val lists = spark.read.parquet(s"$dir/lists")
       .filter(col("list_id").isin(probedIds.map(Long.box).toIndexedSeq: _*))
       .filter(candidateFilter)
 

@@ -17,4 +17,12 @@ class BenchLegendSpec extends AnyFunSuite {
       "legend drifted from SparkEntry.queries — " +
         "run `sbt \"runMain graft.BenchLegend\"` and commit the result")
   }
+
+  test("every gate entry has a DuckDB oracle, and every oracle an entry") {
+    val entries = SparkEntry.queries.keySet
+    val oracles = SparkEntry.oracleSql.keySet
+    assert(entries == oracles,
+      s"entries without an oracle: ${(entries -- oracles).toSeq.sorted}; " +
+        s"oracles without an entry: ${(oracles -- entries).toSeq.sorted}")
+  }
 }

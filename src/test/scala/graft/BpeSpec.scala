@@ -530,11 +530,11 @@ class BpeSpec extends AnyFunSuite {
         .map(r => (r.getString(0), r.getLong(1))).toSet == vFresh)
       // second call serves the artifact (same rows, meta unchanged)
       val metaBefore = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$dir/_bpe_meta.json")), "UTF-8")
+        java.nio.file.Paths.get(s"$dir/_meta.json")), "UTF-8")
       assert(m(Bpe.trainPersistedIfStale(corpusDf, dir, numMerges = 10))
         == fresh)
       assert(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$dir/_bpe_meta.json")), "UTF-8")
+        java.nio.file.Paths.get(s"$dir/_meta.json")), "UTF-8")
         == metaBefore)
       // parameter fence: a different merge count must retrain, not serve
       val ten = fresh.size

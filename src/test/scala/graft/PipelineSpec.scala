@@ -219,26 +219,6 @@ class DedupSpec extends AnyFunSuite {
       .forall(_.getDouble(4) == 1.0))
   }
 
-  test("salted span-gram exchange (spark.graft.spanGramSaltBuckets) is result-identical") {
-    import spark.implicits._
-    val d = Seq(
-      (1L, "a b c d e f"), (2L, "x y a b c d z"), (3L, "p q r s t u"),
-      (4L, "a b c d e f"), (5L, "b c d e f g h"))
-      .toDF("doc_id", "text")
-    def cov(df: DataFrame) = Dedup.dupSpanCoverage(df, n = 3).collect()
-      .map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
-    def rem(df: DataFrame) = Dedup.removeDupSpans(df, n = 3).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-      .sortBy(_._1).toSeq
-    val (c0, r0) = (cov(d), rem(d))
-    spark.conf.set("spark.graft.spanGramSaltBuckets", "4")
-    try {
-      assert(cov(d) == c0)
-      assert(rem(d) == r0)
-    } finally spark.conf.unset("spark.graft.spanGramSaltBuckets")
-  }
-
   test("persisted span artifact: equals fresh mine, rereads, rebuilds on param change") {
     import spark.implicits._
     val d = Seq(
@@ -252,7 +232,7 @@ class DedupSpec extends AnyFunSuite {
     assert(asMap(Dedup.dupSpanCoveragePersisted(d, path, n = 3)) == fresh)
     // second call must READ, not re-mine: the meta file's mtime is the
     // build fence — unchanged means no rewrite happened
-    val meta = new java.io.File(s"$path/_span_meta.json")
+    val meta = new java.io.File(s"$path/_meta.json")
     val built = meta.lastModified()
     assert(asMap(Dedup.dupSpanCoveragePersisted(d, path, n = 3)) == fresh)
     assert(meta.lastModified() == built, "fresh artifact was rebuilt")
@@ -284,7 +264,7 @@ class DedupSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.pipeline.{Artifacts, Dedup => D}
     val path = java.nio.file.Files.createTempDirectory("graft_mhsig_spec").toString
-    val metaPath = s"$path/_sig_meta.json"
+    val metaPath = s"$path/_meta.json"
     def liveDirs = new java.io.File(path).listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
 
@@ -486,7 +466,7 @@ class DedupSpec extends AnyFunSuite {
       assert(persisted.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet == inline)
       // second call serves the artifact without re-mining (same meta mtime)
-      val meta = new java.io.File(s"$dir/_pairs_meta.json")
+      val meta = new java.io.File(s"$dir/_meta.json")
       val mtime = meta.lastModified()
       Dedup.ngramJaccardPairsPersisted(docs, dir, threshold = 0.5).count()
       assert(meta.lastModified() == mtime, "artifact was rebuilt despite fresh fingerprint")
@@ -1026,7 +1006,7 @@ class SimilaritySpec extends AnyFunSuite {
       Similarity.buildIvfIndex(base, dir)
 
       def listState(): Map[String, Set[String]] = {
-        val d = new java.io.File(s"$dir/lists")
+        val d = new java.io.File(s"${graft.pipeline.Artifacts.live(spark, dir).get.dir}/lists")
         d.listFiles().filter(f => f.isDirectory && f.getName.startsWith("list_id="))
           .map(l => l.getName ->
             l.listFiles().map(_.getName).filterNot(_.startsWith("_")).toSet)

@@ -573,7 +573,8 @@ class PlanSpec extends AnyFunSuite {
       val scan = scans.head
       assert(scan.partitionFilters.nonEmpty,
         s"probed lists read has no partition filters:\n$scan")
-      val totalLists = new java.io.File(s"$dir/lists").listFiles()
+      val totalLists = new java.io.File(
+          s"${graft.pipeline.Artifacts.live(spark, dir).get.dir}/lists").listFiles()
         .count(f => f.isDirectory && f.getName.startsWith("list_id="))
       val read = scan.selectedPartitions.partitionCount
       assert(read > 0 && read < totalLists,
