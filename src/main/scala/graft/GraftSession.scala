@@ -473,6 +473,7 @@ final class GraftSession(val spark: SparkSession) {
     * thread's [[Profile]], when it has one. */
   def cypher(query: String, params: Map[String, Any] = Map.empty): DataFrame = {
     val t0 = Profile.nowUs
+    graft.exec.ParamRefs.bind(spark, params)
     Profile.span("parse")(CypherParser.parse(query)) match {
       // EXPLAIN: plan without executing — the formatted Spark physical
       // plan comes back as a one-row frame (Neo4j-style EXPLAIN)

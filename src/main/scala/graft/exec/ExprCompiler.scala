@@ -92,6 +92,11 @@ object ExprCompiler {
       }
       otherwise.map(o => chained.otherwise(compile(o, resolve))).getOrElse(chained)
 
+    // a call over bound parameters only (`datetime($d)`): Catalyst folds
+    // it into a literal, whose value is marked for ParamRefs
+    case fn @ Expr.Fn(_, args, false) if args.nonEmpty && args.forall {
+        case Expr.Lit(v) => ParamRefs.isBound(v); case _ => false } =>
+      ParamRefs.folded(compileFn(fn, resolve))
     case fn @ Expr.Fn(_, _, _) => compileFn(fn, resolve)
 
     // list comprehension → filter/transform HOFs; the lambda variable

@@ -1,7 +1,7 @@
 package graft.exec
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, explode, inline, udf}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, explode, get, inline, typedLit, udf}
 import org.apache.spark.sql.types._
 
 /** Hash adjacency of a broadcast-small hop base: what a var-length or
@@ -146,11 +146,14 @@ object HopAdjacency {
     * The base is collected NOW, once, broadcast, and the broadcast is
     * registered with the calling thread's cache scope, so it is released
     * with the request. Rows with a null endpoint are dropped: no node
-    * join can match them. The sources are a local relation of the
-    * adjacency's keys under a generator, so an anchor filter Catalyst
-    * infers on `__src` (from `a.id = $k` through the join) pushes through
-    * the generator into the source rows, and only the anchored sources
-    * walk.
+    * join can match them. The sources are the adjacency's keys, read by
+    * index from one array literal over a one-partition range, under a
+    * generator: an anchor filter Catalyst infers on `__src` (from
+    * `a.id = $k` through the join) pushes through the generator onto the
+    * range, so only the anchored sources walk. (Over a local relation the
+    * optimizer would evaluate that filter itself, through a predicate it
+    * compiles once per anchor value; on the range it is a physical filter
+    * that reads a bound value by reference, [[ParamRefs]].)
     */
   def expand(pairs: DataFrame, lo: Int, hi: Int, shortest: Boolean): DataFrame = {
     val spark = pairs.sparkSession
@@ -164,15 +167,10 @@ object HopAdjacency {
     val bc = spark.sparkContext.broadcast(adj)
     graft.pipeline.PipelineCaches.onClear(bc)(_.destroy())
 
-    val asSrc: Long => Any = srcType match {
-      case ByteType => _.toByte
-      case ShortType => _.toShort
-      case IntegerType => _.toInt
-      case _ => identity
-    }
-    val sources = spark.createDataFrame(
-      java.util.Arrays.asList(adj.sources.map(id => Row(asSrc(id))).toSeq: _*),
-      StructType(Seq(StructField("__src", srcType, nullable = false))))
+    val keys = adj.sources.toArray
+    val sources = spark.range(0, keys.length, 1, 1)
+      .select(get(typedLit(keys), col("id").cast(IntegerType))
+        .cast(srcType).as("__src"))
     val src = col("__src").cast(LongType)
     if (shortest) {
       val walk = udf((s: Long) => bc.value.shortest(s, lo, hi))

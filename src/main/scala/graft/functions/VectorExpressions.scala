@@ -494,12 +494,18 @@ object GraftFunctions {
     call_function("graft_bloom_agg", hashed, estItems, numBits)
 }
 
-/** `spark.sql.extensions=graft.functions.GraftExtensions` registers the
-  * vector functions as permanent built-ins for pure-SQL users. */
+/** `spark.sql.extensions=graft.functions.GraftExtensions` (set by
+  * [[graft.SparkTuning.kryoConf]]) registers the vector functions as
+  * permanent built-ins for pure-SQL users, and installs the physical rule
+  * that reads bound `$param` values through references
+  * ([[graft.exec.ParamRefs]]). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     GraftFunctions.builders.foreach { case (name, cls, b) =>
       e.injectFunction((new FunctionIdentifier(name),
         new ExpressionInfo(cls.getName, name), b))
     }
+    e.injectColumnar(graft.exec.ParamRefs.columnar)
+    e.injectQueryStageOptimizerRule(new graft.exec.ParamRefs.Replace(_))
+  }
 }

@@ -25,9 +25,10 @@ import org.apache.spark.sql.SparkSession
   *    `path/v-<uuid>` and never over the live version, so a reader — or an
   *    incremental merge reading the previous version while it writes the
   *    next — keeps its files.
-  *  - **Sweep.** Once the meta names the new version, every other
-  *    directory under `path` is deleted: superseded versions and strays of
-  *    interrupted builds. Plain files (a stream's batch marker) stay.
+  *  - **Sweep.** Once the meta names the new version, every other entry
+  *    under `path` is deleted: superseded versions, strays of interrupted
+  *    builds and the retired per-builder `_*_meta.json` files. Only the
+  *    live directory, the meta and a stream's [[BatchMarker]] stay.
   *  - **Single writer.** One builder per path at a time. The sweep spares
   *    whatever the meta names when it runs, but two concurrent builders
   *    can still delete each other's unpublished version.
@@ -44,6 +45,11 @@ object Artifacts {
   final case class Version(dir: String, key: Key)
 
   private val MetaFile = "_meta.json"
+
+  /** The last fully applied micro-batch id of a stream that maintains the
+    * artifact in place ([[Similarity.streamToIvfIndex]]). It outlives a
+    * rebuild: a restarted stream must still skip the batches it applied. */
+  val BatchMarker = "_stream_batch"
   private val mapper = new ObjectMapper()
 
   /** A key from (field, value) pairs — strings, numbers, booleans. The
@@ -85,8 +91,10 @@ object Artifacts {
     val live = read(spark, path).toOption.fold(dir)(_.dir)
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for (st <- fs.listStatus(root)
-         if st.isDirectory && st.getPath.getName != new Path(live).getName)
+    // a checksumming filesystem lists no `.crc` files and deletes a file's
+    // checksum with it
+    val kept = Set(new Path(live).getName, MetaFile, BatchMarker)
+    for (st <- fs.listStatus(root) if !kept(st.getPath.getName))
       fs.delete(st.getPath, true)
     dir
   }

@@ -666,13 +666,6 @@ object Bpe {
     spark.read.parquet(Artifacts.live(spark, path).map(_.dir).getOrElse(
       throw new IllegalArgumentException(s"no BPE artifact at $path")) + "/vocab")
 
-  /** Distributed tokenization under a trained merge table: per document,
-    * the whitespace token count and the BPE token count (the corpus
-    * compression the vocabulary achieves). `merges` is collected once
-    * (≤ numMerges rows — bounded) and broadcast; the pass itself is a
-    * narrow mapPartitions over (doc_id, text) — BPE apply is an
-    * iterative in-word loop with no Catalyst-expression form. Returns
-    * (doc_id, n_ws_tokens, n_bpe_tokens). */
   /** Persisted trained vocabulary — the production shape: a tokenizer is
     * trained ONCE per corpus version and read by every consumer (token
     * counting, SFT budget truncation, packing), never retrained per
@@ -717,6 +710,13 @@ object Bpe {
     spark.sparkContext.broadcast(mergeList.zipWithIndex.toMap)
   }
 
+  /** Distributed tokenization under a trained merge table: per document,
+    * the whitespace token count and the BPE token count (the corpus
+    * compression the vocabulary achieves). `merges` is collected once
+    * (≤ numMerges rows — bounded) and broadcast; the pass itself is a
+    * narrow mapPartitions over (doc_id, text) — BPE apply is an
+    * iterative in-word loop with no Catalyst-expression form. Returns
+    * (doc_id, n_ws_tokens, n_bpe_tokens). */
   def tokenCounts(docs: DataFrame, merges: DataFrame,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession

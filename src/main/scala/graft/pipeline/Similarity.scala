@@ -1177,7 +1177,7 @@ object Similarity {
       refineIters: Int = 1, idCol: String = "vec_id",
       vecCol: String = "embedding"): org.apache.spark.sql.streaming.StreamingQuery = {
     require(embeddings.isStreaming, "streamToIvfIndex expects a streaming DataFrame")
-    val batchMarker = s"$path/_stream_batch"
+    val batchMarker = s"$path/${Artifacts.BatchMarker}"
     // the stream runs in a clone of the caller's session; the caller's
     // own relation cache would keep the pre-append file listing, so its
     // next staleness check would read the index as stale

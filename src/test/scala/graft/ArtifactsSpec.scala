@@ -36,7 +36,7 @@ class ArtifactsSpec extends AnyFunSuite {
 
   private def withProbe(f: Probe => Unit): Unit = {
     val p = new Probe(
-      java.nio.file.Files.createTempDirectory("graft_fence_spec").toString)
+      TestSpark.tempDir("graft_fence_spec"))
     try f(p) finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p.path))
   }
 
@@ -104,6 +104,20 @@ class ArtifactsSpec extends AnyFunSuite {
         assert(d != d1 && Artifacts.readStringIfExists(spark, s"$d/value").contains("new"))
         assert(p.versionDirs == Set(new java.io.File(d).getName))
       }
+    }
+  }
+
+  test("fenced: a rebuild sweeps a retired per-builder meta file; the stream marker stays") {
+    withProbe { p =>
+      val k1 = Artifacts.key("fingerprint" -> "f1")
+      p(k1)
+      // written through Hadoop, so each file gets its `.crc` beside it
+      for (f <- Seq("_ivf_meta.json", "_pairs_meta.json", Artifacts.BatchMarker))
+        Artifacts.writeString(spark, s"${p.path}/$f", "stale")
+      val d2 = p(Artifacts.key("fingerprint" -> "f2"))
+      val left = new java.io.File(p.path).list().toSet
+      assert(left == Set(new java.io.File(d2).getName, "_meta.json", "._meta.json.crc",
+        Artifacts.BatchMarker, s".${Artifacts.BatchMarker}.crc"), left)
     }
   }
 

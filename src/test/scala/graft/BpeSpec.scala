@@ -414,7 +414,7 @@ class BpeSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val packed = graft.pipeline.Corpus.packedSequenceIds(
       docs, merges, vocab, seqLen = 8, shards = 3)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pack_w").toString
+    val dir = TestSpark.tempDir("graft_pack_w")
     try {
       val manifest = graft.pipeline.Corpus.writePackedShards(packed, s"$dir/t")
       // partition discovery re-types the shard directory key as int —
@@ -463,7 +463,7 @@ class BpeSpec extends AnyFunSuite {
     // schema keeps the manifest re-read from dying on schema inference
     val empty = Seq.empty[(Long, Long, Long, Long)]
       .toDF("shard", "seq_bin", "pos", "token_id")
-    val dir = java.nio.file.Files.createTempDirectory("graft_pack_e").toString
+    val dir = TestSpark.tempDir("graft_pack_e")
     try {
       val m = graft.pipeline.Corpus.writePackedShards(empty, s"$dir/t")
       assert(m.count() == 0)
@@ -513,7 +513,7 @@ class BpeSpec extends AnyFunSuite {
 
   test("trainPersistedIfStale: artifact serves, staleness-fence retrains") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_t").toString
+    val dir = TestSpark.tempDir("graft_bpe_t")
     try {
       def m(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
@@ -604,7 +604,7 @@ class BpeSpec extends AnyFunSuite {
 
   test("merges.txt interchange: round trip, header/CRLF tolerance, loud rejects") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mtx").toString
+    val dir = TestSpark.tempDir("graft_mtx")
     try {
       val merges = Bpe.train(corpusDf, numMerges = 10)
       val path = s"$dir/merges.txt"
@@ -657,7 +657,7 @@ class BpeSpec extends AnyFunSuite {
 
   test("vocab.json interchange: round trip, escaping, external-id apply, rejects") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_vjs").toString
+    val dir = TestSpark.tempDir("graft_vjs")
     try {
       def t(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getString(0), r.getLong(1))).toSet

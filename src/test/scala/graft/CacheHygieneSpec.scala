@@ -161,7 +161,7 @@ class CacheHygieneSpec extends AnyFunSuite {
       .transform(PipelineCaches.track)
     mine.count()
     val before = PipelineCaches.trackedCount
-    val dir = java.nio.file.Files.createTempDirectory("graft_scoped_shards").toString
+    val dir = TestSpark.tempDir("graft_scoped_shards")
     try {
       PipelineCaches.scoped {
         Sampling.writeShards(docs, dir, shards = 2)

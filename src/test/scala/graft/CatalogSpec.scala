@@ -135,7 +135,7 @@ class CatalogSpec extends AnyFunSuite {
   test("fingerprint is derivation-sensitive for file-backed frames") {
     import spark.implicits._
     import graft.catalog.Snapshot
-    val dir = Files.createTempDirectory("graft_fp").toString
+    val dir = TestSpark.tempDir("graft_fp")
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
       .write.mode("overwrite").parquet(dir)
     def base = spark.read.parquet(dir)
@@ -150,7 +150,7 @@ class CatalogSpec extends AnyFunSuite {
     // WIDE projections differing only past spark.sql.debug.maxToStringFields
     // (25) must still differ — tree-string rendering elides late fields,
     // which is why the hash uses toJSON (round-7 review)
-    val wideDir = Files.createTempDirectory("graft_fp_wide").toString
+    val wideDir = TestSpark.tempDir("graft_fp_wide")
     spark.range(3).select(
         (0 until 30).map(i => ($"id" + i).as(s"c$i")): _*)
       .write.mode("overwrite").parquet(wideDir)
@@ -180,7 +180,7 @@ class CatalogSpec extends AnyFunSuite {
     val bare = """{"id":0,"jvmId":"47a39540-6812-46d6-b5f2-9e2d7051db56"}"""
     assert(Snapshot.stripJvmIds(bare) == bare)
     // on a real canonicalized plan: no UUID-shaped jvmId survives
-    val dir = Files.createTempDirectory("graft_fp_jvm").toString
+    val dir = TestSpark.tempDir("graft_fp_jvm")
     Seq((1L, "a")).toDF("id", "v").write.mode("overwrite").parquet(dir)
     val json = Snapshot.stripJvmIds(
       spark.read.parquet(dir).select($"id")

@@ -224,7 +224,7 @@ class DedupSpec extends AnyFunSuite {
     val d = Seq(
       (1L, "a b c d e f"), (2L, "x y a b c d z"), (3L, "p q r s t u"))
       .toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("graft_span_spec").toString
+    val path = TestSpark.tempDir("graft_span_spec")
     def asMap(df: DataFrame) = df.collect()
       .map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
@@ -263,7 +263,7 @@ class DedupSpec extends AnyFunSuite {
   test("persisted minhash signatures: fresh serve, incremental merge, compaction") {
     import spark.implicits._
     import graft.pipeline.{Artifacts, Dedup => D}
-    val path = java.nio.file.Files.createTempDirectory("graft_mhsig_spec").toString
+    val path = TestSpark.tempDir("graft_mhsig_spec")
     val metaPath = s"$path/_meta.json"
     def liveDirs = new java.io.File(path).listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
@@ -321,7 +321,7 @@ class DedupSpec extends AnyFunSuite {
         "one two three four five six seven eight"))
       .toDF("doc_id", "text", "alt")
 
-    val sigPath = java.nio.file.Files.createTempDirectory("graft_fence_sig").toString
+    val sigPath = TestSpark.tempDir("graft_fence_sig")
     def sigs(textCol: String) =
       D.minhashSignaturesPersisted(d, sigPath, textCol = textCol)
         .collect().map(r => r.getLong(r.fieldIndex("id")) ->
@@ -332,7 +332,7 @@ class DedupSpec extends AnyFunSuite {
     assert(byAlt(1L) != byAlt(2L),
       "stale text-built signatures served for textCol=alt")
 
-    val spanPath = java.nio.file.Files.createTempDirectory("graft_fence_span").toString
+    val spanPath = TestSpark.tempDir("graft_fence_span")
     def frac(textCol: String) =
       D.dupSpanCoveragePersisted(d, spanPath, n = 3, textCol = textCol)
         .collect().map(r => r.getLong(0) -> r.getDouble(4)).toMap
@@ -342,7 +342,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("minhash pairs through the persisted artifact match the direct miner") {
-    val path = java.nio.file.Files.createTempDirectory("graft_mhpair_spec").toString
+    val path = TestSpark.tempDir("graft_mhpair_spec")
     def key(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(key(Dedup.minhashPairsPersisted(docs, path, threshold = 0.6)) ==
@@ -458,7 +458,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("persisted pair mining: artifact rows equal inline mining; clusters unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pairs").toString
+    val dir = TestSpark.tempDir("graft_pairs")
     try {
       val inline = Dedup.ngramJaccardPairs(docs, threshold = 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -970,7 +970,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("persisted IVF index: identical rows to ivfTopK; fresh index is not rebuilt") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_eq").toString
+    val dir = TestSpark.tempDir("graft_ivf_eq")
     try {
       assert(Similarity.buildIvfIndexIfStale(emb, dir))  // no index yet → build
       assert(!Similarity.buildIvfIndexIfStale(emb, dir)) // same files → fresh
@@ -983,7 +983,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("filtered ANN: only qualifying candidates, still k per query when available") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_filt").toString
+    val dir = TestSpark.tempDir("graft_ivf_filt")
     try {
       Similarity.buildIvfIndex(emb, dir)
       val got = Similarity.ivfTopKPersisted(queries, dir, k = 3,
@@ -999,7 +999,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("appendToIvfIndex: delta served without retraining, only touched lists grow") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_app").toString
+    val dir = TestSpark.tempDir("graft_ivf_app")
     try {
       val rows = emb.collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       val base = rows.toSeq.toDF("vec_id", "embedding")
@@ -1055,7 +1055,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("persisted IVF index: changed corpus content is detected as stale") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_stale").toString
+    val dir = TestSpark.tempDir("graft_ivf_stale")
     try {
       // in-memory frames exercise the row-hash fingerprint fallback
       val rows = emb.limit(100).collect()
@@ -2011,7 +2011,7 @@ class CorpusSpec extends AnyFunSuite {
   }
 
   test("writeShards releases its tracked caches (terminal operation)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards2").toString
+    val dir = TestSpark.tempDir("graft_shards2")
     // a frame the CALLER tracked: writeShards must release only its own
     val mine = docs.select(col("doc_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2784,7 +2784,7 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("writeShards: partitioned layout, shard files in shuffle order") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards").toString
+    val dir = TestSpark.tempDir("graft_shards")
     try {
       Sampling.writeShards(docs, dir, shards = 4)
       val back = spark.read.parquet(dir)

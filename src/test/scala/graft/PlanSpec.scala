@@ -27,6 +27,19 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("LessThan(o_orderdate"), plan)
   }
 
+  test("a bound point-lookup value reaches PushedFilters; the Filter reads it by reference") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+    val plan = gs.cypher("MATCH (c:Customer) WHERE c.c_custkey = $k RETURN c.c_name AS name;",
+      Map("k" -> 4242L)).queryExecution.executedPlan
+    val scan = plan.collectFirst { case s: FileSourceScanExec => s }.get
+    assert(scan.metadata("PushedFilters").contains("EqualTo(c_custkey,4242)"), scan.metadata)
+    val cond = plan.collectFirst { case f: FilterExec => f.condition }.get
+    assert(cond.collect { case r: graft.exec.ParamRef => r.value } == Seq(4242L), cond)
+    assert(cond.collect {
+      case l: org.apache.spark.sql.catalyst.expressions.Literal if l.value == 4242L => l
+    }.isEmpty, cond)
+  }
+
   test("scans read only referenced columns (column pruning)") {
     val plan = formatted(gs.cypher(
       "MATCH (c:Customer) RETURN c.c_custkey AS k;"))
@@ -558,7 +571,7 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, lit, pmod}
     import org.apache.spark.sql.execution.FileSourceScanExec
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_plan").toString
+    val dir = TestSpark.tempDir("graft_ivf_plan")
     try {
       graft.pipeline.Similarity.buildIvfIndex(emb, dir)
       // ONE query probing nprobe=2 lists: at any nlist >= 3 the scan must

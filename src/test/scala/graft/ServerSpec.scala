@@ -396,7 +396,7 @@ class ServerSpec extends AnyFunSuite {
   }
 
   test("Main.boot: env-configured boot serves queries, wires catalog poll, shuts down") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-boot").toString
+    val dir = TestSpark.tempDir("graft-boot")
     val catPath = s"$dir/catalog.json"
     val env = Map(
       "GRAFT_HOST" -> "127.0.0.1",

@@ -149,7 +149,7 @@ class StreamingSpec extends AnyFunSuite {
     g.registerNode("User", "susers", "id")
     g.registerRel("SFollows", "SFollows", "User", "User", adjIndex = true)
     g.persistAdjIndex("SFollows", buckets = 2, partGroups = 4)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_se_ckpt").toString
+    val ckpt = TestSpark.tempDir("graft_se_ckpt")
     val mem = MemoryStream[(Long, Long)]
     val q = g.streamEdges("SFollows",
       mem.toDF().toDF("from_User", "to_User"), ckpt)
@@ -188,8 +188,8 @@ class StreamingSpec extends AnyFunSuite {
     val base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     spark.sql("DROP TABLE IF EXISTS ivf_stream_corpus")
     base.select("vec_id", "embedding").write.saveAsTable("ivf_stream_corpus")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_stream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ivf_ckpt").toString
+    val dir = TestSpark.tempDir("graft_ivf_stream")
+    val ckpt = TestSpark.tempDir("graft_ivf_ckpt")
     try {
       Similarity.buildIvfIndex(spark.table("ivf_stream_corpus"), dir)
       // stream clones of two existing vectors under fresh ids
@@ -238,8 +238,8 @@ class StreamingSpec extends AnyFunSuite {
     val base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     spark.sql("DROP TABLE IF EXISTS ivf_stream_fresh")
     base.select("vec_id", "embedding").write.saveAsTable("ivf_stream_fresh")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_fresh").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ivf_fresh_ckpt").toString
+    val dir = TestSpark.tempDir("graft_ivf_fresh")
+    val ckpt = TestSpark.tempDir("graft_ivf_fresh_ckpt")
     try {
       // the build's corpus prep is released with its scope: no cached plan
       // over the corpus is left to refresh the caller's file listing
