@@ -2,14 +2,17 @@ package graft
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 import graft.catalog._
 import graft.cypher._
-import graft.exec.DataFrameBuilder
+import graft.exec.{DataFrameBuilder, HopAdjacency}
+import graft.pipeline.PipelineCaches
 import graft.planner.Planner
 
 /** Session facade: the Spark-native equivalent of the reference's HTTP
@@ -54,6 +57,7 @@ final class GraftSession(val spark: SparkSession) {
     tableRdds.keys.toSeq.foreach(k => tableRdds.remove(k).foreach(old =>
       try old.unpersist(blocking = false) catch { case _: Exception => }))
     adjCache.clear()
+    invalidateHops()
   }
 
   def registerTable(name: String, df: DataFrame): Unit = {
@@ -62,6 +66,81 @@ final class GraftSession(val spark: SparkSession) {
     // handle, or the obsolete persisted copy stays pinned for the session
     tableRdds.remove(name).foreach(old =>
       try old.unpersist(blocking = false) catch { case _: Exception => })
+    invalidateHops()
+  }
+
+  // ---- session-held hop adjacencies ----------------------------------------
+
+  /** A broadcast hop adjacency and its leases: one per cache scope that
+    * reads it (released with the scope) and, once published, one for the
+    * session (dropped at the next write). It is destroyed when the last
+    * lease goes, so a read in flight across a write finishes on the
+    * adjacency it was built against. */
+  private final class Leased(val bc: Broadcast[HopAdjacency]) {
+    private var leases = 1
+    /** Takes a lease unless the adjacency is already destroyed. */
+    def acquire(): Boolean = synchronized { if (leases > 0) leases += 1; leases > 0 }
+    def release(): Unit = if (synchronized { leases -= 1; leases == 0 }) bc.destroy()
+  }
+
+  /** The adjacencies of unfiltered hop bases, keyed by the collected base's
+    * canonicalized plan. Every entry belongs to the current generation:
+    * [[invalidateHops]] bumps it and empties the map. */
+  private val hops = scala.collection.mutable.HashMap.empty[LogicalPlan, Leased]
+  private var hopGen = 0L
+  private var hopsPublished = 0L
+
+  /** The hop generation: read before a hop base's tables are, so that a
+    * base built from data a later write replaced is never published. */
+  private[graft] def hopGeneration: Long = hops.synchronized(hopGen)
+
+  /** The adjacencies the session holds, and how many it has published
+    * since it started: what `/metrics` reports. */
+  private[graft] def hopAdjacencies: (Seq[Broadcast[HopAdjacency]], Long) =
+    hops.synchronized((hops.values.map(_.bc).toVector, hopsPublished))
+
+  /** Starts a new hop generation and drops the session's lease on every
+    * adjacency of the old one. Runs after every change a hop base can
+    * read: a write (once its tables and adjacency index are swapped), a
+    * registered table, a catalog swap and [[close]]. */
+  private def invalidateHops(): Unit = {
+    val old = hops.synchronized {
+      hopGen += 1
+      val v = hops.values.toVector
+      hops.clear()
+      v
+    }
+    old.foreach(_.release())
+  }
+
+  /** The broadcast adjacency of hop base `pairs`, leased to the calling
+    * thread's cache scope ([[PipelineCaches.onClear]]).
+    *
+    * A `held` base (one with no per-edge filter: it depends only on the
+    * catalog and the table contents) is collected once per generation:
+    * the first use builds it and, when no write happened since generation
+    * `since` was read, publishes it for the session; later uses take a
+    * lease on it. When two first uses race, both build, one is published
+    * and the other's adjacency goes with its own scope. Any other base is
+    * collected for the calling scope alone. */
+  private[graft] def hopAdjacency(pairs: DataFrame, since: Long,
+      held: Boolean): Broadcast[HopAdjacency] = {
+    val base = HopAdjacency.base(pairs)
+    lazy val key = base.queryExecution.normalized.canonicalized
+    val lease =
+      (if (held) hops.synchronized(hops.get(key).filter(_.acquire())) else None)
+        .getOrElse {
+          val built = new Leased(spark.sparkContext.broadcast(HopAdjacency.collect(base)))
+          if (held) hops.synchronized {
+            if (hopGen == since && !hops.contains(key) && built.acquire()) {
+              hops(key) = built
+              hopsPublished += 1
+            }
+          }
+          built
+        }
+    PipelineCaches.onClear(lease)(_.release())
+    lease.bc
   }
 
   def table(name: String): DataFrame =
@@ -298,6 +377,7 @@ final class GraftSession(val spark: SparkSession) {
       spark.catalog.refreshTable(name)
       adjCache.put((relLabel, outgoing), spark.table(name).select("id", "neighbors"))
     }
+    invalidateHops()
   }
 
   /** Append edge ROWS to the relationship's backing table (in-memory
@@ -312,10 +392,16 @@ final class GraftSession(val spark: SparkSession) {
     * so two unserialized writers on one label would lose one's rows. */
   private val writeLock = new Object
 
+  /** Runs a write under [[writeLock]]. The hop generation moves on when
+    * the write ends, after its tables AND adjacency index are swapped: a
+    * reader that reads the new generation then reads the new data. */
+  private def writing[A](body: => A): A =
+    writeLock.synchronized { try body finally invalidateHops() }
+
   /** Append ROWS to a registered backing table: in-memory frames union
     * (materialized — see the lineage note below); catalog-managed tables
     * append-write. Shared by edge appends and CREATE node inserts;
-    * callers hold [[writeLock]]. */
+    * callers run inside [[writing]]. */
   private def appendTableRows(tableName: String, rows: DataFrame): Unit = {
     if (tables.contains(tableName)) {
       val merged = tables(tableName).unionByName(rows)
@@ -389,7 +475,7 @@ final class GraftSession(val spark: SparkSession) {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeLock.synchronized {
+        writing {
           val applied = spark.sessionState.catalog.getTableMetadata(
             org.apache.spark.sql.catalyst.TableIdentifier(marker))
             .properties.get(StreamBatchProp).map(_.toLong)
@@ -419,6 +505,7 @@ final class GraftSession(val spark: SparkSession) {
     val c = GraphCatalog.fromJson(
       java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
     _catalog = c
+    invalidateHops()
     c
   }
 
@@ -428,8 +515,11 @@ final class GraftSession(val spark: SparkSession) {
   def refreshCatalogIfNewer(path: String): Boolean = {
     val onDisk = GraphCatalog.fromJson(
       java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
-    if (onDisk.version > _catalog.version) { _catalog = onDisk; true }
-    else false
+    if (onDisk.version > _catalog.version) {
+      _catalog = onDisk
+      invalidateHops()
+      true
+    } else false
   }
 
   @volatile private var refreshThread: Thread = null
@@ -766,7 +856,7 @@ final class GraftSession(val spark: SparkSession) {
       }
     }
 
-    writeLock.synchronized {
+    writing {
       nodeRows.foreach { case (label, rows) =>
         appendTableRows(_catalog.node(label).tableName,
           typedRows(_catalog.node(label).tableName, rows.toSeq))

@@ -167,6 +167,8 @@ final class DataFrameBuilder(
   private def edgeDF(e: ResolvedEdge, plan: GraphPlan): DataFrame = {
     val s = e.schema
     val schemas = s +: e.altSchemas
+    // read before any table this base reads (GraftSession.hopAdjacency)
+    val since = session.hopGeneration
     val base = session.table(s.tableName)
     val refCols = plan.referencedProps.getOrElse(e.alias, Set.empty).toSeq.sorted
     // inline-prop filters ({w: 5}) are pushed without appearing in
@@ -222,9 +224,11 @@ final class DataFrameBuilder(
 
     // Bounded var-length and distance-only shortestPath hops compose in
     // one of two forms, chosen per hop base:
-    //  - hashed: a broadcast-small base with integral ids is collected
-    //    once, here, into a hash adjacency and walked level-synchronously
-    //    per source row inside one stage (HopAdjacency.expand);
+    //  - hashed: a broadcast-small base with integral ids is walked level-
+    //    synchronously per source row inside one stage (HopAdjacency.expand)
+    //    over a hash adjacency the session hands out: collected once per
+    //    write for a base with no per-edge filter, per request otherwise
+    //    (GraftSession.hopAdjacency);
     //  - join: any other base composes one equi-join superstep per level
     //    (composeHopsJoin, composeShortestFrontier), the only form that
     //    runs on a base the driver cannot hold.
@@ -422,6 +426,9 @@ final class DataFrameBuilder(
         val pairs = filteredOriented.select("__src", "__dst")
         val h1 = if (e.undirectedSameLabel) pairs else pairs.distinct()
         val hashed = smallEdges && HopAdjacency.integralIds(pairs)
+        def hashedWalk(shortest: Boolean) = HopAdjacency.expand(pairs,
+          session.hopAdjacency(pairs, since, held = e.pushedFilters.isEmpty),
+          lo, hi, shortest)
         val needsPathValues = e.shortest && e.pathAlias.isDefined &&
           pathValueRelAliases(plan).contains(e.alias)
         // allShortestPaths ALWAYS materializes paths: its row count IS the
@@ -432,12 +439,12 @@ final class DataFrameBuilder(
                     lo, hi, undirected = e.undirectedSameLabel,
                     keepAll = e.allShortest)
                 else if (e.shortest)
-                  if (hashed) HopAdjacency.expand(pairs, lo, hi, shortest = true)
+                  if (hashed) hashedWalk(shortest = true)
                   else composeShortestFrontier(h1, lo, hi)
                 else if (e.pathAlias.isDefined)
                   composePaths(if (e.undirectedSameLabel) h1.distinct() else h1,
                     lo, hi, undirected = e.undirectedSameLabel)
-                else if (hashed) HopAdjacency.expand(pairs, lo, hi, shortest = false)
+                else if (hashed) hashedWalk(shortest = false)
                 else composeHopsJoin(h1, lo, hi)).alias(e.alias)
       case _ =>
     }

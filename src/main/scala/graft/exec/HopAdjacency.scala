@@ -1,5 +1,6 @@
 package graft.exec
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, explode, get, inline, typedLit, udf}
 import org.apache.spark.sql.types._
@@ -140,13 +141,29 @@ object HopAdjacency {
       java.util.Arrays.copyOf(raw, w))
   }
 
-  /** The hashed expansion of hop base `pairs` (`__src`, `__dst`, integral):
-    * `(__src, __dst)` rows, or `(__src, __dst, __len)` with `shortest`.
+  /** The frame a hop base is collected from: `pairs`' endpoints as Long,
+    * rows with a null endpoint dropped (no node join can match them). Its
+    * canonicalized plan keys a session-held adjacency
+    * ([[graft.GraftSession.hopAdjacency]]). */
+  private[graft] def base(pairs: DataFrame): DataFrame =
+    pairs
+      .select(col("__src").cast(LongType), col("__dst").cast(LongType))
+      .where(col("__src").isNotNull && col("__dst").isNotNull)
+
+  /** Collects a [[base]] frame NOW (its jobs run here) into an adjacency. */
+  private[graft] def collect(base: DataFrame): HopAdjacency = {
+    val rows = base.collect()
+    HopAdjacency(rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+  }
+
+  /** The hashed expansion of hop base `pairs` (`__src`, `__dst`, integral)
+    * over its broadcast adjacency `adj`: `(__src, __dst)` rows, or
+    * `(__src, __dst, __len)` with `shortest`.
     *
-    * The base is collected NOW, once, broadcast, and the broadcast is
-    * registered with the calling thread's cache scope, so it is released
-    * with the request. Rows with a null endpoint are dropped: no node
-    * join can match them. The sources are the adjacency's keys, read by
+    * The caller owns `adj` and keeps it alive while the frame can run:
+    * [[graft.GraftSession.hopAdjacency]] holds an unfiltered base's
+    * adjacency for the session until a write, and leases it to the calling
+    * thread's cache scope. The sources are the adjacency's keys, read by
     * index from one array literal over a one-partition range, under a
     * generator: an anchor filter Catalyst infers on `__src` (from
     * `a.id = $k` through the join) pushes through the generator onto the
@@ -155,29 +172,21 @@ object HopAdjacency {
     * compiles once per anchor value; on the range it is a physical filter
     * that reads a bound value by reference, [[ParamRefs]].)
     */
-  def expand(pairs: DataFrame, lo: Int, hi: Int, shortest: Boolean): DataFrame = {
-    val spark = pairs.sparkSession
+  def expand(pairs: DataFrame, adj: Broadcast[HopAdjacency], lo: Int, hi: Int,
+      shortest: Boolean): DataFrame = {
     val srcType = pairs.schema("__src").dataType
     val dstType = pairs.schema("__dst").dataType
-    val rows = pairs
-      .select(col("__src").cast(LongType), col("__dst").cast(LongType))
-      .where(col("__src").isNotNull && col("__dst").isNotNull)
-      .collect()
-    val adj = HopAdjacency(rows.map(_.getLong(0)), rows.map(_.getLong(1)))
-    val bc = spark.sparkContext.broadcast(adj)
-    graft.pipeline.PipelineCaches.onClear(bc)(_.destroy())
-
-    val keys = adj.sources.toArray
-    val sources = spark.range(0, keys.length, 1, 1)
+    val keys = adj.value.sources.toArray
+    val sources = pairs.sparkSession.range(0, keys.length, 1, 1)
       .select(get(typedLit(keys), col("id").cast(IntegerType))
         .cast(srcType).as("__src"))
     val src = col("__src").cast(LongType)
     if (shortest) {
-      val walk = udf((s: Long) => bc.value.shortest(s, lo, hi))
+      val walk = udf((s: Long) => adj.value.shortest(s, lo, hi))
       sources.select(col("__src"), inline(walk(src)))
         .select(col("__src"), col("__dst").cast(dstType).as("__dst"), col("__len"))
     } else {
-      val walk = udf((s: Long) => bc.value.reach(s, lo, hi))
+      val walk = udf((s: Long) => adj.value.reach(s, lo, hi))
       sources.select(col("__src"), explode(walk(src)).as("__dst"))
         .select(col("__src"), col("__dst").cast(dstType).as("__dst"))
     }

@@ -11,9 +11,11 @@ import org.apache.spark.storage.StorageLevel
   * a large-edge shortestPath past 6 hops and CALL+UNION persist
   * intermediates because several consumers in the same job read them
   * (re-deriving the lineage per consumer costs more than the cache); a
-  * var-length hop on a broadcast-small base broadcasts its adjacency.
-  * Spark offers no "unpersist when the consuming query finishes" hook for
-  * a lazily-executed result, so each persist or broadcast is registered
+  * var-length hop on a broadcast-small base reads a broadcast adjacency,
+  * built for the request when the hop filters its edges and otherwise
+  * held by the session, which leases it to the request. Spark offers no
+  * "unpersist when the consuming query finishes" hook for a lazily-
+  * executed result, so each persist, broadcast or lease is registered
   * here and released when its scope ends.
   *
   *   - What registers: [[track]] (a persisted `DataFrame`), [[onClear]]
@@ -45,9 +47,11 @@ import org.apache.spark.storage.StorageLevel
   * `DataFrame` handle collected before its release would leave its blocks
   * pinned for the JVM's lifetime (the round-7 leak).
   *
-  * Only registered state is released: other caches in the session, such
-  * as GraftSession's memoized adjacency indexes (session-lifetime by
-  * design), are untouched.
+  * Only registered state is released. The session-lifetime caches live
+  * in `GraftSession` and follow its generation instead: the memoized
+  * adjacency indexes, and the held hop adjacencies, whose session lease
+  * is dropped at the next write (or table, catalog or close) while each
+  * request's lease still goes with its scope.
   */
 object PipelineCaches {
 

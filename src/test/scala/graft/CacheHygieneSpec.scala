@@ -18,6 +18,11 @@ import graft.pipeline.{Dedup, PipelineCaches, Sampling, Similarity}
   * registered: another thread's frames and round RDDs, a frame a
   * concurrent scope persisted under the same plan, and an enclosing
   * scope's frames all survive it.
+  *
+  * The hop-adjacency tests pin the two lifetimes of a var-length hop's
+  * broadcast adjacency: a filtered base's goes with its request scope; an
+  * unfiltered base's is held by the session until a write or `close()`,
+  * and a read that leased it finishes on it.
   */
 class CacheHygieneSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -178,39 +183,155 @@ class CacheHygieneSpec extends AnyFunSuite {
     assert(CacheProbe.isEmpty(spark))
   }
 
+  /** `body` over V nodes 1..7 and an `E` hop graph 1→2→3→1, 3→4→5→6,
+    * where `w` is 1 on every edge but 3→4. `saved` edges are a saved table:
+    * a CREATE appends files, so the hop base stays broadcast-small (a
+    * written in-memory table loses its size estimate). Its file scans
+    * broadcast a Hadoop conf that only a GC frees, so block checks on
+    * every broadcast of a build read in-memory edges. */
+  private def withHopGraph(saved: Boolean)(body: GraftSession => Unit): Unit = {
+    val edges = Seq((1L, 2L, 1), (2L, 3L, 1), (3L, 1L, 1), (3L, 4L, 2), (4L, 5L, 1), (5L, 6L, 1))
+      .toDF("from_V", "to_V", "w")
+    val table = if (saved) s"hop_edges_${java.util.UUID.randomUUID().toString.replace("-", "")}" else "HE"
+    val g = new GraftSession(spark)
+    try {
+      if (saved) edges.write.saveAsTable(table) else g.registerTable(table, edges)
+      g.registerTable("hv", (1L to 7L).toDF("id"))
+      g.registerNode("V", "hv", "id")
+      g.registerRel("E", table, "V", "V")
+      body(g)
+    } finally {
+      g.close()
+      if (saved) spark.sql(s"DROP TABLE IF EXISTS $table")
+    }
+  }
+
+  private val reachFrom1 = "MATCH (a:V)-[:E*1..8]->(b:V) WHERE a.id = 1 RETURN b.id AS b;"
+
+  /** Waits up to 10 s for every broadcast in `ids` to lose its blocks. */
+  private def gone(ids: Set[Long]): Boolean = {
+    import org.apache.spark.graftprobe.BlockProbe
+    val deadline = System.nanoTime() + 10000000000L
+    while ((BlockProbe.broadcastIds & ids).nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    (BlockProbe.broadcastIds & ids).isEmpty
+  }
+
+  /** `q` built and collected in a cache scope of its own: its rows, and
+    * the broadcasts the build made. */
+  private def scopedRead(g: GraftSession, q: String): (Set[Long], Set[Long]) = {
+    import org.apache.spark.graftprobe.BlockProbe
+    val before = BlockProbe.broadcastIds
+    PipelineCaches.scoped {
+      val df = g.cypher(q)
+      val built = BlockProbe.broadcastIds -- before
+      (TestSpark.longs(df), built)
+    }
+  }
+
+  /** (broadcast ids of the adjacencies `g` holds, adjacencies it built). */
+  private def held(g: GraftSession): (Set[Long], Long) = {
+    val (bcs, builds) = g.hopAdjacencies
+    (bcs.map(_.id).toSet, builds)
+  }
+
+  private def withWrites[A](body: => A): A = {
+    spark.conf.set("spark.graft.writes.enabled", "true")
+    try body finally spark.conf.set("spark.graft.writes.enabled", "false")
+  }
+
   test("a scoped var-length query leaves no broadcast block or persisted RDD") {
     import org.apache.spark.graftprobe.BlockProbe
-    val g = new GraftSession(spark)
-    g.registerTable("hv", (1L to 6L).toDF("id"))
-    g.registerTable("HE", Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 6L))
-      .toDF("from_V", "to_V"))
-    g.registerNode("V", "hv", "id")
-    g.registerRel("E", "HE", "V", "V")
-    val calls = Seq(
-      "var-length" -> "MATCH (a:V)-[:E*1..8]->(b:V) WHERE a.id = 1 RETURN b.id AS b;",
-      "shortestPath" -> """MATCH p = shortestPath((a:V)-[:E*1..8]->(b:V))
-        |RETURN a.id AS a, b.id AS b, length(p) AS len;""".stripMargin)
-    val sc = spark.sparkContext
-    for ((name, q) <- calls) {
-      val rddsBefore = sc.getPersistentRDDs.keySet
-      val before = BlockProbe.broadcastIds
-      // the frame stays referenced past the scope, so only the release,
-      // not a GC of the plan, can drop what the build broadcast
-      val (df, built) = PipelineCaches.scoped {
-        val df = g.cypher(q)
-        val built = BlockProbe.broadcastIds -- before
-        assert(df.collect().nonEmpty, name)
-        (df, built)
+    // a per-edge filter keeps the hop base's adjacency request-scoped
+    withHopGraph(saved = false) { g =>
+      val calls = Seq(
+        "var-length" -> "MATCH (a:V)-[:E*1..8 {w: 1}]->(b:V) WHERE a.id = 1 RETURN b.id AS b;",
+        "shortestPath" -> """MATCH p = shortestPath((a:V)-[f:E*1..8]->(b:V))
+          |WHERE f.w = 1 RETURN a.id AS a, b.id AS b, length(p) AS len;""".stripMargin)
+      val sc = spark.sparkContext
+      for ((name, q) <- calls) {
+        val rddsBefore = sc.getPersistentRDDs.keySet
+        val before = BlockProbe.broadcastIds
+        // the frame stays referenced past the scope, so only the release,
+        // not a GC of the plan, can drop what the build broadcast
+        val (df, built) = PipelineCaches.scoped {
+          val df = g.cypher(q)
+          val built = BlockProbe.broadcastIds -- before
+          assert(df.collect().nonEmpty, name)
+          (df, built)
+        }
+        assert(built.nonEmpty, s"$name: precondition: the build broadcasts its hop adjacency")
+        assert(gone(built),
+          s"$name: broadcast blocks ${BlockProbe.broadcastIds & built} survived its scope")
+        assert(sc.getPersistentRDDs.keySet -- rddsBefore == Set.empty,
+          s"$name left persisted RDDs after its scope")
+        assert(df.columns.nonEmpty)
       }
-      assert(built.nonEmpty, s"$name: precondition: the build broadcasts its hop adjacency")
-      val deadline = System.nanoTime() + 10000000000L
-      while ((BlockProbe.broadcastIds & built).nonEmpty && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      assert((BlockProbe.broadcastIds & built).isEmpty,
-        s"$name: broadcast blocks ${BlockProbe.broadcastIds & built} survived its scope")
-      assert(sc.getPersistentRDDs.keySet -- rddsBefore == Set.empty,
-        s"$name left persisted RDDs after its scope")
-      assert(df.columns.nonEmpty)
+      assert(held(g) == ((Set.empty, 0L)), "a filtered hop base was held by the session")
+    }
+  }
+
+  test("a repeat of an unfiltered var-length query builds nothing") {
+    import org.apache.spark.graftprobe.BlockProbe
+    withHopGraph(saved = false) { g =>
+      val (first, built) = scopedRead(g, reachFrom1)
+      assert(first == Set(1L, 2L, 3L, 4L, 5L, 6L))
+      val (adj, builds) = held(g)
+      assert(adj.size == 1 && adj.subsetOf(built) && builds == 1L, s"$adj of $built, $builds")
+      val (again, rebuilt) = scopedRead(g, reachFrom1)
+      assert(again == first)
+      assert(rebuilt.isEmpty, s"the repeat broadcast $rebuilt")
+      assert(held(g) == ((adj, 1L)))
+      // the session, not the ended scopes, keeps the adjacency
+      assert(adj.subsetOf(BlockProbe.broadcastIds))
+    }
+  }
+
+  test("a write releases the old adjacency, and the next read sees the new edge") {
+    withHopGraph(saved = true) { g =>
+      val (before, _) = scopedRead(g, reachFrom1)
+      assert(!before.contains(7L))
+      val (old, _) = held(g)
+      assert(old.size == 1)
+      withWrites(g.cypher("CREATE (:V {id: 6})-[:E {w: 1}]->(:V {id: 7});").collect())
+      assert(gone(old), "the write kept the old adjacency's broadcast")
+      assert(held(g) == ((Set.empty, 1L)))
+      val (after, _) = scopedRead(g, reachFrom1)
+      assert(after == before + 7L)
+      val (fresh, builds) = held(g)
+      assert(fresh.size == 1 && fresh != old && builds == 2L)
+    }
+  }
+
+  test("a read in flight across a write returns the old answer; its scope releases the old adjacency") {
+    import org.apache.spark.graftprobe.BlockProbe
+    withHopGraph(saved = true) { g =>
+      val (inFlight, adj) = PipelineCaches.scoped {
+        val df = g.cypher(reachFrom1) // built: the adjacency is broadcast and leased
+        val (adj, _) = held(g)
+        assert(adj.size == 1, "precondition: the read's build publishes its hop adjacency")
+        withWrites(g.cypher("CREATE (:V {id: 6})-[:E {w: 1}]->(:V {id: 7});").collect())
+        assert(held(g)._1.isEmpty)
+        assert(adj.subsetOf(BlockProbe.broadcastIds),
+          "the write destroyed an adjacency a running read still leases")
+        (TestSpark.longs(df), adj)
+      }
+      assert(inFlight == Set(1L, 2L, 3L, 4L, 5L, 6L))
+      assert(gone(adj), s"broadcast blocks ${BlockProbe.broadcastIds & adj} survived the read's scope")
+      assert(scopedRead(g, reachFrom1)._1.contains(7L))
+    }
+  }
+
+  test("close() destroys every held hop adjacency") {
+    withHopGraph(saved = false) { g =>
+      scopedRead(g, reachFrom1)
+      scopedRead(g,
+        "MATCH p = shortestPath((a:V)-[:E*1..8]-(b:V)) WHERE a.id = 6 RETURN b.id AS b;")
+      val (adjs, builds) = held(g)
+      assert(adjs.size == 2 && builds == 2L, s"$adjs, $builds")
+      g.close()
+      assert(gone(adjs), "close() left a hop adjacency's broadcast")
+      assert(held(g) == ((Set.empty, 2L)))
     }
   }
 

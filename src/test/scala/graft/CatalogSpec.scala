@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.Paths
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -202,7 +202,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("catalog save / load / version-poll refresh") {
     val g = freshGraph()
-    val path = Files.createTempFile("graft_catalog", ".json").toString
+    val path = Paths.get(TestSpark.tempDir("graft_catalog"), "catalog.json").toString
     g.saveCatalog(path)
 
     val g2 = new GraftSession(spark)
@@ -224,7 +224,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("background catalog refresh picks up a version bump") {
     val g = freshGraph()
-    val path = Files.createTempFile("graft_catalog_bg", ".json").toString
+    val path = Paths.get(TestSpark.tempDir("graft_catalog_bg"), "catalog.json").toString
     g.saveCatalog(path)
 
     val g2 = new GraftSession(spark)
@@ -245,7 +245,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("refresh thread stops cleanly on interrupt (no escaping throw)") {
     val g = freshGraph()
-    val path = Files.createTempFile("graft_catalog_stop", ".json").toString
+    val path = Paths.get(TestSpark.tempDir("graft_catalog_stop"), "catalog.json").toString
     g.saveCatalog(path)
     val g2 = new GraftSession(spark)
     g2.loadCatalog(path)
