@@ -15,18 +15,23 @@ object Bench {
   private def calibrate(): Double = {
     val times = (0 until 3).map { _ =>
       val t0 = System.nanoTime()
-      var x = 0x9E3779B97F4A7C15L
-      var acc = 0L
-      var i = 0
-      while (i < 200000000) {
-        x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-        acc += x
-        i += 1
-      }
-      if (acc == 42L) System.err.println("calib sentinel") // keep the loop live
+      calibrationLoop()
       (System.nanoTime() - t0) / 1e9
     }.sorted
     times(1)
+  }
+
+  /** The calibration work: 200M xorshift steps, accumulated. */
+  private def calibrationLoop(): Unit = {
+    var x = 0x9E3779B97F4A7C15L
+    var acc = 0L
+    var i = 0
+    while (i < 200000000) {
+      x ^= x << 13; x ^= x >>> 7; x ^= x << 17
+      acc += x
+      i += 1
+    }
+    if (acc == 42L) System.err.println("calib sentinel") // keep the loop live
   }
 
   /** The same fixed work run SIMULTANEOUSLY on `n` threads (wall time for
@@ -38,19 +43,7 @@ object Bench {
     * up as calib_par >> calib while calib stays flat. */
   private def calibratePar(n: Int): Double = {
     val t0 = System.nanoTime()
-    val threads = (0 until n).map { _ =>
-      new Thread(() => {
-        var x = 0x9E3779B97F4A7C15L
-        var acc = 0L
-        var i = 0
-        while (i < 200000000) {
-          x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-          acc += x
-          i += 1
-        }
-        if (acc == 42L) System.err.println("calib sentinel")
-      })
-    }
+    val threads = (0 until n).map(_ => new Thread(() => calibrationLoop()))
     threads.foreach(_.start())
     threads.foreach(_.join())
     (System.nanoTime() - t0) / 1e9
@@ -115,7 +108,7 @@ object Bench {
       // artifact here, so the timed iterations of the entries that read one
       // time the probe, not the one-off corpus build (fresh container =
       // empty tmpdir = the first timed iteration otherwise pays it)
-      PipelineEntries.prewarmPersisted(spark, sfDir)
+      graft.gate.GateInputs.prewarmPersisted(spark, sfDir)
       // Graph-fixture warm-up: TpchGraph.session registers the graph
       // tables and adjacency indexes, and the FIRST graph-round job pays
       // class-loading + closure-cleaner + fixture-build tax. That cost

@@ -35,12 +35,15 @@ final class GraftSession(val spark: SparkSession) {
   def catalog: GraphCatalog = _catalog
 
   private val tables = TrieMap.empty[String, DataFrame]
-  private val adjCache = TrieMap.empty[(String, Boolean), DataFrame]
+  /** Adjacency reads served from persisted index tables ([[attachAdjIndex]],
+    * [[persistAdjIndex]], [[appendEdges]]): those carry their own
+    * staleness fence, so they outlive a hop generation. */
+  private val adjTables = TrieMap.empty[(String, Boolean), DataFrame]
   /** Persisted materialization handles for streamed in-memory tables
     * ([[appendEdgeRows]]) — kept so the predecessor can be explicitly
     * unpersisted when a batch replaces it. */
-  private val tableRdds =
-    TrieMap.empty[String, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
+  private val tableRdds = TrieMap.empty[String,
+    org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]
 
   // ---- registration --------------------------------------------------------
 
@@ -56,7 +59,7 @@ final class GraftSession(val spark: SparkSession) {
   def close(): Unit = {
     tableRdds.keys.toSeq.foreach(k => tableRdds.remove(k).foreach(old =>
       try old.unpersist(blocking = false) catch { case _: Exception => }))
-    adjCache.clear()
+    adjTables.clear()
     invalidateHops()
   }
 
@@ -84,9 +87,11 @@ final class GraftSession(val spark: SparkSession) {
   }
 
   /** The adjacencies of unfiltered hop bases, keyed by the collected base's
-    * canonicalized plan. Every entry belongs to the current generation:
-    * [[invalidateHops]] bumps it and empties the map. */
+    * canonicalized plan, and the in-memory adjacency indexes
+    * ([[adjIndex]]). Every entry belongs to the current generation:
+    * [[invalidateHops]] bumps it and empties both maps. */
   private val hops = scala.collection.mutable.HashMap.empty[LogicalPlan, Leased]
+  private val adjMemos = scala.collection.mutable.HashMap.empty[(String, Boolean), DataFrame]
   private var hopGen = 0L
   private var hopsPublished = 0L
 
@@ -99,18 +104,21 @@ final class GraftSession(val spark: SparkSession) {
   private[graft] def hopAdjacencies: (Seq[Broadcast[HopAdjacency]], Long) =
     hops.synchronized((hops.values.map(_.bc).toVector, hopsPublished))
 
-  /** Starts a new hop generation and drops the session's lease on every
-    * adjacency of the old one. Runs after every change a hop base can
-    * read: a write (once its tables and adjacency index are swapped), a
-    * registered table, a catalog swap and [[close]]. */
+  /** Starts a new hop generation, drops the session's lease on every
+    * adjacency of the old one and unpersists its in-memory adjacency
+    * indexes. Runs after every change a hop base can read: a write (once
+    * its tables and adjacency index are swapped), a registered table, a
+    * catalog swap and [[close]]. */
   private def invalidateHops(): Unit = {
-    val old = hops.synchronized {
+    val (old, memos) = hops.synchronized {
       hopGen += 1
-      val v = hops.values.toVector
+      val v = (hops.values.toVector, adjMemos.values.toVector)
       hops.clear()
+      adjMemos.clear()
       v
     }
     old.foreach(_.release())
+    memos.foreach(f => try f.unpersist(blocking = false) catch { case _: Exception => })
   }
 
   /** The broadcast adjacency of hop base `pairs`, leased to the calling
@@ -198,11 +206,14 @@ final class GraftSession(val spark: SparkSession) {
   /** Pre-aggregated adjacency index (`id, neighbors`): the Spark analogue of
     * the reference's bitmap AggregatingMergeTree tables
     * (ddl_query.rs:290-311). `collect_set` ≙ groupBitmap (deduplicated
-    * neighbor set). Built lazily, cached MEMORY_AND_DISK; call
-    * [[persistAdjIndex]] for the durable bucketed layout. */
+    * neighbor set). Built lazily, cached MEMORY_AND_DISK until the hop
+    * generation moves on; call [[persistAdjIndex]] for the durable
+    * bucketed layout. */
   def adjIndex(relLabel: String, outgoing: Boolean): DataFrame =
-    adjCache.getOrElseUpdate((relLabel, outgoing),
-      buildAdjIndex(relLabel, outgoing).persist(StorageLevel.MEMORY_AND_DISK))
+    adjTables.getOrElse((relLabel, outgoing), hops.synchronized {
+      adjMemos.getOrElseUpdate((relLabel, outgoing),
+        buildAdjIndex(relLabel, outgoing).persist(StorageLevel.MEMORY_AND_DISK))
+    })
 
   /** Point this session's adjacency reads at tables previously written by
     * [[persistAdjIndex]] (possibly by another process — the discovery step
@@ -232,7 +243,7 @@ final class GraftSession(val spark: SparkSession) {
       persistAdjIndex(relLabel, buckets, partGroups)
     } else
       for (outgoing <- Seq(true, false))
-        adjCache.put((relLabel, outgoing),
+        adjTables.put((relLabel, outgoing),
           spark.table(adjTableName(relLabel, outgoing)).select("id", "neighbors"))
   }
 
@@ -301,7 +312,7 @@ final class GraftSession(val spark: SparkSession) {
       spark.sql(s"ALTER TABLE `$name` SET TBLPROPERTIES (" +
         s"'$FingerprintProp' = '$fp', '$BucketsProp' = '$buckets', " +
         s"'$PartGroupsProp' = '$partGroups')")
-      adjCache.put((relLabel, outgoing), spark.table(name).select("id", "neighbors"))
+      adjTables.put((relLabel, outgoing), spark.table(name).select("id", "neighbors"))
     }
   }
 
@@ -375,7 +386,7 @@ final class GraftSession(val spark: SparkSession) {
       spark.sql(s"ALTER TABLE `$name` SET TBLPROPERTIES (" +
         s"'$FingerprintProp' = '$fp')")
       spark.catalog.refreshTable(name)
-      adjCache.put((relLabel, outgoing), spark.table(name).select("id", "neighbors"))
+      adjTables.put((relLabel, outgoing), spark.table(name).select("id", "neighbors"))
     }
     invalidateHops()
   }
@@ -413,8 +424,11 @@ final class GraftSession(val spark: SparkSession) {
       // explicit unpersist of the old HANDLE one full table copy would
       // accumulate per batch; after the drop, an eviction of the new copy
       // just recomputes through the original (un-persisted) lineage.
-      val rdd = merged.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      val mat = spark.createDataFrame(rdd, merged.schema)
+      // The new frame keeps the merged plan's size estimate, so a written
+      // table still broadcasts and hashes its hop bases.
+      val rdd = merged.queryExecution.toRdd.map(_.copy())
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val mat = org.apache.spark.sql.graftexec.Materialized(merged, rdd)
       mat.count()
       tables.put(tableName, mat)
       tableRdds.put(tableName, rdd).foreach(old =>
@@ -867,9 +881,6 @@ final class GraftSession(val spark: SparkSession) {
         val persisted = Seq(true, false).forall(o =>
           spark.catalog.tableExists(adjTableName(relType, o)))
         if (persisted) appendEdges(relType, df)
-        else for (o <- Seq(true, false))
-          adjCache.remove((relType, o)).foreach(f =>
-            try f.unpersist(blocking = false) catch { case _: Exception => })
       }
     }
 

@@ -48,10 +48,12 @@ import org.apache.spark.storage.StorageLevel
   * pinned for the JVM's lifetime (the round-7 leak).
   *
   * Only registered state is released. The session-lifetime caches live
-  * in `GraftSession` and follow its generation instead: the memoized
-  * adjacency indexes, and the held hop adjacencies, whose session lease
-  * is dropped at the next write (or table, catalog or close) while each
-  * request's lease still goes with its scope.
+  * in `GraftSession` and follow its hop generation instead, which moves
+  * on at every write, registered table, catalog swap and close: the
+  * in-memory adjacency indexes are unpersisted then, and the held hop
+  * adjacencies lose their session lease while each request's lease still
+  * goes with its scope. Reads of persisted adjacency index tables are
+  * not caches: the edge-table fingerprint fences those.
   */
 object PipelineCaches {
 

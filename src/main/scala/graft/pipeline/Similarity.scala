@@ -339,8 +339,9 @@ object Similarity {
   }
 
   /** Deterministic ±1 hyperplane signs from a seeded RNG — shared between
-    * the Spark plan and the DuckDB oracle-SQL generator (PipelineEntries),
-    * so both engines evaluate identical planes. */
+    * the Spark plan and the DuckDB oracle-SQL generator
+    * (`graft.gate.SimilarityGates`), so both engines evaluate identical
+    * planes. */
   def planeSigns(planes: Int, dim: Int, seed: Long): Seq[Seq[Boolean]] = {
     val rnd = new scala.util.Random(seed)
     Seq.fill(planes)(Seq.fill(dim)(rnd.nextBoolean()))

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.gate.GateEntry
+
 /** The committed positional-bench legend must track the gate inventory:
   * `tools/bench_query_order.json` is how BENCH_r*.json's `"q"` arrays map
   * back to query names, so drift here silently mislabels every
@@ -18,11 +20,13 @@ class BenchLegendSpec extends AnyFunSuite {
         "run `sbt \"runMain graft.BenchLegend\"` and commit the result")
   }
 
-  test("every gate entry has a DuckDB oracle, and every oracle an entry") {
-    val entries = SparkEntry.queries.keySet
-    val oracles = SparkEntry.oracleSql.keySet
-    assert(entries == oracles,
-      s"entries without an oracle: ${(entries -- oracles).toSeq.sorted}; " +
-        s"oracles without an entry: ${(oracles -- entries).toSeq.sorted}")
+  test("gate entry names are unique, and the registry rejects a repeated one") {
+    val names = GateEntry.all.map(_.name)
+    assert(names.distinct.size == names.size)
+    assert(SparkEntry.queries.size == names.size)
+    val e = GateEntry.all.head
+    val err = intercept[IllegalArgumentException](
+      GateEntry.uniqueNames(GateEntry.all :+ e.copy(oracle = "SELECT 1")))
+    assert(err.getMessage.contains(e.name))
   }
 }

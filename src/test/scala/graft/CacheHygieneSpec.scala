@@ -184,11 +184,10 @@ class CacheHygieneSpec extends AnyFunSuite {
   }
 
   /** `body` over V nodes 1..7 and an `E` hop graph 1→2→3→1, 3→4→5→6,
-    * where `w` is 1 on every edge but 3→4. `saved` edges are a saved table:
-    * a CREATE appends files, so the hop base stays broadcast-small (a
-    * written in-memory table loses its size estimate). Its file scans
-    * broadcast a Hadoop conf that only a GC frees, so block checks on
-    * every broadcast of a build read in-memory edges. */
+    * where `w` is 1 on every edge but 3→4. `saved` edges are a saved table,
+    * which a CREATE appends files to. Its file scans broadcast a Hadoop
+    * conf that only a GC frees, so block checks on every broadcast of a
+    * build read in-memory edges. */
   private def withHopGraph(saved: Boolean)(body: GraftSession => Unit): Unit = {
     val edges = Seq((1L, 2L, 1), (2L, 3L, 1), (3L, 1L, 1), (3L, 4L, 2), (4L, 5L, 1), (5L, 6L, 1))
       .toDF("from_V", "to_V", "w")
@@ -333,6 +332,28 @@ class CacheHygieneSpec extends AnyFunSuite {
       assert(gone(adjs), "close() left a hop adjacency's broadcast")
       assert(held(g) == ((Set.empty, 2L)))
     }
+  }
+
+  test("an in-memory adjacency index follows a replaced edge table; close() unpersists it") {
+    import org.apache.spark.storage.StorageLevel
+    val g = new GraftSession(spark)
+    try {
+      g.registerTable("ai_u", (1L to 3L).toDF("id"))
+      g.registerNode("AU", "ai_u", "id")
+      g.registerTable("ai_f", Seq((1L, 2L)).toDF("from_AU", "to_AU"))
+      g.registerRel("AFOLLOWS", "ai_f", "AU", "AU", adjIndex = true)
+      def pairs = g.cypher("MATCH (a:AU)-[:AFOLLOWS]->(b:AU) RETURN a.id AS a, b.id AS b;")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(pairs == Set((1L, 2L)))
+      val old = g.adjIndex("AFOLLOWS", outgoing = true)
+      g.registerTable("ai_f", Seq((1L, 2L), (2L, 3L)).toDF("from_AU", "to_AU"))
+      assert(pairs == Set((1L, 2L), (2L, 3L)))
+      assert(old.storageLevel == StorageLevel.NONE, "the replaced table's index stayed cached")
+      val idx = Seq(true, false).map(g.adjIndex("AFOLLOWS", _))
+      assert(idx.forall(_.storageLevel != StorageLevel.NONE))
+      g.close()
+      assert(idx.forall(_.storageLevel == StorageLevel.NONE), "close() left an index cached")
+    } finally g.close()
   }
 
   test("library code never clears the calling thread's whole scope") {

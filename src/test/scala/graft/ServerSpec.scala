@@ -216,43 +216,48 @@ class ServerSpec extends AnyFunSuite {
 
   test("/metrics: a var-length repeat builds no hop adjacency; a CREATE makes the next read build one") {
     import spark.implicits._
-    // a saved edge table: a CREATE appends files, and the base stays
-    // broadcast-small, so the read after it takes the hashed form again
-    val edges = s"hops_e_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("from_HV", "to_HV").write.saveAsTable(edges)
-    val g = new GraftSession(spark)
-    g.registerTable("hops_v", (1L to 5L).toDF("id"))
-    g.registerNode("HV", "hops_v", "id")
-    g.registerRel("HOPS_E", edges, "HV", "HV")
-    val srv = new QueryServer(g, log = _ => ())
-    val port = srv.start()
-    spark.conf.set("spark.graft.writes.enabled", "true")
-    try {
-      def hops = {
-        val m = get(port, "/metrics")._2
-        (sample(m, "graft_hop_adjacencies").get, sample(m, "graft_hop_adjacency_builds_total").get)
+    // on a saved edge table a CREATE appends files; a registered in-memory
+    // one is rebuilt with its size estimate. Either way the base stays
+    // broadcast-small, so the read after the write takes the hashed form again
+    for (saved <- Seq(true, false)) {
+      val edges = if (!saved) "hops_mem_e"
+        else s"hops_e_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+      val rows = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("from_HV", "to_HV")
+      val g = new GraftSession(spark)
+      if (saved) rows.write.saveAsTable(edges) else g.registerTable(edges, rows)
+      g.registerTable("hops_v", (1L to 5L).toDF("id"))
+      g.registerNode("HV", "hops_v", "id")
+      g.registerRel("HOPS_E", edges, "HV", "HV")
+      val srv = new QueryServer(g, log = _ => ())
+      val port = srv.start()
+      spark.conf.set("spark.graft.writes.enabled", "true")
+      try {
+        def hops = {
+          val m = get(port, "/metrics")._2
+          (sample(m, "graft_hop_adjacencies").get, sample(m, "graft_hop_adjacency_builds_total").get)
+        }
+        val read = """{"query": "MATCH (a:HV)-[:HOPS_E*1..4]->(b:HV) WHERE a.id = 1 RETURN b.id AS b;"}"""
+        def reached = {
+          val (c, b) = post(port, read)
+          assert(c == 200, b)
+          b.linesIterator.map(_.replaceAll("[^0-9]", "").toLong).toSet
+        }
+        assert(reached == Set(2L, 3L, 4L))
+        assert(hops == ((1.0, 1.0)))
+        for (_ <- 1 to 3) assert(reached == Set(2L, 3L, 4L))
+        assert(hops == ((1.0, 1.0)), "a repeat built a hop adjacency")
+        val (cc, bc) = post(port,
+          """{"query": "CREATE (:HV {id: 4})-[:HOPS_E]->(:HV {id: 5});"}""")
+        assert(cc == 200, bc)
+        assert(hops == ((0.0, 1.0)), "the write left the old adjacency held")
+        assert(reached == Set(2L, 3L, 4L, 5L))
+        assert(hops == ((1.0, 2.0)), s"saved = $saved: the read after the write left the hashed form")
+      } finally {
+        spark.conf.set("spark.graft.writes.enabled", "false")
+        srv.stop()
+        g.close()
+        if (saved) spark.sql(s"DROP TABLE IF EXISTS $edges")
       }
-      val read = """{"query": "MATCH (a:HV)-[:HOPS_E*1..4]->(b:HV) WHERE a.id = 1 RETURN b.id AS b;"}"""
-      def reached = {
-        val (c, b) = post(port, read)
-        assert(c == 200, b)
-        b.linesIterator.map(_.replaceAll("[^0-9]", "").toLong).toSet
-      }
-      assert(reached == Set(2L, 3L, 4L))
-      assert(hops == ((1.0, 1.0)))
-      for (_ <- 1 to 3) assert(reached == Set(2L, 3L, 4L))
-      assert(hops == ((1.0, 1.0)), "a repeat built a hop adjacency")
-      val (cc, bc) = post(port,
-        """{"query": "CREATE (:HV {id: 4})-[:HOPS_E]->(:HV {id: 5});"}""")
-      assert(cc == 200, bc)
-      assert(hops == ((0.0, 1.0)), "the write left the old adjacency held")
-      assert(reached == Set(2L, 3L, 4L, 5L))
-      assert(hops == ((1.0, 2.0)))
-    } finally {
-      spark.conf.set("spark.graft.writes.enabled", "false")
-      srv.stop()
-      g.close()
-      spark.sql(s"DROP TABLE IF EXISTS $edges")
     }
   }
 
