@@ -155,9 +155,20 @@ object Bench {
     // SAME query leaving more entries behind than its previous iteration
     // did. Round 7's bench blew the 2x bar exactly that way: weakly-held
     // pipeline frames escaped clear() and entries grew per-iteration until
-    // eviction thrashed. This makes any recurrence loud in the artifact.
+    // eviction thrashed. This makes any recurrence loud in the artifact,
+    // as does a broadcast side or hop adjacency the session still holds.
     var cacheHighWater = 0
     var cacheGrowths = 0
+    // Each iteration is a cold call: nothing may be held across iterations
+    // to win. PipelineCaches.clear does not reach the session the q_
+    // entries read, so its hop adjacencies and broadcast join sides are
+    // released too. Its in-memory adjacency indexes stay: the warm-up
+    // above builds them as corpus setup, like the persisted artifacts.
+    val graph = graft.fixtures.TpchGraph.session(spark, sfDir)
+    def clearIteration(): Unit = {
+      graft.pipeline.PipelineCaches.clear(blocking = true)
+      graph.releaseReadCaches()
+    }
     val entriesAfterQuery = scala.collection.mutable.HashMap.empty[String, Int]
     // optional args = subset of query names (iterate on one regression
     // without paying for the full 58-query run); no args = everything
@@ -227,7 +238,14 @@ object Bench {
           // blocking: an async unpersist races the NEXT iteration's
           // persists for block-manager space (p_contamination's 1.1→2.8 s
           // iteration drift in r09 had exactly this profile)
-          graft.pipeline.PipelineCaches.clear(blocking = true)
+          clearIteration()
+          val (heldSides, _, _) = graph.heldBroadcasts
+          val heldHops = graph.hopAdjacencies._1.size
+          if (heldSides + heldHops > 0) {
+            cacheGrowths += 1
+            System.err.println(s"BENCH CACHE-LEAK after $name iter $i: the session still " +
+              s"holds $heldSides broadcast sides and $heldHops hop adjacencies")
+          }
           val entries =
             try org.apache.spark.sql.graftprobe.CacheProbe.entryCount(spark)
             catch { case scala.util.control.NonFatal(_) => -1 }
@@ -332,7 +350,7 @@ object Bench {
           val (io1, steal1) = stallCounters()
           rIo += io1 - io0
           rSteal += steal1 - steal0
-          graft.pipeline.PipelineCaches.clear(blocking = true)
+          clearIteration()
         }
       }
       if (extra.nonEmpty) {

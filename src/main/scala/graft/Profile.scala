@@ -29,7 +29,7 @@ import graft.util.JsonUtil.quote
   * jobs, stages, tasks, task CPU, scheduler delay, shuffle write and spill
   * per live tag. A job submitted inside `build` ran eagerly while the
   * DataFrame was built (hop-adjacency collect, BPE training, packer
-  * collects, graph rounds) and is counted apart.
+  * collects, graph rounds) and is counted apart, its task CPU too.
   *
   * A profile belongs to the thread that started it. [[end]] stops its
   * clock; [[close]] then waits, bounded, for the listener to catch up and
@@ -111,8 +111,11 @@ final class Profile private (val id: String, sc: SparkContext, startUs: Long) {
       val t = Option(Listener.live.remove(tag)).getOrElse(new Totals)
       val l = layers
       val cpuMs = (t.cpuNs - t.eagerCpuNs) / 1e6
+      val buildCpuMs = t.eagerCpuNs / 1e6
       fields = ("wall_ms" -> wallMs) +: (Layers.map(n => s"${n}_ms" -> l.getOrElse(n, 0.0)) ++
-        Seq("task_cpu_ms" -> cpuMs, "wait_ms" -> math.max(0.0, l.getOrElse("execute", 0.0) - cpuMs)) ++
+        Seq("task_cpu_ms" -> cpuMs, "wait_ms" -> math.max(0.0, l.getOrElse("execute", 0.0) - cpuMs),
+          "build_cpu_ms" -> buildCpuMs,
+          "build_wait_ms" -> math.max(0.0, l.getOrElse("build", 0.0) - buildCpuMs)) ++
         Seq("jobs" -> t.jobs, "eager_jobs" -> t.eagerJobs, "stages" -> t.stages,
           "tasks" -> t.tasks, "sched_delay_ms" -> t.schedMs,
           "shuffle_write_bytes" -> t.shuffleWriteBytes, "spill_bytes" -> t.spillBytes)
@@ -134,8 +137,9 @@ final class Profile private (val id: String, sc: SparkContext, startUs: Long) {
     }(_ + _)
   }
 
-  /** Wall time, the layers in [[Layers]] order, the execute split into task
-    * CPU and wait, and the job counts: what every consumer reports. */
+  /** Wall time, the layers in [[Layers]] order, the execute and build
+    * layers each split into task CPU and wait (build's CPU is the eager
+    * jobs'), and the job counts: what every consumer reports. */
   def summary: Seq[(String, Double)] = {
     require(fields.nonEmpty, "close() the profile before reading it")
     fields
@@ -146,7 +150,7 @@ final class Profile private (val id: String, sc: SparkContext, startUs: Long) {
     def obj(kv: Seq[(String, String)]) =
       kv.map { case (k, v) => quote(k) + ":" + v }.mkString("{", ",", "}")
     val all = summary.map { case (k, v) => k -> num(v) }
-    val (layerPart, counts) = all.tail.splitAt(Layers.size + 2)
+    val (layerPart, counts) = all.tail.splitAt(Layers.size + 4)
     obj(head ++ Seq(all.head, "layers" -> obj(layerPart)) ++ counts :+ ("drained" -> drained.toString))
   }
 }

@@ -15,8 +15,10 @@ import org.apache.spark.SparkConf
   *    shuffle serialize without per-class registration. Results are
   *    byte-identical — serialization format never reaches query semantics.
   *  - **graft's session extension** ([[graft.functions.GraftExtensions]]):
-  *    the vector functions as built-ins, and the physical rule that reads
-  *    bound `$param` values through references ([[graft.exec.ParamRefs]]).
+  *    the vector functions as built-ins, the physical rule that reads
+  *    bound `$param` values through references ([[graft.exec.ParamRefs]]),
+  *    and the one that serves value-free broadcast join sides from the
+  *    session's held store ([[graft.exec.HeldBroadcasts]]).
   *  - **Codegen cache size.** See [[CodegenCacheEntries]].
   */
 object SparkTuning {

@@ -393,7 +393,7 @@ object CypherParser extends RegexParsers {
 
   private def relPattern: Parser[RelPattern] =
     ("<-" ~> opt(relBody) <~ "-") ~ opt(">") ^^ {
-      case body ~ Some(_) => throw new GraftException("invalid relationship pattern '<-...->'")
+      case _ ~ Some(_) => throw new GraftException("invalid relationship pattern '<-...->'")
       case body ~ None =>
         val (a, t, p, v) = body.getOrElse((None, Seq.empty, Seq.empty, None))
         RelPattern(a, t.headOption, p, Dir.In, v, altTypes = t.drop(1))

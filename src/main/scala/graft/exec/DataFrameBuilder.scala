@@ -168,7 +168,7 @@ final class DataFrameBuilder(
     val s = e.schema
     val schemas = s +: e.altSchemas
     // read before any table this base reads (GraftSession.hopAdjacency)
-    val since = session.hopGeneration
+    val since = session.generation
     val base = session.table(s.tableName)
     val refCols = plan.referencedProps.getOrElse(e.alias, Set.empty).toSeq.sorted
     // inline-prop filters ({w: 5}) are pushed without appearing in
@@ -214,7 +214,7 @@ final class DataFrameBuilder(
       if (e.altSchemas.isEmpty) propCols
       else (propCols :+ RelTypeCol).distinct.sorted
 
-    def edgeList(srcCol: String, dstCol: String): DataFrame = {
+    def edgeList(srcCol: String): DataFrame = {
       val fwd = srcCol == s.fromColumn
       schemas.map(scanOf(_, fwd, unionCols)).reduce(_ unionByName _)
     }
@@ -263,7 +263,7 @@ final class DataFrameBuilder(
       if (e.invalidDirection) {
         // Wrong-direction pattern ⇒ statically EMPTY result with the correct
         // schema (reference query_planner/mod.rs:50-60: canned WHERE 1=0).
-        edgeList(s.toColumn, s.fromColumn).filter(lit(false))
+        edgeList(s.toColumn).filter(lit(false))
       } else if (e.undirectedSameLabel) {
         // Both orientations, UNION DISTINCT over the referenced columns
         // (reference graph_traversal_planning.rs:524-616, 694-763).
@@ -286,7 +286,7 @@ final class DataFrameBuilder(
         val (srcCol, dstCol) =
           if (e.srcIsFrom) (s.fromColumn, s.toColumn) else (s.toColumn, s.fromColumn)
         if (canUseIndex) adjRead(s, outgoing = e.srcIsFrom)
-        else edgeList(srcCol, dstCol)
+        else edgeList(srcCol)
       }
 
     // Join form of a distance-only shortestPath: frontier-delta BFS. Each

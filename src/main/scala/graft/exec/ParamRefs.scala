@@ -113,6 +113,24 @@ object ParamRefs {
   def isBound(v: Any): Boolean =
     Option(bound.get).flatMap(id => Option(live.get(id))).exists(_.raw(v))
 
+  /** Whether the statement planning on this thread bound the value `v` of
+    * a literal of type `dt`: a mark, a bound string, or a bound number
+    * written as a decimal. */
+  private[exec] def binds(session: SparkSession, v: Any, dt: DataType): Boolean =
+    marks(session).exists { m =>
+      key(v, dt).exists(m.keys.contains) || (v match {
+        case s: org.apache.spark.unsafe.types.UTF8String => m.raw(s.toString)
+        case d: Decimal => m.keys.contains(BigDecimal(d.toJavaBigDecimal))
+        case _ => false
+      })
+    }
+
+  /** Whether the statement planning on this thread bound any value. */
+  private[exec] def bindsAny(session: SparkSession): Boolean = marks(session).nonEmpty
+
+  private def marks(session: SparkSession): Option[Marks] =
+    Option(session.sparkContext.getLocalProperty(Property)).flatMap(id => Option(live.get(id)))
+
   /** Marks the value Catalyst will fold `c` — an expression over bound
     * values only — into, and returns `c` unchanged. A value that does not
     * fold (non-deterministic, or failing on this input) marks nothing. */
@@ -139,9 +157,7 @@ object ParamRefs {
   /** The physical rewrite, for the thread's live marks (none: identity). */
   final class Replace(session: SparkSession) extends Rule[SparkPlan] {
     def apply(plan: SparkPlan): SparkPlan =
-      Option(session.sparkContext.getLocalProperty(Property))
-        .flatMap(id => Option(live.get(id))).filterNot(_.keys.isEmpty)
-        .fold(plan)(m => rewrite(plan, m.keys))
+      marks(session).filterNot(_.keys.isEmpty).fold(plan)(m => rewrite(plan, m.keys))
   }
 
   private def rewrite(plan: SparkPlan, keys: java.util.Set[Any]): SparkPlan = {

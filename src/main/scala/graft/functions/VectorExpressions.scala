@@ -496,9 +496,12 @@ object GraftFunctions {
 
 /** `spark.sql.extensions=graft.functions.GraftExtensions` (set by
   * [[graft.SparkTuning.kryoConf]]) registers the vector functions as
-  * permanent built-ins for pure-SQL users, and installs the physical rule
-  * that reads bound `$param` values through references
-  * ([[graft.exec.ParamRefs]]). */
+  * permanent built-ins for pure-SQL users, and installs two physical
+  * rules: the one that reads bound `$param` values through references
+  * ([[graft.exec.ParamRefs]], a columnar and a query-stage optimizer
+  * rule), and the one that serves value-free broadcast join sides from
+  * the session's held store ([[graft.exec.HeldBroadcasts]], a query-stage
+  * preparation rule). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftFunctions.builders.foreach { case (name, cls, b) =>
@@ -507,5 +510,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     e.injectColumnar(graft.exec.ParamRefs.columnar)
     e.injectQueryStageOptimizerRule(new graft.exec.ParamRefs.Replace(_))
+    e.injectQueryStagePrepRule(new graft.exec.HeldBroadcasts.Hold(_))
   }
 }

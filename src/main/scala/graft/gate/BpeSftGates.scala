@@ -983,7 +983,7 @@ private[gate] object BpeSftGates {
     * (LEFT JOIN + the artifact's reserved `<unk>` row — the UNK id is
     * READ FROM `vocab`, mirroring that it is artifact data, not a
     * sentinel convention). */
-  private def bpeIdsOracleSql(numMerges: Int = 50,
+  private def bpeIdsOracleSql(numMerges: Int,
       sampleMod: Int = 10): String =
     s"""WITH ${bpeTrainCtes(numMerges, 30000, 2)},
        |${bpeVocabCtes(numMerges)},
@@ -1003,8 +1003,8 @@ private[gate] object BpeSftGates {
     * can share ONE packing-arithmetic definition with the tensor mirrors
     * without dragging in the per-token id CTEs it never reads (assumes
     * [[bpeDocWordCtes]] in scope). */
-  private def packDocCtes(seqLen: Int = 512, shards: Int = 4,
-      sampleMod: Int = 10): String =
+  private def packDocCtes(seqLen: Int, shards: Int,
+      sampleMod: Int): String =
     s"""dn AS (
        |  SELECT d.doc_id, CAST(coalesce(x.nb, 0) + 1 AS BIGINT) AS n
        |  FROM (SELECT doc_id FROM documents WHERE doc_id % $sampleMod = 0) d
@@ -1031,8 +1031,8 @@ private[gate] object BpeSftGates {
     * row per token including the per-document EOS at position n−1 —
     * shared by the raw tensor-export mirror and the padded-window
     * mirror. */
-  private def packIdsCtes(seqLen: Int = 512, shards: Int = 4,
-      sampleMod: Int = 10, numMerges: Int = 50): String =
+  private def packIdsCtes(seqLen: Int, shards: Int,
+      sampleMod: Int, numMerges: Int): String =
     s"""${bpeTrainCtes(numMerges, 30000, 2)},
        |${bpeVocabCtes(numMerges)},
        |${bpeDocWordCtes(numMerges, sampleMod)},
@@ -1093,7 +1093,7 @@ private[gate] object BpeSftGates {
     * reappear once passed. Hence the same separator-replace chain as
     * training, over the corpus's DISTINCT words (counts join back per
     * doc — corpora repeat words, exactly the memo in tokenCounts). */
-  private def bpeTokensOracleSql(numMerges: Int = 50, topWords: Int = 30000,
+  private def bpeTokensOracleSql(numMerges: Int, topWords: Int = 30000,
       minPairCount: Long = 2): String =
     s"""WITH ${bpeTrainCtes(numMerges, topWords, minPairCount)},
        |${bpeDocCountCtes(numMerges)}
@@ -1137,8 +1137,8 @@ private[gate] object BpeSftGates {
     * vocabulary id lookup — the full tensor-export composition derived
     * independently in SQL. Shared by the raw-rows mirror and the
     * collated-window mirror ([[padWindowsSql]] over it). */
-  private def sftPackedCtes(budget: Long = 160, seqLen: Int = 256,
-      shards: Int = 4, sampleMod: Int = 5, numMerges: Int = 50): String =
+  private def sftPackedCtes(budget: Long, seqLen: Int,
+      shards: Int, sampleMod: Int, numMerges: Int): String =
     s"""${bpeTrainCtes(numMerges, 30000, 2)},
        |$sftTurnsCtes,
        |${bpeVocabCtes(numMerges)},

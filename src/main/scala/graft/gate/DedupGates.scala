@@ -447,11 +447,11 @@ private[gate] object DedupGates {
     * DuckDB mirror of `Dedup.dupClusters(docs, 0.5)` over
     * `ngramJaccardPairs`: exhaustive all-pairs Jaccard, undirected edge
     * closure, min-id component labels. Callers open with
-    * `WITH RECURSIVE ${dupClustersCtes()}` and may append further CTEs;
+    * `WITH RECURSIVE ${dupClustersCtes(docsRel)}` and may append further CTEs;
     * `docsRel` lets the timeout-prone consumers (p_dedup_clusters /
     * p_dedup_keep_best / p_split_leakage) bound their corpus via
     * [[heavyDocsRel]]. */
-  private def dupClustersCtes(docsRel: String = "documents"): String =
+  private def dupClustersCtes(docsRel: String): String =
     s"""t AS (
       |  SELECT doc_id,
       |         list_distinct(list_transform(range(1, greatest(len(toks) - 2, 1) + 1),

@@ -112,11 +112,13 @@ object GraphAlgorithms {
     * The trade: once materialized, the RDD cannot be recomputed, so a loop
     * may unpersist it only after everything that reads it is materialized
     * too. MEMORY_AND_DISK keeps a disk copy per executor, and the loops
-    * re-run from the query on failure. */
+    * re-run from the query on failure. The scope's release skips an RDD
+    * its loop already unpersisted, so each is released once. */
   private def persist[T](x: RDD[T]): RDD[T] = {
     val p = x.persist(StorageLevel.MEMORY_AND_DISK)
     p.localCheckpoint()
-    graft.pipeline.PipelineCaches.onClear(p)(_.unpersist(blocking = false))
+    graft.pipeline.PipelineCaches.onClear(p)(r =>
+      if (r.getStorageLevel != StorageLevel.NONE) r.unpersist(blocking = false))
     p
   }
 

@@ -898,7 +898,7 @@ object Corpus {
     * aggregate; output is |buckets| rows (max corpus doc length /
     * width). */
   def lengthBuckets(docs: DataFrame, merges: DataFrame, width: Int = 64,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     require(width > 0, s"width must be positive, got $width")
     Bpe.withTokenCountColumn(docs, merges, textCol, "__n")
       .select(col("__n"),

@@ -13,7 +13,8 @@ import org.apache.spark.storage.StorageLevel
   * (re-deriving the lineage per consumer costs more than the cache); a
   * var-length hop on a broadcast-small base reads a broadcast adjacency,
   * built for the request when the hop filters its edges and otherwise
-  * held by the session, which leases it to the request. Spark offers no
+  * held by the session, which leases it to the request, as it leases the
+  * broadcast join sides it holds. Spark offers no
   * "unpersist when the consuming query finishes" hook for a lazily-
   * executed result, so each persist, broadcast or lease is registered
   * here and released when its scope ends.
@@ -48,12 +49,13 @@ import org.apache.spark.storage.StorageLevel
   * pinned for the JVM's lifetime (the round-7 leak).
   *
   * Only registered state is released. The session-lifetime caches live
-  * in `GraftSession` and follow its hop generation instead, which moves
-  * on at every write, registered table, catalog swap and close: the
-  * in-memory adjacency indexes are unpersisted then, and the held hop
-  * adjacencies lose their session lease while each request's lease still
-  * goes with its scope. Reads of persisted adjacency index tables are
-  * not caches: the edge-table fingerprint fences those.
+  * in `GraftSession`'s one held store ([[graft.exec.HeldStore]]) and
+  * follow its generation instead, which moves on at every write,
+  * registered table, catalog swap and close: the in-memory adjacency
+  * indexes are unpersisted then, and the held hop adjacencies and
+  * broadcast join sides lose their session lease while each request's
+  * lease still goes with its scope. Reads of persisted adjacency index
+  * tables are not caches: the edge-table fingerprint fences those.
   */
 object PipelineCaches {
 

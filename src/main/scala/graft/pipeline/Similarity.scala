@@ -36,14 +36,13 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
-  /** Fused-loop native expression (see graft.functions.DotProduct); the
-    * `dim` parameter is kept for API stability but unnecessary — the
+  /** Fused-loop native expression (see graft.functions.DotProduct): the
     * codegen'd loop runs over the arrays' common length. */
-  def dotFixed(a: Column, b: Column, dim: Int): Column = GraftFunctions.dot(a, b)
+  def dotFixed(a: Column, b: Column): Column = GraftFunctions.dot(a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def normFixed(a: Column, dim: Int): Column = sqrt(dotFixed(a, a, dim))
+  def normFixed(a: Column): Column = sqrt(dotFixed(a, a))
 
   /** Embedding dimension of the fixture corpus (embeddings.parquet). */
   val DefaultDim = 64
@@ -52,7 +51,7 @@ object Similarity {
     * vectors (self excluded). Similarity is rounded to 6 dp before ranking
     * (with id tie-break) so results are stable across summation orders. */
   def bruteForceTopK(
-      corpus: DataFrame, queries: DataFrame, k: Int = 5, dim: Int = DefaultDim,
+      corpus: DataFrame, queries: DataFrame, k: Int = 5,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     GraftFunctions.register(corpus.sparkSession)
 
@@ -60,13 +59,13 @@ object Similarity {
     // when the corpus arrives as a single input split
     val c = corpus.select(col(idCol).as("nid"), toDouble(col(vecCol)).as("cv"))
       .repartition(col("nid"))
-      .withColumn("cnorm", normFixed(col("cv"), dim))
+      .withColumn("cnorm", normFixed(col("cv")))
     val q = queries.select(col(idCol).as("qid"), toDouble(col(vecCol)).as("qv"))
-      .withColumn("qnorm", normFixed(col("qv"), dim))
+      .withColumn("qnorm", normFixed(col("qv")))
 
     val sims = c.join(broadcast(q), col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        round(dotFixed(col("qv"), col("cv"), dim) /
+        round(dotFixed(col("qv"), col("cv")) /
               (col("qnorm") * col("cnorm")), 6).as("sim"))
 
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
@@ -173,7 +172,7 @@ object Similarity {
   def pqAdcTopK(codes: DataFrame, queries: DataFrame,
       cb: IndexedSeq[IndexedSeq[IndexedSeq[Double]]], k: Int = 5,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val m = cb.size; val kCent = cb.head.size; val dSub = cb.head.head.size
+    val m = cb.size; val dSub = cb.head.head.size
     val cbc = cbLit(cb)
     val q = queries
       .select(col(idCol).as("qid"), toDouble(col(vecCol)).as("__qv"))
@@ -212,18 +211,18 @@ object Similarity {
     * deploy gate for choosing `kCand`. */
   def pqRerankTopK(corpus: DataFrame, codes: DataFrame, queries: DataFrame,
       cb: IndexedSeq[IndexedSeq[IndexedSeq[Double]]], kCand: Int = 25,
-      k: Int = 5, dim: Int = DefaultDim, idCol: String = "vec_id",
+      k: Int = 5, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     GraftFunctions.register(corpus.sparkSession)
     val cand = pqAdcTopK(codes, queries, cb, kCand, idCol, vecCol)
       .select(col("qid"), col("nid"))
     val c = corpus.select(col(idCol).as("nid"), toDouble(col(vecCol)).as("cv"))
-      .withColumn("cnorm", normFixed(col("cv"), dim))
+      .withColumn("cnorm", normFixed(col("cv")))
     val q = queries.select(col(idCol).as("qid"), toDouble(col(vecCol)).as("qv"))
-      .withColumn("qnorm", normFixed(col("qv"), dim))
+      .withColumn("qnorm", normFixed(col("qv")))
     val exact = cand.join(c, "nid").join(broadcast(q), "qid")
       .select(col("qid"), col("nid"),
-        round(dotFixed(col("qv"), col("cv"), dim) /
+        round(dotFixed(col("qv"), col("cv")) /
               (col("qnorm") * col("cnorm")), 6).as("sim"))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
     exact.withColumn("rank", row_number().over(w))
@@ -279,7 +278,7 @@ object Similarity {
     val cbc = cbLit(cb)
     val qAssigned = queries
       .select(col(idCol).as("qid"), toDouble(col(vecCol)).as("qv"))
-      .withColumn("qnorm", normFixed(col("qv"), DefaultDim))
+      .withColumn("qnorm", normFixed(col("qv")))
       .withColumn("__lut", transform(sequence(lit(0), lit(m - 1)), mIdx =>
         transform(element_at(cbc, (mIdx + 1).cast("int")),
           cent => subDist2(col("qv"), cent, mIdx, dSub))))
@@ -318,19 +317,19 @@ object Similarity {
   def ivfPqRerankTopK(corpus: DataFrame, queries: DataFrame,
       cb: IndexedSeq[IndexedSeq[IndexedSeq[Double]]], kCand: Int = 25,
       k: Int = 5, nlist: Int = 0, nprobe: Int = 4, refineIters: Int = 1,
-      dim: Int = DefaultDim, idCol: String = "vec_id",
+      idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     require(kCand >= k, s"kCand ($kCand) must be >= k ($k)")
     val cand = ivfPqTopK(corpus, queries, cb, kCand, nlist, nprobe,
         refineIters, idCol, vecCol)
       .select(col("qid"), col("nid"))
     val c = corpus.select(col(idCol).as("nid"), toDouble(col(vecCol)).as("cv"))
-      .withColumn("cnorm", normFixed(col("cv"), dim))
+      .withColumn("cnorm", normFixed(col("cv")))
     val q = queries.select(col(idCol).as("qid"), toDouble(col(vecCol)).as("qv"))
-      .withColumn("qnorm", normFixed(col("qv"), dim))
+      .withColumn("qnorm", normFixed(col("qv")))
     val exact = cand.join(c, "nid").join(broadcast(q), "qid")
       .select(col("qid"), col("nid"),
-        round(dotFixed(col("qv"), col("cv"), dim) /
+        round(dotFixed(col("qv"), col("cv")) /
               (col("qnorm") * col("cnorm")), 6).as("sim"))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
     exact.withColumn("rank", row_number().over(w))
@@ -355,7 +354,7 @@ object Similarity {
   /** Sign-random-projection code: bit p set iff v · plane_p > 0. */
   def srpCode(v: Column, planes: Int, dim: Int, seed: Long = 7L): Column =
     planeLits(planes, dim, seed).zipWithIndex.map { case (p, i) =>
-      when(dotFixed(v, p, dim) > 0, lit(1L << i)).otherwise(0L)
+      when(dotFixed(v, p) > 0, lit(1L << i)).otherwise(0L)
     }.reduce(_ + _)
 
   /** Multi-table LSH ANN (classic (L, b) sign-random-projection scheme):
@@ -388,14 +387,14 @@ object Similarity {
     // product is computed exactly once per unique candidate pair.
     val cVecs = corpus.select(col(idCol).as("nid"), toDouble(col(vecCol)).as("cv"))
       .repartition(col("nid"))
-      .withColumn("cnorm", normFixed(col("cv"), dim))
+      .withColumn("cnorm", normFixed(col("cv")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)
     val cCodes = cVecs.select(col("nid"),
       posexplode(codes(col("cv"))).as(Seq("tbl", "code")))
 
     val qVecs = queries.select(col(idCol).as("qid"), toDouble(col(vecCol)).as("qv"))
-      .withColumn("qnorm", normFixed(col("qv"), dim))
+      .withColumn("qnorm", normFixed(col("qv")))
     // per-table probe expansion: own code + all Hamming-1 codes
     val probes = array((col("qcode") +: (0 until planes).map(i =>
       col("qcode").bitwiseXOR(lit(1L << i)))): _*)
@@ -414,7 +413,7 @@ object Similarity {
       .join(broadcast(qVecs), "qid")
       .join(cVecs, "nid")
       .select(col("qid"), col("nid"),
-        round(dotFixed(col("qv"), col("cv"), dim) /
+        round(dotFixed(col("qv"), col("cv")) /
               (col("qnorm") * col("cnorm")), 6).as("sim"))
 
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
@@ -459,7 +458,7 @@ object Similarity {
 
     val vecs = vectors.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
       .repartition(col("id"))
-      .withColumn("nrm", normFixed(col("v"), dim))
+      .withColumn("nrm", normFixed(col("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)
 
@@ -515,7 +514,7 @@ object Similarity {
       .join(vecs.select(col("id").as("a"), col("v").as("va"), col("nrm").as("na")), "a")
       .join(vecs.select(col("id").as("b"), col("v").as("vb"), col("nrm").as("nb")), "b")
       .select(col("a"), col("b"),
-        round(dotFixed(col("va"), col("vb"), dim) / (col("na") * col("nb")), 6)
+        round(dotFixed(col("va"), col("vb")) / (col("na") * col("nb")), 6)
           .as("cosine"))
       .filter(col("cosine") >= threshold)
   }
@@ -537,7 +536,7 @@ object Similarity {
     val scale = 1.0 / math.sqrt(outDim.toDouble)
     val comps = planeSigns(outDim, dim, seed).map { s =>
       val plane = array(s.map(b => lit(if (b) 1.0 else -1.0)): _*)
-      round(dotFixed(col("__v"), plane, dim) * scale, 6)
+      round(dotFixed(col("__v"), plane) * scale, 6)
     }
     vectors.select(col(idCol), toDouble(col(vecCol)).as("__v"))
       .select(col(idCol), array(comps: _*).as("reduced"))
@@ -611,7 +610,7 @@ object Similarity {
     PipelineCaches.memo(shaped.queryExecution.analyzed.canonicalized) {
       shaped
         .repartition(col("nid"))
-        .withColumn("cnorm", normFixed(col("cv"), DefaultDim))
+        .withColumn("cnorm", normFixed(col("cv")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         .transform(PipelineCaches.track)
     }
@@ -665,7 +664,7 @@ object Similarity {
             .groupBy(col("list_id"))
             .agg(avgCols.as("cent"))
             .select(col("list_id"), col("cent"),
-              normFixed(col("cent"), DefaultDim).as("centnorm")))
+              normFixed(col("cent")).as("centnorm")))
       }
       cents
     }
@@ -682,7 +681,7 @@ object Similarity {
     // the lambda divides by it (no CSE inside lambda bodies — the inlined
     // form recomputes the norm PER ELEMENT; see shinglesFromTokens)
     vectors.select(col(idCol), toDouble(col(vecCol)).as("__v"))
-      .withColumn("__n", normFixed(col("__v"), DefaultDim))
+      .withColumn("__n", normFixed(col("__v")))
       .select(col(idCol),
         when(col("__n") === 0.0, lit(null))
           .otherwise(transform(col("__v"), x => round(x / col("__n"), 6)))
@@ -701,8 +700,7 @@ object Similarity {
     * meanPool's group aggregation. NULL vectors (e.g. empty docs) are
     * excluded before pooling. */
   def centroidShift(vectors: DataFrame, groupCol: String = "source",
-      orderCol: String = "doc_id", vecCol: String = "vec",
-      dim: Int = DefaultDim): DataFrame = {
+      orderCol: String = "doc_id", vecCol: String = "vec"): DataFrame = {
     GraftFunctions.register(vectors.sparkSession)
     // means appears on both sides of the pairwise non-equi self-join
     // below, but its expensive prefix (for hashedTfidf inputs the whole
@@ -724,8 +722,8 @@ object Similarity {
     // no-CartesianProduct census). Pin the strategy to the construction.
     a.join(broadcast(b), col("src_a") < col("src_b"))
       .select(col("src_a"), col("src_b"),
-        round(dotFixed(col("__va"), col("__vb"), dim) /
-          (normFixed(col("__va"), dim) * normFixed(col("__vb"), dim)), 6)
+        round(dotFixed(col("__va"), col("__vb")) /
+          (normFixed(col("__va")) * normFixed(col("__vb"))), 6)
           .as("cosine"))
   }
 
@@ -749,11 +747,11 @@ object Similarity {
     * [[ivfPqRerankTopK]] for the composed serving shape). */
   def hardNegatives(corpus: DataFrame, queries: DataFrame,
       clusters: DataFrame, k: Int = 5, kCand: Int = 25,
-      dim: Int = DefaultDim, idCol: String = "vec_id",
+      idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     require(kCand >= k, s"kCand ($kCand) must be >= k ($k)")
     hardNegativesFrom(
-      bruteForceTopK(corpus, queries, kCand, dim, idCol, vecCol),
+      bruteForceTopK(corpus, queries, kCand, idCol, vecCol),
       clusters, k, idCol)
   }
 
@@ -897,7 +895,7 @@ object Similarity {
     val dup = pairSide.alias("x").join(pairSide.alias("y"),
         col("x.cluster_id") === col("y.cluster_id") &&
         col("x.rk") < col("y.rk") &&
-        round(dotFixed(col("x.cv"), col("y.cv"), DefaultDim) /
+        round(dotFixed(col("x.cv"), col("y.cv")) /
           (col("x.cnorm") * col("y.cnorm")), 6) >= tau)
       .select(col("y.nid").as("nid")).distinct()
     ranked.join(dup.withColumn("__dup", lit(true)), Seq("nid"), "left_outer")
@@ -959,7 +957,7 @@ object Similarity {
     // cent_id ASC), explode — narrow, shuffle-free
     val probes = math.max(1, math.min(nprobe, cents.size))
     val qAssigned = queries.select(col(idCol).as("qid"), toDouble(col(vecCol)).as("qv"))
-      .withColumn("qnorm", normFixed(col("qv"), DefaultDim))
+      .withColumn("qnorm", normFixed(col("qv")))
       .withColumn("probe",
         explode(slice(array_sort(centSims(col("qv"), col("qnorm"), cents)),
           -probes, probes)))
@@ -969,7 +967,7 @@ object Similarity {
     val sims = assigned.join(qAssigned, Seq("list_id"))
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        round(dotFixed(col("qv"), col("cv"), DefaultDim) /
+        round(dotFixed(col("qv"), col("cv")) /
               (col("qnorm") * col("cnorm")), 6).as("sim"))
       .distinct()
 
@@ -1241,7 +1239,7 @@ object Similarity {
     val qAssigned = queries
       .select(col(idCol).as("qid"), toDouble(col(vecCol)).as("qv"))
       .filter(col("qv").isNotNull)
-      .withColumn("qnorm", normFixed(col("qv"), DefaultDim))
+      .withColumn("qnorm", normFixed(col("qv")))
       .withColumn("probe",
         explode(slice(array_sort(centSims(col("qv"), col("qnorm"), cents)),
           -probes, probes)))
@@ -1271,7 +1269,7 @@ object Similarity {
     val sims = lists.join(probeSide, Seq("list_id"))
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        round(dotFixed(col("qv"), col("cv"), DefaultDim) /
+        round(dotFixed(col("qv"), col("cv")) /
               (col("qnorm") * col("cnorm")), 6).as("sim"))
 
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)

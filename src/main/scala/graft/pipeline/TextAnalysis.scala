@@ -406,7 +406,7 @@ object TextAnalysis {
     }
     val cjkCount = length(regexp_replace(col("text"), "[^\\x{4E00}-\\x{9FFF}]", ""))
 
-    var df = docs.select((col("doc_id") +: col("text") +: scoreCols): _*)
+    val df = docs.select((col("doc_id") +: col("text") +: scoreCols): _*)
       .withColumn("cjk", cjkCount)
     // argmax with deterministic tie order = LangMarkers order
     val best = LangMarkers.map(_._1).foldLeft((lit(-1), lit("und"))) {
@@ -681,7 +681,6 @@ object TextAnalysis {
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(dim > 0 && (dim & (dim - 1)) == 0,
       s"dim must be a positive power of two (bucket = low hash bits), got $dim")
-    val logDim = java.lang.Integer.numberOfTrailingZeros(dim)
     val toksDf = docs.select(col(idCol).as("doc_id"),
       Dedup.tokens(col(textCol)).as("__toks"))
     val terms =

@@ -252,7 +252,7 @@ object Planner {
     }
     // each optional block must attach to an already-bound alias
     var boundSoFar = mainAliases
-    for ((blk, bi) <- q.optionalMatches.zipWithIndex) {
+    for (bi <- q.optionalMatches.indices) {
       val blockEdges = rawEdges.filter(_.block == bi)
       if (blockEdges.isEmpty)
         throw new DisconnectedPatternException(

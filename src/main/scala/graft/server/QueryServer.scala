@@ -74,11 +74,12 @@ final class QueryServer(gs: GraftSession, port: Int = 0,
 
   /** One request in one cache scope: whatever the query persists or
     * broadcasts (a CALL+UNION frame, a filtered var-length hop adjacency,
-    * its lease on a session-held one, the level RDDs of a large-edge
-    * shortestPath past 6 hops, pipeline intermediates) is released when
-    * the response ends, and never a concurrent request's caches. The
-    * request's profile is counted and logged only after the response is
-    * closed: the client never waits on the listener bus. */
+    * its leases on session-held adjacencies and broadcast join sides, the
+    * level RDDs of a large-edge shortestPath past 6 hops, pipeline
+    * intermediates) is released when the response ends, and never a
+    * concurrent request's caches. The request's profile is counted and
+    * logged only after the response is closed: the client never waits on
+    * the listener bus. */
   private def handle(ex: HttpExchange): Unit = {
     inFlight.incrementAndGet()
     val p = Profile.start(gs.spark)
@@ -98,9 +99,9 @@ final class QueryServer(gs: GraftSession, port: Int = 0,
   }
 
   /** Prometheus text exposition: requests by status, the latency
-    * histogram, requests in flight, the session's hop adjacencies, and —
-    * read from Spark — SQL cache entries, persisted RDDs and codegen
-    * compiles. */
+    * histogram, requests in flight, the session's hop adjacencies and
+    * broadcast join sides, and — read from Spark — SQL cache entries,
+    * persisted RDDs and codegen compiles. */
   private def metrics(): String = {
     val sb = new StringBuilder
     def metric(name: String, kind: String, help: String)(samples: (String, Any)*): Unit = {
@@ -120,6 +121,13 @@ final class QueryServer(gs: GraftSession, port: Int = 0,
       "" -> heldHops.size)
     metric("graft_hop_adjacency_builds_total", "counter",
       "Var-length hop adjacencies the session has built and held.")("" -> builtHops)
+    val (sides, sideBytes, builtSides) = gs.heldBroadcasts
+    metric("graft_held_broadcasts", "gauge", "Broadcast join sides the session holds.")(
+      "" -> sides)
+    metric("graft_held_broadcast_bytes", "gauge",
+      "Hashed size of the broadcast join sides the session holds.")("" -> sideBytes)
+    metric("graft_held_broadcast_builds_total", "counter",
+      "Broadcast join sides the session has built and held.")("" -> builtSides)
     metric("graft_sql_cache_entries", "gauge", "Plans in Spark's SQL cache.")(
       "" -> CacheProbe.entryCount(gs.spark))
     metric("graft_persisted_rdds", "gauge", "RDDs Spark holds persisted.")(

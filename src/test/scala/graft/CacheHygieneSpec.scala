@@ -23,6 +23,11 @@ import graft.pipeline.{Dedup, PipelineCaches, Sampling, Similarity}
   * broadcast adjacency: a filtered base's goes with its request scope; an
   * unfiltered base's is held by the session until a write or `close()`,
   * and a read that leased it finishes on it.
+  *
+  * The held-broadcast tests pin the same lifetime for broadcast join
+  * sides that carry no bound value ([[graft.exec.HeldBroadcasts]]), and
+  * what keeps the store small: bound values add no entry, and held bytes
+  * stay under the cap.
   */
 class CacheHygieneSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -354,6 +359,206 @@ class CacheHygieneSpec extends AnyFunSuite {
       g.close()
       assert(idx.forall(_.storageLevel == StorageLevel.NONE), "close() left an index cached")
     } finally g.close()
+  }
+
+  /** `body` over people P(id, name) and a KNOWS edge table K, both
+    * broadcast-small: in memory, or `saved` as tables. */
+  private def withPeople(body: GraftSession => Unit): Unit = withPeople(saved = false)(body)
+
+  private def withPeople(saved: Boolean)(body: GraftSession => Unit): Unit = {
+    val suffix = java.util.UUID.randomUUID().toString.replace("-", "")
+    val tables = Seq(
+      "hb_p" -> Seq((1L, "ann"), (2L, "bob"), (3L, "cy"), (4L, "dee")).toDF("id", "name"),
+      "hb_k" -> Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("from_P", "to_P"))
+      .map { case (n, df) => (if (saved) s"${n}_$suffix" else n, df) }
+    val g = new GraftSession(spark)
+    try {
+      for ((n, df) <- tables) if (saved) df.write.saveAsTable(n) else g.registerTable(n, df)
+      g.registerNode("P", tables(0)._1, "id")
+      g.registerRel("K", tables(1)._1, "P", "P")
+      body(g)
+    } finally {
+      g.close()
+      if (saved) tables.foreach { case (n, _) => spark.sql(s"DROP TABLE IF EXISTS $n") }
+    }
+  }
+
+  private val knows = "MATCH (a:P)-[:K]->(b:P) RETURN b.id AS b;"
+
+  /** `q` built, run and released in a cache scope of its own: its rows,
+    * and the broadcast exchanges of its executed plan. */
+  private def scopedRun(g: GraftSession, q: String, params: Map[String, Any] = Map.empty)
+      : (Set[Long], Seq[org.apache.spark.sql.execution.exchange.BroadcastExchangeLike]) =
+    PipelineCaches.scoped {
+      val df = g.cypher(q, params)
+      val rows = TestSpark.longs(df)
+      (rows, Profile.planNodes(df.queryExecution.executedPlan).map(_._2).collect {
+        case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeLike => b
+      })
+    }
+
+  /** The broadcast ids of the join sides `g` holds. */
+  private def sides(g: GraftSession): Set[Long] =
+    g.store.held(graft.exec.HeldBroadcasts.KeyClass)._1
+      .map(_.asInstanceOf[graft.exec.HeldBroadcasts.Side].bc.id).toSet
+
+  private def heldExchanges(df: org.apache.spark.sql.DataFrame) =
+    Profile.planNodes(df.queryExecution.executedPlan).map(_._2)
+      .collect { case h: graft.exec.HeldBroadcastExchangeExec => h }
+
+  test("a repeat of a join read builds no broadcast") {
+    withPeople { g =>
+      val (first, exchanges) = scopedRun(g, knows)
+      assert(first == Set(2L, 3L, 4L))
+      assert(exchanges.nonEmpty && exchanges.forall(_.isInstanceOf[graft.exec.HeldBroadcastExchangeExec]),
+        exchanges)
+      val (n, bytes, builds) = g.heldBroadcasts
+      assert(n > 0 && bytes > 0 && builds == n.toLong, g.heldBroadcasts)
+      val (again, served) = scopedRun(g, knows)
+      assert(again == first)
+      assert(served.nonEmpty && served.forall {
+        case h: graft.exec.HeldBroadcastExchangeExec => h.served.isDefined
+        case _ => false
+      }, s"the repeat built a broadcast: $served")
+      assert(g.heldBroadcasts == ((n, bytes, builds)))
+    }
+  }
+
+  test("a CREATE releases the held sides, and the next read sees the new row") {
+    withPeople { g =>
+      val (before, _) = scopedRun(g, knows)
+      val old = sides(g)
+      assert(old.nonEmpty)
+      withWrites(g.cypher("CREATE (:P {id: 4})-[:K]->(:P {id: 1});").collect())
+      assert(gone(old), "the write kept a held side's broadcast")
+      assert(g.heldBroadcasts._1 == 0)
+      assert(scopedRun(g, knows)._1 == before + 1L)
+      assert(sides(g).nonEmpty && (sides(g) & old).isEmpty)
+    }
+  }
+
+  test("a read planned before a write answers from the old sides; its scope then frees them") {
+    import org.apache.spark.graftprobe.BlockProbe
+    withPeople { g =>
+      val (before, _) = scopedRun(g, knows)
+      val old = sides(g)
+      val inFlight = PipelineCaches.scoped {
+        val df = g.cypher(knows)
+        df.queryExecution.executedPlan // planned: the read leases the held sides
+        assert(heldExchanges(df).exists(_.served.isDefined),
+          "precondition: the read plans with a held side")
+        withWrites(g.cypher("CREATE (:P {id: 4})-[:K]->(:P {id: 1});").collect())
+        assert(g.heldBroadcasts._1 == 0)
+        assert(old.subsetOf(BlockProbe.broadcastIds),
+          "the write destroyed a side a planned read still leases")
+        TestSpark.longs(df)
+      }
+      assert(inFlight == before)
+      assert(gone(old), s"broadcast blocks ${BlockProbe.broadcastIds & old} survived the read's scope")
+      assert(scopedRun(g, knows)._1 == before + 1L)
+    }
+  }
+
+  test("close() destroys every held broadcast side") {
+    withPeople { g =>
+      scopedRun(g, knows)
+      scopedRun(g, "MATCH (a:P)-[:K]->(b:P) WHERE b.name <> 'bob' RETURN b.id AS b;")
+      val held = sides(g)
+      assert(held.size >= 2, held)
+      g.close()
+      assert(gone(held), "close() left a held side's broadcast")
+      assert(g.heldBroadcasts._1 == 0)
+    }
+  }
+
+  test("two different bound values, strings included, add no held side") {
+    // saved tables: a bound value reaches the file scan's filters
+    withPeople(saved = true) { g =>
+      val q = "MATCH (a:P)-[:K]->(b:P) WHERE a.name = $n AND a.id < $i RETURN b.id AS b;"
+      assert(scopedRun(g, q, Map("n" -> "ann", "i" -> 10L))._1 == Set(2L))
+      val first = g.heldBroadcasts
+      assert(first._1 > 0, "precondition: the read holds its value-free sides")
+      assert(scopedRun(g, q, Map("n" -> "bob", "i" -> 20L))._1 == Set(3L))
+      assert(g.heldBroadcasts == first, "a new bound value added a held side")
+    }
+  }
+
+  test("distinct inline literals keep the held bytes at or below the cap") {
+    withPeople { g =>
+      def q(i: Int) = s"MATCH (a:P)-[:K]->(b:P) WHERE a.id <> $i RETURN b.id AS b;"
+      scopedRun(g, q(1))
+      val (_, one, _) = g.heldBroadcasts
+      g.store.capBytes = one
+      var evicted = Set.empty[Long]
+      for (i <- 2 to 6) {
+        val before = sides(g)
+        scopedRun(g, q(i))
+        val (_, bytes, _) = g.heldBroadcasts
+        assert(bytes <= one, s"literal $i: $bytes held bytes over the cap $one")
+        evicted ++= before -- sides(g)
+      }
+      assert(g.heldBroadcasts._3 > 1L && evicted.nonEmpty, g.heldBroadcasts)
+      assert(gone(evicted), "an evicted side kept its broadcast")
+    }
+  }
+
+  test("a thread with no bound statement plans an unchanged BroadcastExchangeExec") {
+    withPeople { g =>
+      val t = new ScopeThread
+      def batchPlan: Seq[String] = {
+        val df = spark.range(0, 100).join(spark.range(0, 10).toDF("id"), "id")
+        assert(df.count() == 10L)
+        Profile.planNodes(df.queryExecution.executedPlan).map(_._2.nodeName)
+      }
+      try {
+        val fresh = t(batchPlan)
+        assert(fresh.contains("BroadcastExchange") && !fresh.exists(_.startsWith("Held")), fresh)
+        // a statement's binding ends with its scope
+        val after = t { PipelineCaches.scoped(g.cypher(knows).collect()); batchPlan }
+        assert(after.contains("BroadcastExchange") && !after.exists(_.startsWith("Held")), after)
+      } finally {
+        t(PipelineCaches.clear(blocking = true))
+        t.stop()
+      }
+    }
+  }
+
+  test("a warm session-held answer equals a fresh session's, before and after a CREATE") {
+    val sf = "/root/testdata/sf0.001"
+    val create = ("CREATE (:Order {o_orderkey: $k, o_custkey: $c, o_orderstatus: 'O', " +
+      "o_totalprice: $p, o_orderpriority: '1-URGENT'}), " +
+      "(:Customer {c_custkey: $c})-[:PLACED]->(:Order {o_orderkey: $k});",
+      Map[String, Any]("k" -> 900001L, "c" -> 7L, "p" -> 1.5))
+    def multiset(df: org.apache.spark.sql.DataFrame): Map[Seq[Any], Int] =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (r, rs) => r -> rs.size }
+    /** The answer of a session that holds nothing, with the same writes. */
+    def fresh(q: String, params: Map[String, Any], writes: Seq[(String, Map[String, Any])]) = {
+      val f = graft.fixtures.TpchGraph.build(spark, sf)
+      try PipelineCaches.scoped {
+        writes.foreach { case (w, p) => f.cypher(w, p).collect() }
+        multiset(f.cypher(q, params))
+      } finally f.close()
+    }
+    val warm = graft.fixtures.TpchGraph.build(spark, sf)
+    spark.conf.set("spark.graft.writes.enabled", "true")
+    try {
+      for (writes <- Seq(Nil, Seq(create))) {
+        writes.foreach { case (w, p) => PipelineCaches.scoped(warm.cypher(w, p).collect()) }
+        var served = 0
+        for ((name, q, sets) <- ReadShapes.templates; params <- sets.take(2)) {
+          val expected = fresh(q, params, writes)
+          for (run <- 1 to 2) PipelineCaches.scoped {
+            val df = warm.cypher(q, params)
+            assert(multiset(df) == expected, s"$name $params, run $run, after writes $writes")
+            served += heldExchanges(df).count(_.served.isDefined)
+          }
+        }
+        assert(served > 0, s"after writes $writes no read was served a held side")
+      }
+    } finally {
+      spark.conf.set("spark.graft.writes.enabled", "false")
+      warm.close()
+    }
   }
 
   test("library code never clears the calling thread's whole scope") {

@@ -406,6 +406,39 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
+  test("a round RDD is unpersisted once: by its loop or by its scope, not both") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    // built first: starting Spark resets the logging configuration
+    val g = cascadeSession()
+    // Spark warns on every unpersist of a locally checkpointed RDD, naming it
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-unpersist-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = warned.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val rddLogs = new LoggerConfig("org.apache.spark.rdd", Level.WARN, false)
+    rddLogs.addAppender(appender, Level.WARN, null)
+    ctx.getConfiguration.addLogger(rddLogs.getName, rddLogs)
+    ctx.updateLoggers()
+    try graft.pipeline.PipelineCaches.scoped {
+      GraphAlgorithms.connectedComponents(g, "KE").collect()
+    } finally {
+      ctx.getConfiguration.removeLogger(rddLogs.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    val ids = warned.toArray.toSeq.map(_.toString)
+      .collect { case m if m.contains("locally checkpointed") => m.split(' ')(1) }
+    assert(ids.nonEmpty, "precondition: the loop persists locally checkpointed rounds")
+    val twice = ids.groupBy(identity).collect { case (id, n) if n.size > 1 => id }
+    assert(twice.isEmpty, s"RDDs unpersisted more than once: ${twice.mkString(", ")}")
+  }
+
   test("core numbers: hand-checked K4 + tail + pendant") {
     import spark.implicits._
     val g = new GraftSession(spark)

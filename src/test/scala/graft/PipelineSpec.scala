@@ -623,7 +623,7 @@ class SimilaritySpec extends AnyFunSuite {
       (4L, "c", Seq(-1.0, 0.0)), (5L, "c", Seq(-1.0, 0.0)),   // centroid (-1, 0)
       (6L, "a", null))                                        // excluded
       .toDF("doc_id", "source", "vec")
-    val got = Similarity.centroidShift(vecs, dim = 2).collect()
+    val got = Similarity.centroidShift(vecs).collect()
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
     val s2 = math.sqrt(0.5 * 0.5 * 2)
     def r6(x: Double) = BigDecimal(x)
@@ -674,7 +674,7 @@ class SimilaritySpec extends AnyFunSuite {
     val tiny = Seq(
       (0L, Array(1f, 0f)), (1L, Array(0f, 1f)), (2L, Array(1f, 1f)), (3L, Array(-1f, 0f)))
       .toDF("vec_id", "embedding")
-    val out = Similarity.bruteForceTopK(tiny, tiny.filter($"vec_id" === 0L), k = 3, dim = 2)
+    val out = Similarity.bruteForceTopK(tiny, tiny.filter($"vec_id" === 0L), k = 3)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toMap
     assert(out(2L) == math.round(1.0 / math.sqrt(2) * 1e6) / 1e6)
     assert(out(1L) == 0.0 && out(3L) == -1.0)
@@ -1437,7 +1437,7 @@ class TextAnalysisSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val vecs = TextAnalysis.hashedTfidf(d)
     val norms = vecs.select(col("doc_id"),
-        graft.pipeline.Similarity.normFixed(col("vec"), 64).as("n"))
+        graft.pipeline.Similarity.normFixed(col("vec")).as("n"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     for ((id, n) <- norms) assert(math.abs(n - 1.0) < 1e-4, s"doc $id norm $n")
     // drop-in composition with the embedding-space operators

@@ -85,6 +85,23 @@ class ProfileSpec extends AnyFunSuite {
     } finally g.close()
   }
 
+  test("build splits into the eager jobs' task CPU and wait") {
+    val g = gs
+    // a per-edge filter: the hop base is collected for every request
+    val (p, jobs) = profiled(g.cypher(
+      """MATCH (a:Nation)-[:NATION_ADJ*1..2 {n_dist: 1}]->(b:Nation)
+        |RETURN a.n_nationkey AS a_id, b.n_nationkey AS b_id;""".stripMargin))
+    val s = check("filtered var-length read", p, jobs)
+    assert(s("eager_jobs") >= 1.0 && s("build_cpu_ms") > 0, p.summary)
+    assert(math.abs(s("build_wait_ms") - math.max(0.0, s("build_ms") - s("build_cpu_ms"))) < 1e-6,
+      p.summary)
+    val (point, pointJobs) = profiled(g.cypher(
+      "MATCH (c:Customer) WHERE c.c_custkey = 5 RETURN c.c_name AS name;"))
+    val ps = check("point lookup", point, pointJobs)
+    assert(ps("eager_jobs") == 0.0 && ps("build_cpu_ms") == 0.0, point.summary)
+    assert(ps("build_wait_ms") == ps("build_ms"), point.summary)
+  }
+
   test("a pipeline gate entry: layers cover the wall, jobs agree") {
     val (p, jobs) = profiled(SparkEntry.queries("p_sft_pack_padded")(spark, sf))
     check("p_sft_pack_padded", p, jobs)

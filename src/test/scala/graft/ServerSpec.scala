@@ -261,6 +261,45 @@ class ServerSpec extends AnyFunSuite {
     }
   }
 
+  test("/metrics: a join read's repeat builds no broadcast side; a CREATE makes the next read build them") {
+    import spark.implicits._
+    val g = new GraftSession(spark)
+    g.registerTable("hbs_v", (1L to 5L).toDF("id"))
+    g.registerTable("hbs_e", Seq((1L, 2L), (2L, 3L)).toDF("from_HBV", "to_HBV"))
+    g.registerNode("HBV", "hbs_v", "id")
+    g.registerRel("HBS_E", "hbs_e", "HBV", "HBV")
+    val srv = new QueryServer(g, log = _ => ())
+    val port = srv.start()
+    spark.conf.set("spark.graft.writes.enabled", "true")
+    try {
+      def held = {
+        val m = get(port, "/metrics")._2
+        (sample(m, "graft_held_broadcasts").get, sample(m, "graft_held_broadcast_bytes").get,
+          sample(m, "graft_held_broadcast_builds_total").get)
+      }
+      val read = """{"query": "MATCH (a:HBV)-[:HBS_E]->(b:HBV) RETURN b.id AS b;"}"""
+      def reached = {
+        val (c, b) = post(port, read)
+        assert(c == 200, b)
+        b.linesIterator.map(_.replaceAll("[^0-9]", "").toLong).toSet
+      }
+      assert(reached == Set(2L, 3L))
+      val (sides, bytes, builds) = held
+      assert(sides > 0 && bytes > 0 && builds == sides, held)
+      for (_ <- 1 to 3) assert(reached == Set(2L, 3L))
+      assert(held == ((sides, bytes, builds)), "a repeat built a broadcast side")
+      val (cc, bc) = post(port, """{"query": "CREATE (:HBV {id: 3})-[:HBS_E]->(:HBV {id: 4});"}""")
+      assert(cc == 200, bc)
+      assert(held._1 == 0.0 && held._2 == 0.0, "the write left a broadcast side held")
+      assert(reached == Set(2L, 3L, 4L))
+      assert(held._1 > 0 && held._3 > builds, held)
+    } finally {
+      spark.conf.set("spark.graft.writes.enabled", "false")
+      srv.stop()
+      g.close()
+    }
+  }
+
   test("CLI client: scripted REPL round trip against a live server") {
     val srv = new QueryServer(gs)
     val port = srv.start()
