@@ -11,8 +11,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.catalog._
 import graft.cypher._
-import graft.exec.{DataFrameBuilder, HeldBroadcasts, HeldStore, HopAdjacency, Leased}
-import graft.pipeline.PipelineCaches
+import graft.exec.{DataFrameBuilder, HeldBroadcasts, HeldStore, HopAdjacency, Leased, Statement}
 import graft.planner.Planner
 
 /** Session facade: the Spark-native equivalent of the reference's HTTP
@@ -79,10 +78,6 @@ final class GraftSession(val spark: SparkSession) {
     * sides, one generation at a time ([[HeldStore]]). */
   private[graft] val store = new HeldStore(Runtime.getRuntime.maxMemory / HeldBroadcasts.CapFraction)
 
-  /** The generation: read before a read's tables are, so that nothing
-    * built from data a later write replaced is ever published. */
-  private[graft] def generation: Long = store.generation
-
   /** The adjacencies the session holds, and how many it has published
     * since it started: what `/metrics` reports. */
   private[graft] def hopAdjacencies: (Seq[Broadcast[HopAdjacency]], Long) = {
@@ -113,28 +108,26 @@ final class GraftSession(val spark: SparkSession) {
   private[graft] def releaseReadCaches(): Unit = store.sweep(_.isInstanceOf[IndexKey])
 
   /** The broadcast adjacency of hop base `pairs`, leased to the calling
-    * thread's cache scope ([[PipelineCaches.onClear]]).
+    * thread's [[Statement]].
     *
     * A `held` base (one with no per-edge filter: it depends only on the
     * catalog and the table contents) is collected once per generation:
-    * the first use builds it and, when no write happened since generation
-    * `since` was read, publishes it for the session; later uses take a
-    * lease on it. When two first uses race, both build, one is published
-    * and the other's adjacency goes with its own scope. Any other base is
-    * collected for the calling scope alone. */
-  private[graft] def hopAdjacency(pairs: DataFrame, since: Long,
-      held: Boolean): Broadcast[HopAdjacency] = {
+    * the first use builds it and, when no write happened since the
+    * statement read its generation, publishes it for the session; later
+    * uses take a lease on it. When two first uses race, both build, one
+    * is published and the other's adjacency goes with its own statement.
+    * Any other base is collected for the calling statement alone. */
+  private[graft] def hopAdjacency(pairs: DataFrame, held: Boolean): Broadcast[HopAdjacency] = {
+    val st = Statement.current(spark.sparkContext).getOrElse(
+      throw new IllegalStateException("a hop adjacency is built inside a cypher() statement"))
     val base = HopAdjacency.base(pairs)
     lazy val key = HopKey(base.queryExecution.normalized.canonicalized)
-    val lease = (if (held) store.lease[Broadcast[HopAdjacency]](key, since) else None)
-      .getOrElse {
-        val built = new Leased(spark.sparkContext.broadcast(HopAdjacency.collect(base)),
-          (bc: Broadcast[HopAdjacency]) => bc.destroy())
-        if (held) store.publish(key, built, since)
-        built
-      }
-    PipelineCaches.onClear(lease)(_.release())
-    lease.value
+    (if (held) st.lease[Broadcast[HopAdjacency]](key) else None).getOrElse {
+      val built = new Leased(spark.sparkContext.broadcast(HopAdjacency.collect(base)),
+        (bc: Broadcast[HopAdjacency]) => bc.destroy())
+      if (held) st.publish(key, built) else st.hold(built)
+      built
+    }.value
   }
 
   def table(name: String): DataFrame =
@@ -560,17 +553,20 @@ final class GraftSession(val spark: SparkSession) {
   /** Parse + plan + build. Parameters (`$name`) are bound before planning
     * (the reference passes them through verbatim — to_sql_query.rs:266; we
     * bind server-side). Parse and build run in spans of the calling
-    * thread's [[Profile]], when it has one. */
+    * thread's [[Profile]], when it has one.
+    *
+    * Each call binds one [[Statement]] on the calling thread, until its
+    * cache scope ends. A frame plans when it first runs, under the
+    * thread's latest statement: run after a later `cypher()` on the same
+    * thread, it plans with that statement's marks and generation. */
   def cypher(query: String, params: Map[String, Any] = Map.empty): DataFrame = {
     val t0 = Profile.nowUs
-    graft.exec.ParamRefs.bind(spark, params)
     val stmt = Profile.span("parse")(CypherParser.parse(query))
-    // a read plans its broadcast sides against the generation it reads
-    // now, before any table (HeldBroadcasts)
-    HeldBroadcasts.bind(spark, stmt match {
+    // a read plans against the generation it reads now, before any table
+    Statement.bind(spark, params, stmt match {
       case _: ReadQuery | _: UnionQuery | _: CallQuery | _: ExplainQuery => Some(store)
       case _ => None
-    }, store.generation)
+    })
     stmt match {
       // EXPLAIN: plan without executing — the formatted Spark physical
       // plan comes back as a one-row frame (Neo4j-style EXPLAIN)
@@ -932,8 +928,7 @@ final class GraftSession(val spark: SparkSession) {
         // each compute an independent (nondeterministic) result before one
         // wins the block store — count() settles the cache first.
         val cached = callDfs.map { df =>
-          val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            .transform(graft.pipeline.PipelineCaches.track)
+          val c = df.transform(graft.pipeline.PipelineCaches.track)
           c.count()
           c
         }

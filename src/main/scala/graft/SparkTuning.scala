@@ -15,10 +15,11 @@ import org.apache.spark.SparkConf
   *    shuffle serialize without per-class registration. Results are
   *    byte-identical — serialization format never reaches query semantics.
   *  - **graft's session extension** ([[graft.functions.GraftExtensions]]):
-  *    the vector functions as built-ins, the physical rule that reads
+  *    the vector functions as built-ins and two physical rules over the
+  *    thread's Cypher statement ([[graft.exec.Statement]]): one reads
   *    bound `$param` values through references ([[graft.exec.ParamRefs]]),
-  *    and the one that serves value-free broadcast join sides from the
-  *    session's held store ([[graft.exec.HeldBroadcasts]]).
+  *    the other serves value-free broadcast join sides from the session's
+  *    held store ([[graft.exec.HeldBroadcasts]]).
   *  - **Codegen cache size.** See [[CodegenCacheEntries]].
   */
 object SparkTuning {

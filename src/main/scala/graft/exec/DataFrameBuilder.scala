@@ -167,8 +167,6 @@ final class DataFrameBuilder(
   private def edgeDF(e: ResolvedEdge, plan: GraphPlan): DataFrame = {
     val s = e.schema
     val schemas = s +: e.altSchemas
-    // read before any table this base reads (GraftSession.hopAdjacency)
-    val since = session.generation
     val base = session.table(s.tableName)
     val refCols = plan.referencedProps.getOrElse(e.alias, Set.empty).toSeq.sorted
     // inline-prop filters ({w: 5}) are pushed without appearing in
@@ -427,7 +425,7 @@ final class DataFrameBuilder(
         val h1 = if (e.undirectedSameLabel) pairs else pairs.distinct()
         val hashed = smallEdges && HopAdjacency.integralIds(pairs)
         def hashedWalk(shortest: Boolean) = HopAdjacency.expand(pairs,
-          session.hopAdjacency(pairs, since, held = e.pushedFilters.isEmpty),
+          session.hopAdjacency(pairs, held = e.pushedFilters.isEmpty),
           lo, hi, shortest)
         val needsPathValues = e.shortest && e.pathAlias.isDefined &&
           pathValueRelAliases(plan).contains(e.alias)

@@ -1,8 +1,7 @@
 package graft.exec
 
-import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, TimeUnit}
+import java.util.concurrent.{CompletableFuture, TimeUnit}
 
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.FutureConverters._
 
 import org.apache.spark.broadcast.Broadcast
@@ -28,9 +27,9 @@ import org.apache.spark.sql.execution.metric.SQLMetric
   * exchanges, and again on every adaptive re-plan (a query-stage
   * preparation rule, [[graft.functions.GraftExtensions]]). It replaces a
   * `BroadcastExchangeExec` with a [[HeldBroadcastExchangeExec]] when
-  *   - the statement planning on this thread is a read that
-  *     `GraftSession.cypher` bound ([[bind]]) — a thread with no bound
-  *     statement, such as every batch call, plans exactly as before;
+  *   - the [[Statement]] planning on this thread is a read that
+  *     `GraftSession.cypher` bound — a thread with no live statement,
+  *     such as every batch call, plans exactly as before;
   *   - every expression of the side is deterministic; and
   *   - the side carries no value the statement bound: no literal (a file
   *     scan's data filters included) equals a bound `$param` value
@@ -44,20 +43,17 @@ import org.apache.spark.sql.execution.metric.SQLMetric
   * keeps each new parameter value from adding an entry.
   *
   * Lifetime. The first use runs the ordinary broadcast and publishes it
-  * when the generation it was planned in is still current. Every
-  * statement leases the sides it plans with, until its cache scope ends
-  * ([[graft.pipeline.PipelineCaches]]): a read in flight across a write
-  * finishes on the old broadcast, destroyed when its last lease goes.
-  * Held sides share one byte bound, [[CapFraction]] of the driver heap. */
+  * when the generation its statement read is still current. The
+  * statement holds a lease on every side it plans with, until its cache
+  * scope ends: a read in flight across a write finishes on the old
+  * broadcast, destroyed when its last lease goes. Held sides share one
+  * byte bound, [[CapFraction]] of the driver heap. */
 object HeldBroadcasts {
 
   /** The held sides' share of the driver heap (1/16). The 12
     * `cypher_read` templates hold 57 MB of hashed relations in 11 sides at
     * sf0.1, under a third of a 3 GiB heap's 192 MiB share (DESIGN §20). */
   val CapFraction = 16L
-
-  /** Local property naming the thread's bound statement. */
-  private val Property = "graft.heldBroadcasts"
 
   /** A side's key: its broadcast mode and child, canonicalized. */
   private final case class Key(mode: BroadcastMode, child: SparkPlan)
@@ -66,47 +62,15 @@ object HeldBroadcasts {
   /** A held side: the broadcast and what the ordinary exchange measured. */
   final class Side private[exec] (val bc: Broadcast[Any], val bytes: Long, val rows: Long)
 
-  /** One read statement: the store it reads, the generation it read
-    * before any table, and the leases it took. */
-  final class Statement private[exec] (val store: HeldStore, val since: Long) {
-    private val leases = ArrayBuffer.empty[Leased[Side]]
-    private var open = true
-    /** Keeps `l` until the statement's scope ends; false once it has. */
-    def hold(l: Leased[Side]): Boolean = synchronized { if (open) leases += l; open }
-    def release(): Unit = synchronized {
-      open = false
-      val ls = leases.toList
-      leases.clear()
-      ls
-    }.foreach(_.release())
-  }
-
-  private val live = new ConcurrentHashMap[String, Statement]()
-
-  /** Binds the calling thread's next plans to `store` at generation
-    * `since`, until the thread's cache scope ends; `None` unbinds it. */
-  def bind(spark: SparkSession, store: Option[HeldStore], since: Long): Unit = {
-    val sc = spark.sparkContext
-    store match {
-      case None => sc.setLocalProperty(Property, null)
-      case Some(s) =>
-        val id = java.util.UUID.randomUUID().toString
-        live.put(id, new Statement(s, since))
-        sc.setLocalProperty(Property, id)
-        graft.pipeline.PipelineCaches.onClear(id)(id => Option(live.remove(id)).foreach(_.release()))
-    }
-  }
-
-  /** The physical rule, for the thread's bound statement (none: identity). */
+  /** The physical rule, for the thread's read statement (none: identity). */
   final class Hold(session: SparkSession) extends Rule[SparkPlan] {
     def apply(plan: SparkPlan): SparkPlan =
-      Option(session.sparkContext.getLocalProperty(Property)).flatMap(id => Option(live.get(id)))
-        .fold(plan)(st => plan.transformDown {
-          case b: BroadcastExchangeExec if valueFree(session, b) => held(st, b)
-        })
+      Statement.current(session.sparkContext).filter(_.holds).fold(plan)(st => plan.transformDown {
+        case b: BroadcastExchangeExec if valueFree(st, b) => held(st, b)
+      })
   }
 
-  private def valueFree(session: SparkSession, b: BroadcastExchangeExec): Boolean = {
+  private def valueFree(st: Statement, b: BroadcastExchangeExec): Boolean = {
     // the plans of a cached relation, and of the side's finished
     // exchanges (query stages, after an adaptive re-plan), are not
     // children: they are read all the same
@@ -124,14 +88,14 @@ object HeldBroadcasts {
     }) ++ side.flatMap(_.expressions)
     def bound(e: Expression): Boolean = e.exists {
       case _: ParamRef => true
-      case Literal(v, dt) => ParamRefs.binds(session, v, dt)
+      case Literal(v, dt) => ParamRefs.binds(st, v, dt)
       case _ => false
     }
     // Catalyst folds a filter over a local relation into its rows, where
     // the values it compared with no longer show: a statement that bound
     // any value holds no side that reads one
     exprs.forall(_.deterministic) && !exprs.exists(bound) &&
-      !(ParamRefs.bindsAny(session) && side.exists(_.isInstanceOf[LocalTableScanExec]))
+      !(st.raw.nonEmpty && side.exists(_.isInstanceOf[LocalTableScanExec]))
   }
 
   /** `b`'s key. A cached relation enters it as the plan it caches, scan
@@ -149,25 +113,16 @@ object HeldBroadcasts {
 
   private def held(st: Statement, b: BroadcastExchangeExec): SparkPlan = {
     val key = this.key(b)
-    st.store.lease[Side](key, st.since) match {
-      case Some(l) if st.hold(l) =>
+    st.lease[Side](key) match {
+      case Some(l) =>
         val side = HeldSideExec(b.child.output, b.child.canonicalized)
         // adaptive execution links each new query stage to a logical plan
         // found below its exchange
         b.child.collectFirst { case p if p.logicalLink.isDefined => p.logicalLink.get }
           .foreach(side.setLogicalLink)
         HeldBroadcastExchangeExec(b.mode, side, Some(l.value), key, st)
-      case Some(l) => l.release(); b
       case None => HeldBroadcastExchangeExec(b.mode, b.child, None, key, st)
     }
-  }
-
-  /** Publishes the side a first use built, for the rest of its generation. */
-  private[exec] def publish(st: Statement, key: Any, side: Side): Unit = {
-    val l = new Leased(side, (s: Side) => s.bc.destroy())
-    // a statement whose scope already ended leaves its broadcast to Spark,
-    // as an ordinary exchange does
-    if (st.hold(l)) st.store.publish(key, l, st.since, side.bytes)
   }
 }
 
@@ -180,7 +135,7 @@ object HeldBroadcasts {
   * time. */
 case class HeldBroadcastExchangeExec(mode: BroadcastMode, child: SparkPlan,
     @transient served: Option[HeldBroadcasts.Side], @transient key: Any,
-    @transient st: HeldBroadcasts.Statement) extends BroadcastExchangeLike {
+    @transient st: Statement) extends BroadcastExchangeLike {
 
   @transient private val ordinary = BroadcastExchangeExec(mode, child)
 
@@ -204,8 +159,8 @@ case class HeldBroadcastExchangeExec(mode: BroadcastMode, child: SparkPlan,
       CompletableFuture.completedFuture(side.bc)
     case None =>
       ordinary.relationFuture.asInstanceOf[CompletableFuture[Broadcast[Any]]].thenApply { bc =>
-        HeldBroadcasts.publish(st, key,
-          new HeldBroadcasts.Side(bc, metrics("dataSize").value, metrics("numOutputRows").value))
+        val side = new HeldBroadcasts.Side(bc, metrics("dataSize").value, metrics("numOutputRows").value)
+        st.publish(key, new Leased(side, (s: HeldBroadcasts.Side) => s.bc.destroy()), side.bytes)
         bc
       }
   }

@@ -163,7 +163,7 @@ object HopAdjacency {
     * The caller owns `adj` and keeps it alive while the frame can run:
     * [[graft.GraftSession.hopAdjacency]] holds an unfiltered base's
     * adjacency for the session until a write, and leases it to the calling
-    * thread's cache scope. The sources are the adjacency's keys, read by
+    * thread's [[Statement]]. The sources are the adjacency's keys, read by
     * index from one array literal over a one-partition range, under a
     * generator: an anchor filter Catalyst infers on `__src` (from
     * `a.id = $k` through the join) pushes through the generator onto the

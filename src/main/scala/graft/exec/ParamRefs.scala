@@ -1,7 +1,5 @@
 package graft.exec
 
-import java.util.concurrent.ConcurrentHashMap
-
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, SparkSession}
@@ -35,37 +33,21 @@ import org.apache.spark.sql.types._
   * `partitionFilters` are unchanged. Left inlined: an `IN` list of 11 to
   * 400 INT or DATE values, which Catalyst compiles into a `switch`.
   *
-  * Marks. [[GraftSession.cypher]] calls [[bind]] once per statement. The
-  * statement's numeric, date and timestamp values — `IN $list` elements
-  * included — become marks, and so do values Catalyst folds from the
-  * parameters alone, such as `datetime($d)` ([[folded]], called by
-  * [[ExprCompiler]]). Marks compare by value: numbers across numeric types
-  * (an integral parameter unwrapped against an INT column becomes an INT
-  * literal), dates and timestamps by type. A constant the user or the
-  * engine wrote that happens to equal a bound value is replaced too; the
-  * replacement reads the same value, so answers never change.
+  * Marks. [[GraftSession.cypher]] binds one [[Statement]] per call. Its
+  * numeric, date and timestamp values — `IN $list` elements included —
+  * become marks, and so do values Catalyst folds from the parameters
+  * alone, such as `datetime($d)` ([[folded]], called by [[ExprCompiler]]).
+  * Marks compare by value: numbers across numeric types (an integral
+  * parameter unwrapped against an INT column becomes an INT literal),
+  * dates and timestamps by type. A constant the user or the engine wrote
+  * that happens to equal a bound value is replaced too; the replacement
+  * reads the same value, so answers never change.
   *
-  * Scope. A mark set belongs to one statement: it lives from [[bind]] to
-  * the release of the calling thread's cache scope
-  * ([[graft.pipeline.PipelineCaches]] — one request on the server), or to
-  * the thread's next statement. Its id travels in a Spark local property,
-  * which Spark copies onto the threads it plans subqueries and broadcasts
-  * on; concurrent requests never see each other's marks. A thread with no
-  * live mark set — every batch call — plans exactly as before. */
+  * Scope. The marks belong to the calling thread's [[Statement]], and
+  * end with it: at the release of the thread's cache scope. A later
+  * statement on the thread plans with its own marks; a thread with no
+  * live statement — every batch call — plans exactly as before. */
 object ParamRefs {
-
-  /** Local property naming the thread's live mark set. */
-  private val Property = "graft.paramMarks"
-
-  /** One statement's marks: its raw parameter values, and the keys of the
-    * literals to replace (added to while the statement builds). */
-  private final class Marks(val raw: Set[Any]) {
-    val keys: java.util.Set[Any] = ConcurrentHashMap.newKeySet[Any]()
-  }
-
-  private val live = new ConcurrentHashMap[String, Marks]()
-  /** The id of the mark set the calling thread bound last. */
-  private val bound = new ThreadLocal[String]()
 
   /** A literal's mark key: numbers by value across numeric types, dates
     * and timestamps by type and internal value; None for values Spark
@@ -81,71 +63,41 @@ object ParamRefs {
     case _ => None
   }
 
-  private def keyOfValue(v: Any): Option[Any] =
+  /** The mark key of a bound parameter value. */
+  private[exec] def keyOfValue(v: Any): Option[Any] =
     try { val l = Literal(v); key(l.value, l.dataType) }
     catch { case NonFatal(_) => None }
 
-  /** Start the calling thread's statement with `params`: their values
-    * become the live marks, replacing the thread's previous statement's. */
-  def bind(spark: SparkSession, params: Map[String, Any]): Unit = {
-    Option(bound.get).foreach(release)
-    bound.remove()
-    val raw = params.values.flatMap {
-      case xs: Seq[_] => xs
-      case v => Seq(v)
-    }.filter(_ != null).toSet
-    val sc = spark.sparkContext
-    if (raw.isEmpty) sc.setLocalProperty(Property, null)
-    else {
-      val marks = new Marks(raw)
-      raw.flatMap(keyOfValue).foreach(marks.keys.add)
-      val id = java.util.UUID.randomUUID().toString
-      live.put(id, marks)
-      bound.set(id)
-      sc.setLocalProperty(Property, id)
-      graft.pipeline.PipelineCaches.onClear(id)(release)
-    }
-  }
-
-  private def release(id: String): Unit = live.remove(id)
+  private def current: Option[Statement] = Statement.current(SparkSession.active.sparkContext)
 
   /** Whether `v` is a value the calling thread's statement bound. */
-  def isBound(v: Any): Boolean =
-    Option(bound.get).flatMap(id => Option(live.get(id))).exists(_.raw(v))
+  def isBound(v: Any): Boolean = current.exists(_.raw(v))
 
-  /** Whether the statement planning on this thread bound the value `v` of
-    * a literal of type `dt`: a mark, a bound string, or a bound number
-    * written as a decimal. */
-  private[exec] def binds(session: SparkSession, v: Any, dt: DataType): Boolean =
-    marks(session).exists { m =>
-      key(v, dt).exists(m.keys.contains) || (v match {
-        case s: org.apache.spark.unsafe.types.UTF8String => m.raw(s.toString)
-        case d: Decimal => m.keys.contains(BigDecimal(d.toJavaBigDecimal))
-        case _ => false
-      })
-    }
-
-  /** Whether the statement planning on this thread bound any value. */
-  private[exec] def bindsAny(session: SparkSession): Boolean = marks(session).nonEmpty
-
-  private def marks(session: SparkSession): Option[Marks] =
-    Option(session.sparkContext.getLocalProperty(Property)).flatMap(id => Option(live.get(id)))
+  /** Whether statement `st` bound the value `v` of a literal of type
+    * `dt`: a mark, a bound string, or a bound number written as a
+    * decimal. */
+  private[exec] def binds(st: Statement, v: Any, dt: DataType): Boolean =
+    key(v, dt).exists(st.keys.contains) || (v match {
+      case s: org.apache.spark.unsafe.types.UTF8String => st.raw(s.toString)
+      case d: Decimal => st.keys.contains(BigDecimal(d.toJavaBigDecimal))
+      case _ => false
+    })
 
   /** Marks the value Catalyst will fold `c` — an expression over bound
     * values only — into, and returns `c` unchanged. A value that does not
     * fold (non-deterministic, or failing on this input) marks nothing. */
   def folded(c: Column): Column = {
-    for (id <- Option(bound.get); marks <- Option(live.get(id))) try {
+    for (st <- current) try {
       val spark = SparkSession.active
       ReplaceExpressions(spark.range(1).select(c).queryExecution.analyzed) match {
         case Project(Seq(Alias(e, _)), _) if e.foldable =>
           val v = e.eval()
-          key(v, e.dataType).foreach(marks.keys.add)
+          key(v, e.dataType).foreach(st.keys.add)
           // compared with a column of another temporal type, Catalyst
           // casts the folded value into that type
           val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
           if (Temporal(e.dataType) && v != null) for (t <- Temporal - e.dataType)
-            key(Cast(Literal(v, e.dataType), t, tz).eval(), t).foreach(marks.keys.add)
+            key(Cast(Literal(v, e.dataType), t, tz).eval(), t).foreach(st.keys.add)
         case _ =>
       }
     } catch { case NonFatal(_) => }
@@ -157,7 +109,8 @@ object ParamRefs {
   /** The physical rewrite, for the thread's live marks (none: identity). */
   final class Replace(session: SparkSession) extends Rule[SparkPlan] {
     def apply(plan: SparkPlan): SparkPlan =
-      marks(session).filterNot(_.keys.isEmpty).fold(plan)(m => rewrite(plan, m.keys))
+      Statement.current(session.sparkContext).filterNot(_.keys.isEmpty)
+        .fold(plan)(st => rewrite(plan, st.keys))
   }
 
   private def rewrite(plan: SparkPlan, keys: java.util.Set[Any]): SparkPlan = {

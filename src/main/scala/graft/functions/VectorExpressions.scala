@@ -497,7 +497,8 @@ object GraftFunctions {
 /** `spark.sql.extensions=graft.functions.GraftExtensions` (set by
   * [[graft.SparkTuning.kryoConf]]) registers the vector functions as
   * permanent built-ins for pure-SQL users, and installs two physical
-  * rules: the one that reads bound `$param` values through references
+  * rules, both of which read the thread's [[graft.exec.Statement]]: the
+  * one that reads bound `$param` values through references
   * ([[graft.exec.ParamRefs]], a columnar and a query-stage optimizer
   * rule), and the one that serves value-free broadcast join sides from
   * the session's held store ([[graft.exec.HeldBroadcasts]], a query-stage

@@ -162,7 +162,6 @@ private[gate] object MultimodalGates {
     // recovers ~69% of within-group near-dups vs 62% at 2
     GateEntry("p_mm_dedup_jpeg", (s, dir) => {
       val media = Multimodal.synthesizeJpegMedia(s, mmSampleDocs(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         .transform(graft.pipeline.PipelineCaches.track)
       Multimodal.imageLumaGrid(s, media)
         .write.mode("overwrite").parquet(jpegGridPath)

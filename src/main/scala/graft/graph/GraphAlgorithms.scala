@@ -583,7 +583,6 @@ object GraphAlgorithms {
       edgePred: Option[Column] = None): DataFrame = {
     // canonical undirected simple edges; read 4x below, so persist
     val canon = simpleEdges(gs, relLabel, edgePred)
-      .persist(StorageLevel.MEMORY_AND_DISK)
       .transform(graft.pipeline.PipelineCaches.track)
     val deg = canon.select(col("a").as("id"))
       .unionAll(canon.select(col("b").as("id")))
@@ -622,7 +621,6 @@ object GraphAlgorithms {
   def linkFeatures(gs: GraftSession, relLabel: String,
       edgePred: Option[Column] = None): DataFrame = {
     val canon = simpleEdges(gs, relLabel, edgePred)
-      .persist(StorageLevel.MEMORY_AND_DISK)
       .transform(graft.pipeline.PipelineCaches.track)
     val und = canon.unionAll(canon.select(col("b").as("a"), col("a").as("b")))
     val deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
@@ -1160,10 +1158,8 @@ object GraphAlgorithms {
     import spark.implicits._
     val canon = simpleEdges(gs, relLabel, edgePred)
     val sym = canon.unionAll(canon.select(col("b").as("a"), col("a").as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
       .transform(graft.pipeline.PipelineCaches.track)
     val v = sym.select(col("a").as("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
       .transform(graft.pipeline.PipelineCaches.track)
     val srcFrame =
       if (sources.nonEmpty) sources.toDF("src")
@@ -1378,7 +1374,6 @@ object GraphAlgorithms {
         org.apache.spark.sql.expressions.Window.partitionBy("f")))
       // both windows share the partitionBy(f) exchange, so the cached
       // frame is already hash-partitioned on the join key
-      .persist(StorageLevel.MEMORY_AND_DISK)
       .transform(graft.pipeline.PipelineCaches.track)
     val v = e.select(col("f").as("id")).union(e.select(col("t").as("id")))
       .distinct()
@@ -1476,7 +1471,6 @@ object GraphAlgorithms {
     require(seed >= 0, s"seed must be >= 0, got $seed")
     require(p > 0 && q > 0, s"p and q must be > 0, got p=$p q=$q")
     val e = directedEdges(gs, relLabel, edgePred).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
       .transform(graft.pipeline.PipelineCaches.track)
     val adj = e
       .withColumn("idx", row_number().over(
@@ -1484,7 +1478,6 @@ object GraphAlgorithms {
           .partitionBy("f").orderBy("t")) - 1)
       .withColumn("deg", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("f")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
       .transform(graft.pipeline.PipelineCaches.track)
     val v = e.select(col("f").as("id")).union(e.select(col("t").as("id")))
       .distinct()
@@ -1555,7 +1548,6 @@ object GraphAlgorithms {
   def modularity(gs: GraftSession, relLabel: String, communities: DataFrame,
       edgePred: Option[Column] = None): DataFrame = {
     val canon = simpleEdges(gs, relLabel, edgePred)
-      .persist(StorageLevel.MEMORY_AND_DISK)
       .transform(graft.pipeline.PipelineCaches.track)
     val lab = communities.select(col("id").cast("long").as("__lid"),
       col("label").cast("long").as("__lab"))
@@ -1598,7 +1590,6 @@ object GraphAlgorithms {
       edgePred: Option[Column] = None): DataFrame = {
     val canon = simpleEdges(gs, relLabel, edgePred)
     val sym = canon.unionAll(canon.select(col("b").as("a"), col("a").as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
       .transform(graft.pipeline.PipelineCaches.track)
     val deg = sym.groupBy(col("a").as("__d_id"))
       .agg(count(lit(1)).cast("double").as("__deg"))

@@ -160,7 +160,6 @@ object Corpus {
         docs.select(Dedup.tokens(col(textCol)).as("__toks")),
         Seq.empty, col("__toks"), "tok")
       .groupBy("tok").agg(count(lit(1)).as("exact_cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)
     val cms = tokCounts.agg(graft.functions.GraftFunctions.cmsAggWeighted(
       array((0 until d).map(r => bucket(r, col("tok"))): _*),
@@ -267,7 +266,6 @@ object Corpus {
     val evalShingles = Explodes.explodeNoInfer(
       Dedup.withShingles(eval_.select(col(textCol)), textCol, n),
       Seq.empty, col("sh"), "ngram").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)
     // expectedNumItems needs the exact count, which the persisted set
     // yields without recomputing the shingle lineage

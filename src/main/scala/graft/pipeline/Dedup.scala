@@ -144,7 +144,6 @@ object Dedup {
     val prep = withShingles(keyed.repartition(col("id")), "__mh_text")
       .select(col("id"), col("txh"),
         transform(col("sh"), s => xxhash64(s)).as("hs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)
 
     // Per-row fused signature ([[graft.functions.MinHashRowExpr]], bit-
@@ -160,7 +159,6 @@ object Dedup {
     prep.filter(size(col("hs")) > 0)
       .select(col("id"), GraftFunctions.minhashSignatureRow(col("hs")).as("sig"),
         col("txh"), array_sort(col("hs")).as("hs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)
   }
 
@@ -353,7 +351,6 @@ object Dedup {
     val prep = withShingles(
         docs.select(col(idCol).as("id"), col(textCol)).repartition(col("id")), textCol)
       .select(col("id"), GraftFunctions.simhash64(col("sh")).as("sim"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)
 
     val chunks = array((0 until 4).map(c =>
@@ -424,7 +421,6 @@ object Dedup {
     // exchange reuse). 16 bytes per image, orders of magnitude below
     // the payload. Tracked in [[PipelineCaches]] (caller's scope).
     val prep = hashes.select(col(idCol).as("id"), col(hashCol).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)
     val chunked = hashChunked(prep, "h", "id")
     val okBuckets = chunked.groupBy("chunk", "cv").count()
@@ -496,7 +492,6 @@ object Dedup {
     val prep = withShingles(
         docs.select(col("doc_id").as("id"), col("text")).repartition(col("id")), "text")
       .select(col("id"), transform(col("sh"), s => xxhash64(s)).as("hs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)
 
     // verify side: sorted-by-hash arrays for the zero-alloc merge-intersect
@@ -603,7 +598,6 @@ object Dedup {
     val prep = withShingles(
         docs.select(col("doc_id").as("id"), col("text")).repartition(col("id")), "text")
       .select(col("id"), transform(col("sh"), s => xxhash64(s)).as("hs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)
 
     val sets = prep.select(col("id"), array_sort(col("hs")).as("hs"))
@@ -687,10 +681,8 @@ object Dedup {
     // both frames feed TWO joins (hit count + extra count); persisted
     // (pair-sized) so the upstream miners run once, not twice
     val a = approx.select(col("a"), col("b")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track).alias("x")
     val e = exact.select(col("a"), col("b")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track).alias("t")
     val hits = e.join(a,
         col("t.a") === col("x.a") && col("t.b") === col("x.b"), "left_outer")

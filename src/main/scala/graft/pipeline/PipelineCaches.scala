@@ -11,17 +11,16 @@ import org.apache.spark.storage.StorageLevel
   * a large-edge shortestPath past 6 hops and CALL+UNION persist
   * intermediates because several consumers in the same job read them
   * (re-deriving the lineage per consumer costs more than the cache); a
-  * var-length hop on a broadcast-small base reads a broadcast adjacency,
-  * built for the request when the hop filters its edges and otherwise
-  * held by the session, which leases it to the request, as it leases the
-  * broadcast join sides it holds. Spark offers no
+  * Cypher statement ([[graft.exec.Statement]]) holds its `$param` marks
+  * and a lease on every hop adjacency and broadcast join side it reads,
+  * whether built for it or held by the session. Spark offers no
   * "unpersist when the consuming query finishes" hook for a lazily-
-  * executed result, so each persist, broadcast or lease is registered
+  * executed result, so each persist and each statement is registered
   * here and released when its scope ends.
   *
-  *   - What registers: [[track]] (a persisted `DataFrame`), [[onClear]]
-  *     (a cleanup hook, e.g. a persisted round RDD or a broadcast to
-  *     destroy) and [[memo]] (a computed value shared within the scope).
+  *   - What registers: [[track]] (a frame it persists), [[onClear]]
+  *     (a cleanup hook, e.g. a persisted round RDD or a statement's end)
+  *     and [[memo]] (a computed value shared within the scope).
   *     Every registration goes to the top scope of the CALLING thread.
   *   - Who releases: [[scoped]] pushes a fresh scope, runs its body and
   *     releases the scope in a `finally`; [[clear]] releases the calling
@@ -53,7 +52,7 @@ import org.apache.spark.storage.StorageLevel
   * follow its generation instead, which moves on at every write,
   * registered table, catalog swap and close: the in-memory adjacency
   * indexes are unpersisted then, and the held hop adjacencies and
-  * broadcast join sides lose their session lease while each request's
+  * broadcast join sides lose their session lease while each statement's
   * lease still goes with its scope. Reads of persisted adjacency index
   * tables are not caches: the edge-table fingerprint fences those.
   */
@@ -73,16 +72,17 @@ object PipelineCaches {
 
   private def top: Scope = scopes.get.head
 
-  /** Register an (already persisted) pipeline intermediate with the top
-    * scope; used via `.transform(PipelineCaches.track)` after each
-    * persist. */
+  /** Persist a pipeline intermediate and register it with the top scope;
+    * used via `.transform(PipelineCaches.track)`. This is where the
+    * storage level is set: the first live tracker of a plan persists it
+    * at MEMORY_AND_DISK under the plan-ref lock, so a release on another
+    * thread never drops the entry between the persist and the
+    * registration; later trackers share that entry. */
   private[graft] def track(df: DataFrame): DataFrame = {
     val plan = df.queryExecution.normalized.canonicalized
     planRefs.synchronized {
       val n = planRefs.getOrElse(plan, 0)
       planRefs(plan) = n + 1
-      // a release on another thread may have dropped a plan-identical
-      // entry between the caller's persist and this registration
       if (n == 0 && df.storageLevel == StorageLevel.NONE)
         df.persist(StorageLevel.MEMORY_AND_DISK)
     }

@@ -90,7 +90,6 @@ object PrefixSum {
       .repartitionByRange(parts,
         (col(groupCol).asc +: orderCols.map(col(_).asc)): _*)
       .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)
     // bounded collect: one row per (non-empty partition, group) slice —
     // contiguous ranges keep this ≤ parts + |groups| − 1 rows

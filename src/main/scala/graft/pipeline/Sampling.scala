@@ -292,7 +292,6 @@ object Sampling {
     val ranged = docs
       .repartitionByRange(parts, col(scoreCol).desc, col(idCol).asc)
       .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)
     // bounded collect: one row per non-empty partition
     val perPart = ranged.groupBy(col("__pid"))

@@ -388,7 +388,6 @@ object Similarity {
     val cVecs = corpus.select(col(idCol).as("nid"), toDouble(col(vecCol)).as("cv"))
       .repartition(col("nid"))
       .withColumn("cnorm", normFixed(col("cv")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)
     val cCodes = cVecs.select(col("nid"),
       posexplode(codes(col("cv"))).as(Seq("tbl", "code")))
@@ -459,7 +458,6 @@ object Similarity {
     val vecs = vectors.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
       .repartition(col("id"))
       .withColumn("nrm", normFixed(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)
 
     // adaptive code width: constant expected bucket occupancy (~32).
@@ -611,7 +609,6 @@ object Similarity {
       shaped
         .repartition(col("nid"))
         .withColumn("cnorm", normFixed(col("cv")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         .transform(PipelineCaches.track)
     }
   }
@@ -889,7 +886,6 @@ object Similarity {
       .select(col("nid"), col("cv"), col("cnorm"),
         (-col("best.negid")).as("cluster_id"), col("best.csim").as("sim"))
       .withColumn("rk", row_number().over(w))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)
     val pairSide = ranked.filter(col("rk") <= maxClusterSize)
     val dup = pairSide.alias("x").join(pairSide.alias("y"),
@@ -1099,7 +1095,6 @@ object Similarity {
     val cents = collectCents(spark.read.parquet(s"${live.dir}/centroids")
       .select(col("list_id"), col("cent"), col("centnorm")))
     val assigned = assignLists(prepIvfCorpus(delta, idCol, vecCol), cents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)
     assigned
       .repartition(col("list_id"))
@@ -1245,7 +1240,6 @@ object Similarity {
           -probes, probes)))
       .select(col("qid"), col("qv"), col("qnorm"),
         (-col("probe.negid")).as("list_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(PipelineCaches.track)
 
     val probedIds = qAssigned.select("list_id").distinct()

@@ -127,7 +127,6 @@ object StreamingOps {
     val evalGrams = Explodes.explodeNoInfer(
       Dedup.withShingles(evalDocs.select(col(textCol)), textCol, n),
       Seq.empty, col("sh"), "__graft_gram").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(graft.pipeline.PipelineCaches.track)
     val exploded = Explodes.explodeNoInfer(
       Dedup.withShingles(docs.withWatermark(tsCol, horizon), textCol, n),
@@ -178,7 +177,6 @@ object StreamingOps {
     val corpusBuckets = cBanded.join(okBuckets, Seq("band", "bh"))
       .select(col("band").as("__giv_band"), col("bh").as("__giv_bh"),
         col("id").as("__giv_cid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(graft.pipeline.PipelineCaches.track)
     // hs in the signature table is pre-sorted (computeSignatures).
     // Persisted like corpusBuckets: this is the heaviest corpus
@@ -186,7 +184,6 @@ object StreamingOps {
     // re-evaluate the corpus signature plan every micro-batch otherwise.
     val corpusSets = corpusSigs.select(col("id").as("__giv_cid"),
       col("hs").as("__giv_hb"), size(col("hs")).as("__giv_zb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(graft.pipeline.PipelineCaches.track)
     val keep = docs.columns.map(col).toSeq
     val signed = Dedup.withShingles(

@@ -502,25 +502,92 @@ class CacheHygieneSpec extends AnyFunSuite {
     }
   }
 
+  private def paramRefs(plan: org.apache.spark.sql.execution.SparkPlan): Seq[graft.exec.ParamRef] =
+    Profile.planNodes(plan).flatMap(_._2.expressions)
+      .flatMap(_.collect { case r: graft.exec.ParamRef => r })
+
   test("a thread with no bound statement plans an unchanged BroadcastExchangeExec") {
     withPeople { g =>
       val t = new ScopeThread
-      def batchPlan: Seq[String] = {
-        val df = spark.range(0, 100).join(spark.range(0, 10).toDF("id"), "id")
-        assert(df.count() == 10L)
-        Profile.planNodes(df.queryExecution.executedPlan).map(_._2.nodeName)
+      // a batch join whose filter carries the literal 42
+      def batch: org.apache.spark.sql.execution.SparkPlan = {
+        val df = spark.range(0, 100).where($"id" =!= 42L).join(spark.range(0, 50).toDF("id"), "id")
+        assert(df.collect().length == 49)
+        df.queryExecution.executedPlan
+      }
+      def unchanged(input: String, plan: org.apache.spark.sql.execution.SparkPlan): Unit = {
+        val nodes = Profile.planNodes(plan).map(_._2.nodeName)
+        assert(nodes.contains("BroadcastExchange") && !nodes.exists(_.startsWith("Held")),
+          s"$input: $nodes")
+        assert(paramRefs(plan).isEmpty, s"$input: $plan")
       }
       try {
-        val fresh = t(batchPlan)
-        assert(fresh.contains("BroadcastExchange") && !fresh.exists(_.startsWith("Held")), fresh)
-        // a statement's binding ends with its scope
-        val after = t { PipelineCaches.scoped(g.cypher(knows).collect()); batchPlan }
-        assert(after.contains("BroadcastExchange") && !after.exists(_.startsWith("Held")), after)
+        unchanged("a fresh thread", t(batch))
+        // a statement's binding, its marks included, ends with its scope
+        val reads = Seq("a read" -> (knows, Map.empty[String, Any]),
+          "a read bound with $k = 42" ->
+            ("MATCH (a:P)-[:K]->(b:P) WHERE b.id <> $k RETURN b.id AS b;", Map[String, Any]("k" -> 42L)))
+        for ((input, (q, params)) <- reads) {
+          val live = graft.exec.Statement.liveCount
+          val during = t {
+            PipelineCaches.scoped {
+              g.cypher(q, params).collect()
+              batch
+            }
+          }
+          if (params.nonEmpty)
+            assert(paramRefs(during).map(_.value).toSet == Set(42L),
+              s"precondition: $input marks 42 while its scope lasts: $during")
+          unchanged(s"after $input", t(batch))
+          assert(t(graft.exec.Statement.current(spark.sparkContext)).isEmpty,
+            s"after $input the thread still has a live statement")
+          assert(graft.exec.Statement.liveCount == live, s"$input left its statement registered")
+        }
       } finally {
         t(PipelineCaches.clear(blocking = true))
         t.stop()
       }
     }
+  }
+
+  test("a frame built before a write and run after a later statement leaves nothing stale for later reads") {
+    /** On one thread: df1 built, a CREATE, df2 built, df1 run, df2 run,
+      * then a fresh scoped read; the write adds `added` to `q`'s answer.
+      * df1 runs under the thread's latest statement, df2's, so what its
+      * first uses publish is built from the tables after the write. */
+    def across(g: GraftSession, q: String, create: String, added: Long): Unit = {
+      val t = new ScopeThread
+      try {
+        val before = t(scopedRun(g, q))._1
+        assert(!before.contains(added))
+        val (renewed, old) = t {
+          PipelineCaches.scoped {
+            val df1 = g.cypher(q)
+            // held before the write: the first read's sides, df1's adjacency
+            val old = sides(g) ++ held(g)._1
+            withWrites(g.cypher(create).collect())
+            val df2 = g.cypher(q)
+            TestSpark.longs(df1)
+            assert(heldExchanges(df1).nonEmpty, "df1 did not plan under df2's read statement")
+            (TestSpark.longs(df2), old)
+          }
+        }
+        assert(old.nonEmpty, "precondition: the session holds sides before the write")
+        assert(renewed == before + added, "a frame built after the write misses the new row")
+        val (fresh, exchanges) = t(scopedRun(g, q))
+        assert(fresh == before + added, "a fresh read misses the new row")
+        val reads = held(g)._1 ++ exchanges.collect {
+          case h: graft.exec.HeldBroadcastExchangeExec if h.served.isDefined => h.served.get.bc.id
+        }
+        assert((reads & old).isEmpty, s"the fresh read reads ${reads & old}, held before the write")
+      } finally {
+        t(PipelineCaches.clear(blocking = true))
+        t.stop()
+      }
+    }
+    withHopGraph(saved = true)(across(_, reachFrom1, "CREATE (:V {id: 6})-[:E {w: 1}]->(:V {id: 7});", 7L))
+    withPeople(saved = true)(across(_, "MATCH (a:P)-[:K]->(b:P) WHERE a.id > 2 RETURN b.id AS b;",
+      "CREATE (:P {id: 4})-[:K]->(:P {id: 1});", 1L))
   }
 
   test("a warm session-held answer equals a fresh session's, before and after a CREATE") {
