@@ -234,10 +234,7 @@ final class DataFrameBuilder(
     // autoBroadcastJoinThreshold: the hop set is at most as large as the
     // edge table, and the explode/distinct lineage hides that bound from
     // Catalyst's own estimator, which is why it is read here.
-    lazy val smallEdges = scala.util.Try {
-      base.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        session.spark.sessionState.conf.autoBroadcastJoinThreshold
-    }.getOrElse(false)
+    lazy val smallEdges = HopAdjacency.broadcastSmall(base)
 
     // Join form of a var-length hop: iterated self-join over the single-
     // hop pair set, distinct-pair reachability semantics. Per-level

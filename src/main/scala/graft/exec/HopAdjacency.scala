@@ -5,29 +5,46 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, explode, get, inline, typedLit, udf}
 import org.apache.spark.sql.types._
 
-/** Hash adjacency of a broadcast-small hop base: what a var-length or
+/** Hash adjacency of a broadcast-small edge set: what a var-length or
   * distance-only shortestPath hop walks inside ONE stage, instead of one
-  * join superstep per level.
+  * join superstep per level, and what [[graft.graph.GraphAlgorithms]] runs
+  * a small graph's rounds over on the driver.
   *
   * Node ids are interned to dense ordinals through a hash map on
   * unboxed Long keys, so each source row costs one hashed probe;
   * neighbours sit in a CSR array by ordinal, distinct per node, so a
   * level costs one array scan per frontier node. (A Spark map column
-  * would not do: `element_at` on a map scans its keys linearly.) Ordinals
-  * `0 until numSources` are the nodes with at least one neighbour.
+  * would not do: `element_at` on a map scans its keys linearly.) Built
+  * with edge weights, each CSR slot also carries the summed weight of the
+  * duplicate edges it folds: a multiplicity for unit weights.
   */
 final class HopAdjacency private (
     ordinals: scala.collection.mutable.LongMap[Int],
-    ids: Array[Long],
-    numSources: Int,
-    offsets: Array[Int], // neighbours of ordinal o: nbrs(offsets(o) until offsets(o + 1))
-    nbrs: Array[Int]) extends Serializable {
+    private[graft] val ids: Array[Long], // ordinal -> node id
+    // neighbours of ordinal o: nbrs(offsets(o) until offsets(o + 1))
+    private[graft] val offsets: Array[Int],
+    private[graft] val nbrs: Array[Int],
+    private[graft] val weights: Array[Double]) // per slot; null if unweighted
+    extends Serializable {
 
   import HopAdjacency.OrdinalSet
 
-  private[exec] def sources: Iterator[Long] = ids.iterator.take(numSources)
+  /** Node count: ordinals run over `0 until size`. */
+  private[graft] def size: Int = ids.length
 
-  private def ordinal(id: Long): Int = ordinals.getOrElse(id, -1)
+  /** The ids of the nodes with at least one neighbour, in ordinal order. */
+  private[exec] def sources: Iterator[Long] =
+    ids.indices.iterator.filter(o => offsets(o + 1) > offsets(o)).map(ids)
+
+  private[graft] def ordinal(id: Long): Int = ordinals.getOrElse(id, -1)
+
+  /** The same nodes and ordinals with every edge reversed. */
+  private[graft] def transpose: HopAdjacency = {
+    val n = size
+    val src = new Array[Int](nbrs.length)
+    for (o <- 0 until n; j <- offsets(o) until offsets(o + 1)) src(j) = o
+    HopAdjacency.csr(ordinals, ids, nbrs, src, weights)
+  }
 
   private def expand(level: OrdinalSet, into: OrdinalSet): Unit = {
     var i = 0
@@ -102,11 +119,24 @@ object HopAdjacency {
   private val integral: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
 
   /** Whether both endpoint columns of hop base `h` are integral ids. */
-  def integralIds(h: DataFrame): Boolean =
-    integral(h.schema("__src").dataType) && integral(h.schema("__dst").dataType)
+  def integralIds(h: DataFrame, src: String = "__src", dst: String = "__dst"): Boolean =
+    integral(h.schema(src).dataType) && integral(h.schema(dst).dataType)
 
-  /** Builds the adjacency from (src, dst) pairs; duplicates fold. */
-  private def apply(src: Array[Long], dst: Array[Long]): HopAdjacency = {
+  /** Whether `plan` is broadcast-small: its optimizer size estimate is
+    * within `autoBroadcastJoinThreshold` (so a threshold of -1 holds no
+    * plan small). The one size test of the hop planner and the graph
+    * algorithms' driver path. */
+  def broadcastSmall(plan: DataFrame): Boolean = scala.util.Try {
+    plan.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      plan.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+  }.getOrElse(false)
+
+  /** Builds the adjacency from (src, dst) pairs; duplicates fold, summing
+    * `weight` when given. Ordinals follow first appearance in `src`, then
+    * `dst`, then `vertices` (extra nodes, e.g. isolated ones). */
+  private[graft] def apply(src: Array[Long], dst: Array[Long],
+      weight: Array[Double] = null,
+      vertices: Array[Long] = Array.emptyLongArray): HopAdjacency = {
     val index = new scala.collection.mutable.LongMap[Int]()
     val ids = Array.newBuilder[Long]
     def intern(id: Long): Int = index.getOrElse(id, {
@@ -116,29 +146,41 @@ object HopAdjacency {
       o
     })
     val s = src.map(intern)
-    val numSources = index.size
     val d = dst.map(intern)
-    val n = index.size
-    // CSR by source ordinal, then sort + dedupe each neighbour run
+    vertices.foreach(intern)
+    csr(index, ids.result(), s, d, weight)
+  }
+
+  /** CSR by source ordinal over `ids`; each neighbour run sorted, with
+    * duplicate (s, d) edges folded into one slot whose weight sums theirs
+    * in edge order. */
+  private def csr(index: scala.collection.mutable.LongMap[Int], ids: Array[Long],
+      s: Array[Int], d: Array[Int], weight: Array[Double]): HopAdjacency = {
+    val n = ids.length
     val start = new Array[Int](n + 1)
     s.foreach(o => start(o + 1) += 1)
     for (o <- 1 to n) start(o) += start(o - 1)
+    // (neighbour << 32 | edge index), bucketed by source: sorting a run
+    // groups its duplicates and keeps each group in edge order
     val fill = start.clone()
-    val raw = new Array[Int](s.length)
-    for (i <- s.indices) { raw(fill(s(i))) = d(i); fill(s(i)) += 1 }
+    val raw = new Array[Long](s.length)
+    for (i <- s.indices) { raw(fill(s(i))) = (d(i).toLong << 32) | i; fill(s(i)) += 1 }
     val offsets = new Array[Int](n + 1)
-    var w = 0
+    val nbrs = new Array[Int](s.length)
+    val w = if (weight == null) null else new Array[Double](s.length)
+    var k = 0
     for (o <- 0 until n) {
-      offsets(o) = w
+      offsets(o) = k
       java.util.Arrays.sort(raw, start(o), start(o + 1))
-      for (j <- start(o) until start(o + 1) if j == start(o) || raw(j) != raw(j - 1)) {
-        raw(w) = raw(j)
-        w += 1
+      for (j <- start(o) until start(o + 1)) {
+        val nb = (raw(j) >>> 32).toInt
+        if (k == offsets(o) || nbrs(k - 1) != nb) { nbrs(k) = nb; k += 1 }
+        if (w != null) w(k - 1) += weight((raw(j) & 0xffffffffL).toInt)
       }
     }
-    offsets(n) = w
-    new HopAdjacency(index, ids.result(), numSources, offsets,
-      java.util.Arrays.copyOf(raw, w))
+    offsets(n) = k
+    new HopAdjacency(index, ids, offsets, java.util.Arrays.copyOf(nbrs, k),
+      if (w == null) null else java.util.Arrays.copyOf(w, k))
   }
 
   /** The frame a hop base is collected from: `pairs`' endpoints as Long,

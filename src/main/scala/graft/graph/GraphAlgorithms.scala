@@ -10,15 +10,32 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.GraftSession
+import graft.exec.HopAdjacency
 
 /** Whole-graph analytics over catalog relationships — the complement to
   * the per-query traversal engine (SURVEY.md §1.3: edge-list DataFrames
   * double as RDD input when global algorithms are wanted; the reference
   * has no equivalent — ClickHouse can't iterate).
   *
-  * Every iterative algorithm runs as RDD rounds: each round is one join
-  * of vertex state with messages plus one group-by over co-partitioned
-  * RDDs (the Pregelix superstep). Every loop persists through [[persist]],
+  * Every iterative algorithm chooses where its rounds run from the size
+  * of its edge plan, as Pregelix chooses each superstep's plan from the
+  * data:
+  *  - on the driver, when the call's directed edge plan, with the node
+  *    ids where the vertex set includes the node tables, is
+  *    broadcast-small with integral ids ([[HopAdjacency.broadcastSmall]],
+  *    the hop planner's test): [[collectSmall]] collects it once, and
+  *    [[LocalRounds]] runs the same synchronous rounds over one
+  *    [[HopAdjacency]] CSR, with the same per-vertex update and merge
+  *    functions. The call runs its edge collect's jobs and no other, and
+  *    returns a local DataFrame of the same schema. Connected components,
+  *    PageRank, SCC, k-core, core numbers, label propagation, Louvain,
+  *    HITS, personalized and weighted PageRank and eigenvector centrality
+  *    do;
+  *  - as RDD rounds otherwise (and always for hop-count shortest paths,
+  *    Brandes betweenness and dedup clusters): each round is one join of
+  *    vertex state with messages plus one group-by over co-partitioned
+  *    RDDs (the Pregelix superstep).
+  * Every RDD loop persists through [[persist]],
   * sizes its partitions with [[partitioner]], and runs one action per
   * round that both materializes the round and, for a fixpoint loop,
   * detects convergence. Three round shapes are written once:
@@ -67,13 +84,63 @@ object GraphAlgorithms {
     * ([[keyed]] removes them). Algorithms whose vertex set is the node
     * tables add their edge endpoints too, so a vertex referenced only by
     * an edge is not lost. */
-  private def vertexIds(gs: GraftSession, relLabel: String): RDD[Long] = {
+  private def vertexIds(gs: GraftSession, relLabel: String): RDD[Long] =
+    nodeIdFrames(gs, relLabel).map(_.rdd.map(_.getLong(0))).reduce(_ union _)
+
+  /** Each endpoint node table of `relLabel` (once) as its id column, cast
+    * to long. */
+  private def nodeIdFrames(gs: GraftSession, relLabel: String): Seq[DataFrame] = {
     val r = gs.catalog.rel(relLabel)
     Seq(r.fromLabel, r.toLabel).distinct.map { label =>
       val n = gs.catalog.node(label)
       gs.table(n.tableName).select(col(n.idColumn).cast("long"))
-        .rdd.map(_.getLong(0))
-    }.reduce(_ union _)
+    }
+  }
+
+  /** A small graph call's edges on the driver: endpoints `f`/`t` and, for
+    * a weighted call, `w` (else null), in edge-table order with duplicates
+    * and self-loops; `nodes` holds the node-table ids when asked for. */
+  private final case class Collected(f: Array[Long], t: Array[Long],
+      w: Array[Double], nodes: Array[Long])
+
+  /** The driver path's one collect: the call's directed edge plan
+    * (`relLabel` after `edgePred`, plus the `weight` column), with the
+    * node-table ids unioned in when `nodes`. When that plan is
+    * broadcast-small and the endpoints are integral ids, runs it and
+    * returns its rows; otherwise returns None, and the call runs RDD
+    * rounds. An edge row on
+    * which `reject`'s condition holds throws a GraftException with its
+    * message: the RDD path's input probe, read off the same collect. */
+  private def collectSmall(gs: GraftSession, relLabel: String,
+      edgePred: Option[Column] = None, weight: Option[String] = None,
+      nodes: Boolean = false,
+      reject: Option[(Column, String)] = None): Option[Collected] = {
+    val r = gs.catalog.rel(relLabel)
+    val edges = directedEdges(gs, relLabel, edgePred,
+      weight.map(c => col(c).cast("double").as("w")).toSeq)
+    val tagged = reject.foldLeft(edges) { case (d, (bad, _)) => d.withColumn("__bad", bad) }
+      .withColumn("__node", lit(false))
+    val plan = if (!nodes) tagged
+      else nodeIdFrames(gs, relLabel).map(_.toDF("f").withColumn("__node", lit(true)))
+        .foldLeft(tagged)(_.unionByName(_, allowMissingColumns = true))
+    if (!HopAdjacency.integralIds(gs.table(r.tableName), r.fromColumn, r.toColumn)
+        || !HopAdjacency.broadcastSmall(plan)) return None
+    val rows = plan.collect()
+    val node = tagged.columns.length - 1
+    val (nodeRows, edgeRows) = rows.partition(_.getBoolean(node))
+    for ((_, msg) <- reject if edgeRows.exists(_.getBoolean(node - 1)))
+      throw new graft.cypher.GraftException(msg)
+    Some(Collected(edgeRows.map(_.getLong(0)), edgeRows.map(_.getLong(1)),
+      if (weight.isEmpty) null else edgeRows.map(_.getDouble(2)),
+      nodeRows.map(_.getLong(0))))
+  }
+
+  /** The undirected simple graph of collected edges ([[simpleEdges]]):
+    * self-loops dropped, each edge once in both directions. */
+  private def simple(c: Collected): HopAdjacency = {
+    val keep = c.f.indices.filter(i => c.f(i) != c.t(i))
+    HopAdjacency(keep.map(c.f).toArray ++ keep.map(c.t),
+      keep.map(c.t).toArray ++ keep.map(c.f))
   }
 
   /** The distinct endpoints of each partition of `e` (a partition-local
@@ -279,8 +346,14 @@ object GraphAlgorithms {
   def connectedComponents(gs: GraftSession, relLabel: String): DataFrame = {
     val spark = gs.spark
     import spark.implicits._
-    components(directedEdges(gs, relLabel).as[(Long, Long)].rdd,
-      vertexIds(gs, relLabel)).toDF("id", "component")
+    collectSmall(gs, relLabel, nodes = true) match {
+      case Some(c) =>
+        val adj = HopAdjacency(c.f ++ c.t, c.t ++ c.f, vertices = c.nodes)
+        adj.ids.zip(LocalRounds.components(adj)).toSeq.toDF("id", "component")
+      case None =>
+        components(directedEdges(gs, relLabel).as[(Long, Long)].rdd,
+          vertexIds(gs, relLabel)).toDF("id", "component")
+    }
   }
 
   /** Spark-rounds the last [[stronglyConnectedComponents]] call executed
@@ -338,6 +411,21 @@ object GraphAlgorithms {
         "rounds (trim cascade or diameter beyond budget); raise " +
         "maxRounds — refusing to return a partial decomposition")
     }
+    def tooDeep(): Nothing = throw new IllegalStateException(
+      s"stronglyConnectedComponents($relLabel) did not finish within " +
+      s"numIter = $numIter outer iterations (condensation chain deeper " +
+      "than the budget); raise numIter")
+    collectSmall(gs, relLabel, nodes = true) match {
+      case Some(c) =>
+        val adj = HopAdjacency(c.f, c.t)
+        val comp = LocalRounds.scc(adj, numIter, () => budget(), () => tooDeep())
+        lastSccRounds.set(rounds)
+        return c.nodes.distinct.toSeq.map { v =>
+          val o = adj.ordinal(v)
+          (v, if (o < 0) v else comp(o))
+        }.toDF("id", "component")
+      case None =>
+    }
     def mat[T](x: RDD[T]): (RDD[T], Long) = {
       val p = persist(x)
       (p, p.count())
@@ -371,10 +459,7 @@ object GraphAlgorithms {
     trimToFixpoint()
     var outer = 0
     while (edgeCount > 0) {
-      if (outer >= numIter) throw new IllegalStateException(
-        s"stronglyConnectedComponents($relLabel) did not finish within " +
-        s"numIter = $numIter outer iterations (condensation chain deeper " +
-        "than the budget); raise numIter")
+      if (outer >= numIter) tooDeep()
       // ---- forward-min coloring to fixpoint --------------------------
       val out = persist(edges.groupByKey(part).mapValues(_.toArray))
       val colorState = minLabelRounds(
@@ -435,14 +520,25 @@ object GraphAlgorithms {
       resetProb: Double = 0.15): DataFrame = {
     val spark = gs.spark
     import spark.implicits._
-    val e = directedEdges(gs, relLabel).as[(Long, Long)].rdd
-    val part = partitioner(spark.sparkContext, e.count())
-    val out = outRows(e.mapValues((_, 1.0)), part, stochastic = true)
-    val verts = keyed(vertexIds(gs, relLabel).union(endpoints(e)), part)
-    val (rank, n, sum) = linearRounds(verts.mapValues(_ => 1.0), out, part,
-      iters)((_, m) => resetProb + (1.0 - resetProb) * m)
-    val correction = n.toDouble / sum
-    rank.mapValues(_ * correction).toDF("id", "rank")
+    val f = (_: Long, m: Double) => resetProb + (1.0 - resetProb) * m
+    collectSmall(gs, relLabel, nodes = true) match {
+      case Some(c) =>
+        // duplicate edges fold into one slot whose weight is their count
+        val adj = HopAdjacency(c.f, c.t, Array.fill(c.f.length)(1.0), c.nodes)
+        val (rank, sum) = LocalRounds.linearRounds(adj,
+          LocalRounds.shares(adj, stochastic = true), Array.fill(adj.size)(1.0), iters)(f)
+        val correction = adj.size.toDouble / sum
+        adj.ids.zip(rank.map(_ * correction)).toSeq.toDF("id", "rank")
+      case None =>
+        val e = directedEdges(gs, relLabel).as[(Long, Long)].rdd
+        val part = partitioner(spark.sparkContext, e.count())
+        val out = outRows(e.mapValues((_, 1.0)), part, stochastic = true)
+        val verts = keyed(vertexIds(gs, relLabel).union(endpoints(e)), part)
+        val (rank, n, sum) = linearRounds(verts.mapValues(_ => 1.0), out, part,
+          iters)(f)
+        val correction = n.toDouble / sum
+        rank.mapValues(_ * correction).toDF("id", "rank")
+    }
   }
 
   /** Per-vertex triangle count over the undirected simple graph: the
@@ -678,6 +774,14 @@ object GraphAlgorithms {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = gs.spark
     import spark.implicits._
+    collectSmall(gs, relLabel, edgePred) match {
+      case Some(c) =>
+        val adj = simple(c)
+        val (labels, rounds) = LocalRounds.labelPropagation(adj, iters, untilStable)
+        lastLabelPropRounds.set(rounds)
+        return adj.ids.zip(labels).toSeq.toDF("id", "label")
+      case None =>
+    }
     val canon = simpleEdges(gs, relLabel, edgePred).as[(Long, Long)].rdd
     val part = partitioner(spark.sparkContext, 2 * canon.count())
     val adj = adjacency(canon, part)
@@ -865,6 +969,15 @@ object GraphAlgorithms {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val spark = gs.spark
     import spark.implicits._
+    collectSmall(gs, relLabel, edgePred) match {
+      case Some(c) =>
+        val adj = simple(c)
+        val (deg, rounds) = LocalRounds.kCore(adj, k, maxRounds)
+        lastKCoreRounds.set(rounds)
+        return adj.ids.indices.filter(deg(_) > 0)
+          .map(o => (adj.ids(o), deg(o).toLong)).toDF("id", "degree")
+      case None =>
+    }
     val canon = simpleEdges(gs, relLabel, edgePred).as[(Long, Long)].rdd
     var total = 2 * canon.count()
     val part = partitioner(spark.sparkContext, total)
@@ -950,20 +1063,25 @@ object GraphAlgorithms {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val spark = gs.spark
     import spark.implicits._
+    def unconverged = new IllegalStateException(
+      s"coreNumbers($relLabel) did not converge within $maxRounds " +
+      s"rounds (cascade depth exceeds the budget); raise maxRounds — " +
+      s"refusing to return a partially-refined decomposition")
+    // rounds per convergence test (the RDD path's bursts, below)
+    val CheckEvery = 8
+    collectSmall(gs, relLabel, edgePred) match {
+      case Some(c) =>
+        val adj = simple(c)
+        val (core, rounds, converged) =
+          LocalRounds.coreNumbers(adj, maxK, maxRounds, CheckEvery)
+        lastCorenessRounds.set(rounds)
+        if (!converged) throw unconverged
+        return adj.ids.zip(core).toSeq.toDF("id", "coreness")
+      case None =>
+    }
     val canon = simpleEdges(gs, relLabel, edgePred).as[(Long, Long)].rdd
     val part = partitioner(spark.sparkContext, 2 * canon.count())
     val K = maxK
-    // largest t in 0..K with (count of neighbor values >= t) >= t: one
-    // descending pass accumulating the suffix sum of the capped histogram
-    def hIndexOf(hist: Array[Long]): Long = {
-      var s = 0L; var t = K
-      while (t >= 1) {
-        s += hist(t)
-        if (s >= t) return t.toLong
-        t -= 1
-      }
-      0L
-    }
     def cap(c: Long): Int = if (c >= K) K else c.toInt
     // symmetric edge list, hash-partitioned ONCE on the source vertex —
     // every later frontier join and delta shuffle reuses this partitioner
@@ -984,7 +1102,7 @@ object GraphAlgorithms {
     // state: (id, (c, prevRoundC, neighborHistogram)); prev > c marks the
     // vertex as this round's frontier. The init sweep is round 1.
     var state = persist(c0.join(hist0).mapValues { case (c, h) =>
-      (math.min(c, hIndexOf(h)), c, h) })
+      (math.min(c, hIndexOf(h, K)), c, h) })
     var frontierCount =
       state.filter { case (_, (c, prev, _)) => prev > c }.count()
     var round = 1
@@ -997,7 +1115,6 @@ object GraphAlgorithms {
     // each round's data is a layer, not the graph) is paid once per
     // burst. Overshoot past the fixpoint is at most CheckEvery-1 rounds
     // of empty-frontier stages.
-    val CheckEvery = 8
     val pending = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
     while (frontierCount > 0 && round < maxRounds) {
       var b = math.min(CheckEvery, maxRounds - round)
@@ -1042,7 +1159,7 @@ object GraphAlgorithms {
             val h2 = java.util.Arrays.copyOf(h, K + 1)
             var i = 0
             while (i <= K) { h2(i) += d(i); i += 1 }
-            (math.min(c, hIndexOf(h2)), c, h2)
+            (math.min(c, hIndexOf(h2, K)), c, h2)
         })
         pending += state
         state = next
@@ -1055,12 +1172,21 @@ object GraphAlgorithms {
       pending.clear()
     }
     lastCorenessRounds.set(round)
-    if (frontierCount > 0)
-      throw new IllegalStateException(
-        s"coreNumbers($relLabel) did not converge within $maxRounds " +
-        s"rounds (cascade depth exceeds the budget); raise maxRounds — " +
-        s"refusing to return a partially-refined decomposition")
+    if (frontierCount > 0) throw unconverged
     state.map { case (id, (c, _, _)) => (id, c) }.toDF("id", "coreness")
+  }
+
+  /** The h-index of a capped neighbour-value histogram: the largest t in
+    * 0..K with (count of neighbour values >= t) >= t — one descending pass
+    * accumulating the histogram's suffix sum. [[coreNumbers]]' update. */
+  private[graph] def hIndexOf(hist: Array[Long], K: Int): Long = {
+    var s = 0L; var t = K
+    while (t >= 1) {
+      s += hist(t)
+      if (s >= t) return t.toLong
+      t -= 1
+    }
+    0L
   }
 
   /** HITS hubs/authorities over the DIRECTED simple graph induced by
@@ -1093,9 +1219,30 @@ object GraphAlgorithms {
     val e = directedEdges(gs, relLabel, edgePred)
     // loud, like weightedPageRank: a NULL (or non-castable) endpoint has
     // no vertex identity, and the Long decode below would fail in a task
-    if (e.filter(col("f").isNull || col("t").isNull).limit(1).count() > 0)
-      throw new graft.cypher.GraftException(
-        s"hits: $relLabel edge endpoints must be non-NULL castable ids")
+    val nullEnds = col("f").isNull || col("t").isNull
+    val nullMsg = s"hits: $relLabel edge endpoints must be non-NULL castable ids"
+    def rounded(df: DataFrame) = df.toDF("id", "__h", "__a")
+      .select(col("id"), round(col("__h"), 6).as("hub"),
+        round(col("__a"), 6).as("authority"))
+    collectSmall(gs, relLabel, edgePred, reject = Some((nullEnds, nullMsg))) match {
+      case Some(c) =>
+        // distinct edges: duplicates fold into one unweighted slot
+        val fwd = HopAdjacency(c.f, c.t)
+        val rev = fwd.transpose
+        val (fs, rs) = (LocalRounds.shares(fwd, false), LocalRounds.shares(rev, false))
+        var hub = Array.fill(fwd.size)(1.0); var auth = hub
+        var hubSum = 0.0; var authSum = 0.0
+        for (_ <- 1 to iters) {
+          val (a, as) = LocalRounds.linearRound(fwd, fs, hub)((_, m) => m)
+          val (h, hs) = LocalRounds.linearRound(rev, rs, a)((_, m) => m)
+          hub = h; auth = a; hubSum = hs; authSum = as
+        }
+        return rounded(fwd.ids.indices.map(o =>
+          (fwd.ids(o), hub(o) / hubSum, auth(o) / authSum)).toDF())
+      case None =>
+    }
+    if (e.filter(nullEnds).limit(1).count() > 0)
+      throw new graft.cypher.GraftException(nullMsg)
     val edges = e.distinct().as[(Long, Long)].rdd
     val part = partitioner(spark.sparkContext, edges.count())
     val fwd = outRows(edges.mapValues((_, 1.0)), part, stochastic = false)
@@ -1112,11 +1259,8 @@ object GraphAlgorithms {
       hub.unpersist(blocking = false)
       hub = h; auth = a; hubSum = hs; authSum = as
     }
-    hub.join(auth, part)
-      .map { case (v, (h, a)) => (v, h / hubSum, a / authSum) }
-      .toDF("id", "__h", "__a")
-      .select(col("id"), round(col("__h"), 6).as("hub"),
-        round(col("__a"), 6).as("authority"))
+    rounded(hub.join(auth, part)
+      .map { case (v, (h, a)) => (v, h / hubSum, a / authSum) }.toDF())
   }
 
   /** Betweenness centrality over the UNDIRECTED simple graph via
@@ -1285,19 +1429,31 @@ object GraphAlgorithms {
       Seq(col(weightCol).cast("double").as("w")))
     // NULL endpoints fail loudly too: the Long decode below would fail
     // inside a task instead of explaining the data problem
-    if (e.filter(col("w") <= 0 || col("w").isNull
-          || col("f").isNull || col("t").isNull).limit(1).count() > 0)
-      throw new graft.cypher.GraftException(
-        s"weightedPageRank: $weightCol must be strictly positive and " +
-        "edge endpoints non-NULL (NULL weights would silently poison " +
-        "the share sums; NULL endpoints have no vertex identity)")
+    val invalid = col("w") <= 0 || col("w").isNull || col("f").isNull || col("t").isNull
+    val invalidMsg = s"weightedPageRank: $weightCol must be strictly positive and " +
+      "edge endpoints non-NULL (NULL weights would silently poison " +
+      "the share sums; NULL endpoints have no vertex identity)"
+    val f = (_: Long, m: Double) => resetProb + (1.0 - resetProb) * m
+    collectSmall(gs, relLabel, edgePred, Some(weightCol),
+        reject = Some((invalid, invalidMsg))) match {
+      case Some(c) =>
+        // duplicate edges fold into one slot carrying their weight sum
+        val adj = HopAdjacency(c.f, c.t, c.w)
+        val (rank, _) = LocalRounds.linearRounds(adj,
+          LocalRounds.shares(adj, stochastic = true), Array.fill(adj.size)(1.0), iters)(f)
+        return adj.ids.zip(rank).toSeq.toDF("id", "rank")
+          .select(col("id"), round(col("rank"), 6).as("rank"))
+      case None =>
+    }
+    if (e.filter(invalid).limit(1).count() > 0)
+      throw new graft.cypher.GraftException(invalidMsg)
     val edges = e.as[(Long, Long, Double)].rdd
     val part = partitioner(spark.sparkContext, edges.count())
     val out = outRows(edges.map { case (f, t, w) => (f, (t, w)) }, part,
       stochastic = true)
     val verts = keyed(edges.flatMap { case (f, t, _) => Iterator(f, t) }, part)
     val (rank, _, _) = linearRounds(verts.mapValues(_ => 1.0), out, part,
-      iters)((_, m) => resetProb + (1.0 - resetProb) * m)
+      iters)(f)
     rank.toDF("id", "rank").select(col("id"), round(col("rank"), 6).as("rank"))
   }
 
@@ -1315,6 +1471,15 @@ object GraphAlgorithms {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = gs.spark
     import spark.implicits._
+    collectSmall(gs, relLabel, edgePred) match {
+      case Some(c) =>
+        val adj = simple(c)
+        val (x, sum) = LocalRounds.linearRounds(adj, LocalRounds.shares(adj, false),
+          Array.fill(adj.size)(1.0), iters)((_, m) => m)
+        return adj.ids.zip(x.map(_ / sum)).toSeq.toDF("id", "__x")
+          .select(col("id"), round(col("__x"), 6).as("centrality"))
+      case None =>
+    }
     val canon = simpleEdges(gs, relLabel, edgePred).as[(Long, Long)].rdd
     val part = partitioner(spark.sparkContext, 2 * canon.count())
     val out = outRows(canon.flatMap { case (a, b) =>
@@ -1430,17 +1595,29 @@ object GraphAlgorithms {
       s"resetProb must be in (0, 1), got $resetProb")
     val spark = gs.spark
     import spark.implicits._
+    val sProb = 1.0 / sourceIds.size
+    // small by contract (a PPR source set); ships in the task closure
+    val srcSet = sourceIds.toSet
+    val f = (v: Long, m: Double) =>
+      (if (srcSet(v)) resetProb * sProb else 0.0) + (1.0 - resetProb) * m
+    collectSmall(gs, relLabel, edgePred) match {
+      case Some(c) =>
+        // distinct edges: duplicates fold into one unweighted slot
+        val adj = HopAdjacency(c.f, c.t)
+        val (rank, _) = LocalRounds.linearRounds(adj,
+          LocalRounds.shares(adj, stochastic = true),
+          adj.ids.map(v => if (srcSet(v)) sProb else 0.0), iters)(f)
+        return adj.ids.zip(rank).toSeq.toDF("id", "rank")
+          .select(col("id"), round(col("rank"), 6).as("rank"))
+      case None =>
+    }
     val edges = directedEdges(gs, relLabel, edgePred).distinct()
       .as[(Long, Long)].rdd
     val part = partitioner(spark.sparkContext, edges.count())
     val out = outRows(edges.mapValues((_, 1.0)), part, stochastic = true)
-    val sProb = 1.0 / sourceIds.size
-    // small by contract (a PPR source set); ships in the task closure
-    val srcSet = sourceIds.toSet
     val x0 = keyed(endpoints(edges), part)
       .mapValues(v => if (srcSet(v)) sProb else 0.0)
-    val (rank, _, _) = linearRounds(x0, out, part, iters)((v, m) =>
-      (if (srcSet(v)) resetProb * sProb else 0.0) + (1.0 - resetProb) * m)
+    val (rank, _, _) = linearRounds(x0, out, part, iters)(f)
     rank.toDF("id", "rank").select(col("id"), round(col("rank"), 6).as("rank"))
   }
 
@@ -1668,6 +1845,34 @@ object GraphAlgorithms {
     require(levels >= 1, s"levels must be >= 1, got $levels")
     val spark = gs.spark
     import spark.implicits._
+    collectSmall(gs, relLabel, edgePred) match {
+      case Some(c) =>
+        val adj = simple(c)
+        // canonical edges (a < b), unit weight
+        val canon = for (o <- adj.ids.indices; j <- adj.offsets(o) until adj.offsets(o + 1)
+          if adj.ids(o) < adj.ids(adj.nbrs(j))) yield (adj.ids(o), adj.ids(adj.nbrs(j)))
+        var (ea, eb) = (canon.map(_._1).toArray, canon.map(_._2).toArray)
+        var ew = Array.fill(ea.length)(1L)
+        var mapping: LongMap[Long] = null
+        for (level <- 0 until levels) {
+          val labels = LocalRounds.louvainLevel(ea, eb, ew, rounds)
+          mapping = if (mapping == null) labels else mapping.mapValuesNow(labels)
+          if (level < levels - 1) {
+            // contract, as below: summed weights per (least, greatest) pair
+            val next = scala.collection.mutable.LinkedHashMap.empty[(Long, Long), Long]
+            for (i <- ea.indices) {
+              val (ca, cb) = (labels(ea(i)), labels(eb(i)))
+              val key = (math.min(ca, cb), math.max(ca, cb))
+              next(key) = next.getOrElse(key, 0L) + ew(i)
+            }
+            val contracted = next.toArray
+            ea = contracted.map(_._1._1); eb = contracted.map(_._1._2)
+            ew = contracted.map(_._2)
+          }
+        }
+        return mapping.toSeq.toDF("id", "community")
+      case None =>
+    }
     // ((a, b), w) with a <= b. Persisted: each level's self-loop and
     // cross-edge branches both read it; the count materializes it.
     var edges = persist(simpleEdges(gs, relLabel, edgePred)
@@ -1696,6 +1901,23 @@ object GraphAlgorithms {
     }
     mapping.toDF("id", "community")
   }
+
+  /** Louvain's exact integer score for moving vertex i (strength `s`,
+    * weight `k` into community c of volume `vol`; `own` when c is i's
+    * current community, whose volume then excludes i):
+    * S(i,c) = totW2·k − s·(vol(c) − [c = c_i]·s). */
+  private[graph] def louvainScore(totW2: Long, k: Long, s: Long, vol: Long,
+      own: Boolean): Long = totW2 * k - s * (if (own) vol - s else vol)
+
+  /** The better of two (score, community) candidates: the higher score,
+    * ties to the smaller community id. */
+  private[graph] def louvainBest(x: (Long, Long), y: (Long, Long)): (Long, Long) =
+    if (x._1 > y._1 || (x._1 == y._1 && x._2 < y._2)) x else y
+
+  /** Bit staggering: in round t (from 1) only ids with bit (t−1) mod 64
+    * clear may move. */
+  private[graph] def louvainMoves(id: Long, t: Int): Boolean =
+    ((id >> ((t - 1) % 64)) & 1L) == 0L
 
   /** One Louvain level: `rounds` synchronous bit-staggered local-move
     * rounds over weighted canonical edges ((a, b), w) with a ≤ b; a = b
@@ -1753,19 +1975,16 @@ object GraphAlgorithms {
         .map { case (c, ((a, k), v)) => (a, (c, k, v)) }
         .join(curWithVol)
         .map { case (a, ((c, k, v), (curc, s, _))) =>
-          val volAdj = if (c == curc) v - s else v
-          (a, (totW2 * k - s * volAdj, c))
+          (a, (louvainScore(totW2, k, s, v, own = c == curc), c))
         }
       val stay = curWithVol.map { case (id, (curc, s, cv)) =>
-        (id, (-s * (cv - s), curc))
+        (id, (louvainScore(totW2, 0L, s, cv, own = true), curc))
       }
-      val best = scored.union(stay).reduceByKey(part, (x, y) =>
-        if (x._1 > y._1 || (x._1 == y._1 && x._2 < y._2)) x else y)
-      // bit staggering: only ids with bit (t-1)%64 clear may move
-      val bit = (t - 1) % 64
+      val best = scored.union(stay).reduceByKey(part, louvainBest _)
+      val moving = t
       labels = persist(best.join(prev, part).map {
         case (id, ((_, bestc), curc)) =>
-          (id, if (((id >> bit) & 1L) == 0L) bestc else curc)
+          (id, if (louvainMoves(id, moving)) bestc else curc)
       }.partitionBy(part))
       labels.count()
       prev.unpersist(blocking = false)

@@ -20,6 +20,39 @@ class GraphSpec extends AnyFunSuite {
     g
   }
 
+  /** Runs `body` with every graph algorithm on its RDD rounds: under an
+    * `autoBroadcastJoinThreshold` of -1 no edge plan is broadcast-small. */
+  private def onRdd[A](body: => A): A = {
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
+    try body finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  /** The Spark jobs `call` starts, its caller's collect included. */
+  private def jobsOf(call: () => org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "graphspec-round-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    org.apache.spark.graftprobe.BusProbe.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "graph round census")
+      call().collect()
+    } finally {
+      sc.clearJobGroup()
+      org.apache.spark.graftprobe.BusProbe.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get()
+  }
+
   test("connected components: min-id per component, isolated vertex kept") {
     val cc = GraphAlgorithms.connectedComponents(gs, "Follows")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -316,30 +349,7 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("graph loops: one Spark job per round") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val g = cascadeSession()
-    val sc = spark.sparkContext
-    def jobsOf(call: () => org.apache.spark.sql.DataFrame): Int = {
-      val group = "graphspec-round-jobs"
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (e.properties != null &&
-              e.properties.getProperty("spark.jobGroup.id") == group)
-            jobs.incrementAndGet()
-      }
-      org.apache.spark.graftprobe.BusProbe.drain(sc)
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup(group, "graph round census")
-        call().collect()
-      } finally {
-        sc.clearJobGroup()
-        org.apache.spark.graftprobe.BusProbe.drain(sc)
-        sc.removeSparkListener(listener)
-      }
-      jobs.get()
-    }
     // (call, rounds it runs on the KE cascade, jobs outside the rounds)
     val census = Seq[(String, () => org.apache.spark.sql.DataFrame, () => Int, Int)](
       // canonical-edge shuffle, the edge count that sizes the
@@ -360,9 +370,10 @@ class GraphSpec extends AnyFunSuite {
       // nothing
       ("connectedComponents", () => GraphAlgorithms.connectedComponents(g,
         "KE"), () => 4, 2))
-    // measured: each call runs exactly rounds + outside jobs
+    // measured: each call runs exactly rounds + outside jobs (RDD rounds;
+    // these graphs would otherwise run on the driver)
     for ((name, call, rounds, outside) <- census) {
-      val jobs = jobsOf(call)
+      val jobs = onRdd(jobsOf(call))
       assert(jobs <= rounds() + outside, s"$name: $jobs jobs for ${rounds()} rounds")
     }
     assert(GraphAlgorithms.lastKCoreRounds.get() == 4)
@@ -399,7 +410,7 @@ class GraphSpec extends AnyFunSuite {
     graft.pipeline.PipelineCaches.clear(blocking = true)
     for ((name, call) <- calls) {
       val before = sc.getPersistentRDDs.keySet
-      assert(call().collect().nonEmpty, name)
+      assert(onRdd(call().collect()).nonEmpty, name)
       graft.pipeline.PipelineCaches.clear(blocking = true)
       val leaked = sc.getPersistentRDDs.keySet -- before
       assert(leaked.isEmpty, s"$name left persisted RDDs $leaked after clear")
@@ -426,7 +437,7 @@ class GraphSpec extends AnyFunSuite {
     ctx.getConfiguration.addLogger(rddLogs.getName, rddLogs)
     ctx.updateLoggers()
     try graft.pipeline.PipelineCaches.scoped {
-      GraphAlgorithms.connectedComponents(g, "KE").collect()
+      onRdd(GraphAlgorithms.connectedComponents(g, "KE").collect())
     } finally {
       ctx.getConfiguration.removeLogger(rddLogs.getName)
       ctx.updateLoggers()
@@ -983,6 +994,207 @@ class GraphSpec extends AnyFunSuite {
     assert(l2 == Map(1L -> 1L, 2L -> 1L, 6L -> 1L, 3L -> 3L, 4L -> 3L,
       5L -> 3L))
     graft.pipeline.PipelineCaches.clear()
+  }
+
+  /** One graph call's outcome: its rows (sorted) and schema, or its
+    * exception's class and message; and the round probe read after it. */
+  private def outcome(call: () => org.apache.spark.sql.DataFrame,
+      probe: () => Int): (Either[(String, String), (Seq[Seq[Any]], String)], Int) = {
+    val got = scala.util.Try(call()).map { df =>
+      (df.collect().map(_.toSeq).toSeq.sortBy(_.mkString(",")), df.schema.treeString)
+    }.toEither.left.map(e => (e.getClass.getName, e.getMessage))
+    (got, probe())
+  }
+
+  /** Asserts that `call` answers alike on the driver and on RDD rounds:
+    * equal rows (doubles to 1e-12 relative, the summation order differs),
+    * schema and round probe, or the same throw. The driver run must
+    * persist nothing. */
+  private def sameOnBothPaths(what: String, call: () => org.apache.spark.sql.DataFrame,
+      probe: () => Int = () => 0): Unit = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val local = outcome(call, probe)
+    assert(sc.getPersistentRDDs.keySet == before, s"$what: the driver path persisted")
+    val rdd = onRdd(outcome(call, probe))
+    graft.pipeline.PipelineCaches.clear(blocking = true)
+    assert(local._2 == rdd._2, s"$what: round probe ${local._2} vs ${rdd._2}")
+    (local._1, rdd._1) match {
+      case (Right((lr, ls)), Right((rr, rs))) =>
+        assert(ls == rs, s"$what: schema")
+        assert(lr.size == rr.size, s"$what: ${lr.size} rows vs ${rr.size}")
+        for ((a, b) <- lr.zip(rr); (x, y) <- a.zip(b)) (x, y) match {
+          case (dx: Double, dy: Double) =>
+            assert(math.abs(dx - dy) <= 1e-12 * math.max(1.0, math.abs(dy)),
+              s"$what: $a vs $b")
+          case _ => assert(x == y, s"$what: $a vs $b")
+        }
+      case (l, r) => assert(l == r, s"$what")
+    }
+  }
+
+  /** Every algorithm with driver rounds, on relationship `rel` of `g`
+    * (weights in `w` when present), edge-filtered by `pred` where the
+    * algorithm takes one. */
+  private def allOnBothPaths(name: String, g: GraftSession, rel: String,
+      pred: Option[org.apache.spark.sql.Column] = None, w: Option[String] = None): Unit = {
+    val GA = GraphAlgorithms
+    val first = g.table(g.catalog.rel(rel).tableName).head().get(0).toString.toLong
+    val calls = Seq[(String, () => org.apache.spark.sql.DataFrame, () => Int)](
+      ("connectedComponents", () => GA.connectedComponents(g, rel), () => 0),
+      ("pageRank", () => GA.pageRank(g, rel), () => 0),
+      ("stronglyConnectedComponents", () => GA.stronglyConnectedComponents(g, rel),
+        () => GA.lastSccRounds.get()),
+      ("kCore", () => GA.kCore(g, rel, k = 2, edgePred = pred),
+        () => GA.lastKCoreRounds.get()),
+      ("kCore k=3 maxRounds=1", () => GA.kCore(g, rel, k = 3, maxRounds = 1, edgePred = pred),
+        () => GA.lastKCoreRounds.get()),
+      ("labelPropagation", () => GA.labelPropagation(g, rel, iters = 5, edgePred = pred),
+        () => GA.lastLabelPropRounds.get()),
+      ("labelPropagation untilStable", () => GA.labelPropagation(g, rel, iters = 30,
+        edgePred = pred, untilStable = true), () => GA.lastLabelPropRounds.get()),
+      ("coreNumbers", () => GA.coreNumbers(g, rel, edgePred = pred),
+        () => GA.lastCorenessRounds.get()),
+      ("coreNumbers maxK=2", () => GA.coreNumbers(g, rel, maxK = 2, edgePred = pred),
+        () => GA.lastCorenessRounds.get()),
+      ("louvain", () => GA.louvain(g, rel, rounds = 4, levels = 2, edgePred = pred), () => 0),
+      ("hits", () => GA.hits(g, rel, edgePred = pred), () => 0),
+      ("personalizedPageRank", () => GA.personalizedPageRank(g, rel, Seq(first),
+        edgePred = pred), () => 0),
+      ("eigenvectorCentrality", () => GA.eigenvectorCentrality(g, rel, edgePred = pred),
+        () => 0)) ++ w.toSeq.map(c =>
+      ("weightedPageRank", () => GA.weightedPageRank(g, rel, c, edgePred = pred), () => 0))
+    for ((algo, call, probe) <- calls) sameOnBothPaths(s"$name $algo", call, probe)
+  }
+
+  /** A seeded random graph: node table 1..nodes, edges as given plus a
+    * positive weight column `w` and an integer tag `tag` in 0..3. */
+  private def randomGraph(name: String, nodes: Long, edges: Seq[(Long, Long)],
+      seed: Int): GraftSession = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    val g = new GraftSession(spark)
+    g.registerTable(s"${name}n", (1L to nodes).map(i => (i, s"v$i")).toDF("id", "name"))
+    g.registerTable(name, edges.map { case (a, b) =>
+      (a, b, 1.0 + rnd.nextInt(5), rnd.nextInt(4)) }.toDF(s"from_${name}N", s"to_${name}N", "w", "tag"))
+    g.registerNode(s"${name}N", s"${name}n", "id")
+    g.registerRel(name, name, s"${name}N", s"${name}N")
+    g
+  }
+
+  test("small graphs: driver rounds equal the RDD rounds") {
+    import org.apache.spark.sql.functions.col
+    // hand fixtures
+    allOnBothPaths("Follows", gs, "Follows")
+    val c = cascadeSession()
+    allOnBothPaths("KE", c, "KE")
+    allOnBothPaths("KD", c, "KD")
+    // four seeded random multigraphs
+    val rnd = new scala.util.Random(7)
+    def pick(n: Int) = 1L + rnd.nextInt(n)
+    // duplicate edges and self-loops
+    val dup = Seq.fill(70)((pick(20), pick(20))) ++ Seq((3L, 3L), (3L, 3L), (5L, 5L)) ++
+      Seq((1L, 2L), (1L, 2L), (2L, 1L))
+    allOnBothPaths("multigraph", randomGraph("RDUP", 20, dup, 1), "RDUP", w = Some("w"))
+    // isolated node-table vertices: 40 nodes, edges among 1..25 only
+    val iso = Seq.fill(45)((pick(25), pick(25)))
+    allOnBothPaths("isolated", randomGraph("RISO", 40, iso, 2), "RISO", w = Some("w"))
+    // a directed ring chain: five rings bridged one way, plus chords
+    val sizes = Seq(3, 5, 4, 6, 2)
+    val starts = sizes.scanLeft(1L)(_ + _)
+    val rings = sizes.indices.flatMap { r =>
+      val (s0, k) = (starts(r), sizes(r))
+      (0 until k).map(i => (s0 + i, s0 + (i + 1) % k))
+    }
+    val bridges = (0 until sizes.size - 1).map(r => (starts(r) + 1, starts(r + 1)))
+    val chords = Seq.fill(6) { val r = rnd.nextInt(sizes.size)
+      (starts(r) + rnd.nextInt(sizes(r)), starts(r) + rnd.nextInt(sizes(r))) }
+    allOnBothPaths("ring chain", randomGraph("RRING", starts.last - 1,
+      rings ++ bridges ++ chords, 3), "RRING", w = Some("w"))
+    // an edge-predicate subgraph
+    val sub = Seq.fill(80)((pick(30), pick(30)))
+    allOnBothPaths("edgePred", randomGraph("RSUB", 30, sub, 4), "RSUB",
+      pred = Some(col("tag") =!= 0), w = Some("w"))
+  }
+
+  test("small graphs: budgets and input checks throw alike on both paths") {
+    import spark.implicits._
+    val g = new GraftSession(spark)
+    g.registerTable("bn", (1L to 34L).map(i => (i, s"v$i")).toDF("id", "name"))
+    // three 3-cycles chained one way, then a DAG tail (the SCC budget
+    // fixture), and a 30-vertex path welded to a K4 (the coreness one)
+    val ring = (base: Long) => Seq((base, base + 1), (base + 1, base + 2), (base + 2, base))
+    g.registerTable("BS", (ring(1L) ++ Seq((3L, 4L)) ++ ring(4L) ++ Seq((6L, 7L)) ++
+      ring(7L) ++ Seq((9L, 10L)) ++ (10L until 16L).map(i => (i, i + 1)))
+      .toDF("from_B", "to_B"))
+    g.registerTable("BC", ((1L until 30L).map(i => (i, i + 1)) ++ Seq((30L, 31L),
+      (30L, 32L), (30L, 33L), (31L, 32L), (31L, 33L), (32L, 33L))).toDF("from_B", "to_B"))
+    g.registerNode("B", "bn", "id")
+    g.registerRel("BS", "BS", "B", "B")
+    g.registerRel("BC", "BC", "B", "B")
+    val GA = GraphAlgorithms
+    val scc = () => GA.lastSccRounds.get()
+    sameOnBothPaths("scc", () => GA.stronglyConnectedComponents(g, "BS"), scc)
+    sameOnBothPaths("scc numIter = 2", () =>
+      GA.stronglyConnectedComponents(g, "BS", numIter = 2), scc)
+    sameOnBothPaths("scc maxRounds = 2", () =>
+      GA.stronglyConnectedComponents(g, "BS", maxRounds = 2), scc)
+    val core = () => GA.lastCorenessRounds.get()
+    sameOnBothPaths("coreNumbers", () => GA.coreNumbers(g, "BC"), core)
+    sameOnBothPaths("coreNumbers maxRounds = 2", () =>
+      GA.coreNumbers(g, "BC", maxRounds = 2), core)
+    sameOnBothPaths("coreNumbers maxRounds = 12", () =>
+      GA.coreNumbers(g, "BC", maxRounds = 12), core)
+    intercept[IllegalStateException](GA.stronglyConnectedComponents(g, "BS", numIter = 2))
+    intercept[IllegalStateException](GA.coreNumbers(g, "BC", maxRounds = 2))
+    // input checks: a NULL endpoint (HITS) and a zero weight (weighted
+    // PageRank) throw the same GraftException on both paths
+    g.registerTable("BN", Seq((1L, Some(2L), 1.0), (2L, None, 1.0), (2L, Some(3L), 0.0))
+      .toDF("from_B", "to_B", "w"))
+    g.registerRel("BN", "BN", "B", "B")
+    sameOnBothPaths("hits NULL endpoint", () => GA.hits(g, "BN"))
+    sameOnBothPaths("weightedPageRank zero weight", () => GA.weightedPageRank(g, "BN", "w",
+      edgePred = Some(org.apache.spark.sql.functions.col("to_B").isNotNull)))
+    intercept[graft.cypher.GraftException](GA.hits(g, "BN"))
+    intercept[graft.cypher.GraftException](GA.weightedPageRank(g, "BN", "w",
+      edgePred = Some(org.apache.spark.sql.functions.col("to_B").isNotNull)))
+  }
+
+  test("small graphs: a driver-path call runs only its edge collect's jobs") {
+    import org.apache.spark.sql.functions.col
+    // the benchmark's own data copy (relative to the project root)
+    val g = graft.fixtures.TpchGraph.session(spark, "perfbench/data/sf0.1")
+    val sc = spark.sparkContext
+    val GA = GraphAlgorithms
+    val band = Some(col("n_dist") <= 10)
+    val even = Some(col("n_dist") % 2 === 0)
+    // the perfbench batch's small calls: (call, graph, jobs)
+    val census = Seq[(String, () => org.apache.spark.sql.DataFrame, String, Int)](
+      ("connectedComponents", () => GA.connectedComponents(g, "NATION_ADJ"), "NATION_ADJ", 2),
+      ("pageRank", () => GA.pageRank(g, "NATION_ADJ"), "NATION_ADJ", 2),
+      ("kCore", () => GA.kCore(g, "NATION_ADJ", k = 2, maxRounds = 8, edgePred = even),
+        "NATION_ADJ", 2),
+      ("louvain", () => GA.louvain(g, "NATION_ADJ", rounds = 4, levels = 2, edgePred = band),
+        "NATION_ADJ", 2),
+      ("stronglyConnectedComponents", () => GA.stronglyConnectedComponents(g, "NATION_RING"),
+        "NATION_RING", 6),
+      ("labelPropagation", () => GA.labelPropagation(g, "NATION_ADJ", iters = 5,
+        edgePred = band), "NATION_ADJ", 2),
+      ("coreNumbers", () => GA.coreNumbers(g, "NATION_ADJ", maxK = 4, edgePred = even),
+        "NATION_ADJ", 2))
+    for ((name, call, rel, jobs) <- census) {
+      // a fresh plan: a frame collected before reuses its broadcast stage
+      val edgeJobs = jobsOf(() => g.table(rel).select("*"))
+      val before = sc.getPersistentRDDs.keySet
+      val got = jobsOf(call)
+      assert(sc.getPersistentRDDs.keySet == before, s"$name persisted an RDD")
+      assert(got == edgeJobs && got == jobs,
+        s"$name: $got jobs, its edge table's collect runs $edgeJobs")
+    }
+    // the RDD rounds of the same calls run one job per round and more
+    for ((name, call, _, jobs) <- census)
+      assert(onRdd(jobsOf(call)) > jobs, name)
+    graft.pipeline.PipelineCaches.clear(blocking = true)
   }
 
   test("one iteration substrate: the program holds no GraphX reference") {
